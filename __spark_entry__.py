@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from auctus_spark import pipeline  # noqa: E402
 from auctus_spark.analysis import SPLIT_PATTERN, analyze_query  # noqa: E402
+from auctus_spark.operators.profiling import small_scan_cap  # noqa: E402
 
 
 def _ensure_workers_can_import(spark: SparkSession) -> None:
@@ -60,9 +61,8 @@ def _ensure_workers_can_import(spark: SparkSession) -> None:
 # For those tables a round-robin exchange of a few MB buys full-core
 # parallelism.  Scale-adaptive: inputs that already yield >= cores
 # scan tasks (many files) or exceed the byte cap are returned as-is,
-# so at real scale the zero-extra-shuffle plan shape is unchanged.
-_FAN_OUT_CAP = int(os.environ.get("AUCTUS_SMALL_SCAN_BYTES",
-                                  str(256 << 20)))
+# so at real scale the zero-extra-shuffle plan shape is unchanged.  The
+# byte cap is ``small_scan_cap()`` (env AUCTUS_SMALL_SCAN_BYTES).
 # tokenize / vector-math tables only: TPC-H numeric tables keep the
 # scan -> partial-aggregate shape (a pre-agg exchange of the raw rows
 # would cost more than the single-pass partial aggregation saves).
@@ -85,7 +85,7 @@ def _fan_out(df: DataFrame) -> DataFrame:
     except Exception:
         return df
     cores = spark.sparkContext.defaultParallelism
-    if 0 < len(files) < cores and total <= _FAN_OUT_CAP:
+    if 0 < len(files) < cores and total <= small_scan_cap():
         # The always-true NONDETERMINISTIC filter is a predicate-
         # pushdown fence: without it Catalyst pushes every downstream
         # tokenize/score filter through the round-robin exchange back
@@ -129,7 +129,7 @@ def _fan_out_by(df: DataFrame, *keys: str) -> DataFrame:
     except Exception:
         return df
     cores = spark.sparkContext.defaultParallelism
-    if 0 < len(files) < cores and total <= _FAN_OUT_CAP:
+    if 0 < len(files) < cores and total <= small_scan_cap():
         return (df.repartition(*[F.col(k) for k in keys])
                 .filter(F.monotonically_increasing_id() >= 0))
     return df
@@ -3087,9 +3087,10 @@ def _q_temporal_resolution(spark, sf_dir):
     (temporal.py:36-71): coarse→fine probe, first resolution whose
     avg distinct-values-per-bin < 1.05."""
     from auctus_spark.operators.profiling import temporal_resolution
-    # the resolution probe is exact count_distincts — fan-out-safe
-    # (orders is single-row-group and not in _FAN_OUT_TABLES; events
-    # already arrives fanned from _t)
+    # the resolution probe is exact count_distincts — fan-out-safe.
+    # Neither table is in _FAN_OUT_TABLES, so _t returns both unfanned:
+    # orders (single-row-group) is fanned here, events is probed on its
+    # raw scan
     r_orders = temporal_resolution(
         _fan_out(_t(spark, sf_dir, "orders")), "o_orderdate")
     r_events = temporal_resolution(_t(spark, sf_dir, "events"), "ts")

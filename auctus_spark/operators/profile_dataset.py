@@ -91,7 +91,6 @@ def profile_dataset(df: DataFrame, sample_rows: int = 20,
                        F.max(c).alias(f"{c}__thi")]
 
     latlong_pairs = pair_latlong_columns(cols)
-    latlong_cols = {c for p in latlong_pairs for c in p}
 
     # All of these are mutually independent jobs; overlap them
     # (guide §2.6).  Each callable is byte-identical to the old serial
@@ -110,30 +109,89 @@ def profile_dataset(df: DataFrame, sample_rows: int = 20,
                     "bounding_box": bounding_box_merge(df, lat_c, lon_c)}
         return None
 
-    pool = ThreadPoolExecutor(max_workers=8)
-    try:
-        fanned = profiling.fan_out_exact_agg(df)
-        f_exact = pool.submit(
-            lambda: fanned.agg(*exact_aggs).collect()[0])
-        f_float = pool.submit(lambda: df.agg(*float_aggs).collect()[0])
-        f_sample = pool.submit(
-            lambda: df.limit(sample_rows).toPandas().to_csv(index=False))
-        # temporal_resolution's aggregates are all exact
-        # (count_distinct / min) — safe on the fanned input
-        res_futs = {c: pool.submit(profiling.temporal_resolution,
-                                   fanned, c)
-                    for c in ts_all}
-        spat_futs = [pool.submit(_spatial_probe, lat_c, lon_c)
-                     for lat_c, lon_c in latlong_pairs]
-        row = {**f_exact.result().asDict(), **f_float.result().asDict()}
-    except BaseException:
-        pool.shutdown(wait=False, cancel_futures=True)
-        raise
-    nb_rows = int(row["__nb_rows"])
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        try:
+            fanned = profiling.fan_out_exact_agg(df)
+            f_exact = pool.submit(
+                lambda: fanned.agg(*exact_aggs).collect()[0])
+            f_float = pool.submit(lambda: df.agg(*float_aggs).collect()[0])
+            f_sample = pool.submit(
+                lambda: df.limit(sample_rows).toPandas().to_csv(index=False))
+            # temporal_resolution's aggregates are all exact
+            # (count_distinct / min) — safe on the fanned input
+            res_futs = {c: pool.submit(profiling.temporal_resolution,
+                                       fanned, c)
+                        for c in ts_all}
+            spat_futs = [pool.submit(_spatial_probe, lat_c, lon_c)
+                         for lat_c, lon_c in latlong_pairs]
+            row = {**f_exact.result().asDict(), **f_float.result().asDict()}
+            nb_rows = int(row["__nb_rows"])
+            columns_meta, kinds = _classify_columns(
+                cols, dtypes, row, latlong_pairs)
 
+            sketch_futs = {
+                m["name"]: pool.submit(
+                    profiling.range_sketch, df, m["name"],
+                    sample_cap=max_range_rows,
+                    # nb_rows already counted this df: same n, same sample
+                    # fraction, identical sketch, one job saved per column
+                    n_rows=nb_rows)
+                for m in columns_meta if m.pop("__sketch", False)}
+            for m in columns_meta:
+                if m["name"] in sketch_futs:
+                    m["coverage"] = sketch_futs[m["name"]].result()
+
+            # temporal coverage + resolution per datetime column (spans
+            # were folded into the exact-aggregate pass above)
+            temporal_coverage = []
+            for c in ts_all:
+                lo, hi = row[f"{c}__tlo"], row[f"{c}__thi"]
+                temporal_coverage.append({
+                    "column": c,
+                    "temporal_resolution": res_futs[c].result(),
+                    "ranges": [{"gte": str(lo), "lte": str(hi)}]})
+
+            spatial_coverage = [r for r in (f.result() for f in spat_futs)
+                                if r is not None]
+            sample = f_sample.result()
+        except BaseException:
+            # drop the queued jobs; leaving the with-block then waits
+            # only for the running ones
+            pool.shutdown(wait=False, cancel_futures=True)
+            raise
+
+    # attribute keywords: expanded column names (reference
+    # core.py:965-972)
+    keywords = []
+    for c in cols:
+        keywords.append(c)
+        keywords.extend(k for k in expand_identifier(c) if k != c.lower())
+
+    counts = {f"nb_{k}_columns": kinds.count(k)
+              for k in ("numerical", "categorical", "spatial", "temporal")}
+    types = sorted({k for k in kinds if counts[f"nb_{k}_columns"] > 0})
+    return {
+        "nb_rows": int(nb_rows),
+        "nb_columns": len(cols),
+        **counts,
+        "types": types,
+        "attribute_keywords": keywords,
+        "columns": columns_meta,
+        "temporal_coverage": temporal_coverage,
+        "spatial_coverage": spatial_coverage,
+        "sample": sample,
+    }
+
+
+def _classify_columns(cols, dtypes, row, latlong_pairs):
+    """Structural/semantic type of every column from the aggregate
+    row → (column metadata list, dataset kind per column).  Numeric
+    columns with a mean carry ``__sketch`` until their coverage sketch
+    is attached."""
+    latlong_cols = {c for p in latlong_pairs for c in p}
     columns_meta = []
     kinds = []
-    for i, c in enumerate(cols):
+    for c in cols:
         n = row[f"{c}__n"] or 0
         tol = (1.0 - profiling.MAX_UNCLEAN) * n
         dtype = dtypes[c]
@@ -184,52 +242,4 @@ def profile_dataset(df: DataFrame, sample_rows: int = 20,
             meta["__sketch"] = True
         columns_meta.append(meta)
 
-    try:
-        sketch_futs = {
-            m["name"]: pool.submit(
-                profiling.range_sketch, df, m["name"],
-                sample_cap=max_range_rows,
-                # nb_rows already counted this df: same n, same sample
-                # fraction, identical sketch, one job saved per column
-                n_rows=nb_rows)
-            for m in columns_meta if m.pop("__sketch", False)}
-        for m in columns_meta:
-            if m["name"] in sketch_futs:
-                m["coverage"] = sketch_futs[m["name"]].result()
-
-        # temporal coverage + resolution per datetime column (spans
-        # were folded into the exact-aggregate pass above)
-        temporal_coverage = []
-        for c in ts_all:
-            lo, hi = row[f"{c}__tlo"], row[f"{c}__thi"]
-            temporal_coverage.append({
-                "column": c, "temporal_resolution": res_futs[c].result(),
-                "ranges": [{"gte": str(lo), "lte": str(hi)}]})
-
-        spatial_coverage = [r for r in (f.result() for f in spat_futs)
-                            if r is not None]
-        sample = f_sample.result()
-    finally:
-        pool.shutdown(wait=True)
-
-    # attribute keywords: expanded column names (reference
-    # core.py:965-972)
-    keywords = []
-    for c in cols:
-        keywords.append(c)
-        keywords.extend(k for k in expand_identifier(c) if k != c.lower())
-
-    counts = {f"nb_{k}_columns": kinds.count(k)
-              for k in ("numerical", "categorical", "spatial", "temporal")}
-    types = sorted({k for k in kinds if counts[f"nb_{k}_columns"] > 0})
-    return {
-        "nb_rows": int(nb_rows),
-        "nb_columns": len(cols),
-        **counts,
-        "types": types,
-        "attribute_keywords": keywords,
-        "columns": columns_meta,
-        "temporal_coverage": temporal_coverage,
-        "spatial_coverage": spatial_coverage,
-        "sample": sample,
-    }
+    return columns_meta, kinds

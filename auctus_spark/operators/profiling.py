@@ -40,6 +40,14 @@ RESOLUTIONS = ["year", "quarter", "month", "week", "day",
                "hour", "minute", "second"]
 
 
+def small_scan_cap() -> int:
+    """Largest input, in bytes, that the small-scan fan-out gates
+    spread over all cores: ``AUCTUS_SMALL_SCAN_BYTES``, 256 MB when
+    unset.  Shared by :func:`fan_out_exact_agg` and the entry module's
+    ``_fan_out`` / ``_fan_out_by``."""
+    return int(os.environ.get("AUCTUS_SMALL_SCAN_BYTES", str(256 << 20)))
+
+
 def fan_out_exact_agg(df: DataFrame) -> DataFrame:
     """Round-robin fan-out for EXACT-aggregate inputs (guide §2.5
     "input skew": a single-row-group parquet file scans as ONE task no
@@ -61,7 +69,7 @@ def fan_out_exact_agg(df: DataFrame) -> DataFrame:
     except Exception:
         return df
     cores = spark.sparkContext.defaultParallelism
-    if 0 < len(files) < cores and total <= (256 << 20):
+    if 0 < len(files) < cores and total <= small_scan_cap():
         return (df.repartition(cores)
                 .filter(F.monotonically_increasing_id() >= 0))
     return df

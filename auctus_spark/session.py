@@ -74,7 +74,12 @@ def get_spark(app: str = "auctus_spark", cores: int | None = None,
     os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")
     builder = SparkSession.builder
     if not submit_mode:
-        builder = builder.master(f"local[{cores}]")
+        # the worker daemon in ``pyworker`` skips pyspark.zip's per-task
+        # directory re-reads; under spark-submit the package reaches the
+        # executors only after their daemon has started, so it stays off
+        builder = (builder.master(f"local[{cores}]")
+                   .config("spark.python.daemon.module",
+                           "auctus_spark.pyworker"))
     if iceberg_catalog:
         builder = (builder
                    .config("spark.sql.extensions",

@@ -7,7 +7,8 @@ Pins the equivalences the profile/e2e overlap restructure relies on:
   produce a profile dict IDENTICAL to a serial single-agg reference
   computed here from first principles.
 - ``fan_out_exact_agg`` is a no-op for non-file inputs and preserves
-  rows/values for file inputs.
+  rows/values for file inputs; it and the entry module's gates honour
+  the ``AUCTUS_SMALL_SCAN_BYTES`` cap.
 - ``temporal_resolution`` yields the same resolution string on fanned
   and unfanned input (its aggregates are exact count_distincts).
 - the catalog's concurrent ``add_dataset`` equals the serial loop.
@@ -36,6 +37,21 @@ def test_fan_out_exact_agg_preserves_exact_aggregates(spark, sf_dir):
             + [F.min(c).alias(f"lo_{c}") for c in cols]
             + [F.max(c).alias(f"hi_{c}") for c in cols])
     assert raw.agg(*aggs).collect() == fanned.agg(*aggs).collect()
+
+
+def test_fan_out_gates_honour_small_scan_override(spark, sf_dir,
+                                                   monkeypatch):
+    """Both small-scan fan-out gates read AUCTUS_SMALL_SCAN_BYTES: a
+    one-file scan is fanned under the default cap and left as it is
+    once the cap is below its size."""
+    import __spark_entry__ as entry
+    raw = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    gates = [profiling.fan_out_exact_agg, entry._fan_out,
+             lambda df: entry._fan_out_by(df, "o_orderkey")]
+    monkeypatch.delenv("AUCTUS_SMALL_SCAN_BYTES", raising=False)
+    assert all(gate(raw) is not raw for gate in gates)
+    monkeypatch.setenv("AUCTUS_SMALL_SCAN_BYTES", "1")
+    assert all(gate(raw) is raw for gate in gates)
 
 
 def test_temporal_resolution_fanned_matches_unfanned(spark, sf_dir):

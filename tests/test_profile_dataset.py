@@ -90,3 +90,28 @@ def test_profile_dataset_timestamp_ntz(spark):
     assert "DATE_TIME" in by_name["ts"]["semantic_types"]
     assert by_name["v"]["structural_type"] == "FLOAT"
     assert by_name["v"]["mean"] == 2.5
+
+
+def test_pool_shut_down_when_classification_fails(spark, monkeypatch):
+    """A failure while the columns are classified, between the two
+    rounds of pool jobs, still shuts the thread pool down."""
+    import concurrent.futures
+
+    from auctus_spark.operators import profiling
+
+    pools = []
+
+    class RecordingPool(concurrent.futures.ThreadPoolExecutor):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            pools.append(self)
+
+    monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor",
+                        RecordingPool)
+    monkeypatch.setattr(profiling, "MAX_UNCLEAN", "not a ratio")
+    df = spark.createDataFrame([(1, "a")], "k long, name string")
+    with pytest.raises(TypeError):
+        profile_dataset(df)
+    [pool] = pools
+    with pytest.raises(RuntimeError, match="shutdown"):
+        pool.submit(int)
