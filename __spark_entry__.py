@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from auctus_spark import pipeline  # noqa: E402
 from auctus_spark.analysis import SPLIT_PATTERN, analyze_query  # noqa: E402
-from auctus_spark.operators.profiling import small_scan_cap  # noqa: E402
+from auctus_spark.operators.profiling import fan_out_small_scan  # noqa: E402
 
 
 def _ensure_workers_can_import(spark: SparkSession) -> None:
@@ -59,10 +59,10 @@ def _ensure_workers_can_import(spark: SparkSession) -> None:
 # small spark.sql.files.maxPartitionBytes is — and the compute-heavy
 # per-row paths (tokenization, vector math) then run on 1 core of 32.
 # For those tables a round-robin exchange of a few MB buys full-core
-# parallelism.  Scale-adaptive: inputs that already yield >= cores
-# scan tasks (many files) or exceed the byte cap are returned as-is,
-# so at real scale the zero-extra-shuffle plan shape is unchanged.  The
-# byte cap is ``small_scan_cap()`` (env AUCTUS_SMALL_SCAN_BYTES).
+# parallelism.  The gate is ``profiling.fan_out_small_scan`` (scale-
+# adaptive: inputs that already yield >= cores scan tasks or exceed
+# ``small_scan_cap()``, env AUCTUS_SMALL_SCAN_BYTES, are returned as-is,
+# so at real scale the zero-extra-shuffle plan shape is unchanged).
 # tokenize / vector-math tables only: TPC-H numeric tables keep the
 # scan -> partial-aggregate shape (a pre-agg exchange of the raw rows
 # would cost more than the single-pass partial aggregation saves).
@@ -76,67 +76,9 @@ def _ensure_workers_can_import(spark: SparkSession) -> None:
 _FAN_OUT_TABLES = {"documents", "embeddings"}
 
 
-def _fan_out(df: DataFrame) -> DataFrame:
-    spark = df.sparkSession
-    try:
-        from urllib.parse import urlparse
-        files = df.inputFiles()
-        total = sum(os.path.getsize(urlparse(f).path) for f in files)
-    except Exception:
-        return df
-    cores = spark.sparkContext.defaultParallelism
-    if 0 < len(files) < cores and total <= small_scan_cap():
-        # The always-true NONDETERMINISTIC filter is a predicate-
-        # pushdown fence: without it Catalyst pushes every downstream
-        # tokenize/score filter through the round-robin exchange back
-        # onto the (single-task) scan, re-serializing the expensive
-        # per-row work the exchange exists to parallelize.  Predicates
-        # cannot be reordered across a nondeterministic predicate, so
-        # they stay above the exchange; the filter itself keeps every
-        # row and is trivially cheap.  Only active in the small-input
-        # regime — at scale the scan parallelizes itself and pushdown
-        # to parquet is preserved.
-        return (df.repartition(cores)
-                .filter(F.monotonically_increasing_id() >= 0))
-    return df
-
-
-def _fan_out_by(df: DataFrame, *keys: str) -> DataFrame:
-    """Key-hash variant of :func:`_fan_out` for window/top-k paths.
-
-    A window partitioned by ``keys`` over a small single-row-group
-    scan is bottlenecked BELOW its exchange: Spark 3.5+ inserts the
-    partial Sort + WindowGroupLimit on the map side, i.e. onto the one
-    scan task (measured sfx10: a 1.6 s single-task sort of 1.5 M
-    rows dominating a 1.8 s query).  Hash-repartitioning by the
-    window key first is the SAME exchange the window needs — no
-    second shuffle appears (EnsureRequirements recognises the
-    partitioning) — but it moves the exchange below the sort, so the
-    sort/limit run on all cores.  Keyed repartition also avoids the
-    local sort a round-robin ``repartition(n)`` pays
-    (spark.sql.execution.sortBeforeRepartition, guide §2.5).  The
-    nondeterministic fence keeps the partial WindowGroupLimit from
-    being planned below the exchange (guide §4.4 reordering rules).
-    Scale-adaptive exactly like ``_fan_out``: many-file or large
-    inputs return unchanged, keeping the map-side WindowGroupLimit
-    shuffle pruning where it is profitable (measured sfx10
-    topk_orders_per_cust: 1.81 s -> 0.68 s noop-sink)."""
-    spark = df.sparkSession
-    try:
-        from urllib.parse import urlparse
-        files = df.inputFiles()
-        total = sum(os.path.getsize(urlparse(f).path) for f in files)
-    except Exception:
-        return df
-    cores = spark.sparkContext.defaultParallelism
-    if 0 < len(files) < cores and total <= small_scan_cap():
-        return (df.repartition(*[F.col(k) for k in keys])
-                .filter(F.monotonically_increasing_id() >= 0))
-    return df
-
-
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return fan_out_small_scan(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def _docs_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -150,7 +92,7 @@ def _docs_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    return _fan_out(df) if name in _FAN_OUT_TABLES else df
+    return fan_out_small_scan(df) if name in _FAN_OUT_TABLES else df
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -308,12 +250,13 @@ def _q_tpch_q1(spark, sf_dir):
 
 def _q_topk_orders_per_cust(spark, sf_dir):
     from pyspark.sql import Window as W
-    # exchange-by-key BEFORE the window sort (see _fan_out_by): rows,
+    # exchange-by-key BEFORE the window sort (fan_out_small_scan with
+    # keys): rows,
     # ranks and output are identical — row_number's order
     # (o_totalprice desc, o_orderkey asc) is a total order per custkey
     # (o_orderkey is unique), so physical row placement cannot change
     # the result
-    o = _fan_out_by(_t(spark, sf_dir, "orders"), "o_custkey")
+    o = fan_out_small_scan(_t(spark, sf_dir, "orders"), "o_custkey")
     w = W.partitionBy("o_custkey").orderBy(
         F.desc("o_totalprice"), F.asc("o_orderkey"))
     return (o.withColumn("rk", F.row_number().over(w))
@@ -3043,9 +2986,9 @@ def _q_column_types(spark, sf_dir):
         classify_column, infer_structural_types_multi, semantic_flags)
     cols = ["c_custkey", "c_name", "c_mktsegment", "c_acctbal"]
     # the regex-voting battery is compute-heavy per row — fan the
-    # small single-row-group scan out over the cores (same gate as
-    # _fan_out; counts are partition-order-independent)
-    c = _fan_out(_t(spark, sf_dir, "customer").select(
+    # small single-row-group scan out over the cores (counts are
+    # partition-order-independent)
+    c = fan_out_small_scan(_t(spark, sf_dir, "customer").select(
         *[F.col(col).cast("string").alias(col) for col in cols]))
     ratios = infer_structural_types_multi(c, cols)   # ONE scan/job
     rows = [(col, classify_column(r),
@@ -3092,7 +3035,7 @@ def _q_temporal_resolution(spark, sf_dir):
     # orders (single-row-group) is fanned here, events is probed on its
     # raw scan
     r_orders = temporal_resolution(
-        _fan_out(_t(spark, sf_dir, "orders")), "o_orderdate")
+        fan_out_small_scan(_t(spark, sf_dir, "orders")), "o_orderdate")
     r_events = temporal_resolution(_t(spark, sf_dir, "events"), "ts")
     return spark.createDataFrame(
         [("o_orderdate", r_orders), ("ts", r_events)],

@@ -111,7 +111,7 @@ def profile_dataset(df: DataFrame, sample_rows: int = 20,
 
     with ThreadPoolExecutor(max_workers=8) as pool:
         try:
-            fanned = profiling.fan_out_exact_agg(df)
+            fanned = profiling.fan_out_small_scan(df)
             f_exact = pool.submit(
                 lambda: fanned.agg(*exact_aggs).collect()[0])
             f_float = pool.submit(lambda: df.agg(*float_aggs).collect()[0])

@@ -41,26 +41,40 @@ RESOLUTIONS = ["year", "quarter", "month", "week", "day",
 
 
 def small_scan_cap() -> int:
-    """Largest input, in bytes, that the small-scan fan-out gates
-    spread over all cores: ``AUCTUS_SMALL_SCAN_BYTES``, 256 MB when
-    unset.  Shared by :func:`fan_out_exact_agg` and the entry module's
-    ``_fan_out`` / ``_fan_out_by``."""
+    """Largest input, in bytes, that :func:`fan_out_small_scan`
+    spreads over all cores: ``AUCTUS_SMALL_SCAN_BYTES``, 256 MB when
+    unset."""
     return int(os.environ.get("AUCTUS_SMALL_SCAN_BYTES", str(256 << 20)))
 
 
-def fan_out_exact_agg(df: DataFrame) -> DataFrame:
-    """Round-robin fan-out for EXACT-aggregate inputs (guide §2.5
-    "input skew": a single-row-group parquet file scans as ONE task no
-    matter the split size, serializing per-row work on 1 of N cores).
+def fan_out_small_scan(df: DataFrame, *keys: str) -> DataFrame:
+    """THE small-scan fan-out gate (guide §2.5 "input skew"): a
+    single-row-group parquet file scans as ONE task no matter the
+    split size, serializing per-row work on 1 of N cores.
 
-    Only safe when every downstream aggregate is partition-order
-    independent — counts, count_distinct, min/max — NOT float sums/
-    moments, whose partial-merge order is partition-dependent.  The
-    always-true nondeterministic filter is a predicate-pushdown fence
-    (predicates cannot reorder across it), keeping downstream per-row
-    work above the exchange.  Scale-adaptive: many-file or large
-    inputs (or non-file inputs) are returned unchanged, so at real
-    scale the plan shape is untouched."""
+    Scale-adaptive: a file input with fewer files than cores and at
+    most :func:`small_scan_cap` bytes is exchanged; many-file, large
+    or non-file inputs are returned unchanged, so at real scale the
+    zero-extra-shuffle plan shape is untouched.
+
+    - No ``keys``: round-robin ``repartition(cores)``.  Only for
+      consumers that are partition-order independent — per-row work
+      (tokenize, vector math) or exact aggregates (counts,
+      count_distinct, min/max) — NOT float sums/moments, whose
+      partial-merge order is partition-dependent.
+    - ``keys``: hash repartition by the keys, for a window or top-k
+      partitioned by them.  It is the SAME exchange the window needs
+      (EnsureRequirements adds no second shuffle) but sits below the
+      map-side partial Sort + WindowGroupLimit Spark 3.5+ would
+      otherwise run on the one scan task, and it avoids the local
+      sort a round-robin repartition pays
+      (spark.sql.execution.sortBeforeRepartition).
+
+    The always-true NONDETERMINISTIC filter is a predicate-pushdown
+    fence: predicates (and the partial WindowGroupLimit) cannot be
+    reordered across it, so downstream per-row work stays above the
+    exchange instead of being pushed back onto the single scan
+    task."""
     spark = df.sparkSession
     try:
         from urllib.parse import urlparse
@@ -69,10 +83,11 @@ def fan_out_exact_agg(df: DataFrame) -> DataFrame:
     except Exception:
         return df
     cores = spark.sparkContext.defaultParallelism
-    if 0 < len(files) < cores and total <= small_scan_cap():
-        return (df.repartition(cores)
-                .filter(F.monotonically_increasing_id() >= 0))
-    return df
+    if not (0 < len(files) < cores and total <= small_scan_cap()):
+        return df
+    spread = (df.repartition(*[F.col(k) for k in keys]) if keys
+              else df.repartition(cores))
+    return spread.filter(F.monotonically_increasing_id() >= 0)
 
 
 def numeric_profile(df: DataFrame, col: str) -> DataFrame:
@@ -144,7 +159,7 @@ def temporal_resolution(df: DataFrame, col: str,
     # timestamps) — the Expand's partial aggregation already collapses
     # each truncation to its distinct values before the exchange.
     # Every aggregate here is exact (count_distinct / min), so callers
-    # with single-row-group inputs may pre-apply fan_out_exact_agg —
+    # with single-row-group inputs may pre-apply fan_out_small_scan —
     # result-identical, and it moves the Expand(x9) + partial
     # distinct-agg off the single scan task (measured sf0.1 orders:
     # 1.44 s -> 0.67 s median).  Not applied here: already-fanned

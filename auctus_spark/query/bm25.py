@@ -22,6 +22,19 @@ Two physical strategies over the same index:
   one global ``ORDER BY ... LIMIT k`` merge.  No shuffle of posting rows
   at all — only (bucket → k rows) survive.
 
+Every BM25-scored family of the bucket-parallel path — AND, OR (with
+``min_should_match``), synonym slots, phrase (exact, sloppy and
+``phrase_prefix``) and multi-field (``most_fields``/``cross_fields``) —
+is ONE module-level per-query kernel (``_and_kernel``, ``_or_kernel``,
+``_slots_kernel``, ``_phrase_kernel``, ``_fields_kernel``) run by ONE
+job helper, :func:`_bucket_job`: it owns the ``_spread_buckets`` +
+``groupBy("bucket").applyInPandas`` site, groups a bucket's partials
+once, and runs the kernel for every query of the batch over those
+shared decodes.  A single-query method is a batch of one merged by
+``TakeOrdered``; the batched functions (:func:`search_many` and
+friends) merge with a per-``query_id`` window.  Both paths run the same
+kernel, so they are bit-identical by construction.
+
 Global statistics discipline: N, avgdl, df are read from the stats
 tables written at build finalize (pre-merge snapshot), never derived
 from the pruned scan — required for rank identity with the oracle.
@@ -29,9 +42,11 @@ from the pruned scan — required for rank identity with the oracle.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import B, K1, TOP_K_SIZE
@@ -835,58 +850,33 @@ class SearchEngine:
     def search_wand(self, query: str, k: int = TOP_K_SIZE) -> DataFrame:
         """Conjunctive AND top-k with posting skipping: intersect
         rarest-first — only the smallest term's partials are fully
-        decoded; larger lists decode candidate-containing blocks only."""
+        decoded; larger lists decode candidate-containing blocks only
+        (:func:`_and_kernel`, run as a batch of one)."""
         terms = analyze_query(query, stem=self.stem)
+        return self._and_job({"": terms} if terms else {}, k)
+
+    def _and_job(self, qterms: dict, k: int, batched: bool = False
+                 ) -> DataFrame:
+        """AND family over ``{query_id: terms}``.  Single-job plan:
+        global df rides in as a literal-map projection (driver stats
+        map) or a broadcast join with term_stats at scale; idf is
+        computed inside the kernel (same python math.log on the same
+        doubles -> bit-identical to the oracle).  AND semantics make a
+        globally-missing term produce zero hits through the per-bucket
+        term check."""
+        terms = list(dict.fromkeys(t for ts in qterms.values() for t in ts))
+        kernel = partial(_and_kernel, n_docs=self.n_docs,
+                         avgdl=self.avgdl, tomb=self.tombstones)
+        return _bucket_job(self.spark, self._df_segments(terms), kernel,
+                           qterms, k, "df", batched)
+
+    def _df_segments(self, terms: list[str]) -> DataFrame | None:
+        """The query terms' partials with their global df attached
+        (None for no terms) — the input of the AND and OR jobs."""
         if not terms:
-            return self._empty()
-        # single-job plan: global df rides in as a literal-map
-        # projection (driver stats map) or a broadcast join with
-        # term_stats at scale; idf is computed inside the scorer (same
-        # python math.log on the same doubles -> bit-identical to the
-        # oracle).  AND semantics make a globally-missing term produce
-        # zero hits through the per-bucket term-count check.
-        segs = self._attach_df(self._segments_for(terms), terms)
-        n_terms = len(terms)
-        n_docs, avgdl = self.n_docs, self.avgdl
-        tomb = self.tombstones
-
-        def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf["term"].nunique() != n_terms:
-                return _empty_pdf()  # AND: a term missing in this range
-            idf_b = {t: bm25_idf(n_docs, int(df_))
-                     for t, df_ in zip(pdf["term"], pdf["df"])}
-            per_term = _group_partials(pdf)
-            order = sorted(per_term,
-                           key=lambda t: sum(p["n_docs"]
-                                             for p in per_term[t]))
-            cand = None
-            for t in order:
-                if cand is None:
-                    cand = _mask_tombstones(
-                        _decode_full_term(per_term[t]), tomb)
-                else:
-                    hit = np.zeros(cand.size, dtype=bool)
-                    for seg in per_term[t]:
-                        ids = _decode_partial_for(seg, cand)
-                        if ids.size == 0:
-                            continue
-                        pos = np.searchsorted(ids, cand)
-                        pos_c = np.minimum(pos, ids.size - 1)
-                        hit |= ids[pos_c] == cand
-                    cand = cand[hit]
-                if cand.size == 0:
-                    return _empty_pdf()
-            score, _ = _score_candidates(terms, idf_b, per_term, cand,
-                                         avgdl)
-            cand, score = _topk_local(cand, score, k)
-            return pd.DataFrame({"doc_id": cand.astype(np.int64),
-                                 "score": score})
-
-        local = (segs.select(*self._SEG_COLS, "df")
-                 .transform(_spread_buckets).groupBy("bucket")
-                 .applyInPandas(score_bucket,
-                                schema="doc_id long, score double"))
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+            return None
+        return (self._attach_df(self._segments_for(terms), terms)
+                .select(*self._SEG_COLS, "df"))
 
     def search_synonyms(self, query: str, synonyms: dict,
                         k: int = TOP_K_SIZE) -> DataFrame:
@@ -910,7 +900,7 @@ class SearchEngine:
         """
         from ..oracle import _analyze_slots
         slots = _analyze_slots(query, synonyms, stem=self.stem)
-        return self._search_slots(slots, k)
+        return self._slots_job({"": slots} if slots else {}, k)
 
     def search_fuzzy(self, term: str, k: int = TOP_K_SIZE,
                      fuzziness: int = 1, max_expansions: int = 50,
@@ -952,7 +942,7 @@ class SearchEngine:
         exp = [term_ for _, _, term_ in ranked[:max_expansions]]
         if not exp:
             return self._empty()
-        return self._search_slots([exp], k)
+        return self._slots_job({"": [exp]}, k)
 
     def _fuzzy_candidates(self, t: str, fuzziness: int,
                           prefix_length: int) -> DataFrame:
@@ -1164,7 +1154,6 @@ class SearchEngine:
             raise ValueError(
                 f"completion prefix must analyze to one token; "
                 f"{prefix!r} analyzed to {toks!r}")
-        from pyspark.sql import Window
         p = toks[0]
         if fuzziness <= 0:
             w = Window.orderBy(F.desc("weight"), F.asc("term"))
@@ -1268,82 +1257,43 @@ class SearchEngine:
         out.sort(key=lambda x: (-x[1], x[0]))
         return self.spark.createDataFrame(out[:size], schema)
 
-    def _search_slots(self, slots: list[list[str]], k: int
-                      ) -> DataFrame:
-        """Shared SynonymQuery-slot scorer (see
-        :meth:`search_synonyms` for plan + semantics)."""
-        if not slots:
-            return self._empty()
-        members = sorted({t for alts in slots for t in alts})
-        member_rows = [(t, i) for i, alts in enumerate(slots)
-                       for t in alts]
-        mem_df = self.spark.createDataFrame(
-            member_rows, "term string, slot_id int")
-        # global slot df on the broadcast side, all inside one job
-        slot_df = (self._ts_for(members)
-                   .join(mem_df, "term")
-                   .groupBy("slot_id")
-                   .agg(F.max("df").alias("slot_df")))
-        meta = F.broadcast(mem_df.join(slot_df, "slot_id"))
-        segs = self._segments_for(members).join(meta, "term")
-        n_slots = len(slots)
-        n_docs, avgdl = self.n_docs, self.avgdl
-        tomb = self.tombstones
-
-        def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_slot: dict[int, dict] = {}
-            sdf: dict[int, int] = {}
-            for sid, g in pdf.groupby("slot_id", sort=True):
-                per_slot[int(sid)] = _group_partials(g)
-                sdf[int(sid)] = int(g["slot_df"].iloc[0])
-            if len(per_slot) != n_slots:
-                return _empty_pdf()  # AND: a slot absent in this range
-            cand = None
-            # rarest slot first: cheapest intersection order
-            order = sorted(per_slot, key=lambda s: sum(
-                p["n_docs"] for parts in per_slot[s].values()
-                for p in parts))
-            for sid in order:
-                ids_s = [_decode_full_term(parts)
-                         for parts in per_slot[sid].values()]
-                u = (ids_s[0] if len(ids_s) == 1
-                     else np.unique(np.concatenate(ids_s)))
-                if cand is None:
-                    cand = _mask_tombstones(u, tomb)
-                else:
-                    pos = np.searchsorted(u, cand)
-                    pos_c = np.minimum(pos, u.size - 1)
-                    cand = cand[u[pos_c] == cand]
-                if cand.size == 0:
-                    return _empty_pdf()
-            # score in SLOT order (the oracle's summation order)
-            score = np.zeros(cand.size, dtype=np.float64)
-            for sid in range(n_slots):
-                idf_s = bm25_idf(n_docs, sdf[sid])
-                slot_tf = np.zeros(cand.size, dtype=np.int64)
-                dl = np.ones(cand.size, dtype=np.float64)
-                for parts in per_slot[sid].values():
-                    for seg in parts:
-                        doc_ids, tfs, dls = _decode_partial_full(seg)
-                        if doc_ids.size == 0:
-                            continue
-                        pos = np.searchsorted(doc_ids, cand)
-                        pos_c = np.minimum(pos, doc_ids.size - 1)
-                        hit = doc_ids[pos_c] == cand
-                        slot_tf[hit] += tfs[pos_c[hit]]
-                        dl[hit] = dls[pos_c[hit]]
-                tfd = slot_tf.astype(np.float64)
-                score += idf_s * (tfd / (tfd + K1 * (
-                    1.0 - B + B * dl / avgdl)))
-            cand2, score2 = _topk_local(cand, score, k)
-            return pd.DataFrame({"doc_id": cand2.astype(np.int64),
-                                 "score": score2})
-
-        local = (segs.select(*self._SEG_COLS, "slot_id", "slot_df")
-                 .transform(_spread_buckets).groupBy("bucket")
-                 .applyInPandas(score_bucket,
-                                schema="doc_id long, score double"))
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    def _slots_job(self, qslots: dict, k: int, batched: bool = False
+                   ) -> DataFrame:
+        """Synonym-slot family (:func:`_slots_kernel`; plan and
+        semantics in :meth:`search_synonyms`) over
+        ``{query_id: slots}``.  One slot-df table across ALL queries:
+        a slot's key is its member tuple (identical slots share one
+        aggregate row), and each segment row carries the ``slot_dfs``
+        map of every slot its term is a member of, so slot resolution
+        happens inside the kernel."""
+        slot_key: dict[tuple, int] = {}
+        for slots in qslots.values():
+            for alts in slots:
+                slot_key.setdefault(tuple(alts), len(slot_key))
+        specs = {qid: [(slot_key[tuple(alts)], list(alts))
+                       for alts in slots]
+                 for qid, slots in qslots.items()}
+        segs = None
+        if slot_key:
+            members = sorted({t for alts in slot_key for t in alts})
+            mem_df = self.spark.createDataFrame(
+                [(t, sid) for alts, sid in slot_key.items()
+                 for t in alts], "term string, slot_id int")
+            # global slot df on the broadcast side, all inside one job
+            slot_df = (self._ts_for(members).join(mem_df, "term")
+                       .groupBy("slot_id")
+                       .agg(F.max("df").alias("slot_df")))
+            slot_dfs = (slot_df.join(mem_df, "slot_id").groupBy("term")
+                        .agg(F.map_from_entries(F.collect_list(
+                            F.struct("slot_id", "slot_df")))
+                            .alias("slot_dfs")))
+            segs = (self._segments_for(members)
+                    .join(F.broadcast(slot_dfs), "term")
+                    .select(*self._SEG_COLS, "slot_dfs"))
+        kernel = partial(_slots_kernel, n_docs=self.n_docs,
+                         avgdl=self.avgdl, tomb=self.tombstones)
+        return _bucket_job(self.spark, segs, kernel, specs, k,
+                           "slot_dfs", batched)
 
     def search_or(self, query: str, k: int = TOP_K_SIZE,
                   min_should_match: int = 1) -> DataFrame:
@@ -1368,68 +1318,19 @@ class SearchEngine:
         / re-stemming — stemming is not idempotent, so callers that
         already hold index-vocabulary terms, e.g.
         :meth:`more_like_this`, must use this entry)."""
-        if not terms:
-            return self._empty()
-        if min_should_match > 1:
-            return self._search_or_msm(terms, k, min_should_match)
-        # single-job plan (see search_wand): df rides in via broadcast
-        segs = self._segments_for(terms).join(
-            F.broadcast(self._ts_for(terms)), "term")
-        all_terms = list(terms)  # query order for bit-exact summation
-        n_docs, avgdl = self.n_docs, self.avgdl
-        tomb = self.tombstones
+        return self._or_job(
+            {"": (terms, min_should_match)} if terms else {}, k)
 
-        def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            idf_b = {t: bm25_idf(n_docs, int(df_))
-                     for t, df_ in zip(pdf["term"], pdf["df"])}
-            per_term = _group_partials(pdf)
-            if not per_term:
-                return _empty_pdf()
-            ubs = sorted(
-                ((idf_b[t] * max(_tf_norm(p["max_tf"], p["min_dl"], avgdl)
-                                 for p in parts), t)
-                 for t, parts in per_term.items()),
-                reverse=True)
-            # bootstrap threshold: exact scores of the top-bound term
-            # alone (a valid lower bound on the final k-th best score)
-            t0 = ubs[0][1]
-            ids0 = _decode_full_term(per_term[t0])
-            tfs0 = np.concatenate([p["full"][1] for p in per_term[t0]])
-            dls0 = np.concatenate([p["full"][2] for p in per_term[t0]])
-            if tomb.size:
-                # theta must be a lower bound over LIVE docs only, or
-                # the essential-set pruning over-tightens
-                live = np.isin(ids0, tomb, invert=True)
-                ids0, tfs0, dls0 = ids0[live], tfs0[live], dls0[live]
-            s0 = idf_b[t0] * (tfs0 / (tfs0 + K1 * (
-                1.0 - B + B * dls0.astype(np.float64) / avgdl)))
-            theta = (float(np.partition(s0, s0.size - k)[s0.size - k])
-                     if s0.size >= k else 0.0)
-            # essential prefix: a doc found ONLY in the remaining tail
-            # is bounded by the tail's summed UBs; extend the prefix
-            # until the tail bound drops below theta
-            essential = [t0]
-            tail = sum(ub for ub, _ in ubs[1:])
-            for ub, t in ubs[1:]:
-                if tail >= theta:
-                    essential.append(t)
-                    tail -= ub
-                else:
-                    break
-            cand = _mask_tombstones(np.unique(np.concatenate(
-                [ids0] + [_decode_full_term(per_term[t])
-                          for t in essential[1:]])), tomb)
-            score, _ = _score_candidates(all_terms, idf_b, per_term,
-                                         cand, avgdl)
-            cand, score = _topk_local(cand, score, k)
-            return pd.DataFrame({"doc_id": cand.astype(np.int64),
-                                 "score": score})
-
-        local = (segs.select(*self._SEG_COLS, "df")
-                 .transform(_spread_buckets).groupBy("bucket")
-                 .applyInPandas(score_bucket,
-                                schema="doc_id long, score double"))
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    def _or_job(self, qspecs: dict, k: int, batched: bool = False
+                ) -> DataFrame:
+        """OR family over ``{query_id: (terms, min_should_match)}``;
+        df attached exactly as in :meth:`_and_job`."""
+        terms = list(dict.fromkeys(
+            t for ts, _ in qspecs.values() for t in ts))
+        kernel = partial(_or_kernel, n_docs=self.n_docs,
+                         avgdl=self.avgdl, tomb=self.tombstones)
+        return _bucket_job(self.spark, self._df_segments(terms), kernel,
+                           qspecs, k, "df", batched)
 
     def more_like_this(self, like_text: str, k: int = TOP_K_SIZE,
                        max_query_terms: int = 25,
@@ -1489,42 +1390,6 @@ class SearchEngine:
         msm = max(1, int(minimum_should_match * len(sel)))
         return self.search_or_terms(sel, k, msm)
 
-    def _search_or_msm(self, terms: list[str], k: int,
-                       m: int) -> DataFrame:
-        """should + minimum_should_match=m (m > 1): union candidates,
-        exact block-selective scoring, keep docs present in >= m
-        terms."""
-        segs = self._segments_for(terms).join(
-            F.broadcast(self._ts_for(terms)), "term")
-        all_terms = list(terms)
-        n_docs, avgdl = self.n_docs, self.avgdl
-        tomb = self.tombstones
-        kk = k
-
-        def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            idf_b = {t: bm25_idf(n_docs, int(df_))
-                     for t, df_ in zip(pdf["term"], pdf["df"])}
-            per_term = _group_partials(pdf)
-            if len(per_term) < m:
-                return _empty_pdf()   # can't reach m matches
-            cand = _mask_tombstones(np.unique(np.concatenate(
-                [_decode_full_term(p) for p in per_term.values()])),
-                tomb)
-            if cand.size == 0:
-                return _empty_pdf()
-            score, present = _score_candidates(all_terms, idf_b,
-                                               per_term, cand, avgdl)
-            keep = present >= m
-            cand, score = _topk_local(cand[keep], score[keep], kk)
-            return pd.DataFrame({"doc_id": cand.astype(np.int64),
-                                 "score": score})
-
-        local = (segs.select(*self._SEG_COLS, "df")
-                 .transform(_spread_buckets).groupBy("bucket")
-                 .applyInPandas(score_bucket,
-                                schema="doc_id long, score double"))
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
 
 # ---------------------------------------------------------------------
 # module-level scoring helpers: closures over these pickle WITHOUT
@@ -1534,6 +1399,60 @@ class SearchEngine:
 _PARTIAL_FIELDS = ("docs_blob", "tfs_blob", "dls_blob", "docs_off",
                    "tfs_off", "dls_off", "block_last_doc", "n_docs",
                    "doc_id_min", "doc_id_max", "max_tf", "min_dl")
+_POS_FIELDS = ("pos_blob", "pos_off")
+
+_HITS_SCHEMA = "query_id string, doc_id long, score double"
+
+_NO_DOCS = (np.array([], dtype=np.int64), np.array([], dtype=np.float64))
+
+
+def _bucket_job(spark: SparkSession, segs: DataFrame | None, kernel,
+                specs: dict, k: int, stat: str | None = None,
+                batched: bool = False) -> DataFrame:
+    """THE bucket-parallel job of every BM25-scored family.
+
+    ``segs`` holds the partial-segment rows of every term the
+    ``specs`` (``{query_id: per-query spec}``) need, or is None when
+    no query can match.  Per bucket the partials are grouped ONCE
+    (:func:`_group_partials`; ``stat`` names a per-row column folded
+    into a key → value dict alongside), then
+    ``kernel(parts, stats, spec, k)`` runs for each query over the
+    shared decodes and returns that query's (doc_ids, scores) in the
+    bucket; the local top-k of each survives.  A single query
+    (``batched=False``) merges with ``TakeOrdered`` and returns
+    (doc_id, score); a batch merges with a per-``query_id`` window and
+    returns (query_id, doc_id, score) — including when empty."""
+    if segs is None:
+        return spark.createDataFrame(
+            [], _HITS_SCHEMA if batched else "doc_id long, score double")
+
+    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+        parts = _group_partials(pdf)
+        stats = {}
+        if stat is not None:
+            keys = (zip(pdf["field"], pdf["term"])
+                    if "field" in pdf.columns else pdf["term"])
+            stats = dict(zip(keys, pdf[stat]))
+        qids, docs, scores = [], [], []
+        for qid, spec in specs.items():
+            d, s = _topk_local(*kernel(parts, stats, spec, k), k)
+            qids += [qid] * d.size
+            docs.append(d)
+            scores.append(s)
+        return pd.DataFrame({
+            "query_id": pd.Series(qids, dtype=object),
+            "doc_id": np.concatenate(docs).astype(np.int64),
+            "score": np.concatenate(scores).astype(np.float64)})
+
+    local = (segs.transform(_spread_buckets).groupBy("bucket")
+             .applyInPandas(score_bucket, schema=_HITS_SCHEMA))
+    if not batched:
+        return (local.select("doc_id", "score")
+                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("score"), F.asc("doc_id"))
+    return (local.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= k).drop("_rn"))
 
 
 def _tf_norm(tf: float, dl: float, avgdl: float) -> float:
@@ -1541,16 +1460,22 @@ def _tf_norm(tf: float, dl: float, avgdl: float) -> float:
 
 
 def _group_partials(pdf: pd.DataFrame) -> dict:
-    """term → list of partial-segment dicts sorted by doc_id_min
-    (disjoint docID runs).  VALIDATES disjointness: overlapping runs
-    mean the build ingested docID-interleaved input (see build.py's
-    ordering contract) and concatenated decodes would be silently
-    wrong — fail loudly instead."""
+    """key → list of partial-segment dicts sorted by doc_id_min
+    (disjoint docID runs).  The key is the term, or (field, term) when
+    the rows carry a ``field`` column; position streams are copied
+    when the rows carry them (positional index).  VALIDATES
+    disjointness: overlapping runs mean the build ingested
+    docID-interleaved input (see build.py's ordering contract) and
+    concatenated decodes would be silently wrong — fail loudly
+    instead."""
+    cols = _PARTIAL_FIELDS + tuple(c for c in _POS_FIELDS
+                                   if c in pdf.columns)
+    keyed = "field" in pdf.columns
     out: dict = {}
     for r in pdf.sort_values("doc_id_min").itertuples(index=False):
-        seg = {c: getattr(r, c) for c in _PARTIAL_FIELDS}
+        seg = {c: getattr(r, c) for c in cols}
         seg["full"] = None
-        parts = out.setdefault(r.term, [])
+        parts = out.setdefault((r.field, r.term) if keyed else r.term, [])
         if parts and seg["doc_id_min"] <= parts[-1]["doc_id_max"]:
             raise ValueError(
                 f"index corruption: partials of term {r.term!r} have "
@@ -1597,6 +1522,62 @@ def _decode_partial_for(seg: dict, cand: np.ndarray) -> np.ndarray:
     ids, _ = decode_blocks(seg["docs_blob"], _blk_offs(seg, "docs_off"),
                            blocks, deltas=True)
     return ids
+
+
+# ---- candidate rules, written once over GROUPS: a group is a list of
+# one or more term partial lists (a synonym slot's members, a term's
+# fields, the expansions of a phrase_prefix slot); candidates are the
+# AND across groups of the union within each group
+
+def _group_size(group: list) -> int:
+    return sum(p["n_docs"] for parts in group for p in parts)
+
+
+def _decode_group(group: list) -> np.ndarray:
+    """Sorted unique docIDs of a group (one term's disjoint partials
+    concatenate sorted; several terms need a union)."""
+    ids = [_decode_full_term(parts) for parts in group]
+    return ids[0] if len(ids) == 1 else np.unique(np.concatenate(ids))
+
+
+def _probe_cand(groups: list, tomb: np.ndarray) -> np.ndarray | None:
+    """Block-probing AND candidates: the rarest group is decoded in
+    full, every other group only at the blocks that can hold a
+    surviving candidate (``_decode_partial_for``).  Intersection is
+    order-independent and the tombstone mask commutes with it.  None
+    when empty."""
+    groups = sorted(groups, key=_group_size)
+    cand = _mask_tombstones(_decode_group(groups[0]), tomb)
+    for group in groups[1:]:
+        if cand.size == 0:
+            break
+        hit = np.zeros(cand.size, dtype=bool)
+        for parts in group:
+            for seg in parts:
+                ids = _decode_partial_for(seg, cand)
+                if ids.size == 0:
+                    continue
+                pos = np.searchsorted(ids, cand)
+                pos_c = np.minimum(pos, ids.size - 1)
+                hit |= ids[pos_c] == cand
+        cand = cand[hit]
+    return cand if cand.size else None
+
+
+def _phrase_cand(groups: list, tomb: np.ndarray) -> np.ndarray | None:
+    """Full-decode AND candidates, rarest group first — for callers
+    that decode every partial anyway (synonym slot tfs, position
+    streams).  None when empty."""
+    groups = sorted(groups, key=_group_size)
+    cand = _mask_tombstones(_decode_group(groups[0]), tomb)
+    for group in groups[1:]:
+        if cand.size == 0:
+            break
+        ids = _decode_group(group)
+        pos = np.searchsorted(ids, cand)
+        pos_c = np.minimum(pos, ids.size - 1)
+        cand = cand[ids[pos_c] == cand]
+    return cand if cand.size else None
 
 
 def _score_candidates(terms, idf_b, per_term, cand, avgdl):
@@ -1647,52 +1628,6 @@ def _score_candidates(terms, idf_b, per_term, cand, avgdl):
     return score, present
 
 
-def _multifield_candidates(all_terms, per_field, tomb):
-    """Term-centric AND candidates over per-field partials with
-    posting skipping: per term the candidate set is the UNION across
-    fields; only the rarest term (fewest total postings across
-    fields) is fully decoded — larger terms probe candidate-containing
-    blocks only (``_decode_partial_for``), the same discipline as the
-    single-field WAND scorer.  Returns the candidate docID array, or
-    None for an empty bucket.  Intersection is order-independent and
-    the tombstone mask commutes with it, so results are identical to
-    the exhaustive query-order loop."""
-    sizes = {}
-    for t in all_terms:
-        total = 0
-        seen = False
-        for f, pt in per_field.items():
-            if t in pt:
-                seen = True
-                total += sum(p["n_docs"] for p in pt[t])
-        if not seen:
-            return None  # AND: term absent from every field here
-        sizes[t] = total
-    order = sorted(set(all_terms), key=lambda t: sizes[t])
-    cand = None
-    for t in order:
-        if cand is None:
-            ids_t = [_decode_full_term(pt[t])
-                     for pt in per_field.values() if t in pt]
-            cand = (ids_t[0] if len(ids_t) == 1
-                    else np.unique(np.concatenate(ids_t)))
-        else:
-            hit = np.zeros(cand.size, dtype=bool)
-            for pt in per_field.values():
-                for seg in pt.get(t, ()):
-                    ids = _decode_partial_for(seg, cand)
-                    if ids.size == 0:
-                        continue
-                    pos = np.searchsorted(ids, cand)
-                    pos_c = np.minimum(pos, ids.size - 1)
-                    hit |= ids[pos_c] == cand
-            cand = cand[hit]
-        if cand.size == 0:
-            return None
-    cand = _mask_tombstones(cand, tomb)
-    return cand if cand.size else None
-
-
 def _mask_tombstones(cand: np.ndarray, tomb: np.ndarray) -> np.ndarray:
     if tomb.size == 0 or cand.size == 0:
         return cand
@@ -1713,6 +1648,192 @@ def _empty_pdf():
                          "score": pd.Series([], dtype=np.float64)})
 
 
+# ---- per-query kernels: kernel(parts, stats, spec, k) -> (doc_ids,
+# scores) of one query in one bucket; engine constants are bound with
+# functools.partial by the family's job method
+
+def _and_kernel(parts, stats, terms, k, *, n_docs, avgdl, tomb):
+    """Conjunctive AND: block-probing candidates, exact scores summed
+    in query-term order."""
+    if any(t not in parts for t in terms):
+        return _NO_DOCS  # AND: a term missing in this bucket
+    cand = _probe_cand([[parts[t]] for t in dict.fromkeys(terms)], tomb)
+    if cand is None:
+        return _NO_DOCS
+    idf = {t: bm25_idf(n_docs, int(stats[t])) for t in terms}
+    score, _ = _score_candidates(terms, idf, parts, cand, avgdl)
+    return cand, score
+
+
+def _or_kernel(parts, stats, spec, k, *, n_docs, avgdl, tomb):
+    """Disjunctive should with ``min_should_match`` m.  m <= 1:
+    block-max MaxScore — a bootstrap threshold from the top-bound
+    term's exact live scores, and only the essential terms (whose
+    tail bound can still reach it) seed candidates; the rest are
+    probed at candidate blocks while scoring.  m > 1: the single-term
+    bootstrap is no longer a lower bound for the k-th QUALIFYING doc,
+    so every term is essential and docs present in >= m terms
+    survive."""
+    terms, m = spec
+    present = [t for t in dict.fromkeys(terms) if t in parts]
+    if len(present) < max(m, 1):
+        return _NO_DOCS  # can't reach m matches
+    idf = {t: bm25_idf(n_docs, int(stats[t])) for t in present}
+    if m > 1:
+        cand = _mask_tombstones(np.unique(np.concatenate(
+            [_decode_full_term(parts[t]) for t in present])), tomb)
+    else:
+        ubs = sorted(
+            ((idf[t] * max(_tf_norm(p["max_tf"], p["min_dl"], avgdl)
+                           for p in parts[t]), t) for t in present),
+            reverse=True)
+        # bootstrap threshold: exact scores of the top-bound term
+        # alone (a valid lower bound on the final k-th best score)
+        t0 = ubs[0][1]
+        ids0 = _decode_full_term(parts[t0])
+        tfs0 = np.concatenate([p["full"][1] for p in parts[t0]])
+        dls0 = np.concatenate([p["full"][2] for p in parts[t0]])
+        if tomb.size:
+            # theta must be a lower bound over LIVE docs only, or
+            # the essential-set pruning over-tightens
+            live = np.isin(ids0, tomb, invert=True)
+            ids0, tfs0, dls0 = ids0[live], tfs0[live], dls0[live]
+        s0 = idf[t0] * (tfs0 / (tfs0 + K1 * (
+            1.0 - B + B * dls0.astype(np.float64) / avgdl)))
+        theta = (float(np.partition(s0, s0.size - k)[s0.size - k])
+                 if s0.size >= k else 0.0)
+        # essential prefix: a doc found ONLY in the remaining tail
+        # is bounded by the tail's summed UBs; extend the prefix
+        # until the tail bound drops below theta
+        essential = [t0]
+        tail = sum(ub for ub, _ in ubs[1:])
+        for ub, t in ubs[1:]:
+            if tail >= theta:
+                essential.append(t)
+                tail -= ub
+            else:
+                break
+        cand = _mask_tombstones(np.unique(np.concatenate(
+            [ids0] + [_decode_full_term(parts[t])
+                      for t in essential[1:]])), tomb)
+    if cand.size == 0:
+        return _NO_DOCS
+    score, hits = _score_candidates(terms, idf, parts, cand, avgdl)
+    if m > 1:
+        keep = hits >= m
+        return cand[keep], score[keep]
+    return cand, score
+
+
+def _slots_kernel(parts, stats, slots, k, *, n_docs, avgdl, tomb):
+    """Lucene SynonymQuery per slot: the members act as ONE
+    pseudo-term with tf = sum of member tfs and df = the slot's
+    global df (``stats``: term → {slot_id: slot df}); AND across
+    slots, contributions summed in slot order."""
+    groups = []
+    for sid, members in slots:
+        have = [t for t in members if t in parts]
+        if not have:
+            return _NO_DOCS  # AND: a slot absent in this bucket
+        groups.append((int(stats[have[0]][sid]),
+                       [parts[t] for t in have]))
+    cand = _phrase_cand([g for _, g in groups], tomb)
+    if cand is None:
+        return _NO_DOCS
+    score = np.zeros(cand.size, dtype=np.float64)
+    for slot_df, group in groups:
+        idf_s = bm25_idf(n_docs, slot_df)
+        slot_tf = np.zeros(cand.size, dtype=np.int64)
+        dl = np.ones(cand.size, dtype=np.float64)
+        for seg in (seg for ps in group for seg in ps):
+            doc_ids, tfs, dls = _decode_partial_full(seg)
+            if doc_ids.size == 0:
+                continue
+            pos = np.searchsorted(doc_ids, cand)
+            pos_c = np.minimum(pos, doc_ids.size - 1)
+            hit = doc_ids[pos_c] == cand
+            slot_tf[hit] += tfs[pos_c[hit]]
+            dl[hit] = dls[pos_c[hit]]
+        tfd = slot_tf.astype(np.float64)
+        score += idf_s * (tfd / (tfd + K1 * (
+            1.0 - B + B * dl / avgdl)))
+    return cand, score
+
+
+def _fields_kernel(parts, stats, terms, k, *, fields, boosts, n_docs,
+                   avgdl, tomb, cross):
+    """Term-centric multi-field AND over (field, term)-keyed partials
+    (every term present in >= 1 field) with weight boost_f * idf_f.
+    ``most_fields``: contributions summed in (term, field) order with
+    each field's own df.  ``cross_fields`` (Lucene BlendedTermQuery):
+    ``stats`` holds the blended df (max over fields), clamped to each
+    field's N, and a term scores the max over its fields
+    (DisjunctionMax, tie_breaker 0.0), summed in query order."""
+    groups = []
+    for t in dict.fromkeys(terms):
+        group = [parts[(f, t)] for f in fields if (f, t) in parts]
+        if not group:
+            return _NO_DOCS  # AND: term absent from every field here
+        groups.append(group)
+    cand = _probe_cand(groups, tomb)
+    if cand is None:
+        return _NO_DOCS
+    score = np.zeros(cand.size, dtype=np.float64)
+    for t in terms:
+        best = np.zeros(cand.size, dtype=np.float64)
+        for f in fields:
+            ps = parts.get((f, t))
+            if ps is None:
+                continue
+            df_ = int(stats[(f, t)])
+            # python float64, the oracle's exact left-assoc multiply
+            w = boosts[f] * bm25_idf(
+                n_docs[f], min(df_, n_docs[f]) if cross else df_)
+            s_tf, _ = _score_candidates([t], {t: w}, {t: ps}, cand,
+                                        avgdl[f])
+            if cross:
+                np.maximum(best, s_tf, out=best)
+            else:
+                score += s_tf
+        if cross:
+            score += best
+    return cand, score
+
+
+def _phrase_kernel(parts, stats, spec, k, *, avgdl, tomb, shift, slop):
+    """Lucene (Multi)PhraseQuery: ``spec`` = (slots, idf_sum), a slot
+    being the terms whose positions match there (one term, or a
+    phrase_prefix's expansions).  Candidates are the AND of the slots;
+    slop == 0 intersects offset-shifted position keys, slop > 0 runs
+    the Lucene window matcher; score = idf_sum * tf_norm(freq, dl)."""
+    slots, idf_sum = spec
+    groups = [[parts[t] for t in slot if t in parts] for slot in slots]
+    if not all(groups):
+        return _NO_DOCS
+    cand = _phrase_cand(groups, tomb)
+    if cand is None:
+        return _NO_DOCS
+    if slop:
+        docs, f = _phrase_sloppy_docs(groups, cand,
+                                      [slot[0] for slot in slots], slop)
+    else:
+        docs, f = _phrase_exact_docs(groups, cand, shift)
+    if docs.size == 0:
+        return _NO_DOCS
+    dl = _dl_for([seg for ps in groups[0] for seg in ps], docs)
+    return docs, idf_sum * (f / (f + K1 * (1.0 - B + B * dl / avgdl)))
+
+
+def _analyzed(engine: "SearchEngine", queries: dict[str, str]) -> dict:
+    """``{query_id: analyzed terms}``, queries without terms dropped."""
+    out = {}
+    for qid, q in queries.items():
+        terms = analyze_query(q, stem=engine.stem)
+        if terms:
+            out[qid] = terms
+    return out
+
+
 def search_many(engine: SearchEngine, queries: dict[str, str],
                 k: int = TOP_K_SIZE) -> "DataFrame":
     """Batched conjunctive search: ALL queries answered in ONE Spark
@@ -1721,81 +1842,10 @@ def search_many(engine: SearchEngine, queries: dict[str, str],
     partials are shared across queries; output is (query_id, doc_id,
     score) with per-query top-k.
 
-    Scores are bit-exact with per-query ``search_wand``.
+    Same kernel as per-query ``search_wand`` — bit-exact by
+    construction.
     """
-    from pyspark.sql.window import Window
-
-    qterms = {qid: analyze_query(q, stem=engine.stem)
-              for qid, q in queries.items()}
-    qterms = {qid: ts for qid, ts in qterms.items() if ts}
-    all_terms = sorted({t for ts in qterms.values() for t in ts})
-    if not all_terms:
-        return engine._empty().withColumn("query_id", F.lit(""))
-    # driver stats-map literal fold when it fits (same values as the
-    # broadcast join; see SearchEngine._attach_df) — one less scan+join
-    # per batched query job
-    segs = engine._attach_df(engine._segments_for(all_terms), all_terms)
-    n_docs, avgdl = engine.n_docs, engine.avgdl
-    qt_b = dict(qterms)
-    tomb = engine.tombstones
-
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        idf_b = {t: bm25_idf(n_docs, int(df_))
-                 for t, df_ in zip(pdf["term"], pdf["df"])}
-        per_term = _group_partials(pdf)
-        out_q, out_d, out_s = [], [], []
-        for qid, terms in qt_b.items():
-            if any(t not in per_term for t in terms):
-                continue  # AND: term missing in this bucket
-            order = sorted(terms,
-                           key=lambda t: sum(p["n_docs"]
-                                             for p in per_term[t]))
-            cand = None
-            dead = False
-            for t in order:
-                if cand is None:
-                    cand = _mask_tombstones(
-                        _decode_full_term(per_term[t]), tomb)
-                else:
-                    hit = np.zeros(cand.size, dtype=bool)
-                    for seg in per_term[t]:
-                        ids = _decode_partial_for(seg, cand)
-                        if ids.size == 0:
-                            continue
-                        pos = np.searchsorted(ids, cand)
-                        pos_c = np.minimum(pos, ids.size - 1)
-                        hit |= ids[pos_c] == cand
-                    cand = cand[hit]
-                if cand.size == 0:
-                    dead = True
-                    break
-            if dead:
-                continue
-            score, _ = _score_candidates(terms, idf_b, per_term, cand,
-                                         avgdl)
-            cand, score = _topk_local(cand, score, k)
-            out_q.extend([qid] * cand.size)
-            out_d.append(cand)
-            out_s.append(score)
-        if not out_q:
-            return pd.DataFrame({
-                "query_id": pd.Series([], dtype=object),
-                "doc_id": pd.Series([], dtype=np.int64),
-                "score": pd.Series([], dtype=np.float64)})
-        return pd.DataFrame({
-            "query_id": out_q,
-            "doc_id": np.concatenate(out_d).astype(np.int64),
-            "score": np.concatenate(out_s)})
-
-    local = (segs.select(*SearchEngine._SEG_COLS, "df")
-             .transform(_spread_buckets).groupBy("bucket")
-             .applyInPandas(score_bucket,
-                            schema="query_id string, doc_id long, "
-                                   "score double"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id"))
-    return (local.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k).drop("_rn"))
+    return engine._and_job(_analyzed(engine, queries), k, batched=True)
 
 
 # ---------------------------------------------------------------------
@@ -1840,60 +1890,7 @@ class MultiFieldEngine:
         The term-missing-everywhere early return is subsumed by the
         per-bucket AND check (a term with no postings in any field
         empties every bucket)."""
-        fields = list(self.boosts)
-        terms = analyze_query(query, stem=self.stem)
-        if not terms:
-            return self._empty()
-        boosts = dict(self.boosts)
-        n_docs_f = {f: self.engines[f].n_docs for f in fields}
-        avgdls = {f: self.engines[f].avgdl for f in fields}
-        segs = None
-        for f in fields:
-            eng = self.engines[f]
-            s = (eng._segments_for(terms)
-                 .select(*SearchEngine._SEG_COLS)
-                 .join(F.broadcast(eng._ts_for(terms)), "term")
-                 .withColumn("field", F.lit(f)))
-            segs = s if segs is None else segs.unionByName(s)
-        tomb = np.unique(np.concatenate(
-            [self.engines[f].tombstones for f in fields])) \
-            if any(self.engines[f].tombstones.size for f in fields) \
-            else np.array([], dtype=np.int64)
-        all_terms = list(terms)
-
-        def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_field = {}
-            dfs_field: dict[str, dict[str, int]] = {}
-            for f, g in pdf.groupby("field", sort=False):
-                per_field[f] = _group_partials(g)
-                dfs_field[f] = {t: int(d)
-                                for t, d in zip(g["term"], g["df"])}
-            cand = _multifield_candidates(all_terms, per_field, tomb)
-            if cand is None:
-                return _empty_pdf()
-            # (term, field) summation order — the oracle's; weight =
-            # boost_f * idf_f(t) from the row's GLOBAL df (python
-            # float64, the oracle's exact left-assoc multiply)
-            score = np.zeros(cand.size, dtype=np.float64)
-            for t in all_terms:
-                for f in fields:
-                    pt = per_field.get(f)
-                    if not pt or t not in pt:
-                        continue
-                    w = boosts[f] * bm25_idf(n_docs_f[f],
-                                             dfs_field[f][t])
-                    idf_one = {t: w}
-                    s_tf, _ = _score_candidates(
-                        [t], idf_one, {t: pt[t]}, cand, avgdls[f])
-                    score += s_tf
-            cand2, score2 = _topk_local(cand, score, k)
-            return pd.DataFrame({"doc_id": cand2.astype(np.int64),
-                                 "score": score2})
-
-        local = (segs.transform(_spread_buckets).groupBy("bucket")
-                 .applyInPandas(score_bucket,
-                                schema="doc_id long, score double"))
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._fields_job(query, k, cross=False)
 
     def search_cross_fields(self, query: str, k: int = TOP_K_SIZE
                             ) -> DataFrame:
@@ -1910,64 +1907,43 @@ class MultiFieldEngine:
         on the broadcast side (union of per-field term_stats scans →
         max per term → joined back onto every field's segments) —
         no driver-side collects, posting rows never shuffle."""
+        return self._fields_job(query, k, cross=True)
+
+    def _fields_job(self, query: str, k: int, cross: bool) -> DataFrame:
+        """Multi-field family (:func:`_fields_kernel`) as a batch of
+        one: every field's pruned segment scan tagged with its field
+        and the df the mode scores with (the field's own, or the
+        blended max), unioned into one bucket job."""
         fields = list(self.boosts)
         terms = analyze_query(query, stem=self.stem)
-        if not terms:
-            return self._empty()
-        boosts = dict(self.boosts)
-        n_docs_f = {f: self.engines[f].n_docs for f in fields}
-        avgdls = {f: self.engines[f].avgdl for f in fields}
-        ts_all = None
-        for f in fields:
-            t = self.engines[f]._ts_for(terms)
-            ts_all = t if ts_all is None else ts_all.unionByName(t)
-        blend = F.broadcast(ts_all.groupBy("term")
-                            .agg(F.max("df").alias("df_blend")))
         segs = None
-        for f in fields:
-            s = (self.engines[f]._segments_for(terms)
-                 .select(*SearchEngine._SEG_COLS)
-                 .join(blend, "term")
-                 .withColumn("field", F.lit(f)))
-            segs = s if segs is None else segs.unionByName(s)
-        tomb = np.unique(np.concatenate(
-            [self.engines[f].tombstones for f in fields])) \
-            if any(self.engines[f].tombstones.size for f in fields) \
-            else np.array([], dtype=np.int64)
-        all_terms = list(terms)
-
-        def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_field = {}
-            for f, g in pdf.groupby("field", sort=False):
-                per_field[f] = _group_partials(g)
-            blend_b = {t: int(d)
-                       for t, d in zip(pdf["term"], pdf["df_blend"])}
-            cand = _multifield_candidates(all_terms, per_field, tomb)
-            if cand is None:
-                return _empty_pdf()
-            # sum over terms (query order) of max over fields
-            score = np.zeros(cand.size, dtype=np.float64)
-            for t in all_terms:
-                best = np.zeros(cand.size, dtype=np.float64)
+        if terms:
+            if cross:
+                ts_all = None
                 for f in fields:
-                    pt = per_field.get(f)
-                    if not pt or t not in pt:
-                        continue
-                    w = boosts[f] * bm25_idf(
-                        n_docs_f[f], min(blend_b[t], n_docs_f[f]))
-                    s_tf, _ = _score_candidates(
-                        [t], {t: w}, {t: pt[t]}, cand, avgdls[f])
-                    np.maximum(best, s_tf, out=best)
-                score += best
-            cand2, score2 = _topk_local(cand, score, k)
-            return pd.DataFrame({"doc_id": cand2.astype(np.int64),
-                                 "score": score2})
-
-        local = (segs.transform(_spread_buckets).groupBy("bucket")
-                 .applyInPandas(score_bucket,
-                                schema="doc_id long, score double"))
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
+                    t = self.engines[f]._ts_for(terms)
+                    ts_all = t if ts_all is None else ts_all.unionByName(t)
+                blend = F.broadcast(ts_all.groupBy("term")
+                                    .agg(F.max("df").alias("df")))
+            for f in fields:
+                eng = self.engines[f]
+                s = (eng._segments_for(terms)
+                     .select(*SearchEngine._SEG_COLS)
+                     .join(blend if cross
+                           else F.broadcast(eng._ts_for(terms)), "term")
+                     .withColumn("field", F.lit(f)))
+                segs = s if segs is None else segs.unionByName(s)
+        tombs = [self.engines[f].tombstones for f in fields]
+        tomb = (np.unique(np.concatenate(tombs))
+                if any(t.size for t in tombs)
+                else np.array([], dtype=np.int64))
+        kernel = partial(
+            _fields_kernel, fields=fields, boosts=dict(self.boosts),
+            n_docs={f: self.engines[f].n_docs for f in fields},
+            avgdl={f: self.engines[f].avgdl for f in fields},
+            tomb=tomb, cross=cross)
+        return _bucket_job(self.spark, segs, kernel,
+                           {"": terms} if terms else {}, k, "df")
 
     # -------- explain (ES _explain analog, multifield paths) --------
     def explain_doc(self, query: str, doc_id: int,
@@ -2161,37 +2137,15 @@ def _phrase_keys(seg: dict, cand: np.ndarray, shift_terms: int,
     return (cidx[keep] << np.int64(shift_terms)) | p[keep]
 
 
-def _phrase_cand(per_term: dict, terms: list[str],
-                 tomb: np.ndarray) -> np.ndarray | None:
-    """Conjunctive candidate intersection, rarest term first; None
-    when empty."""
-    cand = None
-    for t in sorted(set(terms),
-                    key=lambda t: sum(p["n_docs"] for p in per_term[t])):
-        ids = _decode_full_term(per_term[t])
-        if cand is None:
-            cand = _mask_tombstones(ids, tomb)
-        else:
-            pos = np.searchsorted(ids, cand)
-            pos_c = np.minimum(pos, ids.size - 1)
-            cand = cand[ids[pos_c] == cand]
-        if cand.size == 0:
-            return None
-    return cand
-
-
-_NO_DOCS = (np.array([], dtype=np.int64), np.array([], dtype=np.float64))
-
-
-def _phrase_exact_docs(per_term: dict, cand: np.ndarray,
-                       all_terms: list[str], shift: int
+def _phrase_exact_docs(groups: list, cand: np.ndarray, shift: int
                        ) -> tuple[np.ndarray, np.ndarray]:
     """(docs, phrase_freq) via key-equality intersection across phrase
-    slots (slop=0)."""
+    slots (slop=0); slot i's keys are the union over its group."""
     running = None
-    for i, t in enumerate(all_terms):
+    for i, group in enumerate(groups):
         keys = np.unique(np.concatenate(
-            [_phrase_keys(seg, cand, shift, i) for seg in per_term[t]]))
+            [_phrase_keys(seg, cand, shift, i)
+             for parts in group for seg in parts]))
         running = keys if running is None else \
             running[np.isin(running, keys, assume_unique=True)]
         if running.size == 0:
@@ -2201,18 +2155,18 @@ def _phrase_exact_docs(per_term: dict, cand: np.ndarray,
     return cand[uniq], freq.astype(np.float64)
 
 
-def _phrase_sloppy_docs(per_term: dict, cand: np.ndarray,
+def _phrase_sloppy_docs(groups: list, cand: np.ndarray,
                         terms: list[str], slop: int
                         ) -> tuple[np.ndarray, np.ndarray]:
     """(docs, sloppy_freq) via the Lucene window matcher over
     offset-adjusted per-slot positions."""
     from ..oracle import lucene_sloppy_freq
     slot_maps: list[dict[int, np.ndarray]] = []
-    for i, t in enumerate(terms):
-        parts = [_phrase_occurrences(seg, cand, i)
-                 for seg in per_term[t]]
-        c = np.concatenate([x[0] for x in parts])
-        p = np.concatenate([x[1] for x in parts])
+    for i, group in enumerate(groups):
+        occ = [_phrase_occurrences(seg, cand, i)
+               for parts in group for seg in parts]
+        c = np.concatenate([x[0] for x in occ])
+        p = np.concatenate([x[1] for x in occ])
         o = np.lexsort((p, c))
         c, p = c[o], p[o]
         uniq, starts = np.unique(c, return_index=True)
@@ -2355,85 +2309,35 @@ class PhraseEngine(SearchEngine):
         slots never share a token position — documented greedy
         variant of Lucene's repeats machinery)."""
         from ..analysis import tokenize as _tok
-        terms = _tok(query, stem=self.stem)
-        if not terms:
-            return self._empty()
-        if slop:
-            return self._search_phrase_sloppy(terms, k, slop)
-        uterms = list(dict.fromkeys(terms))
-        stats = self.term_stats(uterms)
-        if any(t not in stats for t in uterms):
-            return self._empty()
-        idf_sum = 0.0
-        for t in terms:  # duplicates contribute twice (Lucene weight)
-            idf_sum += bm25_idf(self.n_docs, stats[t])
-        segs = self._segments_for(uterms).select(*self._POS_COLS)
-        n_docs, avgdl = self.n_docs, self.avgdl
-        tomb = self.tombstones
-        all_terms = list(terms)
-        shift = self.POS_SHIFT
-        kk = k
+        return self._phrase_job(
+            self._phrase_specs({"": _tok(query, stem=self.stem)}), k,
+            slop)
 
-        def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term = _group_partials_pos(pdf)
-            if any(t not in per_term for t in all_terms):
-                return _empty_pdf()
-            cand = _phrase_cand(per_term, all_terms, tomb)
-            if cand is None:
-                return _empty_pdf()
-            docs, f = _phrase_exact_docs(per_term, cand, all_terms,
-                                         shift)
-            if docs.size == 0:
-                return _empty_pdf()
-            dl = _dl_for(per_term[all_terms[0]], docs)
-            score = idf_sum * (f / (f + K1 * (1.0 - B + B * dl / avgdl)))
-            d2, s2 = _topk_local(docs, score, kk)
-            return pd.DataFrame({"doc_id": d2.astype(np.int64),
-                                 "score": s2})
+    def _phrase_specs(self, qterms: dict) -> dict:
+        """``{query_id: (slots, idf_sum)}`` for the token lists whose
+        terms are all indexed (a phrase needs every term somewhere);
+        duplicates contribute their idf twice (Lucene weight)."""
+        stats = self.term_stats(
+            sorted({t for ts in qterms.values() for t in ts}))
+        return {qid: ([[t] for t in ts],
+                      _idf_sum(self.n_docs, [stats[t] for t in ts]))
+                for qid, ts in qterms.items()
+                if ts and all(t in stats for t in ts)}
 
-        local = (segs.transform(_spread_buckets).groupBy("bucket")
-                 .applyInPandas(score_bucket,
-                                schema="doc_id long, score double"))
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    def _search_phrase_sloppy(self, terms: list[str], k: int,
-                              slop: int) -> DataFrame:
-        """Bucket-parallel sloppy phrase: candidate docs (conjunctive
-        posting intersection, rarest-first) then the Lucene window
-        algorithm per candidate over offset-adjusted positions."""
-        stats = self.term_stats(terms)
-        if any(t not in stats for t in terms):
-            return self._empty()
-        idf_sum = 0.0
-        for t in terms:
-            idf_sum += bm25_idf(self.n_docs, stats[t])
-        segs = self._segments_for(terms).select(*self._POS_COLS)
-        avgdl = self.avgdl
-        tomb = self.tombstones
-        all_terms = list(terms)
-        kk, sl = k, slop
-
-        def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term = _group_partials_pos(pdf)
-            if any(t not in per_term for t in all_terms):
-                return _empty_pdf()
-            cand = _phrase_cand(per_term, all_terms, tomb)
-            if cand is None:
-                return _empty_pdf()
-            docs, f = _phrase_sloppy_docs(per_term, cand, all_terms, sl)
-            if docs.size == 0:
-                return _empty_pdf()
-            dl = _dl_for(per_term[all_terms[0]], docs)
-            score = idf_sum * (f / (f + K1 * (1.0 - B + B * dl / avgdl)))
-            d2, s2 = _topk_local(docs, score, kk)
-            return pd.DataFrame({"doc_id": d2.astype(np.int64),
-                                 "score": s2})
-
-        local = (segs.transform(_spread_buckets).groupBy("bucket")
-                 .applyInPandas(score_bucket,
-                                schema="doc_id long, score double"))
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
+    def _phrase_job(self, specs: dict, k: int, slop: int,
+                    batched: bool = False) -> DataFrame:
+        """Phrase family (:func:`_phrase_kernel`) over
+        ``{query_id: (slots, idf_sum)}``; idf_sum is driver-side, so
+        the segment scan needs no df."""
+        terms = list(dict.fromkeys(t for slots, _ in specs.values()
+                                   for slot in slots for t in slot))
+        segs = (self._segments_for(terms).select(*self._POS_COLS)
+                if terms else None)
+        kernel = partial(_phrase_kernel, avgdl=self.avgdl,
+                         tomb=self.tombstones, shift=self.POS_SHIFT,
+                         slop=slop)
+        return _bucket_job(self.spark, segs, kernel, specs, k,
+                           batched=batched)
 
     def search_span_first(self, term: str, end: int,
                           k: int = TOP_K_SIZE,
@@ -2467,10 +2371,10 @@ class PhraseEngine(SearchEngine):
         e = int(end)
 
         def find_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term = _group_partials_pos(pdf)
+            per_term = _group_partials(pdf)
             if t not in per_term:
                 return _empty_pdf()
-            cand = _phrase_cand(per_term, [t], tomb)
+            cand = _phrase_cand([[per_term[t]]], tomb)
             if cand is None:
                 return _empty_pdf()
             parts = [_phrase_occurrences(seg, cand, 0)
@@ -2532,10 +2436,10 @@ class PhraseEngine(SearchEngine):
                                   list(toks), k, float(boost))
 
         def find_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term = _group_partials_pos(pdf)
+            per_term = _group_partials(pdf)
             if any(t not in per_term for t in set(terms)):
                 return _empty_pdf()
-            cand = _phrase_cand(per_term, terms, tomb)
+            cand = _phrase_cand([[per_term[t]] for t in set(terms)], tomb)
             if cand is None:
                 return _empty_pdf()
             slot_maps: list[dict[int, np.ndarray]] = []
@@ -2593,12 +2497,12 @@ class PhraseEngine(SearchEngine):
         kk, b, terms = k, float(boost), list(uterms)
 
         def find_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term = _group_partials_pos(pdf)
+            per_term = _group_partials(pdf)
             docs: set[int] = set()
             for t in terms:
                 if t not in per_term:
                     continue
-                cand = _phrase_cand(per_term, [t], tomb)
+                cand = _phrase_cand([[per_term[t]]], tomb)
                 if cand is not None:
                     docs.update(int(d) for d in cand)
             if not docs:
@@ -2657,10 +2561,11 @@ class PhraseEngine(SearchEngine):
         s, kk, b = int(big_slop), k, float(boost)
 
         def find_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term = _group_partials_pos(pdf)
+            per_term = _group_partials(pdf)
             if any(t not in per_term for t in set([t1, t2, tl])):
                 return _empty_pdf()
-            cand = _phrase_cand(per_term, [t1, t2, tl], tomb)
+            cand = _phrase_cand([[per_term[t]] for t in (t1, t2, tl)],
+                                tomb)
             if cand is None:
                 return _empty_pdf()
 
@@ -2748,7 +2653,7 @@ class PhraseEngine(SearchEngine):
         cl = [list(c) for c in norm]
 
         def find_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term = _group_partials_pos(pdf)
+            per_term = _group_partials(pdf)
             have = [t for t in present if t in per_term]
             if not have:
                 return _empty_pdf()
@@ -2756,7 +2661,7 @@ class PhraseEngine(SearchEngine):
             # per-clause intersection happens in the position test)
             allsets = []
             for t in have:
-                c0 = _phrase_cand(per_term, [t], tomb)
+                c0 = _phrase_cand([[per_term[t]]], tomb)
                 if c0 is not None:
                     allsets.append(c0)
             if not allsets:
@@ -2843,10 +2748,10 @@ class PhraseEngine(SearchEngine):
         pre_i, post_i, kk, b = int(pre), int(post), k, float(boost)
 
         def find_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term = _group_partials_pos(pdf)
+            per_term = _group_partials(pdf)
             if inc not in per_term:
                 return _empty_pdf()
-            cand = _phrase_cand(per_term, [inc], tomb)
+            cand = _phrase_cand([[per_term[inc]]], tomb)
             if cand is None:
                 return _empty_pdf()
 
@@ -2960,7 +2865,7 @@ class PhraseEngine(SearchEngine):
         cts = [list(ct) for ct in clause_terms]
 
         def find_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term = _group_partials_pos(pdf)
+            per_term = _group_partials(pdf)
             cand = None
             for ct in cts:
                 parts = [_decode_full_term(per_term[t])
@@ -3031,89 +2936,22 @@ class PhraseEngine(SearchEngine):
             return self._empty()
         expansions = [r["term"] for r in exp_rows]
         slot_df = max(int(r["df"]) for r in exp_rows)
-        uexact = list(dict.fromkeys(exact))
-        stats = self.term_stats(uexact) if uexact else {}
-        if any(t not in stats for t in uexact):
+        stats = self.term_stats(list(dict.fromkeys(exact)))
+        if any(t not in stats for t in exact):
             return self._empty()
-        idf_sum = 0.0
-        for t in exact:   # duplicates contribute twice, query order
-            idf_sum += bm25_idf(self.n_docs, stats[t])
-        idf_sum += bm25_idf(self.n_docs, slot_df)
-        needed = list(dict.fromkeys(exact + expansions))
-        segs = self._segments_for(needed).select(*self._POS_COLS)
-        avgdl = self.avgdl
-        tomb = self.tombstones
-        shift = self.POS_SHIFT
-        n = len(terms)
-        ex, exps, kk = list(exact), list(expansions), k
-
-        def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term = _group_partials_pos(pdf)
-            if any(t not in per_term for t in ex):
-                return _empty_pdf()
-            have_exp = [t for t in exps if t in per_term]
-            if not have_exp:
-                return _empty_pdf()
-            if ex:
-                cand = _phrase_cand(per_term, ex, tomb)
-                if cand is None:
-                    return _empty_pdf()
-            else:
-                ids = np.unique(np.concatenate(
-                    [_decode_full_term(per_term[t])
-                     for t in have_exp]))
-                cand = _mask_tombstones(ids, tomb)
-                if cand.size == 0:
-                    return _empty_pdf()
-            running = None
-            for i, t in enumerate(ex):
-                keys = np.unique(np.concatenate(
-                    [_phrase_keys(seg, cand, shift, i)
-                     for seg in per_term[t]]))
-                running = keys if running is None else \
-                    running[np.isin(running, keys, assume_unique=True)]
-                if running.size == 0:
-                    return _empty_pdf()
-            last = np.unique(np.concatenate(
-                [_phrase_keys(seg, cand, shift, n - 1)
-                 for t in have_exp for seg in per_term[t]]))
-            running = last if running is None else \
-                running[np.isin(running, last, assume_unique=True)]
-            if running.size == 0:
-                return _empty_pdf()
-            cidx = (running >> np.int64(shift)).astype(np.int64)
-            uniq, freq = np.unique(cidx, return_counts=True)
-            docs = cand[uniq]
-            f = freq.astype(np.float64)
-            dl_parts = (per_term[ex[0]] if ex else
-                        [s for t in have_exp for s in per_term[t]])
-            dl = _dl_for(dl_parts, docs)
-            score = idf_sum * (f / (f + K1 * (1.0 - B + B * dl / avgdl)))
-            d2, s2 = _topk_local(docs, score, kk)
-            return pd.DataFrame({"doc_id": d2.astype(np.int64),
-                                 "score": s2})
-
-        local = (segs.transform(_spread_buckets).groupBy("bucket")
-                 .applyInPandas(score_bucket,
-                                schema="doc_id long, score double"))
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        # duplicates contribute twice, query order, then the slot
+        idf_sum = _idf_sum(self.n_docs,
+                           [stats[t] for t in exact] + [slot_df])
+        spec = ([[t] for t in exact] + [expansions], idf_sum)
+        return self._phrase_job({"": spec}, k, 0)
 
 
-_PARTIAL_FIELDS_POS = _PARTIAL_FIELDS + ("pos_blob", "pos_off")
-
-
-def _group_partials_pos(pdf: pd.DataFrame) -> dict:
-    out: dict = {}
-    for r in pdf.sort_values("doc_id_min").itertuples(index=False):
-        seg = {c: getattr(r, c) for c in _PARTIAL_FIELDS_POS}
-        seg["full"] = None
-        parts = out.setdefault(r.term, [])
-        if parts and seg["doc_id_min"] <= parts[-1]["doc_id_max"]:
-            raise ValueError(
-                "index corruption: overlapping partials — rebuild with "
-                "presort=True")
-        parts.append(seg)
-    return out
+def _idf_sum(n_docs: int, dfs: list[int]) -> float:
+    """Left fold of the phrase slots' idfs (the oracle's order)."""
+    s = 0.0
+    for df_ in dfs:
+        s += bm25_idf(n_docs, df_)
+    return s
 
 
 def search_many_synonyms(engine: SearchEngine,
@@ -3122,186 +2960,24 @@ def search_many_synonyms(engine: SearchEngine,
     """Batched SYNONYM-EXPANDED conjunctive search: every query in
     ONE job with shared decodes (the reference applies synonym_graph
     on all searches, so the batched offline-eval shape needs it too).
-    Per-slot SynonymQuery semantics and broadcast-side GLOBAL slot
-    dfs exactly as ``SearchEngine.search_synonyms``; scores bit-exact
-    with the per-query path."""
-    from pyspark.sql.window import Window
-
+    Same kernel and broadcast-side GLOBAL slot dfs as
+    ``SearchEngine.search_synonyms`` — bit-exact by construction."""
     from ..oracle import _analyze_slots
     qslots = {qid: _analyze_slots(q, synonyms, stem=engine.stem)
               for qid, q in queries.items()}
-    qslots = {qid: s for qid, s in qslots.items() if s}
-    members = sorted({t for slots in qslots.values()
-                      for alts in slots for t in alts})
-    if not members:
-        return engine._empty().withColumn("query_id", F.lit(""))
-    # one slot-df table across ALL queries: slot key = its member
-    # tuple (identical slots across queries share one aggregate row)
-    slot_key = {}
-    for slots in qslots.values():
-        for alts in slots:
-            slot_key.setdefault(tuple(alts), len(slot_key))
-    mem_rows = [(t, sid) for alts, sid in slot_key.items()
-                for t in alts]
-    mem_df = engine.spark.createDataFrame(
-        mem_rows, "term string, slot_id int")
-    slot_df = (engine._ts_for(members).join(mem_df, "term")
-               .groupBy("slot_id").agg(F.max("df").alias("slot_df")))
-    # segments carry ONE row per (partial, term): slot resolution
-    # happens inside the scorer from the broadcast slot-df map
-    segs = engine._segments_for(members).join(
-        F.broadcast(slot_df.join(mem_df, "slot_id")
-                    .groupBy("term")
-                    .agg(F.map_from_entries(F.collect_list(
-                        F.struct("slot_id", "slot_df")))
-                        .alias("slot_dfs"))), "term")
-    n_docs, avgdl = engine.n_docs, engine.avgdl
-    tomb = engine.tombstones
-    q_sids = {qid: [slot_key[tuple(alts)] for alts in slots]
-              for qid, slots in qslots.items()}
-    sid_members = {sid: list(alts) for alts, sid in slot_key.items()}
-
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        per_term = _group_partials(pdf)
-        sdf_map: dict[int, int] = {}
-        for m in pdf["slot_dfs"]:
-            sdf_map.update({int(a): int(b) for a, b in m.items()})
-        out_q, out_d, out_s = [], [], []
-        for qid, sids in q_sids.items():
-            # AND across slots: every slot needs >= 1 member here
-            slot_terms = []
-            dead = False
-            for sid in sids:
-                ts = [t for t in sid_members[sid] if t in per_term]
-                if not ts:
-                    dead = True
-                    break
-                slot_terms.append((sid, ts))
-            if dead:
-                continue
-            # rarest slot first
-            slot_terms.sort(key=lambda st: sum(
-                p["n_docs"] for t in st[1] for p in per_term[t]))
-            cand = None
-            for sid, ts in slot_terms:
-                ids_s = [_decode_full_term(per_term[t]) for t in ts]
-                u = (ids_s[0] if len(ids_s) == 1
-                     else np.unique(np.concatenate(ids_s)))
-                if cand is None:
-                    cand = _mask_tombstones(u, tomb)
-                else:
-                    pos = np.searchsorted(u, cand)
-                    pos_c = np.minimum(pos, u.size - 1)
-                    cand = cand[u[pos_c] == cand]
-                if cand.size == 0:
-                    dead = True
-                    break
-            if dead:
-                continue
-            score = np.zeros(cand.size, dtype=np.float64)
-            for sid in sids:   # slot order = the oracle's summation
-                idf_s = bm25_idf(n_docs, sdf_map[sid])
-                slot_tf = np.zeros(cand.size, dtype=np.int64)
-                dl = np.ones(cand.size, dtype=np.float64)
-                for t in sid_members[sid]:
-                    for seg in per_term.get(t, ()):
-                        doc_ids, tfs, dls = _decode_partial_full(seg)
-                        if doc_ids.size == 0:
-                            continue
-                        pos = np.searchsorted(doc_ids, cand)
-                        pos_c = np.minimum(pos, doc_ids.size - 1)
-                        hit = doc_ids[pos_c] == cand
-                        slot_tf[hit] += tfs[pos_c[hit]]
-                        dl[hit] = dls[pos_c[hit]]
-                tfd = slot_tf.astype(np.float64)
-                score += idf_s * (tfd / (tfd + K1 * (
-                    1.0 - B + B * dl / avgdl)))
-            cand2, score2 = _topk_local(cand, score, k)
-            out_q.extend([qid] * cand2.size)
-            out_d.append(cand2)
-            out_s.append(score2)
-        if not out_q:
-            return pd.DataFrame({
-                "query_id": pd.Series([], dtype=object),
-                "doc_id": pd.Series([], dtype=np.int64),
-                "score": pd.Series([], dtype=np.float64)})
-        return pd.DataFrame({
-            "query_id": out_q,
-            "doc_id": np.concatenate(out_d).astype(np.int64),
-            "score": np.concatenate(out_s)})
-
-    local = (segs.select(*SearchEngine._SEG_COLS, "slot_dfs")
-             .transform(_spread_buckets).groupBy("bucket")
-             .applyInPandas(score_bucket,
-                            schema="query_id string, doc_id long, "
-                                   "score double"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id"))
-    return (local.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k).drop("_rn"))
+    return engine._slots_job({qid: s for qid, s in qslots.items() if s},
+                             k, batched=True)
 
 
 def search_many_or(engine: SearchEngine, queries: dict[str, str],
                    k: int = TOP_K_SIZE) -> "DataFrame":
     """Batched DISJUNCTIVE search: all queries in ONE job (shared
-    segment scan + decodes per bucket), per-query top-k.  Scores are
-    bit-exact with per-query ``search_or`` semantics (sum of
-    present-term contributions in query-term order)."""
-    from pyspark.sql.window import Window
-
-    qterms = {qid: analyze_query(q, stem=engine.stem)
-              for qid, q in queries.items()}
-    qterms = {qid: ts for qid, ts in qterms.items() if ts}
-    all_terms = sorted({t for ts in qterms.values() for t in ts})
-    if not all_terms:
-        return engine._empty().withColumn("query_id", F.lit(""))
-    # driver stats-map literal fold when it fits (same values as the
-    # broadcast join; see SearchEngine._attach_df) — one less scan+join
-    # per batched query job
-    segs = engine._attach_df(engine._segments_for(all_terms), all_terms)
-    n_docs, avgdl = engine.n_docs, engine.avgdl
-    qt_b = dict(qterms)
-    tomb = engine.tombstones
-
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        idf_b = {t: bm25_idf(n_docs, int(df_))
-                 for t, df_ in zip(pdf["term"], pdf["df"])}
-        per_term = _group_partials(pdf)
-        out_q, out_d, out_s = [], [], []
-        for qid, terms in qt_b.items():
-            present = [t for t in terms if t in per_term]
-            if not present:
-                continue
-            cand = _mask_tombstones(np.unique(np.concatenate(
-                [_decode_full_term(per_term[t]) for t in present])),
-                tomb)
-            if cand.size == 0:
-                continue
-            score, _ = _score_candidates(terms, idf_b, per_term, cand,
-                                         avgdl)
-            cand, score = _topk_local(cand, score, k)
-            out_q.extend([qid] * cand.size)
-            out_d.append(cand)
-            out_s.append(score)
-        if not out_q:
-            return pd.DataFrame({
-                "query_id": pd.Series([], dtype=object),
-                "doc_id": pd.Series([], dtype=np.int64),
-                "score": pd.Series([], dtype=np.float64)})
-        return pd.DataFrame({
-            "query_id": out_q,
-            "doc_id": np.concatenate(out_d).astype(np.int64),
-            "score": np.concatenate(out_s)})
-
-    local = (segs.select(*SearchEngine._SEG_COLS, "df")
-             .transform(_spread_buckets).groupBy("bucket")
-             .applyInPandas(score_bucket,
-                            schema="query_id string, doc_id long, "
-                                   "score double"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id"))
-    return (local.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k).drop("_rn"))
+    segment scan + decodes per bucket), per-query top-k.  Same
+    MaxScore kernel as per-query ``search_or`` — bit-exact by
+    construction."""
+    return engine._or_job({qid: (ts, 1) for qid, ts
+                           in _analyzed(engine, queries).items()},
+                          k, batched=True)
 
 
 def search_many_phrase(engine: "PhraseEngine", queries: dict[str, str],
@@ -3313,81 +2989,13 @@ def search_many_phrase(engine: "PhraseEngine", queries: dict[str, str],
     each bucket, output is (query_id, doc_id, score) with per-query
     top-k.  ``slop`` applies to every query (Lucene sloppy matcher;
     repeated-term phrases use the distinct-position repeats rule —
-    see oracle.lucene_sloppy_freq).  Scores are bit-exact with
-    per-query ``search_phrase``."""
-    from pyspark.sql.window import Window
-
+    see oracle.lucene_sloppy_freq).  Queries with a globally-missing
+    term drop out.  Same kernel as per-query ``search_phrase`` —
+    bit-exact by construction."""
     from ..analysis import tokenize as _tok
-    qterms = {qid: _tok(q, stem=engine.stem)
-              for qid, q in queries.items()}
-    qterms = {qid: ts for qid, ts in qterms.items() if ts}
-    empty = engine.spark.createDataFrame(
-        [], "query_id string, doc_id long, score double")
-    uterms = sorted({t for ts in qterms.values() for t in ts})
-    if not uterms:
-        return empty
-    stats = engine.term_stats(uterms)
-    live: dict[str, list[str]] = {}
-    idf_sums: dict[str, float] = {}
-    for qid, ts in qterms.items():
-        if any(t not in stats for t in ts):
-            continue    # phrase needs every term somewhere
-        s = 0.0
-        for t in ts:    # duplicates contribute twice (Lucene weight)
-            s += bm25_idf(engine.n_docs, stats[t])
-        live[qid] = ts
-        idf_sums[qid] = s
-    if not live:
-        return empty
-    needed = sorted({t for ts in live.values() for t in ts})
-    segs = engine._segments_for(needed).select(*engine._POS_COLS)
-    avgdl = engine.avgdl
-    tomb = engine.tombstones
-    shift = engine.POS_SHIFT
-    qt_b, idf_b = dict(live), dict(idf_sums)
-    kk, sl = k, slop
-
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        per_term = _group_partials_pos(pdf)
-        out_q, out_d, out_s = [], [], []
-        for qid, terms in qt_b.items():
-            if any(t not in per_term for t in terms):
-                continue
-            cand = _phrase_cand(per_term, terms, tomb)
-            if cand is None:
-                continue
-            if sl:
-                docs, f = _phrase_sloppy_docs(per_term, cand, terms, sl)
-            else:
-                docs, f = _phrase_exact_docs(per_term, cand, terms,
-                                             shift)
-            if docs.size == 0:
-                continue
-            dl = _dl_for(per_term[terms[0]], docs)
-            score = idf_b[qid] * (f / (f + K1 * (1.0 - B
-                                                 + B * dl / avgdl)))
-            d2, s2 = _topk_local(docs, score, kk)
-            out_q.extend([qid] * d2.size)
-            out_d.append(d2)
-            out_s.append(s2)
-        if not out_q:
-            return pd.DataFrame({
-                "query_id": pd.Series([], dtype=object),
-                "doc_id": pd.Series([], dtype=np.int64),
-                "score": pd.Series([], dtype=np.float64)})
-        return pd.DataFrame({
-            "query_id": out_q,
-            "doc_id": np.concatenate(out_d).astype(np.int64),
-            "score": np.concatenate(out_s)})
-
-    local = (segs.transform(_spread_buckets).groupBy("bucket")
-             .applyInPandas(score_bucket,
-                            schema="query_id string, doc_id long, "
-                                   "score double"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id"))
-    return (local.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k).drop("_rn"))
+    specs = engine._phrase_specs(
+        {qid: _tok(q, stem=engine.stem) for qid, q in queries.items()})
+    return engine._phrase_job(specs, k, slop, batched=True)
 
 
 def search_multi_index(engines: list["SearchEngine"], query: str,

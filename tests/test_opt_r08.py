@@ -54,7 +54,7 @@ def test_token_runs_equals_split_filter(spark):
 def test_fan_out_preserves_rows_and_parallelizes(spark, sf_dir):
     import __spark_entry__ as entry
     raw = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    fanned = entry._fan_out(raw)
+    fanned = entry.fan_out_small_scan(raw)
     # same rows
     assert fanned.count() == raw.count()
     assert fanned.select(F.sum("doc_id")).collect()[0][0] == \
@@ -69,7 +69,7 @@ def test_fan_out_fence_keeps_filter_above_exchange(spark, sf_dir):
     tokenize filter below the round-robin exchange onto the
     single-task scan — the exact pathology the fan-out exists to fix."""
     import __spark_entry__ as entry
-    fanned = entry._fan_out(
+    fanned = entry.fan_out_small_scan(
         spark.read.parquet(f"{sf_dir}/documents.parquet"))
     cond = F.size(spark_token_runs(F.lower("text"))) > 3
     plan = fanned.filter(cond)._jdf.queryExecution() \
@@ -228,7 +228,7 @@ def test_fan_out_by_window_rows_identical(spark, tmp_path):
                 .select("k", "oid", "price", "rk"))
     plain = sorted(tuple(r) for r in topk(base).collect())
     fanned = sorted(tuple(r) for r in
-                    topk(entry._fan_out_by(base, "k")).collect())
+                    topk(entry.fan_out_small_scan(base, "k")).collect())
     assert plain == fanned
 
 

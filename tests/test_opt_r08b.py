@@ -23,14 +23,14 @@ from auctus_spark.operators.profile_dataset import profile_dataset
 
 def test_fan_out_exact_agg_noop_on_local_relation(spark):
     df = spark.createDataFrame([(i,) for i in range(10)], "x long")
-    out = profiling.fan_out_exact_agg(df)
+    out = profiling.fan_out_small_scan(df)
     # local relations have no input files: returned unchanged
     assert out is df
 
 
 def test_fan_out_exact_agg_preserves_exact_aggregates(spark, sf_dir):
     raw = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    fanned = profiling.fan_out_exact_agg(raw)
+    fanned = profiling.fan_out_small_scan(raw)
     cols = ["o_orderkey", "o_custkey", "o_orderdate"]
     aggs = ([F.count(F.lit(1)).alias("n")]
             + [F.count_distinct(c).alias(f"d_{c}") for c in cols]
@@ -46,8 +46,8 @@ def test_fan_out_gates_honour_small_scan_override(spark, sf_dir,
     once the cap is below its size."""
     import __spark_entry__ as entry
     raw = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    gates = [profiling.fan_out_exact_agg, entry._fan_out,
-             lambda df: entry._fan_out_by(df, "o_orderkey")]
+    gates = [profiling.fan_out_small_scan, entry.fan_out_small_scan,
+             lambda df: entry.fan_out_small_scan(df, "o_orderkey")]
     monkeypatch.delenv("AUCTUS_SMALL_SCAN_BYTES", raising=False)
     assert all(gate(raw) is not raw for gate in gates)
     monkeypatch.setenv("AUCTUS_SMALL_SCAN_BYTES", "1")
@@ -56,7 +56,7 @@ def test_fan_out_gates_honour_small_scan_override(spark, sf_dir,
 
 def test_temporal_resolution_fanned_matches_unfanned(spark, sf_dir):
     raw = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    fanned = profiling.fan_out_exact_agg(raw)
+    fanned = profiling.fan_out_small_scan(raw)
     assert (profiling.temporal_resolution(raw, "o_orderdate")
             == profiling.temporal_resolution(fanned, "o_orderdate"))
 

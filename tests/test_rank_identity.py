@@ -2010,3 +2010,182 @@ def test_fuzzy_completion_semantics(spark, built_positional):
              eng.suggest_completions(p, size=50).collect()}
     assert exact <= {t for t, d in got if d == 0} | set(
         t for t, _ in got)
+
+
+# ---------------------------------------------------------------------
+# batched engines: one output schema; tombstones on every scored family
+# ---------------------------------------------------------------------
+
+def test_batched_engines_one_schema_when_nothing_to_score(
+        spark, built, built_positional):
+    """A batch whose queries have no terms comes back with the same
+    (query_id, doc_id, score) columns as a batch with hits."""
+    from auctus_spark.query.bm25 import (PhraseEngine, search_many,
+                                         search_many_or,
+                                         search_many_phrase,
+                                         search_many_synonyms)
+    eng = SearchEngine(spark, built[0], term_buckets=8)
+    peng = PhraseEngine(spark, built_positional[0], term_buckets=8)
+    syn = {"import": ["def"]}
+    cols = ["query_id", "doc_id", "score"]
+    for queries in ({"qa": "", "qb": "?! -- ..."}, {"qa": "import"}):
+        for df in (search_many(eng, queries, k=5),
+                   search_many_or(eng, queries, k=5),
+                   search_many_synonyms(eng, queries, syn, k=5),
+                   search_many_phrase(peng, queries, k=5)):
+            assert df.columns == cols
+            rows = df.collect()
+            assert bool(rows) == ("qa" in queries and
+                                  queries["qa"] == "import")
+
+
+TOMB_K = 20
+TOMB_SYN = {"import": ["def"], "uniq_token_11": ["uniq_token_22"]}
+TOMB_AND = ["import def", "the return", "import def return the"]
+TOMB_OR = ["def return", "the import def return for"]
+TOMB_PHRASE = ["import def", "the import", "import import", "def return"]
+TOMB_FIELDS = ["import", "src import", "file_7 py"]
+TOMB_BOOSTS = {"content": 1.0, "path": 3.0}
+
+
+def _or2_batched(c, qs, k):
+    from auctus_spark.analysis import analyze_query
+    return c.eng._or_job({qid: (analyze_query(q), 2)
+                          for qid, q in qs.items()}, k, batched=True)
+
+
+def _tomb_families():
+    """family -> (queries, oracle(c, q, k), single(c, q, k),
+    batched(c, {qid: q}, k) or None)."""
+    from auctus_spark.oracle import search_cross_fields, search_multifield
+    from auctus_spark.query.bm25 import (search_many, search_many_or,
+                                         search_many_phrase,
+                                         search_many_synonyms)
+    return {
+        "and": (TOMB_AND,
+                lambda c, q, k: c.oracle.search(q, k=k),
+                lambda c, q, k: c.eng.search_wand(q, k=k),
+                lambda c, qs, k: search_many(c.eng, qs, k=k)),
+        "or_msm1": (TOMB_OR,
+                    lambda c, q, k: c.oracle.search_or(q, k=k),
+                    lambda c, q, k: c.eng.search_or(q, k=k),
+                    lambda c, qs, k: search_many_or(c.eng, qs, k=k)),
+        "or_msm2": (TOMB_OR,
+                    lambda c, q, k: c.oracle.search_or(
+                        q, k=k, min_should_match=2),
+                    lambda c, q, k: c.eng.search_or(
+                        q, k=k, min_should_match=2),
+                    _or2_batched),
+        "synonyms": (["import return", "import", "uniq_token_11 return"],
+                     lambda c, q, k: c.oracle.search_synonyms(
+                         q, TOMB_SYN, k=k),
+                     lambda c, q, k: c.eng.search_synonyms(
+                         q, TOMB_SYN, k=k),
+                     lambda c, qs, k: search_many_synonyms(
+                         c.eng, qs, TOMB_SYN, k=k)),
+        "phrase_slop0": (TOMB_PHRASE,
+                         lambda c, q, k: c.poracle.search_phrase(q, k=k),
+                         lambda c, q, k: c.peng.search_phrase(q, k=k),
+                         lambda c, qs, k: search_many_phrase(
+                             c.peng, qs, k=k)),
+        "phrase_slop2": (TOMB_PHRASE,
+                         lambda c, q, k: c.poracle.search_phrase(
+                             q, k=k, slop=2),
+                         lambda c, q, k: c.peng.search_phrase(
+                             q, k=k, slop=2),
+                         lambda c, qs, k: search_many_phrase(
+                             c.peng, qs, k=k, slop=2)),
+        "phrase_prefix": (["import d", "the imp", "def retur"],
+                          lambda c, q, k: c.poracle.search_phrase_prefix(
+                              q, k=k),
+                          lambda c, q, k: c.peng.search_phrase_prefix(
+                              q, k=k),
+                          None),
+        "most_fields": (TOMB_FIELDS,
+                        lambda c, q, k: search_multifield(
+                            c.foracle, q, TOMB_BOOSTS, k=k),
+                        lambda c, q, k: c.meng.search(q, k=k),
+                        None),
+        "cross_fields": (TOMB_FIELDS,
+                         lambda c, q, k: search_cross_fields(
+                             c.foracle, q, TOMB_BOOSTS, k=k),
+                         lambda c, q, k: c.meng.search_cross_fields(
+                             q, k=k),
+                         None),
+    }
+
+
+@pytest.fixture(scope="module")
+def tombstoned(spark, built, built_positional, tmp_path_factory):
+    """``delete_docs`` copies of the ``built`` and ``built_positional``
+    indexes (plus per-field indexes of the same corpus) with victims
+    taken from inside every family query's oracle top-k: the first
+    hit and the middle hit of each."""
+    import shutil
+    from types import SimpleNamespace
+
+    from auctus_spark.index.build import delete_docs
+    from auctus_spark.oracle import OracleIndex as _OI
+    from auctus_spark.query.bm25 import (MultiFieldEngine, PhraseEngine,
+                                         build_field_indexes)
+    out, oracle, _, corpus, _ = built
+    pout, poracle, _ = built_positional
+    base = tmp_path_factory.mktemp("tomb")
+    pdf = corpus.toPandas()
+    c = SimpleNamespace(oracle=oracle, poracle=poracle,
+                        foracle=_OI.build_fields(
+                            [(int(r.doc_id),
+                              {"content": r.content, "path": r.path})
+                             for r in pdf.itertuples(index=False)]))
+    victims: set[int] = set()
+    for queries, want, _, _ in _tomb_families().values():
+        for q in queries:
+            top = want(c, q, TOMB_K)
+            if top:
+                victims |= {top[0][0], top[len(top) // 2][0]}
+    dirs = [str(base / "plain"), str(base / "positional")]
+    shutil.copytree(out, dirs[0])
+    shutil.copytree(pout, dirs[1])
+    fdirs = build_field_indexes(spark, corpus, str(base / "fields"),
+                                list(TOMB_BOOSTS), doc_bucket=256,
+                                chunk_docs=200, term_buckets=8)
+    for d in dirs + list(fdirs.values()):
+        delete_docs(spark, d, sorted(victims))
+    c.eng = SearchEngine(spark, dirs[0], term_buckets=8)
+    c.peng = PhraseEngine(spark, dirs[1], term_buckets=8)
+    c.meng = MultiFieldEngine(spark, fdirs, TOMB_BOOSTS, term_buckets=8)
+    c.victims = victims
+    return c
+
+
+@pytest.mark.parametrize("family", [
+    "and", "or_msm1", "or_msm2", "synonyms", "phrase_slop0",
+    "phrase_slop2", "phrase_prefix", "most_fields", "cross_fields"])
+def test_tombstones_mask_every_scored_family(spark, tombstoned, family):
+    """On an index with deletes, every BM25-scored family — single
+    query and batched — returns the oracle's top-(k + victims) with
+    the victims removed, cut to k: bit-exact, so masking neither
+    drops a live doc nor lets a tombstone through (several partials
+    per term per bucket: doc_bucket=256, chunk_docs=200)."""
+    c = tombstoned
+    queries, oracle, single, batched = _tomb_families()[family]
+    k, n_v = TOMB_K, len(c.victims)
+    want = {q: [(d, s) for d, s in oracle(c, q, k + n_v)
+                if d not in c.victims][:k] for q in queries}
+    assert any(want.values()), family
+    assert any(d in c.victims for q in queries
+               for d, _ in oracle(c, q, k)), family
+    for q in queries:
+        got = [(int(r.doc_id), float(r.score))
+               for r in single(c, q, k).collect()]
+        _assert_rank_identical(got, want[q])
+    if batched is None:
+        return
+    qids = {f"q{i}": q for i, q in enumerate(queries)}
+    by_q: dict = {}
+    for r in batched(c, qids, k).collect():
+        by_q.setdefault(r.query_id, []).append(
+            (int(r.doc_id), float(r.score)))
+    for qid, q in qids.items():
+        got = sorted(by_q.get(qid, []), key=lambda t: (-t[1], t[0]))
+        _assert_rank_identical(got, want[q])
