@@ -35,6 +35,14 @@ shared decodes.  A single-query method is a batch of one merged by
 friends) merge with a per-``query_id`` window.  Both paths run the same
 kernel, so they are bit-identical by construction.
 
+The constant-score span family runs as kernels of the same job:
+``_near_kernel`` (span_near, span_multi inside span_near, intervals),
+``_span_first_kernel``, ``_contain_kernel`` (span_containing /
+span_within) and ``_span_not_kernel``.  Every hit scores ``boost``, so
+the job's (score desc, doc_id asc) merge is the doc_id order those
+queries promise.  span_or needs no positions: it is the constant_score
+union of postings that the prefix/wildcard/regexp rewrites use.
+
 Global statistics discipline: N, avgdl, df are read from the stats
 tables written at build finalize (pre-merge snapshot), never derived
 from the pruned scan — required for rank identity with the oracle.
@@ -42,6 +50,7 @@ from the pruned scan — required for rank identity with the oracle.
 
 from __future__ import annotations
 
+import re
 from functools import partial
 
 import numpy as np
@@ -86,6 +95,13 @@ def _spread_buckets(df: DataFrame) -> DataFrame:
 def _term_bigrams(s: str) -> set[str]:
     """Distinct character bigrams of a term (no padding)."""
     return {s[i:i + _GRAM_N] for i in range(len(s) - _GRAM_N + 1)}
+
+
+def _wildcard_regex(pattern: str) -> str:
+    """Anchored whole-term regex of an ES wildcard pattern: ``*`` = any
+    run, ``?`` = one char, every other char literal."""
+    return "^" + "".join(".*" if c == "*" else "." if c == "?"
+                         else re.escape(c) for c in pattern) + "$"
 
 
 def _regex_literal_runs(pattern: str) -> list[str] | None:
@@ -506,15 +522,8 @@ class SearchEngine:
         terms = [r["term"] for r in
                  (self.term_dict.filter(F.col("term").startswith(p))
                   .select("term").collect())]
-        if not terms:
-            return self._empty()
-        if len(terms) > self._MAX_TERM_ISIN:
-            return self._constant_score_terms(
-                F.col("term").startswith(p), k, boost)
-        tb = self._term_buckets_for(terms)
-        pred = (F.col("term_bucket").isin(list(set(tb.values())))
-                & F.col("term").isin(terms))
-        return self._constant_score_terms(pred, k, boost)
+        return self._constant_score_expansion(
+            terms, F.col("term").startswith(p), k, boost)
 
     # terms collected from a dictionary cut above this count fall back
     # to the predicate path (an isin literal list this long would
@@ -541,16 +550,13 @@ class SearchEngine:
         over every posting row.  Patterns with no usable literal
         (``*``, ``?x``) keep the full-scan predicate path — the
         documented fallback, semantically identical."""
-        import re as _re
         p = pattern.lower().strip()
         if not p:
             return self._empty()
-        rx = "^" + "".join(
-            ".*" if c == "*" else "." if c == "?" else _re.escape(c)
-            for c in p) + "$"
-        runs = [r for r in _re.split(r"[*?]", p) if len(r) >= _GRAM_N]
+        rx = _wildcard_regex(p)
+        runs = [r for r in re.split(r"[*?]", p) if len(r) >= _GRAM_N]
         req = sorted({g for r in runs for g in _term_bigrams(r)})
-        lead = _re.split(r"[*?]", p, maxsplit=1)[0]
+        lead = re.split(r"[*?]", p, maxsplit=1)[0]
         if not req and not lead:
             return self._constant_score_terms(
                 F.col("term").rlike(rx), k, boost)
@@ -566,15 +572,8 @@ class SearchEngine:
         terms = [r["term"]
                  for r in (cand.filter(F.col("term").rlike(rx))
                            .select("term").collect())]
-        if not terms:
-            return self._empty()
-        if len(terms) > self._MAX_TERM_ISIN:
-            return self._constant_score_terms(
-                F.col("term").rlike(rx), k, boost)
-        tb = self._term_buckets_for(terms)
-        pred = (F.col("term_bucket").isin(list(set(tb.values())))
-                & F.col("term").isin(terms))
-        return self._constant_score_terms(pred, k, boost)
+        return self._constant_score_expansion(
+            terms, F.col("term").rlike(rx), k, boost)
 
     def search_regexp(self, pattern: str, k: int = TOP_K_SIZE,
                       boost: float = 1.0) -> DataFrame:
@@ -603,7 +602,6 @@ class SearchEngine:
         terms.  Patterns the extractor cannot prune (alternation/
         groups/no literal run) take the full-scan ``rlike`` predicate
         path — semantically identical."""
-        import re as _re
         p = pattern.strip()
         if not p:
             return self._empty()
@@ -611,7 +609,7 @@ class SearchEngine:
         runs = _regex_literal_runs(p)
         # longest plain-literal prefix of the pattern (minus a final
         # quantified char) → startswith cut on the dictionary
-        m = _re.match(r"[a-z0-9_]+", p)
+        m = re.match(r"[a-z0-9_]+", p)
         lead = m.group(0) if m else ""
         if lead and len(lead) < len(p) and p[len(lead)] in "?*{":
             lead = lead[:-1]
@@ -634,11 +632,19 @@ class SearchEngine:
         terms = [r["term"]
                  for r in (cand.filter(F.col("term").rlike(rx))
                            .select("term").collect())]
+        return self._constant_score_expansion(
+            terms, F.col("term").rlike(rx), k, boost)
+
+    def _constant_score_expansion(self, terms: list[str], fallback,
+                                  k: int, boost: float) -> DataFrame:
+        """The multi-term tail of prefix/wildcard/regexp/span_or: no
+        terms → empty; above ``_MAX_TERM_ISIN`` terms the ``fallback``
+        predicate (semantically identical) replaces the isin list;
+        otherwise the segment scan is term_bucket-pruned + ``isin``."""
         if not terms:
             return self._empty()
         if len(terms) > self._MAX_TERM_ISIN:
-            return self._constant_score_terms(
-                F.col("term").rlike(rx), k, boost)
+            return self._constant_score_terms(fallback, k, boost)
         tb = self._term_buckets_for(terms)
         pred = (F.col("term_bucket").isin(list(set(tb.values())))
                 & F.col("term").isin(terms))
@@ -1643,11 +1649,6 @@ def _topk_local(cand, score, k):
     return cand, score
 
 
-def _empty_pdf():
-    return pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64),
-                         "score": pd.Series([], dtype=np.float64)})
-
-
 # ---- per-query kernels: kernel(parts, stats, spec, k) -> (doc_ids,
 # scores) of one query in one bucket; engine constants are bound with
 # functools.partial by the family's job method
@@ -2127,6 +2128,22 @@ def _phrase_occurrences(seg: dict, cand: np.ndarray, term_offset: int
     return cidx.astype(np.int64), p.astype(np.int64)
 
 
+def _positions_by_cand(group: list, cand: np.ndarray, offset: int = 0
+                       ) -> dict[int, np.ndarray]:
+    """candidate index → the sorted union of the group's positions
+    (minus ``offset``) in that doc; candidates holding no term of the
+    group are absent.  Distinct terms never share a token position, so
+    the union of a group's terms needs no dedup."""
+    occ = [_phrase_occurrences(seg, cand, offset)
+           for parts in group for seg in parts]
+    c = np.concatenate([x[0] for x in occ])
+    p = np.concatenate([x[1] for x in occ])
+    o = np.lexsort((p, c))
+    c, p = c[o], p[o]
+    uniq, starts = np.unique(c, return_index=True)
+    return dict(zip(uniq.tolist(), np.split(p, starts[1:])))
+
+
 def _phrase_keys(seg: dict, cand: np.ndarray, shift_terms: int,
                  term_offset: int) -> np.ndarray:
     """(candidate_index << shift) | (position - term_offset) keys for
@@ -2161,16 +2178,8 @@ def _phrase_sloppy_docs(groups: list, cand: np.ndarray,
     """(docs, sloppy_freq) via the Lucene window matcher over
     offset-adjusted per-slot positions."""
     from ..oracle import lucene_sloppy_freq
-    slot_maps: list[dict[int, np.ndarray]] = []
-    for i, group in enumerate(groups):
-        occ = [_phrase_occurrences(seg, cand, i)
-               for parts in group for seg in parts]
-        c = np.concatenate([x[0] for x in occ])
-        p = np.concatenate([x[1] for x in occ])
-        o = np.lexsort((p, c))
-        c, p = c[o], p[o]
-        uniq, starts = np.unique(c, return_index=True)
-        slot_maps.append(dict(zip(uniq.tolist(), np.split(p, starts[1:]))))
+    slot_maps = [_positions_by_cand(group, cand, i)
+                 for i, group in enumerate(groups)]
     docs_out, freqs = [], []
     for ci in range(cand.size):
         if any(ci not in m for m in slot_maps):
@@ -2223,8 +2232,8 @@ def _span_near_match(pos_lists: list[np.ndarray], slop: int,
     max - min - (n-1) <= slop — the minimal window covering all n
     lists, found by the standard sorted-merge sweep.  PRECONDITION:
     unordered lists are pairwise disjoint — guaranteed upstream
-    because unordered clauses must be distinct terms (enforced in
-    search_span_near) and distinct terms never share a token
+    because unordered clauses must not share a term (enforced in
+    PhraseEngine._near_job) and distinct terms never share a token
     position; with colliding lists the sweep could count one
     position for two clauses."""
     n = len(pos_lists)
@@ -2266,6 +2275,89 @@ def _span_near_match(pos_lists: list[np.ndarray], slop: int,
                 merged[hi] - merged[lo] - (n - 1) <= slop:
             return True
     return False
+
+
+# ---- constant-score span kernels, run by _bucket_job like the scored
+# families: kernel(parts, stats, spec, k) -> (doc_ids, scores) with
+# every hit scoring the spec's boost
+
+def _const_hits(cand: np.ndarray, hit: list, boost: float):
+    """(doc_ids, scores) of the candidates at indexes ``hit``."""
+    hit = np.asarray(hit, dtype=np.int64)
+    return cand[hit], np.full(hit.size, boost)
+
+
+def _near_kernel(parts, stats, spec, k, *, tomb):
+    """span_near / span_multi near / intervals: ``spec`` = (clauses,
+    slop, in_order, boost), a clause being the terms whose positions
+    it matches at (one term, a span_multi expansion or an intervals
+    any_of).  Candidates are the AND of the clauses; a doc matches
+    when :func:`_span_near_match` finds one position per clause."""
+    clauses, slop, in_order, boost = spec
+    groups = [[parts[t] for t in c if t in parts] for c in clauses]
+    if not all(groups):
+        return _NO_DOCS
+    cand = _phrase_cand(groups, tomb)
+    if cand is None:
+        return _NO_DOCS
+    maps = [_positions_by_cand(g, cand) for g in groups]
+    return _const_hits(cand, [
+        ci for ci in range(cand.size)
+        if _span_near_match([m[ci] for m in maps], slop, in_order)],
+        boost)
+
+
+def _span_first_kernel(parts, stats, spec, k, *, tomb):
+    """span_first: ``spec`` = (term, end, boost); docs where the term
+    occurs at a position < end."""
+    term, end, boost = spec
+    if term not in parts:
+        return _NO_DOCS
+    cand = _phrase_cand([[parts[term]]], tomb)
+    if cand is None:
+        return _NO_DOCS
+    m = _positions_by_cand([parts[term]], cand)
+    return _const_hits(cand, [ci for ci, ps in m.items() if ps[0] < end],
+                       boost)
+
+
+def _contain_kernel(parts, stats, spec, k, *, tomb):
+    """span_containing: ``spec`` = ((big1, big2, little), slop, boost);
+    candidates hold all three terms, :func:`_span_contain_match`
+    decides."""
+    terms, slop, boost = spec
+    if any(t not in parts for t in terms):
+        return _NO_DOCS
+    cand = _phrase_cand([[parts[t]] for t in terms], tomb)
+    if cand is None:
+        return _NO_DOCS
+    m1, m2, ml = (_positions_by_cand([parts[t]], cand) for t in terms)
+    return _const_hits(cand, [
+        ci for ci in range(cand.size)
+        if _span_contain_match(m1[ci], m2[ci], ml[ci], slop)], boost)
+
+
+def _span_not_kernel(parts, stats, spec, k, *, tomb):
+    """span_not: ``spec`` = (include, exclude, pre, post, boost);
+    candidates are the include term's postings, and a doc matches when
+    some include position p has no exclude position in
+    [p - pre, p + post]."""
+    inc, exc, pre, post, boost = spec
+    if inc not in parts:
+        return _NO_DOCS
+    cand = _phrase_cand([[parts[inc]]], tomb)
+    if cand is None:
+        return _NO_DOCS
+    inc_map = _positions_by_cand([parts[inc]], cand)
+    exc_map = _positions_by_cand([parts[exc]], cand) if exc in parts else {}
+    hit = []
+    for ci, ps in inc_map.items():
+        qs = exc_map.get(ci)
+        if qs is None or (np.searchsorted(qs, ps + post, side="right")
+                          == np.searchsorted(qs, ps - pre,
+                                             side="left")).any():
+            hit.append(ci)
+    return _const_hits(cand, hit, boost)
 
 
 def _dl_for(parts: list, docs: np.ndarray) -> np.ndarray:
@@ -2339,6 +2431,47 @@ class PhraseEngine(SearchEngine):
         return _bucket_job(self.spark, segs, kernel, specs, k,
                            batched=batched)
 
+    def _one_term(self, text: str, what: str) -> str:
+        """The one analyzed term of a span/intervals clause; anything
+        else is rejected."""
+        toks = analyze_query(text, stem=self.stem)
+        if len(toks) != 1:
+            raise ValueError(
+                f"{what} take exactly one analyzed term; {text!r} "
+                f"analyzed to {toks!r}")
+        return toks[0]
+
+    def _span_job(self, kernel, terms: list[str], spec, k: int
+                  ) -> DataFrame:
+        """One constant-score span query as a batch of one of
+        :func:`_bucket_job`: every hit scores ``boost``, so the job's
+        (score desc, doc_id asc) TakeOrdered merge is doc_id order."""
+        segs = self._segments_for(terms).select(*self._POS_COLS)
+        return _bucket_job(self.spark, segs,
+                           partial(kernel, tomb=self.tombstones),
+                           {"": spec}, k)
+
+    def _near_job(self, clauses: list[list[str]], slop: int,
+                  in_order: bool, k: int, boost: float) -> DataFrame:
+        """span_near / span_multi near / intervals over clauses of
+        terms (:func:`_near_kernel`).  Unindexed terms drop out; a
+        clause left empty can never match.  Unordered clauses must not
+        share a term (the matcher's distinct-position precondition)."""
+        flat = [t for c in clauses for t in c]
+        if not in_order and len(set(flat)) != len(flat):
+            raise ValueError(
+                "unordered span_near/intervals with overlapping clause "
+                "terms is not supported (distinct-position repeats "
+                "rule)")
+        stats = self.term_stats(list(dict.fromkeys(flat)))
+        clauses = [[t for t in dict.fromkeys(c) if stats.get(t, 0) > 0]
+                   for c in clauses]
+        if not all(clauses):
+            return self._empty()
+        return self._span_job(
+            _near_kernel, list(dict.fromkeys(t for c in clauses for t in c)),
+            (clauses, int(slop), bool(in_order), float(boost)), k)
+
     def search_span_first(self, term: str, end: int,
                           k: int = TOP_K_SIZE,
                           boost: float = 1.0) -> DataFrame:
@@ -2351,47 +2484,18 @@ class PhraseEngine(SearchEngine):
         SpanFirstQuery through sloppyFreq); doc_id order, score ==
         boost.
 
-        One bucket-parallel job over the positional index: the term's
-        postings prune to tombstone-masked candidates, positions
-        decode per bucket, and only the early-position test touches
-        them — no phrase machinery, no shuffle beyond the final
-        TakeOrdered."""
+        One bucket-parallel job over the positional index
+        (:func:`_span_first_kernel`): the term's postings prune to
+        tombstone-masked candidates, positions decode per bucket, and
+        only the early-position test touches them — no phrase
+        machinery, no shuffle beyond the final TakeOrdered."""
         if end <= 0:
             return self._empty()
-        toks = analyze_query(term, stem=self.stem)
-        if len(toks) != 1:
-            raise ValueError(
-                f"span_first takes exactly one analyzed term; "
-                f"{term!r} analyzed to {toks!r}")
-        t = toks[0]
+        t = self._one_term(term, "span_first terms")
         if self.term_stats([t]).get(t, 0) == 0:
             return self._empty()
-        segs = self._segments_for([t]).select(*self._POS_COLS)
-        tomb = self.tombstones
-        e = int(end)
-
-        def find_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term = _group_partials(pdf)
-            if t not in per_term:
-                return _empty_pdf()
-            cand = _phrase_cand([[per_term[t]]], tomb)
-            if cand is None:
-                return _empty_pdf()
-            parts = [_phrase_occurrences(seg, cand, 0)
-                     for seg in per_term[t]]
-            ci = np.concatenate([x[0] for x in parts])
-            pos = np.concatenate([x[1] for x in parts])
-            hit = np.unique(ci[pos <= e - 1])
-            if hit.size == 0:
-                return _empty_pdf()
-            return pd.DataFrame({
-                "doc_id": cand[hit].astype(np.int64),
-                "score": np.full(hit.size, float(boost))})
-
-        local = (segs.transform(_spread_buckets).groupBy("bucket")
-                 .applyInPandas(find_bucket,
-                                schema="doc_id long, score double"))
-        return local.orderBy(F.asc("doc_id")).limit(k)
+        return self._span_job(_span_first_kernel, [t],
+                              (t, int(end), float(boost)), k)
 
     def search_span_near(self, clauses: list[str], slop: int = 0,
                          in_order: bool = True, k: int = TOP_K_SIZE,
@@ -2404,69 +2508,19 @@ class PhraseEngine(SearchEngine):
         :meth:`search_span_first` (documented divergence: Lucene scores
         SpanNearQuery through sloppyFreq); doc_id order, score == boost.
 
-        Plan shape == the phrase queries: rarest-term candidate
-        intersection prunes to docs containing ALL clause terms
-        (tombstone-masked), positions decode only for candidates, the
-        per-doc existence test is a greedy cursor walk (in_order: for
-        each start of clause 0 the greedily-minimal end is optimal, so
-        existence is exact) or a k-way minimal-window sweep (unordered)
-        — one bucket-parallel job, no shuffle beyond the final
-        TakeOrdered."""
+        Plan shape == the phrase queries (:func:`_near_kernel`):
+        rarest-term candidate intersection prunes to docs containing
+        ALL clause terms (tombstone-masked), positions decode only for
+        candidates, the per-doc existence test is a greedy cursor walk
+        (in_order: for each start of clause 0 the greedily-minimal end
+        is optimal, so existence is exact) or a k-way minimal-window
+        sweep (unordered) — one bucket-parallel job, no shuffle beyond
+        the final TakeOrdered."""
         if len(clauses) < 2:
             raise ValueError("span_near needs at least 2 clauses")
-        toks: list[str] = []
-        for c in clauses:
-            a = analyze_query(c, stem=self.stem)
-            if len(a) != 1:
-                raise ValueError(
-                    f"span_near clauses take exactly one analyzed "
-                    f"term; {c!r} analyzed to {a!r}")
-            toks.append(a[0])
-        if not in_order and len(set(toks)) != len(toks):
-            raise ValueError(
-                "unordered span_near with duplicate clause terms is "
-                "not supported (distinct-position repeats rule)")
-        uterms = list(dict.fromkeys(toks))
-        stats = self.term_stats(uterms)
-        if any(stats.get(t, 0) == 0 for t in uterms):
-            return self._empty()
-        segs = self._segments_for(uterms).select(*self._POS_COLS)
-        tomb = self.tombstones
-        s, order, terms, kk, b = (int(slop), bool(in_order),
-                                  list(toks), k, float(boost))
-
-        def find_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term = _group_partials(pdf)
-            if any(t not in per_term for t in set(terms)):
-                return _empty_pdf()
-            cand = _phrase_cand([[per_term[t]] for t in set(terms)], tomb)
-            if cand is None:
-                return _empty_pdf()
-            slot_maps: list[dict[int, np.ndarray]] = []
-            for t in terms:
-                parts = [_phrase_occurrences(seg, cand, 0)
-                         for seg in per_term[t]]
-                c = np.concatenate([x[0] for x in parts])
-                p = np.concatenate([x[1] for x in parts])
-                o = np.lexsort((p, c))
-                c, p = c[o], p[o]
-                uniq, starts = np.unique(c, return_index=True)
-                slot_maps.append(
-                    dict(zip(uniq.tolist(), np.split(p, starts[1:]))))
-            hits = [int(cand[ci]) for ci in range(cand.size)
-                    if all(ci in m for m in slot_maps)
-                    and _span_near_match([m[ci] for m in slot_maps],
-                                         s, order)]
-            if not hits:
-                return _empty_pdf()
-            return pd.DataFrame({
-                "doc_id": np.array(hits, dtype=np.int64),
-                "score": np.full(len(hits), b)})
-
-        local = (segs.transform(_spread_buckets).groupBy("bucket")
-                 .applyInPandas(find_bucket,
-                                schema="doc_id long, score double"))
-        return local.orderBy(F.asc("doc_id")).limit(kk)
+        return self._near_job(
+            [[self._one_term(c, "span_near clauses")] for c in clauses],
+            slop, in_order, k, boost)
 
     def search_span_or(self, clauses: list[str], k: int = TOP_K_SIZE,
                        boost: float = 1.0) -> DataFrame:
@@ -2476,46 +2530,14 @@ class PhraseEngine(SearchEngine):
         score rewrite like the rest of the span family; doc_id order,
         score == boost.
 
-        Candidates are the UNION of the clause terms' postings
-        (tombstone-masked) — no positions decode at all, since a
-        one-term span exists iff the term occurs.  One bucket-
-        parallel job, no shuffle beyond the final TakeOrdered."""
-        toks: list[str] = []
-        for c in clauses:
-            a = analyze_query(c, stem=self.stem)
-            if len(a) != 1:
-                raise ValueError(
-                    f"span_or clauses take exactly one analyzed "
-                    f"term; {c!r} analyzed to {a!r}")
-            toks.append(a[0])
-        uterms = [t for t in dict.fromkeys(toks)
-                  if self.term_stats([t]).get(t, 0) > 0]
-        if not uterms:
-            return self._empty()
-        segs = self._segments_for(uterms).select(*self._POS_COLS)
-        tomb = self.tombstones
-        kk, b, terms = k, float(boost), list(uterms)
-
-        def find_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term = _group_partials(pdf)
-            docs: set[int] = set()
-            for t in terms:
-                if t not in per_term:
-                    continue
-                cand = _phrase_cand([[per_term[t]]], tomb)
-                if cand is not None:
-                    docs.update(int(d) for d in cand)
-            if not docs:
-                return _empty_pdf()
-            hits = sorted(docs)
-            return pd.DataFrame({
-                "doc_id": np.array(hits, dtype=np.int64),
-                "score": np.full(len(hits), b)})
-
-        local = (segs.transform(_spread_buckets).groupBy("bucket")
-                 .applyInPandas(find_bucket,
-                                schema="doc_id long, score double"))
-        return local.orderBy(F.asc("doc_id")).limit(kk)
+        A one-term span exists iff the term occurs, so no positions
+        decode at all: this is the constant_score multi-term rewrite
+        of :meth:`search_prefix` over the clause terms (tombstone-
+        masked union of postings, one distinct + TakeOrdered)."""
+        terms = list(dict.fromkeys(
+            self._one_term(c, "span_or clauses") for c in clauses))
+        return self._constant_score_expansion(
+            terms, F.col("term").isin(terms), k, boost)
 
     def search_span_containing(self, big: list[str], little: str,
                                big_slop: int = 0, k: int = TOP_K_SIZE,
@@ -2536,67 +2558,22 @@ class PhraseEngine(SearchEngine):
 
         Per candidate doc (conjunctive: both big terms AND the
         little term present, the rarest-first pruning the phrase
-        path uses) the test is vectorized searchsorted cuts: for
-        each p1 the widest legal p2 window is [p1+1, p1+1+slop], and
-        a little hit needs L ∩ [p1, max p2] ≠ ∅.  One bucket-
-        parallel job, no shuffle beyond the final TakeOrdered."""
+        path uses) the test is vectorized searchsorted cuts
+        (:func:`_contain_kernel`): for each p1 the widest legal p2
+        window is [p1+1, p1+1+slop], and a little hit needs
+        L ∩ [p1, max p2] ≠ ∅.  One bucket-parallel job, no shuffle
+        beyond the final TakeOrdered."""
         if len(big) != 2:
             raise ValueError("span_containing takes a two-clause big "
                              "span (in-order span_near)")
-        toks: list[str] = []
-        for c in [*big, little]:
-            a = analyze_query(c, stem=self.stem)
-            if len(a) != 1:
-                raise ValueError(
-                    f"span clauses take exactly one analyzed term; "
-                    f"{c!r} analyzed to {a!r}")
-            toks.append(a[0])
-        t1, t2, tl = toks
-        uterms = list(dict.fromkeys(toks))
-        stats = self.term_stats(uterms)
-        if any(stats.get(t, 0) == 0 for t in uterms):
+        toks = tuple(self._one_term(c, "span clauses")
+                     for c in [*big, little])
+        terms = list(dict.fromkeys(toks))
+        stats = self.term_stats(terms)
+        if any(stats.get(t, 0) == 0 for t in terms):
             return self._empty()
-        segs = self._segments_for(uterms).select(*self._POS_COLS)
-        tomb = self.tombstones
-        s, kk, b = int(big_slop), k, float(boost)
-
-        def find_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term = _group_partials(pdf)
-            if any(t not in per_term for t in set([t1, t2, tl])):
-                return _empty_pdf()
-            cand = _phrase_cand([[per_term[t]] for t in (t1, t2, tl)],
-                                tomb)
-            if cand is None:
-                return _empty_pdf()
-
-            def posmap(t):
-                parts = [_phrase_occurrences(seg, cand, 0)
-                         for seg in per_term[t]]
-                c = np.concatenate([x[0] for x in parts])
-                p = np.concatenate([x[1] for x in parts])
-                o = np.lexsort((p, c))
-                c, p = c[o], p[o]
-                uniq, starts = np.unique(c, return_index=True)
-                return dict(zip(uniq.tolist(), np.split(p, starts[1:])))
-
-            m1, m2, ml = posmap(t1), posmap(t2), posmap(tl)
-            hits = []
-            for ci in m1:
-                if ci not in m2 or ci not in ml:
-                    continue
-                if _span_contain_match(m1[ci], m2[ci], ml[ci], s):
-                    hits.append(int(cand[ci]))
-            if not hits:
-                return _empty_pdf()
-            hits.sort()
-            return pd.DataFrame({
-                "doc_id": np.array(hits, dtype=np.int64),
-                "score": np.full(len(hits), b)})
-
-        local = (segs.transform(_spread_buckets).groupBy("bucket")
-                 .applyInPandas(find_bucket,
-                                schema="doc_id long, score double"))
-        return local.orderBy(F.asc("doc_id")).limit(kk)
+        return self._span_job(_contain_kernel, terms,
+                              (toks, int(big_slop), float(boost)), k)
 
     def search_intervals(self, clauses: list, max_gaps: int = -1,
                          ordered: bool = True, k: int = TOP_K_SIZE,
@@ -2617,94 +2594,16 @@ class PhraseEngine(SearchEngine):
 
         Candidates: per clause the UNION of its terms' postings,
         INTERSECTED across clauses (tombstone-masked) — the rarest-
-        clause pruning of the phrase path generalized to any_of.
-        One bucket-parallel job, no shuffle beyond TakeOrdered."""
+        clause pruning of the phrase path generalized to any_of
+        (:func:`_near_kernel`, as span_near).  One bucket-parallel
+        job, no shuffle beyond TakeOrdered."""
         if len(clauses) < 2:
             raise ValueError("intervals needs at least 2 clauses")
-        norm: list[list[str]] = []
-        for c in clauses:
-            terms = [c] if isinstance(c, str) else list(c)
-            out = []
-            for t in terms:
-                a = analyze_query(t, stem=self.stem)
-                if len(a) != 1:
-                    raise ValueError(
-                        f"intervals terms take exactly one analyzed "
-                        f"term; {t!r} analyzed to {a!r}")
-                out.append(a[0])
-            norm.append(out)
-        if not ordered:
-            flat = [t for c in norm for t in c]
-            if len(set(flat)) != len(flat):
-                raise ValueError(
-                    "unordered intervals with a term shared across "
-                    "clauses is not supported (distinct-position "
-                    "repeats rule, as span_near)")
-        uterms = list(dict.fromkeys(t for c in norm for t in c))
-        stats = self.term_stats(uterms)
-        # a clause with NO present term can never match
-        if any(all(stats.get(t, 0) == 0 for t in c) for c in norm):
-            return self._empty()
-        present = [t for t in uterms if stats.get(t, 0) > 0]
-        segs = self._segments_for(present).select(*self._POS_COLS)
-        tomb = self.tombstones
-        g = max_gaps if max_gaps >= 0 else 1 << 30
-        s, order, kk, b = int(g), bool(ordered), k, float(boost)
-        cl = [list(c) for c in norm]
-
-        def find_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term = _group_partials(pdf)
-            have = [t for t in present if t in per_term]
-            if not have:
-                return _empty_pdf()
-            # union candidate set across ALL present terms (the
-            # per-clause intersection happens in the position test)
-            allsets = []
-            for t in have:
-                c0 = _phrase_cand([[per_term[t]]], tomb)
-                if c0 is not None:
-                    allsets.append(c0)
-            if not allsets:
-                return _empty_pdf()
-            cand = np.unique(np.concatenate(allsets))
-
-            def posmap(t):
-                if t not in per_term:
-                    return {}
-                parts = [_phrase_occurrences(seg, cand, 0)
-                         for seg in per_term[t]]
-                c = np.concatenate([x[0] for x in parts])
-                p = np.concatenate([x[1] for x in parts])
-                o = np.lexsort((p, c))
-                c, p = c[o], p[o]
-                uniq, starts = np.unique(c, return_index=True)
-                return dict(zip(uniq.tolist(), np.split(p, starts[1:])))
-
-            maps = {t: posmap(t) for t in have}
-            hits = []
-            for ci in range(cand.size):
-                lists = []
-                ok = True
-                for c in cl:
-                    parts = [maps[t][ci] for t in c
-                             if t in maps and ci in maps[t]]
-                    if not parts:
-                        ok = False
-                        break
-                    lists.append(np.unique(np.concatenate(parts)))
-                if ok and _span_near_match(lists, s, order):
-                    hits.append(int(cand[ci]))
-            if not hits:
-                return _empty_pdf()
-            hits.sort()
-            return pd.DataFrame({
-                "doc_id": np.array(hits, dtype=np.int64),
-                "score": np.full(len(hits), b)})
-
-        local = (segs.transform(_spread_buckets).groupBy("bucket")
-                 .applyInPandas(find_bucket,
-                                schema="doc_id long, score double"))
-        return local.orderBy(F.asc("doc_id")).limit(kk)
+        norm = [[self._one_term(t, "intervals terms")
+                 for t in ([c] if isinstance(c, str) else c)]
+                for c in clauses]
+        return self._near_job(norm, max_gaps if max_gaps >= 0 else 1 << 30,
+                              ordered, k, boost)
 
     def search_span_within(self, little: str, big: list[str],
                            big_slop: int = 0, k: int = TOP_K_SIZE,
@@ -2731,63 +2630,16 @@ class PhraseEngine(SearchEngine):
         Candidates are the include term's postings (NOT a conjunctive
         intersection — absence of the exclude term is a match);
         per-doc the test is two searchsorted cuts of the exclude
-        positions around each include position.  One bucket-parallel
-        job, no shuffle beyond the final TakeOrdered."""
-        ti = analyze_query(include, stem=self.stem)
-        te = analyze_query(exclude, stem=self.stem)
-        if len(ti) != 1 or len(te) != 1:
-            raise ValueError("span_not takes one include and one "
-                             "exclude term")
-        inc, exc = ti[0], te[0]
+        positions around each include position
+        (:func:`_span_not_kernel`).  One bucket-parallel job, no
+        shuffle beyond the final TakeOrdered."""
+        inc = self._one_term(include, "span_not terms")
+        exc = self._one_term(exclude, "span_not terms")
         if self.term_stats([inc]).get(inc, 0) == 0:
             return self._empty()
-        have_exc = self.term_stats([exc]).get(exc, 0) > 0
-        needed = [inc, exc] if have_exc and exc != inc else [inc]
-        segs = self._segments_for(needed).select(*self._POS_COLS)
-        tomb = self.tombstones
-        pre_i, post_i, kk, b = int(pre), int(post), k, float(boost)
-
-        def find_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term = _group_partials(pdf)
-            if inc not in per_term:
-                return _empty_pdf()
-            cand = _phrase_cand([[per_term[inc]]], tomb)
-            if cand is None:
-                return _empty_pdf()
-
-            def posmap(t):
-                parts = [_phrase_occurrences(seg, cand, 0)
-                         for seg in per_term[t]]
-                c = np.concatenate([x[0] for x in parts])
-                p = np.concatenate([x[1] for x in parts])
-                o = np.lexsort((p, c))
-                c, p = c[o], p[o]
-                uniq, starts = np.unique(c, return_index=True)
-                return dict(zip(uniq.tolist(), np.split(p, starts[1:])))
-
-            inc_map = posmap(inc)
-            exc_map = posmap(exc) if exc in per_term else {}
-            hits = []
-            for ci, ps in inc_map.items():
-                qs = exc_map.get(ci)
-                if qs is None:
-                    hits.append(int(cand[ci]))
-                    continue
-                n_in = (np.searchsorted(qs, ps + post_i, side="right")
-                        - np.searchsorted(qs, ps - pre_i, side="left"))
-                if bool((n_in == 0).any()):
-                    hits.append(int(cand[ci]))
-            if not hits:
-                return _empty_pdf()
-            hits.sort()
-            return pd.DataFrame({
-                "doc_id": np.array(hits, dtype=np.int64),
-                "score": np.full(len(hits), b)})
-
-        local = (segs.transform(_spread_buckets).groupBy("bucket")
-                 .applyInPandas(find_bucket,
-                                schema="doc_id long, score double"))
-        return local.orderBy(F.asc("doc_id")).limit(kk)
+        return self._span_job(
+            _span_not_kernel, list(dict.fromkeys([inc, exc])),
+            (inc, exc, int(pre), int(post), float(boost)), k)
 
     def search_span_multi_near(self, clauses: list[str],
                                slop: int = 0, in_order: bool = True,
@@ -2806,109 +2658,34 @@ class PhraseEngine(SearchEngine):
 
         Prefixes expand on the sorted term dictionary (range scan);
         candidates are the intersection ACROSS clauses of the union
-        WITHIN each clause of the terms' postings (tombstone-masked),
-        so positions decode only for docs holding at least one term
-        of every clause — one bucket-parallel job, no shuffle beyond
-        the final TakeOrdered."""
+        WITHIN each clause of the terms' postings (tombstone-masked,
+        :func:`_near_kernel`), so positions decode only for docs
+        holding at least one term of every clause — one bucket-
+        parallel job, no shuffle beyond the final TakeOrdered."""
         if len(clauses) < 2:
             raise ValueError("span_near needs at least 2 clauses")
-        import re as _re
         clause_terms: list[list[str]] = []
         for c in clauses:
-            if "*" in c or "?" in c:
-                p = c.lower().strip()
-                lead = _re.split(r"[*?]", p, maxsplit=1)[0]
-                if not lead:
-                    raise ValueError(
-                        "span_multi patterns need a leading literal "
-                        f"(got {c!r}) — an unanchored wildcard "
-                        "expands the whole dictionary")
-                cand = self.term_dict.filter(
-                    F.col("term").startswith(lead))
-                if p != lead + "*":    # beyond plain prefix: confirm
-                    rx = "^" + "".join(
-                        ".*" if ch == "*" else "." if ch == "?"
-                        else _re.escape(ch) for ch in p) + "$"
-                    cand = cand.filter(F.col("term").rlike(rx))
-                exp = [r["term"]
-                       for r in cand.select("term").collect()]
-                if len(exp) > self._MAX_TERM_ISIN:
-                    raise ValueError(
-                        f"span_multi pattern {c!r} expands to "
-                        f"{len(exp)} terms (> {self._MAX_TERM_ISIN})")
-                clause_terms.append(sorted(exp))
-            else:
-                a = analyze_query(c, stem=self.stem)
-                if len(a) != 1:
-                    raise ValueError(
-                        f"span clauses take exactly one analyzed "
-                        f"term; {c!r} analyzed to {a!r}")
-                clause_terms.append(a)
-        if not in_order:
-            for i in range(len(clause_terms)):
-                for j in range(i + 1, len(clause_terms)):
-                    if set(clause_terms[i]) & set(clause_terms[j]):
-                        raise ValueError(
-                            "unordered span_multi_near with "
-                            "overlapping clause expansions is not "
-                            "supported (distinct-position rule)")
-        uniq_terms = sorted({t for ct in clause_terms for t in ct})
-        stats = self.term_stats(uniq_terms)
-        clause_terms = [[t for t in ct if stats.get(t, 0) > 0]
-                        for ct in clause_terms]
-        if any(not ct for ct in clause_terms):
-            return self._empty()
-        live = sorted({t for ct in clause_terms for t in ct})
-        segs = self._segments_for(live).select(*self._POS_COLS)
-        tomb = self.tombstones
-        s, order, kk, b = int(slop), bool(in_order), k, float(boost)
-        cts = [list(ct) for ct in clause_terms]
-
-        def find_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term = _group_partials(pdf)
-            cand = None
-            for ct in cts:
-                parts = [_decode_full_term(per_term[t])
-                         for t in ct if t in per_term]
-                if not parts:
-                    return _empty_pdf()
-                ids = _mask_tombstones(
-                    np.unique(np.concatenate(parts)), tomb)
-                cand = ids if cand is None else np.intersect1d(
-                    cand, ids, assume_unique=True)
-                if cand.size == 0:
-                    return _empty_pdf()
-            slot_maps: list[dict[int, np.ndarray]] = []
-            for ct in cts:
-                cs, ps = [], []
-                for t in ct:
-                    if t not in per_term:
-                        continue
-                    for seg in per_term[t]:
-                        c_, p_ = _phrase_occurrences(seg, cand, 0)
-                        cs.append(c_)
-                        ps.append(p_)
-                c = np.concatenate(cs)
-                p = np.concatenate(ps)
-                o = np.lexsort((p, c))
-                c, p = c[o], p[o]
-                uq, starts = np.unique(c, return_index=True)
-                slot_maps.append(
-                    dict(zip(uq.tolist(), np.split(p, starts[1:]))))
-            hits = [int(cand[ci]) for ci in range(cand.size)
-                    if all(ci in m for m in slot_maps)
-                    and _span_near_match([m[ci] for m in slot_maps],
-                                         s, order)]
-            if not hits:
-                return _empty_pdf()
-            return pd.DataFrame({
-                "doc_id": np.array(hits, dtype=np.int64),
-                "score": np.full(len(hits), b)})
-
-        local = (segs.transform(_spread_buckets).groupBy("bucket")
-                 .applyInPandas(find_bucket,
-                                schema="doc_id long, score double"))
-        return local.orderBy(F.asc("doc_id")).limit(kk)
+            if "*" not in c and "?" not in c:
+                clause_terms.append([self._one_term(c, "span clauses")])
+                continue
+            p = c.lower().strip()
+            lead = re.split(r"[*?]", p, maxsplit=1)[0]
+            if not lead:
+                raise ValueError(
+                    "span_multi patterns need a leading literal "
+                    f"(got {c!r}) — an unanchored wildcard "
+                    "expands the whole dictionary")
+            cand = self.term_dict.filter(F.col("term").startswith(lead))
+            if p != lead + "*":    # beyond plain prefix: confirm
+                cand = cand.filter(F.col("term").rlike(_wildcard_regex(p)))
+            exp = [r["term"] for r in cand.select("term").collect()]
+            if len(exp) > self._MAX_TERM_ISIN:
+                raise ValueError(
+                    f"span_multi pattern {c!r} expands to "
+                    f"{len(exp)} terms (> {self._MAX_TERM_ISIN})")
+            clause_terms.append(sorted(exp))
+        return self._near_job(clause_terms, slop, in_order, k, boost)
 
     def search_phrase_prefix(self, query: str, k: int = TOP_K_SIZE,
                              max_expansions: int = 50) -> DataFrame:

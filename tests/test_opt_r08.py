@@ -5,9 +5,9 @@ relies on:
 
 - ``spark_token_runs`` == historical split+filter tokenizer (the regex
   rewrite that removed per-row Pattern.compile).
-- ``_fan_out`` parallelizes small single-file scans without changing
-  rows, and its nondeterministic fence keeps downstream filters above
-  the exchange.
+- ``fan_out_small_scan`` parallelizes small single-file scans without
+  changing rows, and its nondeterministic fence keeps downstream
+  filters above the exchange.
 - ``finalize_term_stats_from_partials`` == segment-based finalize
   (the build-stage overlap depends on the merge being row-preserving).
 - ``SearchEngine._stats_map`` returns the same df values as the
@@ -212,8 +212,8 @@ def test_embedding_near_pairs_broadcast_matches_join_path(spark,
 
 
 def test_fan_out_by_window_rows_identical(spark, tmp_path):
-    """_fan_out_by (exchange-by-key below the window sort) must not
-    change window top-k results."""
+    """fan_out_small_scan with a key (exchange-by-key below the
+    window sort) must not change window top-k results."""
     from pyspark.sql import Window as W
     import __spark_entry__ as entry
     rows = [(i % 37, i, float((i * 7919) % 1000)) for i in range(2000)]

@@ -6,9 +6,9 @@ Pins the equivalences the profile/e2e overlap restructure relies on:
   scan, float moments on the unfanned scan) + overlapped probe jobs
   produce a profile dict IDENTICAL to a serial single-agg reference
   computed here from first principles.
-- ``fan_out_exact_agg`` is a no-op for non-file inputs and preserves
-  rows/values for file inputs; it and the entry module's gates honour
-  the ``AUCTUS_SMALL_SCAN_BYTES`` cap.
+- ``fan_out_small_scan`` is a no-op for non-file inputs and
+  preserves rows/values for file inputs; with and without keys it
+  honours the ``AUCTUS_SMALL_SCAN_BYTES`` cap.
 - ``temporal_resolution`` yields the same resolution string on fanned
   and unfanned input (its aggregates are exact count_distincts).
 - the catalog's concurrent ``add_dataset`` equals the serial loop.

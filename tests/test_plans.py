@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from auctus_spark.corpus import generate_corpus
 from auctus_spark.index.build import IndexBuilder
-from auctus_spark.query.bm25 import SearchEngine
+from auctus_spark.query.bm25 import PhraseEngine, SearchEngine
 
 
 def _plan(df) -> str:
@@ -371,3 +371,28 @@ def test_query_string_two_scan_zero_shuffle_plan(spark, sf_dir):
     assert "Exchange" not in phys
     assert "TakeOrderedAndProject" in phys
     assert phys.count("Scan parquet") == 1
+
+
+@pytest.fixture(scope="module")
+def phrase_engine(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("posidx"))
+    pdf = generate_corpus(400, min_tokens=20, max_tokens=100,
+                          vocab_size=800)
+    IndexBuilder(spark, out, doc_bucket=128, chunk_docs=1 << 20,
+                 term_buckets=8, positions=True
+                 ).build(spark.createDataFrame(pdf))
+    return PhraseEngine(spark, out, term_buckets=8)
+
+
+def test_span_family_plan_shape(phrase_engine):
+    """A span query is one bucket-parallel job over the positional
+    segments: exactly one shuffle (the bucket groups) and a
+    TakeOrdered merge — no sort, no second exchange."""
+    eng = phrase_engine
+    for df in [eng.search_span_near(["import", "def"], slop=3),
+               eng.search_intervals([["import", "the"], "def"],
+                                    max_gaps=2),
+               eng.search_span_not("import", "def", post=2)]:
+        plan = _plan(df)
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert "TakeOrderedAndProject" in plan, plan

@@ -1825,6 +1825,21 @@ def test_intervals_semantics_handmade():
     assert ids([["a", "b"], "c"], 1, False) == [0, 1, 2]
 
 
+def _containing_brute(oracle, big, little, slop):
+    """Docs (ascending) where an in-order ``big`` pair (p1 < p2,
+    p2 - p1 - 1 <= slop) encloses a ``little`` position — brute force
+    over the positional oracle's position lists."""
+    (t1, t2), post = big, oracle.postings
+    docs = []
+    for d in sorted(set(post.get(t1, {})) & set(post.get(t2, {}))
+                    & set(post.get(little, {}))):
+        if any(p1 < p2 and p2 - p1 - 1 <= slop
+               and any(p1 <= l <= p2 for l in post[little][d])
+               for p1 in post[t1][d] for p2 in post[t2][d]):
+            docs.append(d)
+    return docs
+
+
 def test_span_or_and_containing_match_oracle(spark, built_positional):
     """span_or == union of postings; span_containing == brute-force
     enclosure over the oracle's position lists."""
@@ -1839,17 +1854,7 @@ def test_span_or_and_containing_match_oracle(spark, built_positional):
     # containing: big = (import .. def, slop 4) enclosing 'the'
     got_c = [int(r.doc_id) for r in eng.search_span_containing(
         ["import", "def"], "the", big_slop=4, k=700).collect()]
-    brute = []
-    for d in sorted(set(oracle.postings.get("import", {}))
-                    & set(oracle.postings.get("def", {}))
-                    & set(oracle.postings.get("the", {}))):
-        p1s = oracle.postings["import"][d]
-        p2s = oracle.postings["def"][d]
-        ls = oracle.postings["the"][d]
-        if any(p1 < p2 and p2 - p1 - 1 <= 4
-               and any(p1 <= l <= p2 for l in ls)
-               for p1 in p1s for p2 in p2s):
-            brute.append(d)
+    brute = _containing_brute(oracle, ["import", "def"], "the", 4)
     assert got_c == brute and len(brute) > 0
     # span_within aliases containing (doc-existence collapse)
     got_w = [int(r.doc_id) for r in eng.search_span_within(
@@ -2189,3 +2194,91 @@ def test_tombstones_mask_every_scored_family(spark, tombstoned, family):
     for qid, q in qids.items():
         got = sorted(by_q.get(qid, []), key=lambda t: (-t[1], t[0]))
         _assert_rank_identical(got, want[q])
+
+
+def _tomb_span_families():
+    """family -> (cases, oracle(c, case, k), engine(c, case, k)) for
+    the constant-score span family: every hit scores 1.0 and ranks in
+    doc_id order."""
+    def union(c, clauses, k):
+        post = c.poracle.postings
+        docs = set().union(*(post.get(t, {}) for t in clauses))
+        return [(d, 1.0) for d in sorted(docs)][:k]
+
+    return {
+        "span_first": (
+            [("import", 3), ("the", 5)],
+            lambda c, a, k: c.poracle.search_span_first(*a, k=k),
+            lambda c, a, k: c.peng.search_span_first(*a, k=k)),
+        "span_near_ordered": (
+            [(["import", "def"], 3), (["import", "def", "return"], 8)],
+            lambda c, a, k: c.poracle.search_span_near(*a, True, k=k),
+            lambda c, a, k: c.peng.search_span_near(*a, True, k=k)),
+        "span_near_unordered": (
+            [(["import", "def"], 3), (["the", "import", "def"], 5)],
+            lambda c, a, k: c.poracle.search_span_near(*a, False, k=k),
+            lambda c, a, k: c.peng.search_span_near(*a, False, k=k)),
+        "intervals": (
+            [([["import", "def"], "return"], 2, True),
+             ([["the", "import"], ["def", "return"]], 3, False)],
+            lambda c, a, k: c.poracle.search_intervals(*a, k=k),
+            lambda c, a, k: c.peng.search_intervals(*a, k=k)),
+        "span_not": (
+            [("import", "def", 0, 3), ("import", "the", 1, 5)],
+            lambda c, a, k: c.poracle.search_span_not(*a, k=k),
+            lambda c, a, k: c.peng.search_span_not(*a, k=k)),
+        "span_or": (
+            [["import", "return"], ["def", "uniq_token_11"]],
+            union,
+            lambda c, a, k: c.peng.search_span_or(a, k=k)),
+        "span_containing": (
+            [(["import", "def"], "the", 4)],
+            lambda c, a, k: [(d, 1.0) for d in
+                             _containing_brute(c.poracle, *a)][:k],
+            lambda c, a, k: c.peng.search_span_containing(*a, k=k)),
+    }
+
+
+@pytest.fixture(scope="module")
+def tombstoned_spans(spark, tombstoned, tmp_path_factory):
+    """A further ``delete_docs`` copy of ``tombstoned``'s positional
+    index: its victims plus the first and middle hit of every span
+    query's oracle top-k."""
+    import shutil
+    from types import SimpleNamespace
+
+    from auctus_spark.index.build import delete_docs
+    from auctus_spark.query.bm25 import PhraseEngine
+    c = tombstoned
+    victims = set(c.victims)
+    for cases, want, _ in _tomb_span_families().values():
+        for a in cases:
+            top = want(c, a, TOMB_K)
+            if top:
+                victims |= {top[0][0], top[len(top) // 2][0]}
+    d = str(tmp_path_factory.mktemp("tomb_span") / "positional")
+    shutil.copytree(c.peng.paths.base, d)
+    delete_docs(spark, d, sorted(victims - c.victims))
+    return SimpleNamespace(poracle=c.poracle, victims=victims,
+                           peng=PhraseEngine(spark, d, term_buckets=8))
+
+
+@pytest.mark.parametrize("family", [
+    "span_first", "span_near_ordered", "span_near_unordered",
+    "intervals", "span_not", "span_or", "span_containing"])
+def test_tombstones_mask_span_family(spark, tombstoned_spans, family):
+    """On an index with deletes, every constant-score span query
+    returns the oracle's top-(k + victims) with the victims removed,
+    cut to k: bit-exact, with victims from inside each query's top-k
+    (several partials per term per bucket)."""
+    c = tombstoned_spans
+    cases, oracle, engine = _tomb_span_families()[family]
+    k, n_v = TOMB_K, len(c.victims)
+    for a in cases:
+        assert any(d in c.victims for d, _ in oracle(c, a, k)), a
+        want = [(d, s) for d, s in oracle(c, a, k + n_v)
+                if d not in c.victims][:k]
+        assert want, a
+        got = [(int(r.doc_id), float(r.score))
+               for r in engine(c, a, k).collect()]
+        _assert_rank_identical(got, want)
