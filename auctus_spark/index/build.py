@@ -120,6 +120,43 @@ def read_analyzer(index_dir: str) -> dict:
     with open(p) as f:
         return json.load(f)
 
+
+def read_stats(index_dir: str) -> dict:
+    """The one-row global stats table as a dict (``n_docs``, ``avgdl``
+    and, on indexes that record it, ``total_tokens``): a driver-side
+    pyarrow read, no Spark job.  Both writers (``finalize_stats`` and
+    ``compact``) write it with pyarrow."""
+    import pyarrow.dataset as pads
+    t = pads.dataset(IndexPaths(index_dir).stats, format="parquet")
+    return t.head(1).to_pylist()[0]
+
+
+def read_doc_buckets(index_dir: str) -> int | None:
+    """How many doc buckets (``doc_id // doc_bucket`` values) the
+    index's chunks span: the ``doc_bucket`` recorded in ``_ANALYZER``
+    over the lineage's per-chunk docID ranges, read driver-side with no
+    Spark job.  An upper bound when a chunk has docID gaps.  None when
+    the index predates the record or has no lineage."""
+    width = read_analyzer(index_dir).get("doc_bucket")
+    if not width:
+        return None
+    import pyarrow.dataset as pads
+    try:
+        t = pads.dataset(IndexPaths(index_dir).lineage, format="parquet",
+                         partitioning="hive").to_table(
+                             columns=["doc_id_min", "doc_id_max"])
+    except (OSError, ValueError):
+        return None
+    n, end = 0, -1
+    for lo, hi in sorted(zip(t["doc_id_min"].to_pylist(),
+                             t["doc_id_max"].to_pylist())):
+        lo, hi = max(lo // width, end + 1), hi // width
+        if hi >= lo:
+            n += hi - lo + 1
+            end = hi
+    return n or None
+
+
 # block metadata is packed little-endian binary, not list<long>:
 # parquet + Tungsten handle flat binary far cheaper than nested lists
 # (the merge shuffle moves every one of these rows).  Byte offsets
@@ -605,7 +642,8 @@ class IndexBuilder:
             with open(os.path.join(self.paths.base, "_ANALYZER"),
                       "w") as f:
                 json.dump({"stem": self.stem,
-                           "positions": self.positions}, f)
+                           "positions": self.positions,
+                           "doc_bucket": self.doc_bucket}, f)
         elif v != FORMAT_VERSION:
             raise ValueError(
                 f"index at {self.paths.base} has layout v{v}, this build "
@@ -1242,7 +1280,7 @@ def compact(spark: SparkSession, index_dir: str,
         .sortWithinPartitions("term", "bucket", "doc_id_min")
         .write.mode("overwrite").partitionBy("term_bucket").parquet(tmp))
     # Read the pre-compaction stats BEFORE any swap step.
-    old = spark.read.parquet(paths.stats).collect()[0]
+    old = read_stats(index_dir)
     # Crash-safe swap.  Everything the remaining steps mutate is
     # snapshotted ALONGSIDE the old segments — stats are decremented,
     # tombstones cleared and removed_docs appended below, so restoring

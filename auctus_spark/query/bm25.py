@@ -43,6 +43,27 @@ the job's (score desc, doc_id asc) merge is the doc_id order those
 queries promise.  span_or needs no positions: it is the constant_score
 union of postings that the prefix/wildcard/regexp rewrites use.
 
+Fixed per-query cost: at small scale a warm query pays more for Spark
+overhead than for scoring, so the bucket job keeps it down.
+- Its input is ONE ``spark.sql`` text over the segments and
+  term_stats views that an engine registers when it opens: term_bucket
+  pruning, the term list, and the df column (a literal
+  ``map(...)[term]`` from the driver stats map, or a broadcast join
+  with the pruned term_stats scan).  Built with the DataFrame API, the
+  same input cost one py4j round trip per column, literal and list
+  element.  Only terms of the analyzer alphabet ``[a-z0-9_]+`` are
+  quoted into the text, since no other string can be an index term.
+- The bucket exchange has one partition per doc bucket, capped at 4x
+  the default parallelism.  The engine reads the bucket count at open
+  from the recorded ``doc_bucket`` and the lineage's chunk docID
+  ranges.  Every empty task costs a Python worker round trip.
+- With the driver stats map, an AND query with an unindexed term
+  never becomes a job.
+
+At ``perfbench`` shape (2048 files, 4 doc buckets, local[4]), a warm
+hot-term ``search_wand`` made 94 py4j calls instead of 317 while its
+plan was built, and ran 7 tasks instead of 19.
+
 Global statistics discipline: N, avgdl, df are read from the stats
 tables written at build finalize (pre-merge snapshot), never derived
 from the pruned scan — required for rank identity with the oracle.
@@ -51,15 +72,18 @@ from the pruned scan — required for rank identity with the oracle.
 from __future__ import annotations
 
 import re
+import uuid
 from functools import partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (DoubleType, LongType, StringType,
+                               StructField, StructType)
 
 from .. import B, K1, TOP_K_SIZE
-from ..analysis import analyze_query
+from ..analysis import JVM_TOKEN_PATTERN, analyze_query
 from ..index.build import IndexPaths, load_tombstones, tombstones_df
 from ..index.codec import decode_blocks, delta_decode, varbyte_decode
 from ..oracle import bm25_idf
@@ -67,10 +91,26 @@ from ..oracle import bm25_idf
 
 _GRAM_N = 2
 
+# the analyzer's token alphabet: no other string can be an index term,
+# so only such terms are ever quoted into a query's SQL text
+_INDEX_TERM = re.compile(JVM_TOKEN_PATTERN)
 
-def _spread_buckets(df: DataFrame) -> DataFrame:
+
+def _bucket_partitions(spark: SparkSession, doc_buckets: int | None
+                       ) -> int:
+    """Shuffle partitions of the bucket exchange: one per doc bucket,
+    capped at 4x the default parallelism; 4x the default parallelism
+    when the index does not record its doc-bucket count."""
+    p = 4 * spark.sparkContext.defaultParallelism
+    return min(p, doc_buckets) if doc_buckets else p
+
+
+def _spread_buckets(df: DataFrame, partitions: int | None = None
+                    ) -> DataFrame:
     """Numbered hash-repartition by doc ``bucket`` ahead of every
-    ``groupBy("bucket").applyInPandas`` scorer.
+    ``groupBy("bucket").applyInPandas`` scorer, into ``partitions``
+    (default 4x the default parallelism; the engines pass
+    :func:`_bucket_partitions`).
 
     Without it the scorer's ENSURE_REQUIREMENTS exchange is subject to
     AQE partition coalescing: a query's pruned segment scan is a few
@@ -80,16 +120,23 @@ def _spread_buckets(df: DataFrame) -> DataFrame:
     postings, not shuffled bytes — runs on 1-3 cores (measured: hot
     3-term WAND query 1.09 s -> 0.63 s at 200k docs, identical rows).
     A repartition WITH an explicit partition count is not coalesced
-    (user-specified), and hash(bucket, 4x parallelism) spreads B
-    buckets nearly alone into partitions (guide §2.5 "synthetic keys
-    with too few distinct values": 4x over-partitioning de-collides
-    the balls-into-bins assignment).  The scorer's ClusteredDistribution
-    requirement is satisfied by ANY hash partitioning on bucket, so no
-    second exchange appears; at real scale (buckets >> partitions)
-    each task simply owns several groups, the same plan shape as
-    before."""
-    p = 4 * df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(p, "bucket")
+    (user-specified).  The scorer's ClusteredDistribution requirement
+    is satisfied by ANY hash partitioning on bucket, so no second
+    exchange appears.
+
+    Partitions beyond the bucket count only add empty tasks, and every
+    task of the scoring stage costs a Python worker round trip whether
+    or not it owns a group.  Over-partitioning does not keep buckets
+    apart either: murmur3 picks the slots, and at 16 partitions buckets
+    0 and 1 of a 4-bucket index share partition 13 (at 4 partitions
+    they share partition 1).  So the engines use one partition per doc
+    bucket, capped at 4x parallelism for large indexes, where each task
+    owns several groups.  ``repartitionById`` would place each bucket
+    alone, but its partitioning does not satisfy the scorer's
+    distribution, so a second exchange follows it."""
+    if partitions is None:
+        partitions = _bucket_partitions(df.sparkSession, None)
+    return df.repartition(partitions, "bucket")
 
 
 def _term_bigrams(s: str) -> set[str]:
@@ -311,19 +358,30 @@ class SearchEngine:
                 f"index at {index_dir} has layout "
                 f"v{v if v is not None else '<unversioned>'}; this "
                 f"engine reads v{FORMAT_VERSION} — rebuild the index")
-        from ..index.build import read_analyzer
+        from ..index.build import read_analyzer, read_doc_buckets, read_stats
         self.stem = bool(read_analyzer(index_dir).get("stem", False))
-        row = spark.read.parquet(self.paths.stats).collect()[0]
+        row = read_stats(index_dir)
         self.n_docs = int(row["n_docs"])
         self.avgdl = float(row["avgdl"])
-        self.total_tokens = int(row["total_tokens"]) \
-            if "total_tokens" in row.__fields__ else 0
+        self.total_tokens = int(row.get("total_tokens", 0))
         self._vocab_size_cache: int | None = None
         # open the index tables ONCE: spark.read.parquet lists files and
         # reads footers eagerly, so per-query re-opens dominate latency;
         # partition/row-group pruning still applies per query.
         self._seg_df = spark.read.parquet(self.paths.segments)
         self._ts_df = spark.read.parquet(self.paths.term_stats)
+        # ... and name them ONCE: a query's input plan is one spark.sql
+        # text over these views (one py4j call instead of one per
+        # column, literal and list element).  Names are unique per
+        # engine, so a reopened index never rebinds an older engine's
+        # snapshot.
+        tag = uuid.uuid4().hex
+        self._seg_view = f"auctus_segments_{tag}"
+        self._ts_view = f"auctus_term_stats_{tag}"
+        self._seg_df.createOrReplaceTempView(self._seg_view)
+        self._ts_df.createOrReplaceTempView(self._ts_view)
+        self._bucket_parts = _bucket_partitions(
+            spark, read_doc_buckets(index_dir))
         # Lucene-style deletes: tombstoned docIDs are masked at query
         # time; global stats keep counting them until a rebuild.  The
         # numpy mask is size-capped (build.MAX_TOMBSTONE_MASK); the
@@ -435,56 +493,45 @@ class SearchEngine:
         m = self._stats_map()
         if m is not None:
             return {t: m[t] for t in terms if t in m}
-        tb = self._term_buckets_for(terms)
-        df = (self._ts_df
-              .filter(F.col("term_bucket").isin(list(set(tb.values()))))
-              .filter(F.col("term").isin(terms))
-              .select("term", "df").collect())
-        return {r["term"]: int(r["df"]) for r in df}
+        return {r["term"]: int(r["df"])
+                for r in self._ts_for(terms).collect()}
+
+    @staticmethod
+    def _index_terms(terms) -> list[str]:
+        """``terms`` deduplicated, keeping only strings of the analyzer
+        alphabet: no other string can be an index term, so dropping
+        one changes no result, and the kept ones are quoted into SQL
+        text without escaping."""
+        return [t for t in dict.fromkeys(terms)
+                if _INDEX_TERM.fullmatch(t)]
+
+    def _term_filter(self, terms: list[str]) -> str:
+        """SQL predicate selecting the rows of ``terms`` (from
+        :meth:`_index_terms`) in a term-bucketed table: term_bucket
+        partition pruning plus the term list; ``false`` for none."""
+        if not terms:
+            return "false"
+        tb = sorted(set(self._term_buckets_for(terms).values()))
+        quoted = ", ".join(f"'{t}'" for t in terms)
+        return (f"term_bucket IN ({', '.join(map(str, tb))}) "
+                f"AND term IN ({quoted})")
 
     def _ts_for(self, terms: list[str]) -> DataFrame:
         """(term, df) rows for the query terms — broadcast side of the
-        single-job query plan (partition-pruned scan, no collect).
-        (A per-query ``createDataFrame`` local relation was measured
-        SLOWER than this pruned scan — py4j/session overhead — so the
-        driver stats map is used for literal folding in
-        :meth:`_attach_df`, not here.)"""
-        tb = self._term_buckets_for(terms)
-        return (self._ts_df
-                .filter(F.col("term_bucket").isin(list(set(tb.values()))))
-                .filter(F.col("term").isin(terms))
-                .select("term", "df"))
+        single-job query plan (partition-pruned scan, no collect)."""
+        return self.spark.sql(
+            f"SELECT term, df FROM {self._ts_view} "
+            f"WHERE {self._term_filter(self._index_terms(terms))}")
 
-    def _attach_df(self, segs: DataFrame, terms: list[str]) -> DataFrame:
-        """Attach the global per-term df column to a segment scan.
-
-        With the driver-side stats map the df values are folded in as
-        a LITERAL map lookup — a pure projection, removing both the
-        per-query term_stats scan and the broadcast join from the
-        query job (measured: WAND mean latency 0.73s → 0.55s at 200k
-        docs).  Values are identical to the join (same snapshot
-        table); segments only contain indexed terms, so the inner
-        join never dropped rows the projection keeps.  Falls back to
-        the broadcast join when the dictionary exceeds the driver
-        cache cap (real-scale indexes)."""
-        m = self._stats_map()
-        if m is not None:
-            pairs: list = []
-            for t in dict.fromkeys(terms):
-                if t in m:
-                    pairs += [F.lit(t), F.lit(int(m[t]))]
-            if not pairs:
-                return segs.join(F.broadcast(self._ts_for(terms)),
-                                 "term")
-            mp = F.create_map(*pairs)
-            return segs.withColumn("df", mp[F.col("term")].cast("long"))
-        return segs.join(F.broadcast(self._ts_for(terms)), "term")
-
-    def _segments_for(self, terms: list[str]) -> DataFrame:
-        tb = self._term_buckets_for(terms)
-        return (self._seg_df
-                .filter(F.col("term_bucket").isin(list(set(tb.values()))))
-                .filter(F.col("term").isin(terms)))
+    def _segments_for(self, terms: list[str],
+                      cols: list[str] | None = None) -> DataFrame:
+        """The query terms' partial-segment rows (``cols``, default
+        all), term_bucket-pruned: one SQL text over the engine's
+        segments view."""
+        return self.spark.sql(
+            f"SELECT {', '.join(cols) if cols else '*'} "
+            f"FROM {self._seg_view} "
+            f"WHERE {self._term_filter(self._index_terms(terms))}")
 
     def _idf_map(self, terms: list[str]) -> dict[str, float] | None:
         stats = self.term_stats(terms)
@@ -493,7 +540,7 @@ class SearchEngine:
         return {t: bm25_idf(self.n_docs, stats[t]) for t in terms}
 
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(self.spark)
 
     # ---------------- prefix query (multi-term rewrite) ---------------
     def search_prefix(self, prefix: str, k: int = TOP_K_SIZE,
@@ -845,13 +892,15 @@ class SearchEngine:
     # sorted docID runs from different build tasks); scorers merge them
     # after decode.  Per-block byte offsets + per-block delta resets
     # mean only blocks that can contain candidates are decoded
-    # (Lucene-style skipping); (block_max_tf, block_min_dl) give
-    # avgdl-independent score upper bounds for MaxScore pruning.
+    # (Lucene-style skipping); a partial's (max_tf, min_dl) give
+    # avgdl-independent score upper bounds for MaxScore pruning.  The
+    # per-block (block_max_tf, block_min_dl) stay in the index but no
+    # kernel reads them, so the bucket exchange does not carry them.
 
     _SEG_COLS = ["bucket", "term", "n_docs", "doc_id_min", "doc_id_max",
                  "docs_blob", "tfs_blob", "dls_blob", "docs_off",
-                 "tfs_off", "dls_off", "block_max_tf", "block_min_dl",
-                 "max_tf", "min_dl", "block_last_doc"]
+                 "tfs_off", "dls_off", "max_tf", "min_dl",
+                 "block_last_doc"]
 
     def search_wand(self, query: str, k: int = TOP_K_SIZE) -> DataFrame:
         """Conjunctive AND top-k with posting skipping: intersect
@@ -870,19 +919,47 @@ class SearchEngine:
         doubles -> bit-identical to the oracle).  AND semantics make a
         globally-missing term produce zero hits through the per-bucket
         term check."""
+        m = self._stats_map()
+        if m is not None:
+            # a query with an unindexed term has no hits: it leaves the
+            # batch here, and with no query left no job runs at all
+            qterms = {qid: ts for qid, ts in qterms.items()
+                      if all(t in m for t in ts)}
         terms = list(dict.fromkeys(t for ts in qterms.values() for t in ts))
         kernel = partial(_and_kernel, n_docs=self.n_docs,
                          avgdl=self.avgdl, tomb=self.tombstones)
         return _bucket_job(self.spark, self._df_segments(terms), kernel,
-                           qterms, k, "df", batched)
+                           qterms, k, "df", batched,
+                           partitions=self._bucket_parts)
 
     def _df_segments(self, terms: list[str]) -> DataFrame | None:
-        """The query terms' partials with their global df attached
-        (None for no terms) — the input of the AND and OR jobs."""
+        """The query terms' partials with their global df attached —
+        the input of the AND and OR jobs, as one SQL text — or None
+        when no term can match.  With the driver stats map the df
+        values are folded in as a LITERAL map lookup, a pure
+        projection with no term_stats scan and no join (measured: WAND
+        mean latency 0.73s → 0.55s at 200k docs), and a term missing
+        from the map has no postings to select.  When the dictionary
+        exceeds the driver cache cap the df rides a broadcast join
+        with the pruned term_stats scan."""
+        terms = self._index_terms(terms)
+        m = self._stats_map()
+        if m is not None:
+            terms = [t for t in terms if t in m]
         if not terms:
             return None
-        return (self._attach_df(self._segments_for(terms), terms)
-                .select(*self._SEG_COLS, "df"))
+        cols = ", ".join(self._SEG_COLS)
+        pred = self._term_filter(terms)
+        if m is not None:
+            dfs = ", ".join(f"'{t}', {int(m[t])}L" for t in terms)
+            return self.spark.sql(
+                f"SELECT {cols}, map({dfs})[term] AS df "
+                f"FROM {self._seg_view} WHERE {pred}")
+        return self.spark.sql(
+            f"SELECT /*+ BROADCAST(ts) */ s.*, ts.df "
+            f"FROM (SELECT {cols} FROM {self._seg_view} WHERE {pred}) s "
+            f"JOIN (SELECT term, df FROM {self._ts_view} WHERE {pred}) ts "
+            f"ON s.term = ts.term")
 
     def search_synonyms(self, query: str, synonyms: dict,
                         k: int = TOP_K_SIZE) -> DataFrame:
@@ -1293,13 +1370,14 @@ class SearchEngine:
                         .agg(F.map_from_entries(F.collect_list(
                             F.struct("slot_id", "slot_df")))
                             .alias("slot_dfs")))
-            segs = (self._segments_for(members)
+            segs = (self._segments_for(members, self._SEG_COLS)
                     .join(F.broadcast(slot_dfs), "term")
                     .select(*self._SEG_COLS, "slot_dfs"))
         kernel = partial(_slots_kernel, n_docs=self.n_docs,
                          avgdl=self.avgdl, tomb=self.tombstones)
         return _bucket_job(self.spark, segs, kernel, specs, k,
-                           "slot_dfs", batched)
+                           "slot_dfs", batched,
+                           partitions=self._bucket_parts)
 
     def search_or(self, query: str, k: int = TOP_K_SIZE,
                   min_should_match: int = 1) -> DataFrame:
@@ -1336,7 +1414,8 @@ class SearchEngine:
         kernel = partial(_or_kernel, n_docs=self.n_docs,
                          avgdl=self.avgdl, tomb=self.tombstones)
         return _bucket_job(self.spark, self._df_segments(terms), kernel,
-                           qspecs, k, "df", batched)
+                           qspecs, k, "df", batched,
+                           partitions=self._bucket_parts)
 
     def more_like_this(self, like_text: str, k: int = TOP_K_SIZE,
                        max_query_terms: int = 25,
@@ -1407,14 +1486,28 @@ _PARTIAL_FIELDS = ("docs_blob", "tfs_blob", "dls_blob", "docs_off",
                    "doc_id_min", "doc_id_max", "max_tf", "min_dl")
 _POS_FIELDS = ("pos_blob", "pos_off")
 
-_HITS_SCHEMA = "query_id string, doc_id long, score double"
+# result schemas built once as StructTypes: a DDL string would be
+# parsed by the JVM on every query
+_TOPK_SCHEMA = StructType([StructField("doc_id", LongType()),
+                           StructField("score", DoubleType())])
+_HITS_SCHEMA = StructType([StructField("query_id", StringType())]
+                          + _TOPK_SCHEMA.fields)
 
 _NO_DOCS = (np.array([], dtype=np.int64), np.array([], dtype=np.float64))
 
 
+def _no_hits(spark: SparkSession, batched: bool = False) -> DataFrame:
+    """An empty hits frame whose collect runs no Spark job: an
+    always-false filter over one row folds to an empty local relation
+    (an empty ``createDataFrame`` is an RDD scan, one job)."""
+    qid = "CAST(NULL AS STRING) AS query_id, " if batched else ""
+    return spark.sql(f"SELECT {qid}CAST(NULL AS BIGINT) AS doc_id, "
+                     "CAST(NULL AS DOUBLE) AS score WHERE false")
+
+
 def _bucket_job(spark: SparkSession, segs: DataFrame | None, kernel,
                 specs: dict, k: int, stat: str | None = None,
-                batched: bool = False) -> DataFrame:
+                batched: bool = False, *, partitions: int) -> DataFrame:
     """THE bucket-parallel job of every BM25-scored family.
 
     ``segs`` holds the partial-segment rows of every term the
@@ -1427,10 +1520,10 @@ def _bucket_job(spark: SparkSession, segs: DataFrame | None, kernel,
     bucket; the local top-k of each survives.  A single query
     (``batched=False``) merges with ``TakeOrdered`` and returns
     (doc_id, score); a batch merges with a per-``query_id`` window and
-    returns (query_id, doc_id, score) — including when empty."""
+    returns (query_id, doc_id, score) — including when empty.
+    ``partitions`` sizes the bucket exchange (:func:`_spread_buckets`)."""
     if segs is None:
-        return spark.createDataFrame(
-            [], _HITS_SCHEMA if batched else "doc_id long, score double")
+        return _no_hits(spark, batched)
 
     def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         parts = _group_partials(pdf)
@@ -1445,16 +1538,17 @@ def _bucket_job(spark: SparkSession, segs: DataFrame | None, kernel,
             qids += [qid] * d.size
             docs.append(d)
             scores.append(s)
-        return pd.DataFrame({
-            "query_id": pd.Series(qids, dtype=object),
-            "doc_id": np.concatenate(docs).astype(np.int64),
-            "score": np.concatenate(scores).astype(np.float64)})
+        hits = {"doc_id": np.concatenate(docs).astype(np.int64),
+                "score": np.concatenate(scores).astype(np.float64)}
+        if batched:
+            hits = {"query_id": pd.Series(qids, dtype=object), **hits}
+        return pd.DataFrame(hits)
 
-    local = (segs.transform(_spread_buckets).groupBy("bucket")
-             .applyInPandas(score_bucket, schema=_HITS_SCHEMA))
+    local = (_spread_buckets(segs, partitions).groupBy("bucket")
+             .applyInPandas(score_bucket,
+                            _HITS_SCHEMA if batched else _TOPK_SCHEMA))
     if not batched:
-        return (local.select("doc_id", "score")
-                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("doc_id"))
     return (local.withColumn("_rn", F.row_number().over(w))
@@ -1880,7 +1974,7 @@ class MultiFieldEngine:
         self.stem = stems.pop() if stems else False
 
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(self.spark)
 
     def search(self, query: str, k: int = TOP_K_SIZE) -> DataFrame:
         """SINGLE-JOB plan: no driver-side stats collects — each
@@ -1928,8 +2022,7 @@ class MultiFieldEngine:
                                     .agg(F.max("df").alias("df")))
             for f in fields:
                 eng = self.engines[f]
-                s = (eng._segments_for(terms)
-                     .select(*SearchEngine._SEG_COLS)
+                s = (eng._segments_for(terms, SearchEngine._SEG_COLS)
                      .join(blend if cross
                            else F.broadcast(eng._ts_for(terms)), "term")
                      .withColumn("field", F.lit(f)))
@@ -1944,7 +2037,9 @@ class MultiFieldEngine:
             avgdl={f: self.engines[f].avgdl for f in fields},
             tomb=tomb, cross=cross)
         return _bucket_job(self.spark, segs, kernel,
-                           {"": terms} if terms else {}, k, "df")
+                           {"": terms} if terms else {}, k, "df",
+                           partitions=max(e._bucket_parts
+                                          for e in self.engines.values()))
 
     # -------- explain (ES _explain analog, multifield paths) --------
     def explain_doc(self, query: str, doc_id: int,
@@ -2423,13 +2518,13 @@ class PhraseEngine(SearchEngine):
         the segment scan needs no df."""
         terms = list(dict.fromkeys(t for slots, _ in specs.values()
                                    for slot in slots for t in slot))
-        segs = (self._segments_for(terms).select(*self._POS_COLS)
+        segs = (self._segments_for(terms, self._POS_COLS)
                 if terms else None)
         kernel = partial(_phrase_kernel, avgdl=self.avgdl,
                          tomb=self.tombstones, shift=self.POS_SHIFT,
                          slop=slop)
         return _bucket_job(self.spark, segs, kernel, specs, k,
-                           batched=batched)
+                           batched=batched, partitions=self._bucket_parts)
 
     def _one_term(self, text: str, what: str) -> str:
         """The one analyzed term of a span/intervals clause; anything
@@ -2446,10 +2541,10 @@ class PhraseEngine(SearchEngine):
         """One constant-score span query as a batch of one of
         :func:`_bucket_job`: every hit scores ``boost``, so the job's
         (score desc, doc_id asc) TakeOrdered merge is doc_id order."""
-        segs = self._segments_for(terms).select(*self._POS_COLS)
+        segs = self._segments_for(terms, self._POS_COLS)
         return _bucket_job(self.spark, segs,
                            partial(kernel, tomb=self.tombstones),
-                           {"": spec}, k)
+                           {"": spec}, k, partitions=self._bucket_parts)
 
     def _near_job(self, clauses: list[list[str]], slop: int,
                   in_order: bool, k: int, boost: float) -> DataFrame:

@@ -1,0 +1,164 @@
+"""The bucket job's input: the SQL-text segment scans, the stats-map
+short cut for unindexed AND terms, the scan fallback, and the engine's
+pyarrow read of the global stats."""
+
+import shutil
+
+import pytest
+
+from auctus_spark.corpus import generate_corpus
+from auctus_spark.index.build import (IndexBuilder, compact, delete_docs,
+                                      read_doc_buckets)
+from auctus_spark.oracle import OracleIndex
+from auctus_spark.query.bm25 import SearchEngine, search_many
+
+AND_QUERIES = ["import", "def return", "import def return the",
+               "uniq_token_11", "import uniq_token_22",
+               "no_such_token_anywhere", "import zz_missing", "the"]
+OR_QUERIES = ["import", "def return", "import zz_missing",
+              "uniq_token_11 uniq_token_22", "the import def return for",
+              "zz_missing qq_missing"]
+# strings the analyzer never emits: a quote, a backslash, a LIKE
+# wildcard and a non-ASCII letter
+ODD_TERMS = ["it's", "a\\b", "50%", "café"]
+
+
+@pytest.fixture(scope="module")
+def built(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("bjidx"))
+    pdf = generate_corpus(600, min_tokens=20, max_tokens=200,
+                          vocab_size=2000)
+    IndexBuilder(spark, out, doc_bucket=256, chunk_docs=200,
+                 term_buckets=8).build(spark.createDataFrame(pdf))
+    oracle = OracleIndex.build(
+        [(int(r.doc_id), r.content) for r in pdf.itertuples(index=False)])
+    return out, oracle
+
+
+def _assert_rank_identical(got, want):
+    assert got == want, (got[:5], want[:5])
+
+
+def _ranked(df):
+    return [(int(r.doc_id), float(r.score)) for r in df.collect()]
+
+
+def _per_query(df):
+    got: dict = {}
+    for r in df.collect():
+        got.setdefault(r.query_id, []).append((int(r.doc_id),
+                                               float(r.score)))
+    return {q: sorted(v, key=lambda t: (-t[1], t[0]))
+            for q, v in got.items()}
+
+
+def _jobs(spark):
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_scan_fallback_matches_oracle(spark, built):
+    """With the driver stats map capped out, df rides the broadcast
+    join with the term_stats scan: AND, OR and batched AND stay
+    bit-exact with the oracle."""
+    out, oracle = built
+    eng = SearchEngine(spark, out, term_buckets=8)
+    eng._stats_map_cache = False
+    for q in AND_QUERIES:
+        _assert_rank_identical(_ranked(eng.search_wand(q, k=50)),
+                               oracle.search(q, k=50))
+    for q in OR_QUERIES:
+        _assert_rank_identical(_ranked(eng.search_or(q, k=50)),
+                               oracle.search_or(q, k=50))
+    queries = {f"q{i}": q for i, q in enumerate(AND_QUERIES)}
+    got = _per_query(search_many(eng, queries, k=50))
+    for qid, q in queries.items():
+        _assert_rank_identical(got.get(qid, []), oracle.search(q, k=50))
+    assert eng._stats_map_cache is False
+
+
+@pytest.mark.parametrize("stats_map", [True, False])
+def test_odd_terms_are_never_quoted(spark, built, stats_map):
+    """Terms outside the analyzer alphabet cannot be indexed: they
+    neither break the SQL text nor change a result."""
+    out, oracle = built
+    eng = SearchEngine(spark, out, term_buckets=8)
+    if not stats_map:
+        eng._stats_map_cache = False
+    got = _ranked(eng.search_or_terms(["import"] + ODD_TERMS, k=50))
+    _assert_rank_identical(got, oracle.search_or("import", k=50))
+    got = _ranked(eng.search_or_terms(["import", "def"] + ODD_TERMS,
+                                      k=50, min_should_match=2))
+    _assert_rank_identical(got, oracle.search_or(
+        "import def", k=50, min_should_match=2))
+    assert _ranked(eng.search_or_terms(ODD_TERMS, k=50)) == []
+    queries = {f"q{i}": f"import {t}" for i, t in enumerate(ODD_TERMS)}
+    queries["plain"] = "def return"
+    got = _per_query(search_many(eng, queries, k=50))
+    for qid, q in queries.items():
+        _assert_rank_identical(got.get(qid, []), oracle.search(q, k=50))
+
+
+def test_unindexed_and_term_runs_no_job(spark, built):
+    """With the stats map loaded, an AND query holding a term the index
+    lacks is answered empty on the driver, single or batched."""
+    out, oracle = built
+    eng = SearchEngine(spark, out, term_buckets=8)
+    assert eng._stats_map() is not None
+    before = _jobs(spark)
+    single = _ranked(eng.search_wand("import zz_missing", k=50))
+    batch = search_many(eng, {"a": "import zz_missing",
+                              "b": "qq_missing"}, k=50).collect()
+    assert _jobs(spark) == before
+    assert single == oracle.search("import zz_missing", k=50) == []
+    assert batch == []
+    assert oracle.search("qq_missing", k=50) == []
+    # an OR query with no indexed term needs no job either
+    assert _ranked(eng.search_or("zz_missing qq_missing", k=50)) == []
+    assert _jobs(spark) == before
+
+
+def _spark_stats(spark, index_dir):
+    row = spark.read.parquet(f"{index_dir}/stats").collect()[0]
+    return (int(row["n_docs"]), float(row["avgdl"]),
+            int(row["total_tokens"]))
+
+
+def _engine_stats(spark, index_dir):
+    eng = SearchEngine(spark, index_dir, term_buckets=8)
+    return eng.n_docs, eng.avgdl, eng.total_tokens
+
+
+def test_stats_read_matches_spark(spark, built, tmp_path):
+    """The engine's pyarrow read of the one-row stats table equals the
+    Spark read on a built, an appended and a compacted index."""
+    from auctus_spark.streaming.incremental import incremental_update
+    out, _ = built
+    d = str(tmp_path / "idx")
+    shutil.copytree(out, d)
+    assert _engine_stats(spark, d) == _spark_stats(spark, d)
+    b = IndexBuilder(spark, d, doc_bucket=256, chunk_docs=200,
+                     term_buckets=8)
+    extra = generate_corpus(200, seed=3, min_tokens=20, max_tokens=200,
+                            vocab_size=2000)
+    extra["doc_id"] += 600
+    incremental_update(b, spark.createDataFrame(extra))
+    appended = _spark_stats(spark, d)
+    assert appended[0] == 800
+    assert _engine_stats(spark, d) == appended
+    delete_docs(spark, d, [3, 250, 700])
+    compact(spark, d, term_buckets=8)
+    compacted = _spark_stats(spark, d)
+    assert compacted[0] == 797
+    assert _engine_stats(spark, d) == compacted
+
+
+def test_doc_bucket_count_from_lineage(built, tmp_path):
+    """Doc buckets 0-2 of 600 docs at 256 per bucket, from the lineage
+    of three 200-doc chunks whose ranges share buckets."""
+    out, _ = built
+    assert read_doc_buckets(out) == 3
+    d = str(tmp_path / "old")
+    shutil.copytree(out, d)
+    with open(f"{d}/_ANALYZER", "w") as f:
+        f.write('{"stem": false, "positions": false}')
+    assert read_doc_buckets(d) is None

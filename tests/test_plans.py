@@ -2,6 +2,8 @@
 actually appear in the executed plans (pushdown, partition pruning,
 broadcast joins, TakeOrdered top-k, whole-stage codegen)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -70,6 +72,83 @@ def test_wand_plan_shape_scan_fallback(engine):
         assert plan.count("Exchange hashpartitioning") == 1
     finally:
         engine._stats_map_cache = None
+
+
+def _bucket_exchange(plan: str) -> set[int]:
+    """Partition counts of the plan's hash exchanges on ``bucket``."""
+    return {int(n) for n in
+            re.findall(r"hashpartitioning\(bucket#\d+L?, (\d+)\)", plan)}
+
+
+def test_bucket_exchange_one_partition_per_doc_bucket(engine):
+    """400 docs at 128 per doc bucket are 4 buckets: the bucket
+    exchange has 4 partitions, not 4x the parallelism, on every
+    bucket-job family."""
+    assert _bucket_exchange(_plan(engine.search_wand("import def"))) \
+        == {4}
+    assert _bucket_exchange(_plan(engine.search_or("import def"))) == {4}
+    assert _bucket_exchange(_plan(engine.search_synonyms(
+        "import def", {"import": ["the"]}))) == {4}
+
+
+def test_bucket_exchange_capped_at_4x_parallelism(spark, tmp_path):
+    """An index with more doc buckets than 4x the default parallelism
+    keeps 4x the default parallelism."""
+    from auctus_spark.index.build import read_doc_buckets
+    cap = 4 * spark.sparkContext.defaultParallelism
+    out = str(tmp_path / "many")
+    pdf = generate_corpus(400, min_tokens=5, max_tokens=20,
+                          vocab_size=200)
+    IndexBuilder(spark, out, doc_bucket=max(1, 400 // (2 * cap)),
+                 chunk_docs=1 << 20, term_buckets=4).build(
+                     spark.createDataFrame(pdf))
+    assert read_doc_buckets(out) > cap
+    eng = SearchEngine(spark, out, term_buckets=4)
+    assert _bucket_exchange(_plan(eng.search_wand("import def"))) \
+        == {cap}
+
+
+def test_bucket_exchange_without_doc_bucket_record(spark, engine,
+                                                   tmp_path):
+    """An index that does not record its doc bucket keeps the old
+    count, 4x the default parallelism."""
+    import json
+    import shutil
+    d = str(tmp_path / "old")
+    shutil.copytree(engine.paths.base, d)
+    with open(f"{d}/_ANALYZER") as f:
+        az = json.load(f)
+    del az["doc_bucket"]
+    with open(f"{d}/_ANALYZER", "w") as f:
+        json.dump(az, f)
+    eng = SearchEngine(spark, d, term_buckets=8)
+    assert _bucket_exchange(_plan(eng.search_wand("import def"))) \
+        == {4 * spark.sparkContext.defaultParallelism}
+
+
+def test_wand_plan_py4j_calls(engine):
+    """Building search_wand's plan costs few py4j round trips: the
+    input is one SQL text, not one call per column, literal and list
+    element.  Building it column by column took 333; the bound is a
+    third of that."""
+    import threading
+    client = engine.spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    me = threading.get_ident()
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == me:
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    engine.search_wand("return the")  # warm the JVM-side lookups
+    client.send_command = counting
+    try:
+        engine.search_wand("import def self")
+    finally:
+        client.send_command = send
+    assert 0 < len(sent) <= 333 // 3, len(sent)
 
 
 def test_synonyms_idx_plan_shape(engine):
