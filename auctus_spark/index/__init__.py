@@ -1,10 +1,8 @@
 from .build import IndexBuilder, IndexPaths  # noqa: F401
 from .codec import (  # noqa: F401
     BLOCK_SIZE,
-    decode_segment,
-    delta_decode,
-    delta_encode,
-    encode_segment,
-    varbyte_decode,
-    varbyte_encode,
+    decode_docs,
+    decode_positions,
+    decode_row,
+    encode_groups,
 )

@@ -28,11 +28,9 @@ boundary (the MapReduce local-indexing + merge construction):
    across stage-1 tasks — no single task ever owns a hot term
    (the salted-repartition requirement).
 
-Block-max metadata is stored avgdl-free as (block_max_tf,
-block_min_dl): tf_norm is increasing in tf and decreasing in dl, so
-``tf_norm(max_tf, min_dl, avgdl)`` is a correct upper bound for any
-avgdl chosen later — encoding never needs a second pass over the
-corpus.
+The partial-row layout (blobs, block offsets, avgdl-free block
+metadata, positions) is known to ``codec.py`` alone: the encode step
+and compaction both write rows with ``codec.encode_groups``.
 
 docID-ordering contract: scorers concatenate partials of one
 (term, bucket) sorted by ``doc_id_min`` and rely on the runs being
@@ -65,7 +63,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .codec import BLOCK_SIZE
+from . import codec
 
 DEFAULT_DOC_BUCKET = 1 << 16      # docs per scoring bucket
 DEFAULT_CHUNK_DOCS = 1 << 20      # docs per resumable build chunk
@@ -286,45 +284,15 @@ def _tokenize_arrow(content, stem: bool = False):
     return codes, doc_local, vocab
 
 
-def _varbyte_stream(vals: np.ndarray, group_starts: np.ndarray):
-    """LEB128-encode ``vals`` as one byte stream; returns (stream,
-    per-group start offsets, per-group end offsets, per-value starts).
-    Width-adaptive (uint32 fast path) with early exit at the value
-    magnitude actually present — the encoder's hottest loop."""
-    n = len(vals)
-    vmax = int(vals.max()) if n else 0
-    dt = np.uint32 if vmax < (1 << 32) else np.uint64
-    v = vals.astype(dt)
-    maxk = 1
-    while vmax >= (1 << (7 * maxk)):
-        maxk += 1
-    nbytes = np.ones(n, dtype=np.int32)
-    for k in range(1, maxk):
-        nbytes += (v >= dt(1) << dt(7 * k)).astype(np.int32)
-    ends = np.cumsum(nbytes, dtype=np.int64)
-    starts = ends - nbytes
-    out = np.zeros(int(ends[-1]) if n else 0, dtype=np.uint8)
-    for j in range(maxk):
-        mask = nbytes > j
-        sel = v[mask] if j else v
-        st = starts[mask] if j else starts
-        nb = nbytes[mask] if j else nbytes
-        byte = ((sel >> dt(7 * j)) & dt(0x7F)).astype(np.uint8)
-        cont = ((nb - 1 > j).astype(np.uint8)) << 7
-        out[st + j] = byte | cont
-    g_off = starts[group_starts]
-    g_end = np.append(g_off[1:], int(ends[-1]) if n else 0)
-    return out, g_off, g_end, starts
-
-
 def _encode_batch(doc_ids_all: np.ndarray, content, doc_bucket: int,
                   stem: bool = False, positions: bool = False):
     """One corpus slice → partial-segment RecordBatch.
 
     Everything stays in Arrow/numpy: tokenization is Arrow C++
     (ascii_lower → RE2 split → dictionary_encode), tf counting is one
-    np.unique over packed uint32 keys, and the OUTPUT arrays are
-    assembled with binary from_buffers — no per-row Python anywhere
+    np.unique over packed uint32 keys, and every (term, bucket) group
+    is encoded in one :func:`codec.encode_groups` call, which builds
+    binary columns with from_buffers — no per-row Python anywhere
     (pandas→Arrow of millions of object rows was the build's largest
     non-scaling cost).  ``content`` is a pa.StringArray aligned with
     ``doc_ids_all``, which MUST be strictly ascending (validated by
@@ -357,8 +325,6 @@ def _encode_batch(doc_ids_all: np.ndarray, content, doc_bucket: int,
     tfs = tfs.astype(np.int64)
     dls = dl_per_doc[dloc]
     buckets = doc_ids // doc_bucket
-    n = len(skey)
-    tf_csum = np.concatenate([[0], np.cumsum(tfs)])
 
     pos_sorted = None
     if positions:
@@ -376,106 +342,14 @@ def _encode_batch(doc_ids_all: np.ndarray, content, doc_bucket: int,
         order = np.lexsort((pos_in_doc, doc_local, codes))
         pos_sorted = pos_in_doc[order]
 
-    new_group = np.ones(n, dtype=bool)
+    new_group = np.ones(len(skey), dtype=bool)
     new_group[1:] = (tcode[1:] != tcode[:-1]) | (buckets[1:] != buckets[:-1])
     group_starts = np.nonzero(new_group)[0]
-    group_ends = np.append(group_starts[1:], n)
-    group_id = np.cumsum(new_group) - 1
-    pos_in_group = np.arange(n) - group_starts[group_id]
-
-    block_start = (pos_in_group % BLOCK_SIZE) == 0
-    deltas = doc_ids.copy()
-    not_bs = ~block_start
-    deltas[not_bs] = doc_ids[not_bs] - doc_ids[np.nonzero(not_bs)[0] - 1]
-
-    docs_s, docs_o, docs_e, docs_pv = _varbyte_stream(deltas, group_starts)
-    tfs_s, tfs_o, tfs_e, tfs_pv = _varbyte_stream(tfs, group_starts)
-    dls_s, dls_o, dls_e, dls_pv = _varbyte_stream(dls, group_starts)
-
-    bstart_idx = np.nonzero(block_start)[0]
-    blk_max_tf = np.maximum.reduceat(tfs, bstart_idx)
-    blk_min_dl = np.minimum.reduceat(dls, bstart_idx)
-    blk_last = doc_ids[np.append(bstart_idx[1:], n) - 1]
-    blk_group = group_id[bstart_idx]
-    blk_bounds = np.searchsorted(blk_group, np.arange(len(group_starts) + 1))
-    seg_max_tf = np.maximum.reduceat(tfs, group_starts)
-    seg_min_dl = np.minimum.reduceat(dls, group_starts)
-
-    ng = len(group_starts)
-    nb = len(bstart_idx)
-
-    def _binary(stream, g_off, g_end, itemsize=1):
-        # zero-copy binary column: byte offsets into a shared stream
-        offsets = np.empty(ng + 1, dtype=np.int32)
-        offsets[:-1] = g_off * itemsize
-        offsets[-1] = g_end[-1] * itemsize
-        return pa.Array.from_buffers(
-            pa.binary(), ng,
-            [None, pa.py_buffer(offsets.tobytes()),
-             pa.py_buffer(stream.tobytes())])
-
-    nblk_per_g = np.diff(blk_bounds)
-
-    def _offsets_binary(pv, g_off, g_end, at=None):
-        # per-group int32 block byte offsets (group-relative, with an
-        # end sentinel), packed little-endian into one binary column.
-        # ``at`` overrides the value indexes of block starts (used by
-        # the position stream, whose values are occurrences).
-        vals = np.empty(nb + ng, dtype=np.int32)
-        blk_pos = np.arange(nb) + np.repeat(np.arange(ng), nblk_per_g)
-        base = np.repeat(g_off, nblk_per_g)
-        vals[blk_pos] = pv[bstart_idx if at is None else at] - base
-        vals[blk_bounds[1:] + np.arange(ng)] = g_end - g_off
-        ent_off = blk_bounds + np.arange(ng + 1)  # entries per group
-        return _binary(vals, ent_off[:-1], ent_off[1:], itemsize=4)
-
-    def _block_binary(values, dtype):
-        return _binary(values.astype(dtype), blk_bounds[:-1],
-                       blk_bounds[1:], itemsize=dtype().itemsize)
-
-    sch = _arrow_schema()
-    arrays = [
-        pc.take(vocab_arr, pa.array(tcode[group_starts])).cast(pa.string()),
-        pa.array(buckets[group_starts].astype(np.int64), type=pa.int64()),
-        pa.array((group_ends - group_starts).astype(np.int64)),
-        pa.array((tf_csum[group_ends] - tf_csum[group_starts])
-                 .astype(np.int64)),
-        pa.array(doc_ids[group_starts]),
-        pa.array(doc_ids[group_ends - 1]),
-        _binary(docs_s, docs_o, docs_e),
-        _binary(tfs_s, tfs_o, tfs_e),
-        _binary(dls_s, dls_o, dls_e),
-        _offsets_binary(docs_pv, docs_o, docs_e),
-        _offsets_binary(tfs_pv, tfs_o, tfs_e),
-        _offsets_binary(dls_pv, dls_o, dls_e),
-        _block_binary(blk_max_tf, np.int32),
-        _block_binary(blk_min_dl, np.int32),
-        _block_binary(blk_last, np.int64),
-        pa.array(seg_max_tf.astype(np.int64)),
-        pa.array(seg_min_dl.astype(np.int64)),
-    ]
-    if positions:
-        # per-posting positions: first absolute, rest delta vs the
-        # previous position of the SAME posting; per-block byte
-        # offsets via occurrence indexes (block b's positions start at
-        # occurrence tf_csum[first posting of b])
-        occ_firsts = tf_csum[:-1]
-        pos_deltas = pos_sorted.copy()
-        mask = np.ones(pos_sorted.size, dtype=bool)
-        mask[occ_firsts] = False
-        idxs = np.nonzero(mask)[0]
-        pos_deltas[idxs] = pos_sorted[idxs] - pos_sorted[idxs - 1]
-        g_occ = tf_csum[group_starts]
-        pos_s, pos_o, pos_e, pos_pv = _varbyte_stream(pos_deltas, g_occ)
-        arrays.append(_binary(pos_s, pos_o, pos_e))
-        arrays.append(_offsets_binary(pos_pv, pos_o, pos_e,
-                                      at=tf_csum[bstart_idx]))
-    else:
-        empty = np.zeros(0, dtype=np.uint8)
-        zo = np.zeros(ng, dtype=np.int64)
-        arrays.append(_binary(empty, zo, zo))
-        arrays.append(_binary(empty, zo, zo))
-    return pa.RecordBatch.from_arrays(arrays, schema=sch)
+    cols = codec.encode_groups(doc_ids, tfs, dls, group_starts, pos_sorted)
+    return pa.RecordBatch.from_arrays(
+        [pc.take(vocab_arr, pa.array(tcode[group_starts])).cast(pa.string()),
+         pa.array(buckets[group_starts], type=pa.int64()),
+         *cols.values()], schema=_arrow_schema())
 
 
 def _tokenize_encode_factory(doc_bucket: int,
@@ -821,32 +695,21 @@ class IndexBuilder:
         table — pure driver-side pyarrow, zero Spark jobs (the lineage
         rows were observed during the chunk writes)."""
         import pyarrow.dataset as pads
-        import pyarrow.parquet as pq
         ds = pads.dataset(self.paths.lineage, format="parquet",
                           partitioning="hive")
         t = ds.to_table(columns=["n_docs", "total_tokens"])
         n_docs = int(sum(t["n_docs"].to_pylist()))
         total = int(sum(t["total_tokens"].to_pylist()))
-        avgdl = total / n_docs if n_docs else 0.0
-        import pyarrow as pa
-        os.makedirs(self.paths.stats, exist_ok=True)
-        pq.write_table(pa.table({
-            "n_docs": pa.array([n_docs], pa.int64()),
-            "avgdl": pa.array([avgdl], pa.float64()),
-            "total_tokens": pa.array([total], pa.int64())}),
-            os.path.join(self.paths.stats, "stats.parquet"))
-        return {"n_docs": n_docs, "avgdl": avgdl}
+        return {"n_docs": n_docs,
+                "avgdl": _write_stats(self.paths, n_docs, total)}
 
     # ---------------- stage 3: merge (pure JVM) -----------------------
 
-    def encode_segments(self, avgdl: float | None = None) -> None:
+    def encode_segments(self) -> None:
         """Merge partial segments into the global term-partitioned
         index: exchange on term_bucket + Tungsten sort by (term,
         bucket, doc_id_min), written partitionBy(term_bucket) with
-        term-sorted files for row-group pruning.  No Python.
-
-        ``avgdl`` is accepted for API compatibility; block-max metadata
-        is avgdl-free (bounds from (max_tf, min_dl))."""
+        term-sorted files for row-group pruning.  No Python."""
         parts = self._read_partials().drop("chunk")
         parts = parts.withColumn(
             "term_bucket", F.pmod(F.hash("term"), F.lit(self.term_buckets)))
@@ -869,12 +732,8 @@ class IndexBuilder:
         cover disjoint docID ranges, so df = sum(n_docs).  Reads the
         SEGMENTS table: the variant compaction needs (post-delete
         segments are the source of truth there)."""
-        segs = self.spark.read.parquet(self.paths.segments)
-        (segs.groupBy("term", "term_bucket")
-            .agg(F.sum("n_docs").alias("df"), F.sum("tf_sum").alias("cf"))
-            .write.mode("overwrite").partitionBy("term_bucket")
-            .parquet(self.paths.term_stats))
-        write_term_dict(self.spark, self.paths)
+        _write_term_stats(self.spark, self.paths,
+                          self.spark.read.parquet(self.paths.segments))
 
     def finalize_term_stats_from_partials(self) -> None:
         """Same (term, df, cf) table, aggregated from the PARTIALS
@@ -888,11 +747,7 @@ class IndexBuilder:
         tasks back-fill the merge stage's straggler tail)."""
         parts = self._read_partials().drop("chunk").withColumn(
             "term_bucket", F.pmod(F.hash("term"), F.lit(self.term_buckets)))
-        (parts.groupBy("term", "term_bucket")
-            .agg(F.sum("n_docs").alias("df"), F.sum("tf_sum").alias("cf"))
-            .write.mode("overwrite").partitionBy("term_bucket")
-            .parquet(self.paths.term_stats))
-        write_term_dict(self.spark, self.paths)
+        _write_term_stats(self.spark, self.paths, parts)
 
     # ---------------- public API --------------------------------------
 
@@ -929,6 +784,37 @@ class IndexBuilder:
             F.sum("n_docs").alias("n")).collect()[0]
         return (int(expect["s"]) == int(lin["s"])
                 and int(expect["n"]) == int(lin["n"]))
+
+
+def _write_stats(paths: IndexPaths, n_docs: int, total: int) -> float:
+    """Write the one-row global stats table (read back by
+    :func:`read_stats`) with pyarrow; returns avgdl."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    avgdl = total / n_docs if n_docs else 0.0
+    os.makedirs(paths.stats, exist_ok=True)
+    pq.write_table(pa.table({
+        "n_docs": pa.array([n_docs], pa.int64()),
+        "avgdl": pa.array([avgdl], pa.float64()),
+        "total_tokens": pa.array([total], pa.int64())}),
+        os.path.join(paths.stats, "stats.parquet"))
+    return avgdl
+
+
+def _write_term_stats(spark: SparkSession, paths: IndexPaths,
+                      rows: DataFrame, between=None) -> None:
+    """The (term, df, cf) table from partial rows carrying a
+    ``term_bucket`` column — partials of one term cover disjoint docID
+    ranges, so df = sum(n_docs) — then the term dictionary derived
+    from it.  ``between`` (compaction's fault injection) runs after
+    the term_stats write and before the dictionary's."""
+    (rows.groupBy("term", "term_bucket")
+        .agg(F.sum("n_docs").alias("df"), F.sum("tf_sum").alias("cf"))
+        .write.mode("overwrite").partitionBy("term_bucket")
+        .parquet(paths.term_stats))
+    if between is not None:
+        between()
+    write_term_dict(spark, paths)
 
 
 def write_term_dict(spark: SparkSession, paths: IndexPaths,
@@ -1058,60 +944,6 @@ def load_tombstones(spark: SparkSession, index_dir: str,
 # build over the live corpus (same postings, same N/df/avgdl).
 # ---------------------------------------------------------------------
 
-def _pack_partial_row(doc_ids, tfs, dls, pos_groups=None) -> dict:
-    """Re-encode ONE partial's surviving postings into the v3 binary
-    row fields (single group; the layout _encode_batch packs per
-    group).  ``pos_groups``: list of per-posting position arrays."""
-    from .codec import block_offsets, delta_encode, varbyte_encode
-    n = len(doc_ids)
-    deltas = delta_encode(doc_ids)
-    blk_starts = np.arange(0, n, BLOCK_SIZE)
-    row = {
-        "n_docs": int(n),
-        "tf_sum": int(tfs.sum()),
-        "doc_id_min": int(doc_ids[0]),
-        "doc_id_max": int(doc_ids[-1]),
-        "docs_blob": varbyte_encode(deltas),
-        "tfs_blob": varbyte_encode(tfs),
-        "dls_blob": varbyte_encode(dls),
-        "docs_off": block_offsets(deltas).astype(np.int32).tobytes(),
-        "tfs_off": block_offsets(tfs).astype(np.int32).tobytes(),
-        "dls_off": block_offsets(dls).astype(np.int32).tobytes(),
-        "block_max_tf": np.maximum.reduceat(tfs, blk_starts)
-        .astype(np.int32).tobytes(),
-        "block_min_dl": np.minimum.reduceat(dls, blk_starts)
-        .astype(np.int32).tobytes(),
-        "block_last_doc": doc_ids[np.minimum(
-            blk_starts + BLOCK_SIZE - 1, n - 1)]
-        .astype(np.int64).tobytes(),
-        "max_tf": int(tfs.max()),
-        "min_dl": int(dls.min()),
-    }
-    if pos_groups is None:
-        row["pos_blob"] = b""
-        row["pos_off"] = b""
-    else:
-        from .codec import _leb_lengths
-        counts = np.array([len(g) for g in pos_groups], dtype=np.int64)
-        flat = (np.concatenate(pos_groups) if counts.sum()
-                else np.array([], dtype=np.int64))
-        pos_deltas = flat.copy()
-        firsts = np.concatenate([[0], np.cumsum(counts)])[:-1]
-        mask = np.ones(flat.size, dtype=bool)
-        mask[firsts] = False
-        idxs = np.nonzero(mask)[0]
-        pos_deltas[idxs] = flat[idxs] - flat[idxs - 1]
-        row["pos_blob"] = varbyte_encode(pos_deltas)
-        # per-BLOCK byte offsets at occurrence starts (+ end sentinel)
-        lens = _leb_lengths(pos_deltas)
-        byte_csum = np.concatenate([[0], np.cumsum(lens)])
-        occ_csum = np.concatenate([[0], np.cumsum(counts)])
-        entries = byte_csum[occ_csum[blk_starts]]
-        row["pos_off"] = np.append(entries, byte_csum[-1]) \
-            .astype(np.int32).tobytes()
-    return row
-
-
 class SimulatedCompactionCrash(RuntimeError):
     """Raised by compact(_crash_after=...) — test-only fault
     injection for the crash-recovery windows."""
@@ -1139,7 +971,6 @@ def compact(spark: SparkSession, index_dir: str,
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from .codec import varbyte_decode
     paths = IndexPaths(index_dir)
     check_not_compacting(index_dir)
 
@@ -1166,13 +997,12 @@ def compact(spark: SparkSession, index_dir: str,
       for pdf in batches:
         out_d, out_l = [], []
         for r in pdf.itertuples(index=False):
-            from .codec import delta_decode
-            ids = delta_decode(varbyte_decode(r.docs_blob))
+            ids = codec.decode_docs(r.docs_blob)
             pos = np.searchsorted(tomb, ids)
             pos_c = np.minimum(pos, tomb.size - 1)
             hit = tomb[pos_c] == ids
             if hit.any():
-                dls = varbyte_decode(r.dls_blob)
+                dls = codec.decode_values(r.dls_blob)
                 out_d.append(ids[hit])
                 out_l.append(dls[hit])
         if not out_d:
@@ -1227,54 +1057,55 @@ def compact(spark: SparkSession, index_dir: str,
     n_removed = int(found.size) + int(existed_empty.sum())
 
     def rewrite(batches):
-      import pandas as pd
-
-      from .codec import delta_decode
-      for pdf in batches:
-        rows = []
-        for r in pdf.itertuples(index=False):
-            if r.doc_id_max < lo or r.doc_id_min > hi:
-                rows.append(r._asdict())
+        # rows holding a tombstoned posting are decoded one by one,
+        # then every surviving one of the Arrow batch is re-encoded in
+        # ONE codec call (the build's encoder, so the bytes equal a
+        # fresh build's); untouched rows pass through as they are
+        import pyarrow as pa
+        for rb in batches:
+            col = dict(zip(rb.schema.names, rb.columns))
+            row_lo = col["doc_id_min"].to_numpy()
+            row_hi = col["doc_id_max"].to_numpy()
+            as_is = np.ones(rb.num_rows, dtype=bool)
+            src, ids_l, tfs_l, dls_l, pos_l = [], [], [], [], []
+            for i in np.nonzero((row_hi >= lo) & (row_lo <= hi))[0]:
+                ids = codec.decode_docs(col["docs_blob"][i].as_py())
+                pos = np.searchsorted(tomb, ids)
+                keep = tomb[np.minimum(pos, tomb.size - 1)] != ids
+                if keep.all():
+                    continue
+                as_is[i] = False
+                if not keep.any():
+                    continue
+                tfs = codec.decode_values(col["tfs_blob"][i].as_py())
+                dls = codec.decode_values(col["dls_blob"][i].as_py())
+                src.append(i)
+                ids_l.append(ids[keep])
+                tfs_l.append(tfs[keep])
+                dls_l.append(dls[keep])
+                if positions:
+                    pos_l.append(codec.decode_positions(
+                        col["pos_blob"][i].as_py(), tfs)[
+                            np.repeat(keep, tfs)])
+            yield rb if as_is.all() else rb.filter(pa.array(as_is))
+            if not src:
                 continue
-            ids = delta_decode(varbyte_decode(r.docs_blob))
-            pos = np.searchsorted(tomb, ids)
-            pos_c = np.minimum(pos, tomb.size - 1)
-            keep = tomb[pos_c] != ids
-            if keep.all():
-                rows.append(r._asdict())
-                continue
-            if not keep.any():
-                continue
-            tfs = varbyte_decode(r.tfs_blob)
-            dls = varbyte_decode(r.dls_blob)
-            pos_groups = None
-            if positions:
-                pd_ = varbyte_decode(r.pos_blob)
-                firsts = np.concatenate([[0], np.cumsum(tfs)])
-                c = np.cumsum(pd_)
-                prior = np.where(firsts[:-1] > 0, c[firsts[:-1] - 1], 0)
-                absd = c - np.repeat(prior, tfs)
-                pos_groups = [absd[firsts[i]:firsts[i + 1]]
-                              for i in np.nonzero(keep)[0]]
-            packed = _pack_partial_row(ids[keep], tfs[keep], dls[keep],
-                                       pos_groups)
-            packed["term"] = r.term
-            packed["bucket"] = int(r.bucket)
-            packed["term_bucket"] = int(r.term_bucket)
-            rows.append(packed)
-        cols = ["term", "bucket", "n_docs", "tf_sum", "doc_id_min",
-                "doc_id_max", "docs_blob", "tfs_blob", "dls_blob",
-                "docs_off", "tfs_off", "dls_off", "block_max_tf",
-                "block_min_dl", "block_last_doc", "max_tf", "min_dl",
-                "pos_blob", "pos_off", "term_bucket"]
-        if not rows:
-            yield pd.DataFrame({c: [] for c in cols})
-            continue
-        yield pd.DataFrame(rows)[cols]
+            sizes = np.array([a.size for a in ids_l], dtype=np.int64)
+            cols = codec.encode_groups(
+                np.concatenate(ids_l), np.concatenate(tfs_l),
+                np.concatenate(dls_l),
+                np.concatenate([[0], np.cumsum(sizes)[:-1]]),
+                np.concatenate(pos_l) if positions else None)
+            take = pa.array(src, type=pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [col["term"].take(take), col["bucket"].take(take),
+                 *cols.values(), col["term_bucket"].take(take)],
+                schema=rb.schema)
 
     tmp = paths.segments + "_compacting"
-    (segs.mapInPandas(rewrite, schema=PARTIAL_SCHEMA
-                      + ", term_bucket int")
+    out_cols = list(_arrow_schema().names) + ["term_bucket"]
+    (segs.select(*out_cols)
+        .mapInArrow(rewrite, schema=PARTIAL_SCHEMA + ", term_bucket int")
         .repartition(max(spark.sparkContext.defaultParallelism,
                          min(term_buckets, 64)), "term_bucket")
         .sortWithinPartitions("term", "bucket", "doc_id_min")
@@ -1325,23 +1156,11 @@ def compact(spark: SparkSession, index_dir: str,
     _crash("removed_docs")
 
     # refresh stats: N/avgdl over LIVE docs; term_stats from segments
-    n_docs = int(old["n_docs"]) - n_removed
-    total = int(old["total_tokens"]) - tok_removed
-    os.makedirs(paths.stats, exist_ok=True)
-    pq.write_table(pa.table({
-        "n_docs": pa.array([n_docs], pa.int64()),
-        "avgdl": pa.array([total / n_docs if n_docs else 0.0],
-                          pa.float64()),
-        "total_tokens": pa.array([total], pa.int64())}),
-        os.path.join(paths.stats, "stats.parquet"))
+    _write_stats(paths, int(old["n_docs"]) - n_removed,
+                 int(old["total_tokens"]) - tok_removed)
     _crash("stats")
-    segs2 = spark.read.parquet(paths.segments)
-    (segs2.groupBy("term", "term_bucket")
-        .agg(F.sum("n_docs").alias("df"), F.sum("tf_sum").alias("cf"))
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(paths.term_stats))
-    _crash("term_stats")
-    write_term_dict(spark, paths)
+    _write_term_stats(spark, paths, spark.read.parquet(paths.segments),
+                      between=lambda: _crash("term_stats"))
     _crash("term_dict")
     shutil.rmtree(tomb_dir, ignore_errors=True)
     _crash("tombstones_cleared")
@@ -1410,10 +1229,5 @@ def rollback_compaction(spark: SparkSession, index_dir: str) -> None:
     else:
         # the crashed run created removed_docs; pre-compaction had none
         shutil.rmtree(paths.removed, ignore_errors=True)
-    segs = spark.read.parquet(paths.segments)
-    (segs.groupBy("term", "term_bucket")
-        .agg(F.sum("n_docs").alias("df"), F.sum("tf_sum").alias("cf"))
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(paths.term_stats))
-    write_term_dict(spark, paths)
+    _write_term_stats(spark, paths, spark.read.parquet(paths.segments))
     os.remove(marker)

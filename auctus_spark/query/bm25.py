@@ -85,7 +85,7 @@ from pyspark.sql.types import (DoubleType, LongType, StringType,
 from .. import B, K1, TOP_K_SIZE
 from ..analysis import JVM_TOKEN_PATTERN, analyze_query
 from ..index.build import IndexPaths, load_tombstones, tombstones_df
-from ..index.codec import decode_blocks, delta_decode, varbyte_decode
+from ..index import codec
 from ..oracle import bm25_idf
 
 
@@ -710,7 +710,7 @@ class SearchEngine:
             for pdf in batches:
                 outs = []
                 for r in pdf.itertuples(index=False):
-                    ids = delta_decode(varbyte_decode(r.docs_blob))
+                    ids = codec.decode_docs(r.docs_blob)
                     if tomb.size:
                         pos = np.searchsorted(tomb, ids)
                         pos_c = np.minimum(pos, tomb.size - 1)
@@ -737,10 +737,8 @@ class SearchEngine:
             for pdf in batches:
                 outs = []
                 for r in pdf.itertuples(index=False):
-                    doc_ids = delta_decode(
-                        varbyte_decode(r.docs_blob))
-                    tfs = varbyte_decode(r.tfs_blob)
-                    dls = varbyte_decode(r.dls_blob)
+                    doc_ids, tfs, dls = codec.decode_row(
+                        r.docs_blob, r.tfs_blob, r.dls_blob)
                     outs.append(pd.DataFrame(
                         {"term": r.term, "doc_id": doc_ids,
                          "tf": tfs, "dl": dls}))
@@ -806,10 +804,10 @@ class SearchEngine:
                   "contribution double")
         terms = analyze_query(query, stem=self.stem)
         if not terms:
-            return self.spark.createDataFrame([], schema)
+            return _no_hits(self.spark, schema)
         idf = self._idf_map(terms)
         if idf is None:
-            return self.spark.createDataFrame([], schema)
+            return _no_hits(self.spark, schema)
         stats = self.term_stats(terms)
         top = self.search(query, k)
         factors = F.broadcast(self.spark.createDataFrame(
@@ -1117,18 +1115,17 @@ class SearchEngine:
         conjuncts pushes to the parquet row-group stats.  df joins
         from the term-stats scan — no full-corpus recompute.
         Tombstoned docs return nothing, like ES after delete."""
+        empty = "doc_id long, term string, tf long, df long"
         ids = sorted({int(d) for d in doc_ids})
         if not ids:
-            return self.spark.createDataFrame(
-                [], "doc_id long, term string, tf long, df long")
+            return _no_hits(self.spark, empty)
         tomb = self.tombstones
         if tomb.size:
             pos = np.searchsorted(tomb, ids)
             pos_c = np.minimum(pos, tomb.size - 1)
             ids = [d for d, p in zip(ids, pos_c) if tomb[p] != d]
             if not ids:
-                return self.spark.createDataFrame(
-                    [], "doc_id long, term string, tf long, df long")
+                return _no_hits(self.spark, empty)
         segs = (self._seg_df.filter(self._doc_range_pred(ids))
                 .select("term", "docs_blob", "tfs_blob"))
         want = np.array(ids, dtype=np.int64)
@@ -1137,13 +1134,13 @@ class SearchEngine:
             for pdf in batches:
                 outs = []
                 for r in pdf.itertuples(index=False):
-                    d = delta_decode(varbyte_decode(r.docs_blob))
+                    d = codec.decode_docs(r.docs_blob)
                     p = np.searchsorted(d, want)
                     p_c = np.minimum(p, d.size - 1)
                     hit = d[p_c] == want
                     if not hit.any():
                         continue
-                    tfs = varbyte_decode(r.tfs_blob)
+                    tfs = codec.decode_values(r.tfs_blob)
                     outs.append(pd.DataFrame(
                         {"doc_id": want[hit], "term": r.term,
                          "tf": tfs[p_c[hit]]}))
@@ -1183,7 +1180,7 @@ class SearchEngine:
                   "df long, rank int")
         tokens = analyze_query(text, stem=self.stem)
         if not tokens:
-            return self.spark.createDataFrame([], schema)
+            return _no_hits(self.spark, schema)
         present = self.term_stats(tokens)
         targets = [t for t in tokens
                    if suggest_mode == "always" or t not in present]
@@ -1306,7 +1303,7 @@ class SearchEngine:
         schema = "phrase string, score double"
         tokens = analyze_query(text, stem=self.stem)
         if not tokens:
-            return self.spark.createDataFrame([], schema)
+            return _no_hits(self.spark, schema)
         if len(tokens) > max_tokens:
             raise ValueError(
                 f"phrase suggester caps at {max_tokens} tokens "
@@ -1496,13 +1493,17 @@ _HITS_SCHEMA = StructType([StructField("query_id", StringType())]
 _NO_DOCS = (np.array([], dtype=np.int64), np.array([], dtype=np.float64))
 
 
-def _no_hits(spark: SparkSession, batched: bool = False) -> DataFrame:
-    """An empty hits frame whose collect runs no Spark job: an
+def _no_hits(spark: SparkSession, schema=_TOPK_SCHEMA) -> DataFrame:
+    """An empty frame of ``schema`` (a StructType, or a DDL string of
+    ``name type`` pairs) whose collect runs no Spark job: an
     always-false filter over one row folds to an empty local relation
     (an empty ``createDataFrame`` is an RDD scan, one job)."""
-    qid = "CAST(NULL AS STRING) AS query_id, " if batched else ""
-    return spark.sql(f"SELECT {qid}CAST(NULL AS BIGINT) AS doc_id, "
-                     "CAST(NULL AS DOUBLE) AS score WHERE false")
+    if isinstance(schema, str):
+        fields = [f.split() for f in schema.split(",")]
+    else:
+        fields = [(f.name, f.dataType.simpleString()) for f in schema]
+    cols = ", ".join(f"CAST(NULL AS {t}) AS {n}" for n, t in fields)
+    return spark.sql(f"SELECT {cols} WHERE false")
 
 
 def _bucket_job(spark: SparkSession, segs: DataFrame | None, kernel,
@@ -1523,7 +1524,7 @@ def _bucket_job(spark: SparkSession, segs: DataFrame | None, kernel,
     returns (query_id, doc_id, score) — including when empty.
     ``partitions`` sizes the bucket exchange (:func:`_spread_buckets`)."""
     if segs is None:
-        return _no_hits(spark, batched)
+        return _no_hits(spark, _HITS_SCHEMA if batched else _TOPK_SCHEMA)
 
     def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         parts = _group_partials(pdf)
@@ -1586,19 +1587,10 @@ def _group_partials(pdf: pd.DataFrame) -> dict:
     return out
 
 
-def _blk_last(seg: dict) -> np.ndarray:
-    return np.frombuffer(seg["block_last_doc"], dtype="<i8")
-
-
-def _blk_offs(seg: dict, key: str) -> np.ndarray:
-    return np.frombuffer(seg[key], dtype="<i4")
-
-
 def _decode_partial_full(seg: dict):
     if seg["full"] is None:
-        seg["full"] = (delta_decode(varbyte_decode(seg["docs_blob"])),
-                       varbyte_decode(seg["tfs_blob"]),
-                       varbyte_decode(seg["dls_blob"]))
+        seg["full"] = codec.decode_row(seg["docs_blob"], seg["tfs_blob"],
+                                       seg["dls_blob"])
     return seg["full"]
 
 
@@ -1610,18 +1602,10 @@ def _decode_full_term(parts: list) -> np.ndarray:
 
 def _decode_partial_for(seg: dict, cand: np.ndarray) -> np.ndarray:
     """docIDs of the partial restricted to blocks that can contain any
-    candidate (per-block byte offsets + delta resets)."""
+    candidate (all of them once the partial is fully decoded)."""
     if seg["full"] is not None:
         return seg["full"][0]
-    sub = cand[(cand >= seg["doc_id_min"]) & (cand <= seg["doc_id_max"])]
-    if sub.size == 0:
-        return np.array([], dtype=np.int64)
-    last = _blk_last(seg)
-    blocks = np.unique(np.searchsorted(last, sub))
-    blocks = blocks[blocks < len(last)]
-    ids, _ = decode_blocks(seg["docs_blob"], _blk_offs(seg, "docs_off"),
-                           blocks, deltas=True)
-    return ids
+    return codec.docs_for(seg, cand)
 
 
 # ---- candidate rules, written once over GROUPS: a group is a list of
@@ -1698,20 +1682,7 @@ def _score_candidates(terms, idf_b, per_term, cand, avgdl):
             if seg["full"] is not None:
                 doc_ids, tfs, dls = seg["full"]
             else:
-                sub = cand[(cand >= seg["doc_id_min"])
-                           & (cand <= seg["doc_id_max"])]
-                if sub.size == 0:
-                    continue
-                last = _blk_last(seg)
-                blocks = np.unique(np.searchsorted(last, sub))
-                blocks = blocks[blocks < len(last)]
-                doc_ids, _ = decode_blocks(
-                    seg["docs_blob"], _blk_offs(seg, "docs_off"),
-                    blocks, deltas=True)
-                tfs, _ = decode_blocks(
-                    seg["tfs_blob"], _blk_offs(seg, "tfs_off"), blocks)
-                dls, _ = decode_blocks(
-                    seg["dls_blob"], _blk_offs(seg, "dls_off"), blocks)
+                doc_ids, tfs, dls = codec.postings_for(seg, cand)
             if doc_ids.size == 0:
                 continue
             pos = np.searchsorted(doc_ids, cand)
@@ -2176,22 +2147,6 @@ def build_field_indexes(spark: SparkSession, docs: DataFrame,
 # mirrored bit-for-bit by oracle.PositionalOracleIndex.search_phrase.
 # ---------------------------------------------------------------------
 
-def _decode_positions_full(seg: dict) -> np.ndarray:
-    """All positions of a partial, absolute, posting-major order."""
-    deltas = varbyte_decode(seg["pos_blob"])
-    if deltas.size == 0:
-        return deltas
-    tfs = _decode_partial_full(seg)[1]
-    firsts = np.concatenate([[0], np.cumsum(tfs)])[:-1]
-    c = np.cumsum(deltas)
-    base = np.zeros(deltas.size, dtype=np.int64)
-    # absolute = cumsum - (cumsum before posting start) + first value
-    prior = np.where(firsts > 0, c[firsts - 1], 0)
-    seg_len = np.diff(np.append(firsts, deltas.size))
-    base = np.repeat(prior, seg_len)
-    return c - base
-
-
 def _phrase_occurrences(seg: dict, cand: np.ndarray, term_offset: int
                         ) -> tuple[np.ndarray, np.ndarray]:
     """(candidate_index, position − term_offset) pairs for candidate
@@ -2200,7 +2155,7 @@ def _phrase_occurrences(seg: dict, cand: np.ndarray, term_offset: int
     be negative (a later slot's term occurring early)."""
     empty = (np.array([], dtype=np.int64), np.array([], dtype=np.int64))
     doc_ids, tfs, _ = _decode_partial_full(seg)
-    pos_abs = _decode_positions_full(seg)
+    pos_abs = codec.decode_positions(seg["pos_blob"], tfs)
     lo = np.searchsorted(cand, seg["doc_id_min"])
     hi = np.searchsorted(cand, seg["doc_id_max"], side="right")
     sub_idx = np.arange(lo, hi)

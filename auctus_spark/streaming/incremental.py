@@ -50,7 +50,7 @@ def incremental_update(builder: IndexBuilder, new_docs: DataFrame) -> dict:
     # mask it applies to segments)
     from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_seg = pool.submit(builder.encode_segments, stats["avgdl"])
+        f_seg = pool.submit(builder.encode_segments)
         f_ts = pool.submit(builder.finalize_term_stats_from_partials)
         f_seg.result()
         f_ts.result()
@@ -238,8 +238,7 @@ class StreamingIndexer:
         # concurrent finalize, same as incremental_update / build()
         from concurrent.futures import ThreadPoolExecutor
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_seg = pool.submit(self.builder.encode_segments,
-                                stats["avgdl"])
+            f_seg = pool.submit(self.builder.encode_segments)
             f_ts = pool.submit(
                 self.builder.finalize_term_stats_from_partials)
             f_seg.result()

@@ -117,6 +117,42 @@ def test_unindexed_and_term_runs_no_job(spark, built):
     assert _jobs(spark) == before
 
 
+def test_empty_results_run_no_job(spark, built, tmp_path):
+    """explain, term_vectors, suggest_terms and suggest_phrases answer
+    an input with nothing to look up with an empty frame of their own
+    schema, and collecting that frame runs no Spark job."""
+    out, _ = built
+    d = str(tmp_path / "idx")
+    shutil.copytree(out, d)
+    delete_docs(spark, d, [5])
+    eng = SearchEngine(spark, d, term_buckets=8)
+    explain = ("doc_id long, score double, term string, tf long, "
+               "dl long, df long, idf double, tf_norm double, "
+               "contribution double")
+    vectors = "doc_id long, term string, tf long, df long"
+    cases = {
+        "explain, no term": (lambda: eng.explain(""), explain),
+        "explain, unindexed term": (
+            lambda: eng.explain("import zz_missing"), explain),
+        "term_vectors, no id": (lambda: eng.term_vectors([]), vectors),
+        "term_vectors, deleted id": (lambda: eng.term_vectors([5]),
+                                     vectors),
+        "suggest_terms": (lambda: eng.suggest_terms(""),
+                          "token string, suggestion string, dist int, "
+                          "df long, rank int"),
+        "suggest_phrases": (lambda: eng.suggest_phrases(""),
+                            "phrase string, score double"),
+    }
+    for name, (make, ddl) in cases.items():
+        want = [(f.name, f.dataType)
+                for f in spark.createDataFrame([], ddl).schema]
+        df = make()
+        assert [(f.name, f.dataType) for f in df.schema] == want, name
+        before = _jobs(spark)
+        assert df.collect() == [], name
+        assert _jobs(spark) == before, name
+
+
 def _spark_stats(spark, index_dir):
     row = spark.read.parquet(f"{index_dir}/stats").collect()[0]
     return (int(row["n_docs"]), float(row["avgdl"]),

@@ -37,7 +37,7 @@ def test_resume_equivalence(spark, tmp_path):
     built2 = b.tokenize_chunks(corpus, resume=True)
     assert built2 == [2, 3]
     stats = b.finalize_stats()
-    b.encode_segments(stats["avgdl"])
+    b.encode_segments()
     b.finalize_term_stats()
 
     for q in ["import", "def return", "uniq_token_11"]:
@@ -413,6 +413,23 @@ def test_many_tombstones_no_plan_blowup(spark, tmp_path):
     assert got_w == got
 
 
+def _assert_same_segments(spark, got_dir, want_dir):
+    """Every column of the two segments tables is equal once rows are
+    sorted by (term, bucket, doc_id_min)."""
+    from auctus_spark.index.build import IndexPaths
+
+    def rows(d):
+        pdf = spark.read.parquet(IndexPaths(d).segments).toPandas()
+        pdf = pdf.sort_values(["term", "bucket", "doc_id_min"])
+        return pdf[sorted(pdf.columns)].reset_index(drop=True)
+
+    got, want = rows(got_dir), rows(want_dir)
+    assert got.columns.tolist() == want.columns.tolist()
+    assert len(got) == len(want)
+    for c in got.columns:
+        assert got[c].tolist() == want[c].tolist(), c
+
+
 def test_compaction_matches_fresh_build(spark, tmp_path):
     """compact() physically removes tombstoned docs: afterwards the
     index answers bit-identically to a FRESH build over the live
@@ -424,7 +441,9 @@ def test_compaction_matches_fresh_build(spark, tmp_path):
 
     pdf = generate_corpus(500, min_tokens=15, max_tokens=80,
                           vocab_size=600)
-    corpus = spark.createDataFrame(pdf)
+    # one input partition: each chunk is then one encoder batch, so
+    # the compacted layout can be compared with a fresh build's
+    corpus = spark.createDataFrame(pdf).coalesce(1)
     d = str(tmp_path / "cidx")
     IndexBuilder(spark, d, doc_bucket=128, chunk_docs=250,
                  term_buckets=4).build(corpus)
@@ -448,6 +467,12 @@ def test_compaction_matches_fresh_build(spark, tmp_path):
         got = [(int(r.doc_id), float(r.score))
                for r in eng.search(q, k=50).collect()]
         assert got == oracle.search(q, k=50), q
+    # same layout, byte for byte, as a fresh build of the live corpus
+    fresh = str(tmp_path / "fresh")
+    IndexBuilder(spark, fresh, doc_bucket=128, chunk_docs=250,
+                 term_buckets=4).build(
+                     spark.createDataFrame(live_pdf).coalesce(1))
+    _assert_same_segments(spark, d, fresh)
 
 
 def test_compaction_preserves_positions(spark, tmp_path):
@@ -459,7 +484,8 @@ def test_compaction_preserves_positions(spark, tmp_path):
 
     pdf = generate_corpus(400, min_tokens=15, max_tokens=80,
                           vocab_size=500)
-    corpus = spark.createDataFrame(pdf)
+    # one input partition, as in test_compaction_matches_fresh_build
+    corpus = spark.createDataFrame(pdf).coalesce(1)
     d = str(tmp_path / "pidx")
     IndexBuilder(spark, d, doc_bucket=128, chunk_docs=200,
                  term_buckets=4, positions=True).build(corpus)
@@ -475,6 +501,11 @@ def test_compaction_preserves_positions(spark, tmp_path):
         got = [(int(r.doc_id), float(r.score))
                for r in eng.search_phrase(q, k=50).collect()]
         assert got == oracle.search_phrase(q, k=50), q
+    fresh = str(tmp_path / "fresh")
+    IndexBuilder(spark, fresh, doc_bucket=128, chunk_docs=200,
+                 term_buckets=4, positions=True).build(
+                     spark.createDataFrame(live_pdf).coalesce(1))
+    _assert_same_segments(spark, d, fresh)
 
 
 def test_compaction_empty_doc_n(spark, tmp_path):

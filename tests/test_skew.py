@@ -37,7 +37,7 @@ def test_hot_term_split(spark, tmp_path):
 def test_partials_disjoint_sorted(spark, tmp_path):
     """Partials of one (term, bucket) are disjoint sorted docID runs —
     the invariant the query-side concat relies on."""
-    from auctus_spark.index.codec import delta_decode, varbyte_decode
+    from auctus_spark.index.codec import decode_docs
     pdf = generate_corpus(600, min_tokens=20, max_tokens=80,
                           vocab_size=300)
     out = str(tmp_path / "idx2")
@@ -57,7 +57,7 @@ def test_partials_disjoint_sorted(spark, tmp_path):
         parts.sort(key=lambda r: r["doc_id_min"])
         prev_max = -1
         for p in parts:
-            ids = delta_decode(varbyte_decode(p["docs_blob"]))
+            ids = decode_docs(p["docs_blob"])
             assert np.all(np.diff(ids) > 0)          # sorted unique
             assert ids[0] == p["doc_id_min"]
             assert ids[-1] == p["doc_id_max"]
