@@ -16,8 +16,9 @@ as first-class Spark jobs:
   ``(repo, path, commit, lang, content)`` per BASELINE.json input_hint.
 - ``auctus_spark.index``      — posting-list construction, delta+varbyte
   compression, docID-range-bucketed merge, checkpointed resumable builds.
-- ``auctus_spark.query``      — exhaustive BM25 scorer + block-max WAND
-  top-k, Auctus-style search surface (filters, facets, fuzzy, pagination).
+- ``auctus_spark.query``      — bucket-parallel BM25 top-k over the
+  segment index (one AND scorer, block-skipping decode), Auctus-style
+  search surface (filters, facets, fuzzy, pagination).
 - ``auctus_spark.operators``  — Auctus parity operators (profiling
   sketches, join/union search + execution) and large-scale training-data
   ops (dedup, similarity search, text analysis, multimodal plumbing).

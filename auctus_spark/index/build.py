@@ -707,9 +707,9 @@ class IndexBuilder:
 
     def encode_segments(self) -> None:
         """Merge partial segments into the global term-partitioned
-        index: exchange on term_bucket + Tungsten sort by (term,
-        bucket, doc_id_min), written partitionBy(term_bucket) with
-        term-sorted files for row-group pruning.  No Python."""
+        index: exchange on term_bucket, written partitionBy(term_bucket).
+        No Python.  The files are not term-sorted: the planned write
+        sorts each task by term_bucket alone."""
         parts = self._read_partials().drop("chunk")
         parts = parts.withColumn(
             "term_bucket", F.pmod(F.hash("term"), F.lit(self.term_buckets)))
@@ -723,7 +723,6 @@ class IndexBuilder:
         n_part = max(self.spark.sparkContext.defaultParallelism,
                      4 * self.term_buckets)
         (parts.repartition(n_part, "term_bucket")
-            .sortWithinPartitions("term", "bucket", "doc_id_min")
             .write.mode("overwrite").partitionBy("term_bucket")
             .parquet(self.paths.segments))
 
@@ -738,7 +737,7 @@ class IndexBuilder:
     def finalize_term_stats_from_partials(self) -> None:
         """Same (term, df, cf) table, aggregated from the PARTIALS
         instead of the merged segments.  ``encode_segments`` is
-        row-preserving (exchange + sort + write, no row merge), so the
+        row-preserving (exchange + write, no row merge), so the
         two inputs hold identical (term, n_docs, tf_sum) rows and the
         aggregates are equal — but this variant does not depend on the
         segment write having finished, so the fresh-build path can run
@@ -883,10 +882,11 @@ def wipe(out_dir: str) -> None:
 # deletes / updates (Lucene-style tombstones)
 # ---------------------------------------------------------------------
 
-# Driver-side tombstone mask cap: the numpy mask used inside the
-# bucket scorers is loaded with a documented size limit; past it the
-# exhaustive anti-join path (SearchEngine.search) remains correct and
-# deletes should be compacted into a rebuild (like Lucene forceMerge).
+# Driver-side tombstone mask cap: every scorer and compaction read the
+# deletes as one sorted numpy array, loaded with this size limit.  Past
+# it neither an engine nor compact() opens the index, so deletes must
+# be compacted (like Lucene forceMerge) before they reach the cap;
+# past it, rebuild over the live corpus.
 MAX_TOMBSTONE_MASK = 1 << 22
 
 
@@ -906,23 +906,13 @@ def delete_docs(spark: SparkSession, index_dir: str,
     df.write.mode("append").parquet(tomb)
 
 
-def tombstones_df(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    """Tombstones as a DataFrame (None if there are none) — the
-    scale-safe form: consumers anti-join against it instead of
-    inlining doc_ids into the plan."""
-    tomb = os.path.join(IndexPaths(index_dir).base, "tombstones")
-    if not os.path.exists(tomb):
-        return None
-    return spark.read.parquet(tomb).select("doc_id").distinct()
-
-
 def load_tombstones(spark: SparkSession, index_dir: str,
                     max_mask: int = MAX_TOMBSTONE_MASK):
-    """Sorted numpy array of deleted docIDs ([] if none) — the scorer
-    mask.  Capped at ``max_mask`` entries: beyond that the driver-side
-    array stops being cheap to broadcast and deletes should be
-    compacted into a rebuild (the cap fails loudly, never silently
-    drops tombstones)."""
+    """Sorted numpy array of deleted docIDs ([] if none) — the mask
+    of every scorer and of compaction (:func:`tombstoned`).  Capped at
+    ``max_mask`` entries: beyond that the driver-side array stops
+    being cheap to ship with each task (the cap fails loudly, never
+    silently drops tombstones)."""
     tomb = os.path.join(IndexPaths(index_dir).base, "tombstones")
     if not os.path.exists(tomb):
         return np.array([], dtype=np.int64)
@@ -930,11 +920,20 @@ def load_tombstones(spark: SparkSession, index_dir: str,
             .limit(max_mask + 1).collect())
     if len(rows) > max_mask:
         raise ValueError(
-            f"more than {max_mask} tombstones: compact deletes into a "
-            "rebuild (or use the anti-join path) instead of a driver "
-            "mask")
+            f"more than {max_mask} tombstones: past the cap neither "
+            "an engine nor compact() opens the index; compact deletes "
+            "before they reach it, or rebuild over the live corpus")
     return np.unique(np.array([r["doc_id"] for r in rows],
                               dtype=np.int64))
+
+
+def tombstoned(ids: np.ndarray, tomb: np.ndarray) -> np.ndarray:
+    """Boolean mask of the ``ids`` found in ``tomb``, the sorted array
+    :func:`load_tombstones` returns."""
+    if tomb.size == 0:
+        return np.zeros(len(ids), dtype=bool)
+    pos = np.minimum(np.searchsorted(tomb, ids), tomb.size - 1)
+    return tomb[pos] == ids
 
 
 # ---------------------------------------------------------------------
@@ -998,9 +997,7 @@ def compact(spark: SparkSession, index_dir: str,
         out_d, out_l = [], []
         for r in pdf.itertuples(index=False):
             ids = codec.decode_docs(r.docs_blob)
-            pos = np.searchsorted(tomb, ids)
-            pos_c = np.minimum(pos, tomb.size - 1)
-            hit = tomb[pos_c] == ids
+            hit = tombstoned(ids, tomb)
             if hit.any():
                 dls = codec.decode_values(r.dls_blob)
                 out_d.append(ids[hit])
@@ -1070,8 +1067,7 @@ def compact(spark: SparkSession, index_dir: str,
             src, ids_l, tfs_l, dls_l, pos_l = [], [], [], [], []
             for i in np.nonzero((row_hi >= lo) & (row_lo <= hi))[0]:
                 ids = codec.decode_docs(col["docs_blob"][i].as_py())
-                pos = np.searchsorted(tomb, ids)
-                keep = tomb[np.minimum(pos, tomb.size - 1)] != ids
+                keep = ~tombstoned(ids, tomb)
                 if keep.all():
                     continue
                 as_is[i] = False
@@ -1108,7 +1104,6 @@ def compact(spark: SparkSession, index_dir: str,
         .mapInArrow(rewrite, schema=PARTIAL_SCHEMA + ", term_bucket int")
         .repartition(max(spark.sparkContext.defaultParallelism,
                          min(term_buckets, 64)), "term_bucket")
-        .sortWithinPartitions("term", "bucket", "doc_id_min")
         .write.mode("overwrite").partitionBy("term_bucket").parquet(tmp))
     # Read the pre-compaction stats BEFORE any swap step.
     old = read_stats(index_dir)

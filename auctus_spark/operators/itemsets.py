@@ -39,6 +39,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import no_rows
+
 
 def _combos2(arr):
     """All (i<j) ordered pairs of a sorted array, JVM-side."""
@@ -84,7 +86,7 @@ def frequent_item_sets(df: DataFrame, items_col: str,
     out_schema = ("items string, size int, doc_count long, "
                   "support double")
     if n_tx == 0:
-        return spark.createDataFrame([], out_schema)
+        return no_rows(spark, out_schema)
     min_count = max(1, math.ceil(min_support * n_tx))
 
     l1 = (tx.select(F.explode("items").alias("i"))
@@ -125,6 +127,6 @@ def frequent_item_sets(df: DataFrame, items_col: str,
             continue
         rows.append((" ".join(s), len(s), c, c / n_tx))
     if not rows:
-        return spark.createDataFrame([], out_schema)
+        return no_rows(spark, out_schema)
     return (spark.createDataFrame(rows, out_schema)
             .orderBy(F.desc("doc_count"), F.asc("items")))

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..analysis import spark_token_runs
+from ..session import no_rows
 
 MAX_UNCLEAN = 0.02          # profile_types.py:82
 CATEGORICAL_RATIO = 0.10    # profile_types.py:92
@@ -1142,8 +1143,8 @@ def auto_date_histogram(df: DataFrame, col: str, buckets: int = 10
           .agg(F.min(col).alias("lo"), F.max(col).alias("hi"))
           .collect()[0])
     if mm["lo"] is None:
-        return df.sparkSession.createDataFrame(
-            [], "interval string, bucket_start timestamp, count long")
+        return no_rows(df.sparkSession,
+                       "interval string, bucket_start timestamp, count long")
     lo, hi = mm["lo"], mm["hi"]
 
     def steps(unit: str) -> int:
@@ -1680,8 +1681,8 @@ def variable_width_histogram(df: DataFrame, col: str,
             .filter(F.col("v").isNotNull()))
     n = vals.count()
     if n == 0:
-        return df.sparkSession.createDataFrame(
-            [], "key double, min double, max double, doc_count long")
+        return no_rows(df.sparkSession,
+                       "key double, min double, max double, doc_count long")
     frac = min(1.0, sample_cap / max(n, 1))
     s = vals.sample(fraction=frac, seed=seed) if frac < 1.0 else vals
     arr = np.array([r["v"] for r in s.collect()], dtype=np.float64)
@@ -1751,13 +1752,13 @@ def change_point(df: DataFrame, key_col: str, value_col: str,
     out_schema = "key " + dict(df.dtypes)[key_col] + \
         ", value double, type string, score double"
     if med_row["m"] is None:
-        return df.sparkSession.createDataFrame([], out_schema)
+        return no_rows(df.sparkSession, out_schema)
     med = float(med_row["m"])
     dev = vals.select("key", "v",
                       F.abs(F.col("v") - F.lit(med)).alias("d"))
     mad = float(dev.agg(F.median("d").alias("m")).collect()[0]["m"])
     if mad == 0.0:
-        return df.sparkSession.createDataFrame([], out_schema)
+        return no_rows(df.sparkSession, out_schema)
     return (dev.select(
         "key", F.col("v").alias("value"),
         F.when(F.col("v") > med, "spike").otherwise("dip")

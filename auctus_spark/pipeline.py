@@ -19,6 +19,14 @@ corpus scans and ZERO shuffles —
    literal-folded score expression, and a global top-k that compiles
    to TakeOrderedAndProject (no global sort, no exchange).
 
+The BM25 rankings share these two passes instead of re-typing them:
+:func:`_bm25_scan` is the stats pass plus the scoring scan's candidate
+filter and (doc_id, carried columns, _dl, _tf{i}) projection (one
+field), :func:`_fields_scan` the same for the multi-field rankings,
+:func:`_score_expr` the only BM25 sum and :func:`_top_k` the ranked
+tail.  An answer with nothing to look up is an empty local relation
+(``session.no_rows``), so collecting it runs no Spark job.
+
 Tokenization stays inside whole-stage codegen (``split``/``filter``
 array expressions); Catalyst keeps the token array materialized once
 per row (non-cheap aliases used more than once are not collapsed —
@@ -37,6 +45,7 @@ from pyspark.sql import functions as F
 from . import B, K1, TOP_K_SIZE
 from .analysis import SPLIT_PATTERN, analyze_query
 from .oracle import bm25_idf
+from .session import no_rows
 
 _UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 _LOWER = "abcdefghijklmnopqrstuvwxyz"
@@ -106,21 +115,144 @@ def _tf(i: int, term: str):
         .alias(f"_tf{i}")
 
 
-def _score_expr(terms: list[str], idfs: list[float], avgdl: float,
-                weights: list[float] | None = None):
-    """Literal-folded BM25 sum in query-term order — the float64
-    evaluation order is the oracle's: idf * (tf / (tf + k1*(1-b+
-    b*dl/avgdl))), summed left-associatively.  tf=0 contributes +0.0
-    exactly, so disjunctive scoring needs no conditionals."""
+def _bm25_term(w: float, tf_col: str, dl_col: str, avgdl: float):
+    """One term's literal-folded contribution ``w * (tf / (tf + k1 *
+    (1 - b + b * dl / avgdl)))`` — the oracle's float64 evaluation
+    order."""
+    tf = F.col(tf_col)
     norm = F.lit(K1) * (F.lit(1.0 - B) +
-                        F.lit(B) * F.col("_dl") / F.lit(avgdl))
+                        F.lit(B) * F.col(dl_col) / F.lit(avgdl))
+    return F.lit(w) * (tf / (tf + norm))
+
+
+def _score_expr(idfs: list[float], avgdl: float,
+                cols: list[int] | None = None):
+    """Literal-folded BM25 sum over the ``_tf{i}`` columns ``cols``
+    (default: every one, in order) weighted by ``idfs``, in query-term
+    order — the float64 evaluation order is the oracle's: idf * (tf /
+    (tf + k1*(1-b+b*dl/avgdl))), summed left-associatively.  tf=0
+    contributes +0.0 exactly, so disjunctive scoring needs no
+    conditionals.  None for no terms."""
     score = None
-    for i in range(len(terms)):
-        w = idfs[i] if weights is None else weights[i]
-        tf = F.col(f"_tf{i}")
-        c = F.lit(w) * (tf / (tf + norm))
+    for w, i in zip(idfs, range(len(idfs)) if cols is None else cols):
+        c = _bm25_term(w, f"_tf{i}", "_dl", avgdl)
         score = c if score is None else score + c
     return score
+
+
+def _bm25_scan(docs: DataFrame, terms: list[str], id_col: str,
+               text_col: str, conjunctive: bool,
+               carry: dict | None = None, derived: list = ()):
+    """The front half of every single-field BM25 ranking: the stats
+    pass (:func:`_query_stats`), then ONE scoring scan — the candidate
+    predicate evaluated at the scan (``conjunctive``: every term
+    present; else any) and the (doc_id, carried columns, _dl, derived
+    columns, _tf{i}) projection of the survivors.  A tf-column filter
+    would be pushed below the projection and inline the tokenization
+    once per term, so survivors only reach the tf projection.
+    ``carry`` maps names to columns of the raw row; ``derived`` are
+    aliased columns over the token array ``_toks``.
+
+    Returns (per_doc, idfs, avgdl), or None when nothing can match."""
+    if not terms:
+        return None
+    n_docs, avgdl, dfs = _query_stats(docs, terms, text_col)
+    if n_docs == 0 or (any if conjunctive else all)(d == 0 for d in dfs):
+        return None
+    carry = carry or {}
+    qarr = F.array(*[F.lit(t) for t in terms])
+    cond = (F.size(F.array_intersect(_toks(F.col(text_col)), qarr))
+            == len(terms) if conjunctive
+            else F.arrays_overlap(_toks(F.col(text_col)), qarr))
+    per_doc = (docs.filter(cond)
+               .select(F.col(id_col).alias("doc_id"),
+                       *[c.alias(n) for n, c in carry.items()],
+                       _toks(F.col(text_col)).alias("_toks"))
+               .select("doc_id", *carry, F.size("_toks").alias("_dl"),
+                       *derived,
+                       *[_tf(i, t) for i, t in enumerate(terms)]))
+    return per_doc, [bm25_idf(n_docs, d) for d in dfs], avgdl
+
+
+def _fields_scan(docs: DataFrame, terms: list[str], fields: list[str],
+                 id_col: str):
+    """The front half of the multi-field rankings: ONE stats aggregate
+    over every field (per field: docs with the field, total tokens,
+    df per term), then ONE scoring scan over the fields that occur,
+    with the candidate predicate (every term in >= 1 field) at the
+    scan and columns (doc_id, _dl{j}, _tf{j}_{i}).
+
+    Returns (per_doc, live) with live = [(j, field, N_f, avgdl_f, df
+    per term)], or None when nothing can match."""
+    if not terms:
+        return None
+    stats_in = docs.select(*[
+        _toks(F.col(fc)).alias(f"_toks_{j}") for j, fc in enumerate(fields)])
+    aggs = []
+    for j, fc in enumerate(fields):
+        tk = f"_toks_{j}"
+        aggs.append(F.count(F.col(tk)).alias(f"_n{j}"))      # non-null docs
+        aggs.append(F.sum(F.size(tk)).alias(f"_t{j}"))
+        for i, term in enumerate(terms):
+            aggs.append(F.sum(
+                F.when(F.array_contains(tk, term), 1).otherwise(0))
+                .alias(f"_df{j}_{i}"))
+    row = stats_in.agg(*aggs).collect()[0]
+    live = []
+    for j, fc in enumerate(fields):
+        n_f = int(row[f"_n{j}"])
+        if n_f == 0:
+            continue
+        avgdl_f = float(row[f"_t{j}"]) / n_f if row[f"_t{j}"] else 0.0
+        live.append((j, fc, n_f, avgdl_f,
+                     [int(row[f"_df{j}_{i}"]) for i in range(len(terms))]))
+    # AND: a term absent from every field empties the result
+    if not live or any(all(entry[4][i] == 0 for entry in live)
+                       for i in range(len(terms))):
+        return None
+
+    qarr = F.array(*[F.lit(t) for t in terms])
+    empty_arr = F.array().cast("array<string>")
+    seen = None
+    for j, fc, *_ in live:
+        inter = F.coalesce(F.array_intersect(_toks(F.col(fc)), qarr),
+                           empty_arr)
+        seen = inter if seen is None else F.array_union(seen, inter)
+    cond = F.size(seen) == len(terms)  # every term in >= 1 field
+    per_doc = docs.filter(cond).select(
+        F.col(id_col).alias("doc_id"),
+        *[_toks(F.col(fc)).alias(f"_toks_{j}") for j, fc, *_ in live])
+    cols = ["doc_id"]
+    for j, fc, *_ in live:
+        tk = f"_toks_{j}"
+        cols.append(F.coalesce(F.size(tk), F.lit(0)).alias(f"_dl{j}"))
+        for i, term in enumerate(terms):
+            cols.append(F.coalesce(
+                F.size(F.filter(F.col(tk), lambda x: x == F.lit(term))),
+                F.lit(0)).alias(f"_tf{j}_{i}"))
+    return per_doc.select(*cols), live
+
+
+def _rounded(score, round_to: int | None):
+    return score if round_to is None else F.round(score, round_to)
+
+
+def _top_k(df: DataFrame, score, k: int, id_col: str,
+           round_to: int | None = None, cols: list = (),
+           src: str = "doc_id") -> DataFrame:
+    """The ranked tail of every top-k here: ``score`` rounded to
+    ``round_to`` places (None: raw), the (id, *cols, score) select
+    with the id read from column ``src``, then (score desc, id asc)
+    cut to ``k`` — a TakeOrderedAndProject, no global sort."""
+    return (df.select(F.col(src).alias(id_col), *cols,
+                      _rounded(score, round_to).alias("score"))
+            .orderBy(F.desc("score"), F.asc(id_col))
+            .limit(k))
+
+
+def _no_hits(docs: DataFrame, id_col: str) -> DataFrame:
+    """The empty (id, score) answer; collecting it runs no job."""
+    return no_rows(docs.sparkSession, f"{id_col} long, score double")
 
 
 def bm25_topk(docs: DataFrame, query: str, k: int = TOP_K_SIZE,
@@ -132,35 +264,12 @@ def bm25_topk(docs: DataFrame, query: str, k: int = TOP_K_SIZE,
     Two scans, zero shuffles (see module doc); ``round_to`` rounds
     scores for cross-engine comparison.
     """
-    spark = docs.sparkSession
-    terms = analyze_query(query)
-    empty = spark.createDataFrame([], f"{id_col} long, score double")
-    if not terms:
-        return empty
-    n_docs, avgdl, dfs = _query_stats(docs, terms, text_col)
-    if n_docs == 0 or any(d == 0 for d in dfs):
-        return empty  # AND semantics: any missing term → no hits
-    idfs = [bm25_idf(n_docs, d) for d in dfs]
-
-    # candidate predicate as ONE expression evaluated at the scan
-    # (a tf-column filter would be pushed below the projection and
-    # inline the tokenization once per term); survivors only reach
-    # the per-term tf projection
-    qarr = F.array(*[F.lit(t) for t in terms])
-    cond = (F.size(F.array_intersect(_toks(F.col(text_col)), qarr))
-            == len(terms))
-    per_doc = (docs.filter(cond)
-               .select(F.col(id_col).alias("doc_id"),
-                       _toks(F.col(text_col)).alias("_toks"))
-               .select("doc_id", F.size("_toks").alias("_dl"),
-                       *[_tf(i, t) for i, t in enumerate(terms)]))
-    score = _score_expr(terms, idfs, avgdl)
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (per_doc
-            .select(F.col("doc_id").alias(id_col), score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+    scan = _bm25_scan(docs, analyze_query(query), id_col, text_col,
+                      conjunctive=True)
+    if scan is None:
+        return _no_hits(docs, id_col)  # AND: any missing term, no hits
+    per_doc, idfs, avgdl = scan
+    return _top_k(per_doc, _score_expr(idfs, avgdl), k, id_col, round_to)
 
 
 def bm25_or_topk(docs: DataFrame, query: str, k: int = TOP_K_SIZE,
@@ -169,30 +278,12 @@ def bm25_or_topk(docs: DataFrame, query: str, k: int = TOP_K_SIZE,
     """Disjunctive (should) BM25 top-k: docs matching ANY query term,
     score = sum of present-term contributions in query-term order
     (absent terms contribute exactly +0.0)."""
-    spark = docs.sparkSession
-    terms = analyze_query(query)
-    empty = spark.createDataFrame([], f"{id_col} long, score double")
-    if not terms:
-        return empty
-    n_docs, avgdl, dfs = _query_stats(docs, terms, text_col)
-    if n_docs == 0 or all(d == 0 for d in dfs):
-        return empty
-    idfs = [bm25_idf(n_docs, d) for d in dfs]
-
-    qarr = F.array(*[F.lit(t) for t in terms])
-    cond = F.arrays_overlap(_toks(F.col(text_col)), qarr)
-    per_doc = (docs.filter(cond)
-               .select(F.col(id_col).alias("doc_id"),
-                       _toks(F.col(text_col)).alias("_toks"))
-               .select("doc_id", F.size("_toks").alias("_dl"),
-                       *[_tf(i, t) for i, t in enumerate(terms)]))
-    score = _score_expr(terms, idfs, avgdl)
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (per_doc
-            .select(F.col("doc_id").alias(id_col), score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+    scan = _bm25_scan(docs, analyze_query(query), id_col, text_col,
+                      conjunctive=False)
+    if scan is None:
+        return _no_hits(docs, id_col)
+    per_doc, idfs, avgdl = scan
+    return _top_k(per_doc, _score_expr(idfs, avgdl), k, id_col, round_to)
 
 
 def rescore_topk(docs: DataFrame, query: str, rescore_query: str,
@@ -221,16 +312,14 @@ def rescore_topk(docs: DataFrame, query: str, rescore_query: str,
 
     Reference: ES filter-search-results / rescore; reference repo has
     no rescoring — beyond-ref ES parity surface."""
-    spark = docs.sparkSession
     terms = analyze_query(rescore_query)
-    empty = spark.createDataFrame([], f"{id_col} long, score double")
+    if not terms:
+        return _no_hits(docs, id_col)
     base = bm25_topk(docs, query, k=window_size, id_col=id_col,
                      text_col=text_col)  # raw scores pick the window
-    if not terms:
-        return empty
     n_docs, avgdl, dfs = _query_stats(docs, terms, text_col)
     if n_docs == 0:
-        return empty
+        return _no_hits(docs, id_col)
     idfs = [bm25_idf(n_docs, d) if d else 0.0 for d in dfs]
     win = base.select(F.col(id_col).alias("_wid"),
                       F.col("score").alias("_orig"))
@@ -240,16 +329,10 @@ def rescore_topk(docs: DataFrame, query: str, rescore_query: str,
                 _toks(docs[text_col]).alias("_toks"))
         .select("doc_id", "_orig", F.size("_toks").alias("_dl"),
                 *[_tf(i, t) for i, t in enumerate(terms)]))
-    sec = _score_expr(terms, idfs, avgdl)
     total = (F.lit(float(query_weight)) * F.col("_orig")
-             + F.lit(float(rescore_query_weight)) * sec)
-    if round_to is not None:
-        total = F.round(total, round_to)
-    return (per_doc
-            .select(F.col("doc_id").alias(id_col),
-                    total.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+             + F.lit(float(rescore_query_weight))
+             * _score_expr(idfs, avgdl))
+    return _top_k(per_doc, total, k, id_col, round_to)
 
 
 def dis_max_topk(docs: DataFrame, queries: list[str],
@@ -266,34 +349,19 @@ def dis_max_topk(docs: DataFrame, queries: list[str],
     a single projection; clause scores, the max and the blend are all
     scan-level expressions (whole-stage codegen, no shuffle before
     the final TakeOrdered)."""
-    spark = docs.sparkSession
     clause_terms = [analyze_query(q) for q in queries]
     all_terms = sorted({t for ts in clause_terms for t in ts})
-    empty = spark.createDataFrame([], f"{id_col} long, score double")
-    if not all_terms:
-        return empty
-    n_docs, avgdl, dfs = _query_stats(docs, all_terms, text_col)
-    if n_docs == 0 or all(d == 0 for d in dfs):
-        return empty
+    scan = _bm25_scan(docs, all_terms, id_col, text_col,
+                      conjunctive=False)
+    if scan is None:
+        return _no_hits(docs, id_col)
+    per_doc, idfs, avgdl = scan
     idx = {t: i for i, t in enumerate(all_terms)}
-    idfs = [bm25_idf(n_docs, d) for d in dfs]
-
-    qarr = F.array(*[F.lit(t) for t in all_terms])
-    cond = F.arrays_overlap(_toks(F.col(text_col)), qarr)
-    per_doc = (docs.filter(cond)
-               .select(F.col(id_col).alias("doc_id"),
-                       _toks(F.col(text_col)).alias("_toks"))
-               .select("doc_id", F.size("_toks").alias("_dl"),
-                       *[_tf(i, t) for i, t in enumerate(all_terms)]))
-    norm = F.lit(K1) * (F.lit(1.0 - B) +
-                        F.lit(B) * F.col("_dl") / F.lit(avgdl))
     clause_scores = []
-    for terms in clause_terms:
-        s = F.lit(0.0)
-        for t in terms:  # query-term order, left-associative
-            tf = F.col(f"_tf{idx[t]}")
-            s = s + F.lit(idfs[idx[t]]) * (tf / (tf + norm))
-        clause_scores.append(s)
+    for terms in clause_terms:  # query-term order, left-associative
+        s = _score_expr([idfs[idx[t]] for t in terms], avgdl,
+                        [idx[t] for t in terms])
+        clause_scores.append(F.lit(0.0) if s is None else s)
     per_doc = per_doc.select(
         "doc_id", *[cs_i.alias(f"_cs{i}")
                     for i, cs_i in enumerate(clause_scores)])
@@ -303,12 +371,7 @@ def dis_max_topk(docs: DataFrame, queries: list[str],
     for c in cs[1:]:
         total = total + c
     score = mx + F.lit(float(tie_breaker)) * (total - mx)
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (per_doc
-            .select(F.col("doc_id").alias(id_col), score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+    return _top_k(per_doc, score, k, id_col, round_to)
 
 
 def boosting_topk(docs: DataFrame, positive: str, negative: str,
@@ -321,36 +384,19 @@ def boosting_topk(docs: DataFrame, positive: str, negative: str,
     ``negative_boost`` (demotion, not exclusion — unlike must_not).
     One scan; the negative clause is a term-overlap predicate column,
     never a second pass."""
-    spark = docs.sparkSession
-    terms = analyze_query(positive)
     neg_terms = analyze_query(negative)
-    empty = spark.createDataFrame([], f"{id_col} long, score double")
-    if not terms:
-        return empty
-    n_docs, avgdl, dfs = _query_stats(docs, terms, text_col)
-    if n_docs == 0 or all(d == 0 for d in dfs):
-        return empty
-    idfs = [bm25_idf(n_docs, d) for d in dfs]
-    qarr = F.array(*[F.lit(t) for t in terms])
-    cond = F.arrays_overlap(_toks(F.col(text_col)), qarr)
     neg_col = (F.arrays_overlap(
         F.col("_toks"), F.array(*[F.lit(t) for t in neg_terms]))
         if neg_terms else F.lit(False))
-    per_doc = (docs.filter(cond)
-               .select(F.col(id_col).alias("doc_id"),
-                       _toks(F.col(text_col)).alias("_toks"))
-               .select("doc_id", F.size("_toks").alias("_dl"),
-                       neg_col.alias("_neg"),
-                       *[_tf(i, t) for i, t in enumerate(terms)]))
-    score = _score_expr(terms, idfs, avgdl)
+    scan = _bm25_scan(docs, analyze_query(positive), id_col, text_col,
+                      conjunctive=False, derived=[neg_col.alias("_neg")])
+    if scan is None:
+        return _no_hits(docs, id_col)
+    per_doc, idfs, avgdl = scan
+    score = _score_expr(idfs, avgdl)
     score = F.when(F.col("_neg"),
                    score * F.lit(float(negative_boost))).otherwise(score)
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (per_doc
-            .select(F.col("doc_id").alias(id_col), score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+    return _top_k(per_doc, score, k, id_col, round_to)
 
 
 def function_score_decay(docs: DataFrame, query: str, field: str,
@@ -372,23 +418,12 @@ def function_score_decay(docs: DataFrame, query: str, field: str,
     scan-level expression on the already-read field column."""
     if kind not in ("gauss", "exp", "linear"):
         raise ValueError(f"unknown decay kind {kind!r}")
-    spark = docs.sparkSession
-    terms = analyze_query(query)
-    empty = spark.createDataFrame([], f"{id_col} long, score double")
-    if not terms:
-        return empty
-    n_docs, avgdl, dfs = _query_stats(docs, terms, text_col)
-    if n_docs == 0 or all(d == 0 for d in dfs):
-        return empty
-    idfs = [bm25_idf(n_docs, d) for d in dfs]
-    qarr = F.array(*[F.lit(t) for t in terms])
-    cond = F.arrays_overlap(_toks(F.col(text_col)), qarr)
-    per_doc = (docs.filter(cond)
-               .select(F.col(id_col).alias("doc_id"),
-                       F.col(field).cast("double").alias("_v"),
-                       _toks(F.col(text_col)).alias("_toks"))
-               .select("doc_id", "_v", F.size("_toks").alias("_dl"),
-                       *[_tf(i, t) for i, t in enumerate(terms)]))
+    scan = _bm25_scan(docs, analyze_query(query), id_col, text_col,
+                      conjunctive=False,
+                      carry={"_v": F.col(field).cast("double")})
+    if scan is None:
+        return _no_hits(docs, id_col)
+    per_doc, idfs, avgdl = scan
     import math
     dist = F.greatest(F.lit(0.0),
                       F.abs(F.col("_v") - F.lit(float(origin)))
@@ -401,13 +436,8 @@ def function_score_decay(docs: DataFrame, query: str, field: str,
     else:
         s = float(scale) / (1.0 - float(decay))
         mult = F.greatest(F.lit(0.0), (F.lit(s) - dist) / F.lit(s))
-    score = _score_expr(terms, idfs, avgdl) * mult
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (per_doc
-            .select(F.col("doc_id").alias(id_col), score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+    return _top_k(per_doc, _score_expr(idfs, avgdl) * mult, k, id_col,
+                  round_to)
 
 
 def field_value_factor_topk(docs: DataFrame, query: str, field: str,
@@ -429,32 +459,15 @@ def field_value_factor_topk(docs: DataFrame, query: str, field: str,
             "reciprocal": lambda c: F.lit(1.0) / c}
     if modifier not in mods:
         raise ValueError(f"unknown modifier {modifier!r}")
-    spark = docs.sparkSession
-    terms = analyze_query(query)
-    empty = spark.createDataFrame([], f"{id_col} long, score double")
-    if not terms:
-        return empty
-    n_docs, avgdl, dfs = _query_stats(docs, terms, text_col)
-    if n_docs == 0 or all(d == 0 for d in dfs):
-        return empty
-    idfs = [bm25_idf(n_docs, d) for d in dfs]
-    qarr = F.array(*[F.lit(t) for t in terms])
-    cond = F.arrays_overlap(_toks(F.col(text_col)), qarr)
     fv = F.coalesce(F.col(field).cast("double"),
                     F.lit(float(missing))) * F.lit(float(factor))
-    per_doc = (docs.filter(cond)
-               .select(F.col(id_col).alias("doc_id"),
-                       mods[modifier](fv).alias("_m"),
-                       _toks(F.col(text_col)).alias("_toks"))
-               .select("doc_id", "_m", F.size("_toks").alias("_dl"),
-                       *[_tf(i, t) for i, t in enumerate(terms)]))
-    score = _score_expr(terms, idfs, avgdl) * F.col("_m")
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (per_doc
-            .select(F.col("doc_id").alias(id_col), score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+    scan = _bm25_scan(docs, analyze_query(query), id_col, text_col,
+                      conjunctive=False, carry={"_m": mods[modifier](fv)})
+    if scan is None:
+        return _no_hits(docs, id_col)
+    per_doc, idfs, avgdl = scan
+    return _top_k(per_doc, _score_expr(idfs, avgdl) * F.col("_m"), k,
+                  id_col, round_to)
 
 
 def collapse_topk(docs: DataFrame, query: str, collapse_col: str,
@@ -472,39 +485,22 @@ def collapse_topk(docs: DataFrame, query: str, collapse_col: str,
     the collapse key (distributed by key — no global window), then
     the usual TakeOrdered."""
     from pyspark.sql import Window
-    spark = docs.sparkSession
-    terms = analyze_query(query)
-    empty = spark.createDataFrame(
-        [], f"{id_col} long, {collapse_col} string, score double")
-    if not terms:
-        return empty
-    n_docs, avgdl, dfs = _query_stats(docs, terms, text_col)
-    if n_docs == 0 or any(d == 0 for d in dfs):
-        return empty
-    idfs = [bm25_idf(n_docs, d) for d in dfs]
-    qarr = F.array(*[F.lit(t) for t in terms])
-    cond = (F.size(F.array_intersect(_toks(F.col(text_col)), qarr))
-            == len(terms))
-    per_doc = (docs.filter(cond)
-               .select(F.col(id_col).alias("doc_id"),
-                       F.col(collapse_col),
-                       _toks(F.col(text_col)).alias("_toks"))
-               .select("doc_id", collapse_col,
-                       F.size("_toks").alias("_dl"),
-                       *[_tf(i, t) for i, t in enumerate(terms)]))
-    score = _score_expr(terms, idfs, avgdl)
-    if round_to is not None:
-        score = F.round(score, round_to)
-    scored = per_doc.select("doc_id", collapse_col,
-                            score.alias("score"))
+    scan = _bm25_scan(docs, analyze_query(query), id_col, text_col,
+                      conjunctive=True,
+                      carry={collapse_col: F.col(collapse_col)})
+    if scan is None:
+        return no_rows(docs.sparkSession,
+                       f"{id_col} long, {collapse_col} string, "
+                       "score double")
+    per_doc, idfs, avgdl = scan
+    scored = per_doc.select(
+        "doc_id", collapse_col,
+        _rounded(_score_expr(idfs, avgdl), round_to).alias("score"))
     w = Window.partitionBy(collapse_col).orderBy(
         F.desc("score"), F.asc("doc_id"))
-    return (scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn")
-            .select(F.col("doc_id").alias(id_col), collapse_col,
-                    "score")
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+    lead = (scored.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1))
+    return _top_k(lead, F.col("score"), k, id_col, cols=[collapse_col])
 
 
 def search_after_topk(docs: DataFrame, query: str,
@@ -522,34 +518,18 @@ def search_after_topk(docs: DataFrame, query: str,
     6) — the cross-engine-stable sort key this repo's gates use;
     pass the previous page's last (score, doc_id) back in, exactly
     like ES's ``sort`` values."""
-    spark = docs.sparkSession
-    terms = analyze_query(query)
-    empty = spark.createDataFrame([], f"{id_col} long, score double")
-    if not terms:
-        return empty
-    n_docs, avgdl, dfs = _query_stats(docs, terms, text_col)
-    if n_docs == 0 or any(d == 0 for d in dfs):
-        return empty
-    idfs = [bm25_idf(n_docs, d) for d in dfs]
-    qarr = F.array(*[F.lit(t) for t in terms])
-    cond = (F.size(F.array_intersect(_toks(F.col(text_col)), qarr))
-            == len(terms))
-    per_doc = (docs.filter(cond)
-               .select(F.col(id_col).alias("doc_id"),
-                       _toks(F.col(text_col)).alias("_toks"))
-               .select("doc_id", F.size("_toks").alias("_dl"),
-                       *[_tf(i, t) for i, t in enumerate(terms)]))
-    score = _score_expr(terms, idfs, avgdl)
-    if round_to is not None:
-        score = F.round(score, round_to)
-    scored = per_doc.select("doc_id", score.alias("score"))
+    scan = _bm25_scan(docs, analyze_query(query), id_col, text_col,
+                      conjunctive=True)
+    if scan is None:
+        return _no_hits(docs, id_col)
+    per_doc, idfs, avgdl = scan
+    scored = per_doc.select(
+        "doc_id", _rounded(_score_expr(idfs, avgdl), round_to)
+        .alias("score"))
     s, d = float(after_score), int(after_id)
     cursor = (F.col("score") < F.lit(s)) | \
         ((F.col("score") == F.lit(s)) & (F.col("doc_id") > F.lit(d)))
-    return (scored.filter(cursor)
-            .select(F.col("doc_id").alias(id_col), "score")
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+    return _top_k(scored.filter(cursor), F.col("score"), k, id_col)
 
 
 def highlight(docs: DataFrame, query: str, k: int = TOP_K_SIZE,
@@ -569,10 +549,9 @@ def highlight(docs: DataFrame, query: str, k: int = TOP_K_SIZE,
     doc table, the regex never runs over non-hits."""
     import re as _re
     terms = analyze_query(query)
-    spark = docs.sparkSession
     if not terms:
-        return spark.createDataFrame(
-            [], f"{id_col} long, score double, highlighted string")
+        return no_rows(docs.sparkSession,
+                       f"{id_col} long, score double, highlighted string")
     hits = bm25_topk(docs, query, k, id_col, text_col, round_to)
     pat = (r"(?i)\b(" + "|".join(
         _re.escape(t) for t in sorted(terms, key=len, reverse=True))
@@ -630,18 +609,13 @@ def highlight_fragments(docs: DataFrame, query: str,
     its search request builder."""
     from pyspark.sql import Window
     terms = analyze_query(query)
-    spark = docs.sparkSession
-    empty = spark.createDataFrame(
-        [], f"{id_col} long, score double, fragment_ix long, "
-            "fragment_score double, fragment string")
-    if not terms:
-        return empty
-    n_docs, avgdl, dfs = _query_stats(docs, terms, text_col)
-    if n_docs == 0 or any(d == 0 for d in dfs):
-        return empty
-    idfs = [bm25_idf(n_docs, d) for d in dfs]
-
-    hits = bm25_topk(docs, query, k, id_col, text_col, round_to)
+    scan = _bm25_scan(docs, terms, id_col, text_col, conjunctive=True)
+    if scan is None:
+        return no_rows(docs.sparkSession,
+                       f"{id_col} long, score double, fragment_ix long, "
+                       "fragment_score double, fragment string")
+    per_doc, idfs, avgdl = scan
+    hits = _top_k(per_doc, _score_expr(idfs, avgdl), k, id_col, round_to)
     toks = (docs.select(id_col, text_col)
             .join(F.broadcast(hits), id_col)
             .select(id_col, "score",
@@ -754,87 +728,23 @@ def bm25_multifield_topk(docs: DataFrame, query: str,
     Plan: one stats aggregate over all fields at once + one scoring
     scan, zero shuffles.
     """
-    spark = docs.sparkSession
     terms = analyze_query(query)
-    empty = spark.createDataFrame([], f"{id_col} long, score double")
-    if not terms:
-        return empty
-    fields = list(boosts)
-
-    # ---- stats pass: one scan, every field together ----
-    stats_in = docs.select(*[
-        _toks(F.col(fc)).alias(f"_toks_{j}") for j, fc in enumerate(fields)])
-    aggs = []
-    for j, fc in enumerate(fields):
-        tk = f"_toks_{j}"
-        aggs.append(F.count(F.col(tk)).alias(f"_n{j}"))      # non-null docs
-        aggs.append(F.sum(F.size(tk)).alias(f"_t{j}"))
-        for i, term in enumerate(terms):
-            aggs.append(F.sum(
-                F.when(F.array_contains(tk, term), 1).otherwise(0))
-                .alias(f"_df{j}_{i}"))
-    row = stats_in.agg(*aggs).collect()[0]
-
-    # fold (boost * idf) into float64 literals with Python math —
-    # identical to the oracle's boost * idf(...) left-assoc multiply
-    live = []  # (j, field, avgdl_f, [weight per term])
-    for j, fc in enumerate(fields):
-        n_f = int(row[f"_n{j}"])
-        if n_f == 0:
-            continue
-        avgdl_f = float(row[f"_t{j}"]) / n_f if row[f"_t{j}"] else 0.0
-        ws, dfs = [], []
-        for i in range(len(terms)):
-            d = int(row[f"_df{j}_{i}"])
-            dfs.append(d)
-            ws.append(boosts[fc] * bm25_idf(n_f, d) if d else 0.0)
-        live.append((j, fc, avgdl_f, ws, dfs))
-    if not live:
-        return empty
-    # AND candidate check: every term present in >= 1 field
+    scan = _fields_scan(docs, terms, list(boosts), id_col)
+    if scan is None:
+        return _no_hits(docs, id_col)
+    per_doc, live = scan
+    # (term, field) summation order — the oracle's; boost * idf folded
+    # into float64 literals with Python math, identical to the
+    # oracle's boost * idf(...) left-assoc multiply
+    score = None
     for i in range(len(terms)):
-        if all(entry[4][i] == 0 for entry in live):
-            return empty
-
-    # ---- scoring pass: one scan; candidate predicate at the scan ----
-    qarr = F.array(*[F.lit(t) for t in terms])
-    empty_arr = F.array().cast("array<string>")
-    seen = None
-    for j, fc, *_ in live:
-        inter = F.coalesce(F.array_intersect(_toks(F.col(fc)), qarr),
-                           empty_arr)
-        seen = inter if seen is None else F.array_union(seen, inter)
-    cond = F.size(seen) == len(terms)  # every term in >= 1 field
-
-    per_doc = docs.filter(cond).select(
-        F.col(id_col).alias("doc_id"),
-        *[_toks(F.col(fc)).alias(f"_toks_{j}") for j, fc, *_ in live])
-    cols = ["doc_id"]
-    for j, fc, *_ in live:
-        tk = f"_toks_{j}"
-        cols.append(F.coalesce(F.size(tk), F.lit(0)).alias(f"_dl{j}"))
-        for i, term in enumerate(terms):
-            cols.append(F.coalesce(
-                F.size(F.filter(F.col(tk), lambda x: x == F.lit(term))),
-                F.lit(0)).alias(f"_tf{j}_{i}"))
-    per_doc = per_doc.select(*cols)
-
-    score = None  # (term, field) summation order — the oracle's
-    for i in range(len(terms)):
-        for j, fc, avgdl_f, ws, dfs in live:
-            if ws[i] == 0.0:
+        for j, fc, n_f, avgdl_f, dfs in live:
+            w = boosts[fc] * bm25_idf(n_f, dfs[i]) if dfs[i] else 0.0
+            if w == 0.0:
                 continue
-            tf = F.col(f"_tf{j}_{i}")
-            norm = F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) *
-                                F.col(f"_dl{j}") / F.lit(avgdl_f))
-            c = F.lit(ws[i]) * (tf / (tf + norm))
+            c = _bm25_term(w, f"_tf{j}_{i}", f"_dl{j}", avgdl_f)
             score = c if score is None else score + c
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (per_doc
-            .select(F.col("doc_id").alias(id_col), score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+    return _top_k(per_doc, score, k, id_col, round_to)
 
 
 def bm25_crossfields_topk(docs: DataFrame, query: str,
@@ -855,95 +765,29 @@ def bm25_crossfields_topk(docs: DataFrame, query: str,
     over all fields + one scoring scan with the candidate predicate at
     the scan, zero shuffles, TakeOrderedAndProject top-k.
     """
-    spark = docs.sparkSession
     terms = analyze_query(query)
-    empty = spark.createDataFrame([], f"{id_col} long, score double")
-    if not terms:
-        return empty
-    fields = list(boosts)
-
-    # ---- stats pass: one scan, every field together ----
-    stats_in = docs.select(*[
-        _toks(F.col(fc)).alias(f"_toks_{j}") for j, fc in enumerate(fields)])
-    aggs = []
-    for j, fc in enumerate(fields):
-        tk = f"_toks_{j}"
-        aggs.append(F.count(F.col(tk)).alias(f"_n{j}"))      # non-null docs
-        aggs.append(F.sum(F.size(tk)).alias(f"_t{j}"))
-        for i, term in enumerate(terms):
-            aggs.append(F.sum(
-                F.when(F.array_contains(tk, term), 1).otherwise(0))
-                .alias(f"_df{j}_{i}"))
-    row = stats_in.agg(*aggs).collect()[0]
-
-    live = []  # (j, field, avgdl_f, n_f, dfs)
-    for j, fc in enumerate(fields):
-        n_f = int(row[f"_n{j}"])
-        if n_f == 0:
-            continue
-        avgdl_f = float(row[f"_t{j}"]) / n_f if row[f"_t{j}"] else 0.0
-        dfs = [int(row[f"_df{j}_{i}"]) for i in range(len(terms))]
-        live.append((j, fc, avgdl_f, n_f, dfs))
-    if not live:
-        return empty
-    # blended df per term + AND check (term absent from every field)
-    df_blend = []
-    for i in range(len(terms)):
-        m = max(entry[4][i] for entry in live)
-        if m == 0:
-            return empty
-        df_blend.append(m)
-    # weight per (field, term): boost_f * idf(N_f, min(df_blend, N_f))
-    # folded into float64 literals with Python math (the oracle's exact
-    # left-assoc multiply)
-    weights = {}
-    for j, fc, avgdl_f, n_f, dfs in live:
-        for i in range(len(terms)):
-            weights[(j, i)] = boosts[fc] * bm25_idf(
-                n_f, min(df_blend[i], n_f))
-
-    # ---- scoring pass: one scan; candidate predicate at the scan ----
-    qarr = F.array(*[F.lit(t) for t in terms])
-    empty_arr = F.array().cast("array<string>")
-    seen = None
-    for j, fc, *_ in live:
-        inter = F.coalesce(F.array_intersect(_toks(F.col(fc)), qarr),
-                           empty_arr)
-        seen = inter if seen is None else F.array_union(seen, inter)
-    cond = F.size(seen) == len(terms)  # every term in >= 1 field
-
-    per_doc = docs.filter(cond).select(
-        F.col(id_col).alias("doc_id"),
-        *[_toks(F.col(fc)).alias(f"_toks_{j}") for j, fc, *_ in live])
-    cols = ["doc_id"]
-    for j, fc, *_ in live:
-        tk = f"_toks_{j}"
-        cols.append(F.coalesce(F.size(tk), F.lit(0)).alias(f"_dl{j}"))
-        for i, term in enumerate(terms):
-            cols.append(F.coalesce(
-                F.size(F.filter(F.col(tk), lambda x: x == F.lit(term))),
-                F.lit(0)).alias(f"_tf{j}_{i}"))
-    per_doc = per_doc.select(*cols)
-
+    scan = _fields_scan(docs, terms, list(boosts), id_col)
+    if scan is None:
+        return _no_hits(docs, id_col)
+    per_doc, live = scan
+    # blended df per term; weight per (field, term) boost_f *
+    # idf(N_f, min(df_blend, N_f)) folded into float64 literals with
+    # Python math (the oracle's exact left-assoc multiply)
+    df_blend = [max(entry[4][i] for entry in live)
+                for i in range(len(terms))]
     score = None  # sum over terms of dismax over fields
     for i in range(len(terms)):
         contribs = []
-        for j, fc, avgdl_f, n_f, dfs in live:
+        for j, fc, n_f, avgdl_f, dfs in live:
             if dfs[i] == 0:
                 continue  # term absent from field f ⇒ tf=0 everywhere
-            tf = F.col(f"_tf{j}_{i}")
-            norm = F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) *
-                                F.col(f"_dl{j}") / F.lit(avgdl_f))
-            contribs.append(F.lit(weights[(j, i)]) * (tf / (tf + norm)))
+            w = boosts[fc] * bm25_idf(n_f, min(df_blend[i], n_f))
+            contribs.append(_bm25_term(w, f"_tf{j}_{i}", f"_dl{j}",
+                                       avgdl_f))
         best = (contribs[0] if len(contribs) == 1
                 else F.greatest(*contribs))
         score = best if score is None else score + best
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (per_doc
-            .select(F.col("doc_id").alias(id_col), score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+    return _top_k(per_doc, score, k, id_col, round_to)
 
 
 def bm25_topk_synonyms(docs: DataFrame, query: str,
@@ -960,35 +804,29 @@ def bm25_topk_synonyms(docs: DataFrame, query: str,
     bit-exact with oracle.search_synonyms.
     """
     from .oracle import _analyze_slots
-    spark = docs.sparkSession
     slots = _analyze_slots(query, synonyms)
-    empty = spark.createDataFrame([], f"{id_col} long, score double")
     if not slots:
-        return empty
+        return _no_hits(docs, id_col)
 
     # ---- stats pass: N, avgdl, per-MEMBER df in one aggregate ----
     t = docs.select(_toks(F.col(text_col)).alias("_toks"))
     aggs = [F.count("*").alias("_n"), F.sum(F.size("_toks")).alias("_t")]
-    names = []
     for i, alts in enumerate(slots):
         for j, term in enumerate(alts):
-            nm = f"_df{i}_{j}"
-            names.append((i, j, term, nm))
             aggs.append(F.sum(
                 F.when(F.array_contains("_toks", term), 1).otherwise(0))
-                .alias(nm))
+                .alias(f"_df{i}_{j}"))
     row = t.agg(*aggs).collect()[0]
     n_docs = int(row["_n"])
     if n_docs == 0:
-        return empty
+        return _no_hits(docs, id_col)
     avgdl = float(row["_t"]) / n_docs if row["_t"] is not None else 0.0
     slot_df = []
     for i, alts in enumerate(slots):
         df_i = max(int(row[f"_df{i}_{j}"]) for j in range(len(alts)))
         if df_i == 0:
-            return empty  # no member of a required slot exists
+            return _no_hits(docs, id_col)  # a required slot is absent
         slot_df.append(df_i)
-    idfs = [bm25_idf(n_docs, d) for d in slot_df]
 
     # ---- scoring pass: slot tf = sum of member tfs ----
     # candidate predicate: every slot has >= 1 member present
@@ -1010,19 +848,8 @@ def bm25_topk_synonyms(docs: DataFrame, query: str,
     for i, alts in enumerate(slots):
         cols.append(_slot_tf(alts).alias(f"_tf{i}"))
     per_doc = per_doc.select(*cols)
-    norm = F.lit(K1) * (F.lit(1.0 - B) +
-                        F.lit(B) * F.col("_dl") / F.lit(avgdl))
-    score = None
-    for i in range(len(slots)):
-        tf = F.col(f"_tf{i}")
-        c = F.lit(idfs[i]) * (tf / (tf + norm))
-        score = c if score is None else score + c
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (per_doc
-            .select(F.col("doc_id").alias(id_col), score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+    idfs = [bm25_idf(n_docs, d) for d in slot_df]
+    return _top_k(per_doc, _score_expr(idfs, avgdl), k, id_col, round_to)
 
 
 def random_score_topk(docs: DataFrame, query: str, seed: int = 0,
@@ -1040,11 +867,9 @@ def random_score_topk(docs: DataFrame, query: str, seed: int = 0,
     documented deterministic contract here (same distribution, same
     reproducibility guarantee).  Pure scan-level expressions — one
     scan, TakeOrdered."""
-    spark = docs.sparkSession
     terms = analyze_query(query)
-    empty = spark.createDataFrame([], f"{id_col} long, score double")
     if not terms:
-        return empty
+        return _no_hits(docs, id_col)
     qarr = F.array(*[F.lit(t) for t in terms])
     cond = (F.size(F.array_intersect(_toks(F.col(text_col)), qarr))
             == len(terms))
@@ -1053,12 +878,8 @@ def random_score_topk(docs: DataFrame, query: str, seed: int = 0,
                                    F.col(id_col).cast("string"))),
                     1, 8)
     score = F.conv(h, 16, 10).cast("double") / F.lit(float(1 << 32))
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (docs.filter(cond)
-            .select(F.col(id_col).alias(id_col), score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+    return _top_k(docs.filter(cond), score, k, id_col, round_to,
+                  src=id_col)
 
 
 def match_bool_prefix_topk(docs: DataFrame, query: str,
@@ -1076,20 +897,18 @@ def match_bool_prefix_topk(docs: DataFrame, query: str,
     flag, all JVM-side; the stats pass is the same single aggregate
     the other pipeline queries share.  Reference: ES
     query-dsl-match-bool-prefix-query."""
-    spark = docs.sparkSession
     terms = analyze_query(query)
-    empty = spark.createDataFrame([], f"{id_col} long, score double")
     if not terms:
-        return empty
+        return _no_hits(docs, id_col)
     prefix, full = terms[-1], terms[:-1]
     n_docs, avgdl, dfs = _query_stats(docs, full, text_col) \
         if full else (None, None, [])
     if full and n_docs == 0:
-        return empty
+        return _no_hits(docs, id_col)
     if not full:
         row = docs.agg(F.count("*").alias("_n")).collect()[0]
         if int(row["_n"]) == 0:
-            return empty
+            return _no_hits(docs, id_col)
     idfs = [bm25_idf(n_docs, d) if d else 0.0 for d in dfs]
     toks = _toks(F.col(text_col))
     pref_hit = F.exists(toks, lambda x: x.startswith(prefix))
@@ -1106,14 +925,8 @@ def match_bool_prefix_topk(docs: DataFrame, query: str,
                        *[_tf(i, t) for i, t in enumerate(full)]))
     score = F.when(F.col("_pref"), F.lit(1.0)).otherwise(F.lit(0.0))
     if full:
-        score = _score_expr(full, idfs, avgdl) + score
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (per_doc
-            .select(F.col("doc_id").alias(id_col),
-                    score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+        score = _score_expr(idfs, avgdl) + score
+    return _top_k(per_doc, score, k, id_col, round_to)
 
 
 def _or_scores(docs: DataFrame, query: str,
@@ -1128,22 +941,13 @@ def _or_scores(docs: DataFrame, query: str,
     external oracle sorting on the rounded value agrees on ties.
     Returns None when the query analyzes to nothing / matches
     nothing."""
-    terms = analyze_query(query)
-    if not terms:
+    scan = _bm25_scan(docs, analyze_query(query), id_col, text_col,
+                      conjunctive=False,
+                      carry={c: F.col(c) for c in carry_cols})
+    if scan is None:
         return None
-    n_docs, avgdl, dfs = _query_stats(docs, terms, text_col)
-    if n_docs == 0 or all(d == 0 for d in dfs):
-        return None
-    idfs = [bm25_idf(n_docs, d) for d in dfs]
-    qarr = F.array(*[F.lit(t) for t in terms])
-    cond = F.arrays_overlap(_toks(F.col(text_col)), qarr)
-    per_doc = (docs.filter(cond)
-               .select(F.col(id_col).alias("doc_id"), *carry_cols,
-                       _toks(F.col(text_col)).alias("_toks"))
-               .select("doc_id", *carry_cols,
-                       F.size("_toks").alias("_dl"),
-                       *[_tf(i, t) for i, t in enumerate(terms)]))
-    score = F.round(_score_expr(terms, idfs, avgdl), round_to)
+    per_doc, idfs, avgdl = scan
+    score = F.round(_score_expr(idfs, avgdl), round_to)
     return per_doc.select("doc_id", *carry_cols, score.alias("score"))
 
 
@@ -1162,10 +966,9 @@ def sampler_facet(docs: DataFrame, query: str, facet_col: str,
     groupBy over ≤ shard_size rows.  Returns (facet, doc_count)
     ordered (doc_count desc, facet asc)."""
     scored = _or_scores(docs, query, [facet_col], id_col, text_col)
-    spark = docs.sparkSession
     if scored is None:
-        return spark.createDataFrame(
-            [], f"{facet_col} string, doc_count long")
+        return no_rows(docs.sparkSession,
+                       f"{facet_col} string, doc_count long")
     top = (scored.orderBy(F.desc("score"), F.asc("doc_id"))
            .limit(shard_size))
     return (top.groupBy(facet_col)
@@ -1193,10 +996,9 @@ def diversified_sampler_facet(docs: DataFrame, query: str,
     from pyspark.sql import Window
     scored = _or_scores(docs, query, [facet_col, diversify_col],
                         id_col, text_col)
-    spark = docs.sparkSession
     if scored is None:
-        return spark.createDataFrame(
-            [], f"{facet_col} string, doc_count long")
+        return no_rows(docs.sparkSession,
+                       f"{facet_col} string, doc_count long")
     wv = (Window.partitionBy(diversify_col)
           .orderBy(F.desc("score"), F.asc("doc_id")))
     kept = (scored.withColumn("_rv", F.row_number().over(wv))
@@ -1232,11 +1034,9 @@ def combined_fields_topk(docs: DataFrame, query: str,
     Plan: the pipeline contract — one stats aggregate (N, weighted
     total length, per-term any-field df), one scoring scan with
     literal-folded idfs, TakeOrdered(k)."""
-    spark = docs.sparkSession
     terms = analyze_query(query)
-    empty = spark.createDataFrame([], f"{id_col} long, score double")
     if not terms or not fields:
-        return empty
+        return _no_hits(docs, id_col)
     for f_, w in fields.items():
         if w < 1.0:
             raise ValueError(
@@ -1261,13 +1061,13 @@ def combined_fields_topk(docs: DataFrame, query: str,
     row = t.agg(*aggs).collect()[0]
     n = int(row["_n"])
     if n == 0:
-        return empty
+        return _no_hits(docs, id_col)
     avgdl = float(row["_t"]) / n if row["_t"] is not None else 0.0
     dfs = [int(row[f"_df{i}"]) for i in range(len(terms))]
     if operator == "and" and any(d == 0 for d in dfs):
-        return empty
+        return _no_hits(docs, id_col)
     if all(d == 0 for d in dfs):
-        return empty
+        return _no_hits(docs, id_col)
     idfs = [bm25_idf(n, d) if d else 0.0 for d in dfs]
 
     per = docs.select(
@@ -1296,13 +1096,7 @@ def combined_fields_topk(docs: DataFrame, query: str,
             cond = present if cond is None else cond & present
         else:
             cond = present if cond is None else cond | present
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (per.filter(cond)
-            .select(F.col("doc_id").alias(id_col),
-                    score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+    return _top_k(per.filter(cond), score, k, id_col, round_to)
 
 
 def distance_feature_topk(df: DataFrame, field: str, origin,
@@ -1329,12 +1123,8 @@ def distance_feature_topk(df: DataFrame, field: str, origin,
         dist = F.abs(F.col(field).cast("double") - F.lit(float(origin)))
     score = F.lit(float(boost)) * F.lit(float(pivot)) \
         / (F.lit(float(pivot)) + dist)
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (df.filter(F.col(field).isNotNull())
-            .select(F.col(id_col), score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+    return _top_k(df.filter(F.col(field).isNotNull()), score, k, id_col,
+                  round_to, src=id_col)
 
 
 def terms_set_topk(docs: DataFrame, terms: list[str], msm_col,
@@ -1352,13 +1142,11 @@ def terms_set_topk(docs: DataFrame, terms: list[str], msm_col,
     scan where the match predicate compares the per-doc distinct-hit
     count against the per-doc m, TakeOrdered(k) on the rounded
     score."""
-    spark = docs.sparkSession
-    empty = spark.createDataFrame([], f"{id_col} long, score double")
     if not terms:
-        return empty
+        return _no_hits(docs, id_col)
     n, avgdl, dfs = _query_stats(docs, terms, text_col)
     if n == 0 or all(d == 0 for d in dfs):
-        return empty
+        return _no_hits(docs, id_col)
     idfs = [bm25_idf(n, d) if d else 0.0 for d in dfs]
     per = docs.select(F.col(id_col).alias("doc_id"),
                       msm_col.cast("long").alias("_m"),
@@ -1369,14 +1157,8 @@ def terms_set_topk(docs: DataFrame, terms: list[str], msm_col,
     for i in range(len(terms)):
         c = F.when(F.col(f"_tf{i}") > 0, 1).otherwise(0)
         nt = c if nt is None else nt + c
-    score = _score_expr(terms, idfs, avgdl)
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (per.filter(nt >= F.col("_m"))
-            .select(F.col("doc_id").alias(id_col),
-                    score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+    return _top_k(per.filter(nt >= F.col("_m")), _score_expr(idfs, avgdl),
+                  k, id_col, round_to)
 
 
 def rank_feature_topk(df: DataFrame, field: str,
@@ -1422,13 +1204,9 @@ def rank_feature_topk(df: DataFrame, field: str,
         s = x
     else:
         raise ValueError(f"unknown rank_feature function {function!r}")
-    score = F.lit(float(boost)) * s
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (df.filter(x.isNotNull() & (x > 0))
-            .select(F.col(id_col), score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+    return _top_k(df.filter(x.isNotNull() & (x > 0)),
+                  F.lit(float(boost)) * s, k, id_col, round_to,
+                  src=id_col)
 
 
 def pinned_topk(docs: DataFrame, ids: list[int], query: str,
@@ -1448,7 +1226,6 @@ def pinned_topk(docs: DataFrame, ids: list[int], query: str,
     ≤ k + len(ids) rows, so the final rank window is a no-op-sized
     single partition."""
     from pyspark.sql import Window
-    spark = docs.sparkSession
     pin_pos = {int(d): i for i, d in enumerate(ids)}
     pos_expr = F.lit(len(ids))
     for d, i in pin_pos.items():
@@ -1498,31 +1275,17 @@ def collapse_inner_hits_topk(docs: DataFrame, query: str,
     rows.  Scores round to ``round_to`` BEFORE ranking (the
     cross-engine ordering contract)."""
     from pyspark.sql import Window
-    spark = docs.sparkSession
-    terms = analyze_query(query)
-    empty = spark.createDataFrame(
-        [], f"{collapse_col} string, {id_col} long, score double, "
-            f"inner_rank int")
-    if not terms:
-        return empty
-    n_docs, avgdl, dfs = _query_stats(docs, terms, text_col)
-    if n_docs == 0 or any(d == 0 for d in dfs):
-        return empty
-    idfs = [bm25_idf(n_docs, d) for d in dfs]
-    qarr = F.array(*[F.lit(t) for t in terms])
-    cond = (F.size(F.array_intersect(_toks(F.col(text_col)), qarr))
-            == len(terms))
-    per_doc = (docs.filter(cond)
-               .select(F.col(id_col).alias("doc_id"),
-                       F.col(collapse_col),
-                       _toks(F.col(text_col)).alias("_toks"))
-               .select("doc_id", collapse_col,
-                       F.size("_toks").alias("_dl"),
-                       *[_tf(i, t) for i, t in enumerate(terms)]))
+    scan = _bm25_scan(docs, analyze_query(query), id_col, text_col,
+                      conjunctive=True,
+                      carry={collapse_col: F.col(collapse_col)})
+    if scan is None:
+        return no_rows(docs.sparkSession,
+                       f"{collapse_col} string, {id_col} long, "
+                       "score double, inner_rank int")
+    per_doc, idfs, avgdl = scan
     scored = per_doc.select(
         "doc_id", collapse_col,
-        F.round(_score_expr(terms, idfs, avgdl), round_to)
-        .alias("score"))
+        F.round(_score_expr(idfs, avgdl), round_to).alias("score"))
     w = Window.partitionBy(collapse_col).orderBy(
         F.desc("score"), F.asc("doc_id"))
     ranked = scored.withColumn("inner_rank",
@@ -1563,8 +1326,6 @@ def shingle_phrase_topk(docs: DataFrame, phrase: str,
     count/df partial-agg, no shuffle of docs), one scoring scan with
     the shingle tf as an array expression, TakeOrdered(k)."""
     terms = analyze_query(phrase)
-    spark = docs.sparkSession
-    empty = spark.createDataFrame([], f"{id_col} long, score double")
     if len(terms) != 2:
         raise ValueError("shingle_phrase_topk takes exactly a "
                          f"two-token phrase; got {terms!r}")
@@ -1578,7 +1339,7 @@ def shingle_phrase_topk(docs: DataFrame, phrase: str,
         .alias("df")).collect()[0]
     n, df = int(stats["n"]), int(stats["df"])
     if n == 0 or df == 0:
-        return empty
+        return _no_hits(docs, id_col)
     avgdl = float(stats["tot"]) / float(n)
     idf = bm25_idf(n, df)
     tf = F.size(F.filter(sh_arr, lambda x: x == F.lit(sh)))
@@ -1587,12 +1348,5 @@ def shingle_phrase_topk(docs: DataFrame, phrase: str,
              * (tf / (tf + F.lit(K1)
                       * (F.lit(1.0 - B)
                          + F.lit(B) * dl / F.lit(avgdl)))))
-    if round_to is not None:
-        score = F.round(score, round_to)
-    # id column keeps the caller's name — the empty branch and the
-    # rest of this module's *_topk idiom already do (a custom id_col
-    # previously produced different schemas from the two branches)
-    return (docs.filter(F.array_contains(sh_arr, sh))
-            .select(F.col(id_col).alias(id_col),
-                    score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col)).limit(k))
+    return _top_k(docs.filter(F.array_contains(sh_arr, sh)), score, k,
+                  id_col, round_to, src=id_col)

@@ -5,22 +5,18 @@ Internalizes what Auctus delegated to Elasticsearch: the conjunctive-AND
 57-109``, ``operator: and``), BM25 scoring with ES 7.10.2 defaults, and
 top-k=50 with deterministic (score desc, docID asc) ordering.
 
-Two physical strategies over the same index:
-
-- :meth:`SearchEngine.search` — *exhaustive DataFrame plan*: decode the
-  query terms' segments (partition-pruned by ``term_bucket``, row-group-
-  pruned by the term-sorted file layout), broadcast-join per-term idf,
-  hash-aggregate per doc, filter to conjunctive matches, global top-k.
-  Every step is a Catalyst built-in; this is the correctness anchor.
-
-- :meth:`SearchEngine.search_wand` — *bucket-parallel block-max scorer*:
-  segments are co-partitioned by docID-range bucket (all terms' postings
-  for one doc range share a bucket id), so AND-intersection + scoring
-  run per bucket inside ``applyInPandas`` with numpy set-intersection,
-  using block-max metadata to skip blocks that cannot contain a
-  conjunctive match or beat the local threshold.  Per-bucket top-k then
-  one global ``ORDER BY ... LIMIT k`` merge.  No shuffle of posting rows
-  at all — only (bucket → k rows) survive.
+One physical strategy, the *bucket-parallel scorer*: segments are
+co-partitioned by docID-range bucket (all terms' postings for one doc
+range share a bucket id), so AND-intersection and scoring run per
+bucket inside ``applyInPandas`` with numpy set-intersection, decoding
+only the blocks that can hold a candidate.  Per-bucket top-k, then one
+global ``ORDER BY ... LIMIT k`` merge.  No shuffle of posting rows at
+all — only (bucket → k rows) survive.  The segment scan is pruned by
+``term_bucket`` partition; the files are not term-sorted, so row-group
+pruning does not apply.  :meth:`SearchEngine.search` (and its alias
+``search_wand``), :func:`search_many`, :meth:`SearchEngine.explain` and
+:func:`search_multi_index` all run the one AND kernel; the
+pure-Python scorer of ``oracle.py`` is the reference they match.
 
 Every BM25-scored family of the bucket-parallel path — AND, OR (with
 ``min_should_match``), synonym slots, phrase (exact, sloppy and
@@ -84,9 +80,10 @@ from pyspark.sql.types import (DoubleType, LongType, StringType,
 
 from .. import B, K1, TOP_K_SIZE
 from ..analysis import JVM_TOKEN_PATTERN, analyze_query
-from ..index.build import IndexPaths, load_tombstones, tombstones_df
+from ..index.build import IndexPaths, load_tombstones, tombstoned
 from ..index import codec
 from ..oracle import bm25_idf
+from ..session import no_rows
 
 
 _GRAM_N = 2
@@ -384,11 +381,9 @@ class SearchEngine:
             spark, read_doc_buckets(index_dir))
         # Lucene-style deletes: tombstoned docIDs are masked at query
         # time; global stats keep counting them until a rebuild.  The
-        # numpy mask is size-capped (build.MAX_TOMBSTONE_MASK); the
-        # exhaustive path uses a broadcast anti-join instead (no
-        # per-docID literals in the plan).
+        # sorted numpy mask is size-capped (build.MAX_TOMBSTONE_MASK)
+        # and rides into each task's closure, never into the plan.
         self.tombstones = load_tombstones(spark, index_dir)
-        self._tomb_df = tombstones_df(spark, index_dir)
         self._gram_df_cache: DataFrame | None = None
         self._dict_df_cache: DataFrame | None = None
         # driver-side (term -> df) map, loaded lazily from the
@@ -533,14 +528,8 @@ class SearchEngine:
             f"FROM {self._seg_view} "
             f"WHERE {self._term_filter(self._index_terms(terms))}")
 
-    def _idf_map(self, terms: list[str]) -> dict[str, float] | None:
-        stats = self.term_stats(terms)
-        if any(t not in stats for t in terms):
-            return None  # conjunctive AND: a missing term → zero hits
-        return {t: bm25_idf(self.n_docs, stats[t]) for t in terms}
-
     def _empty(self) -> DataFrame:
-        return _no_hits(self.spark)
+        return no_rows(self.spark, _TOPK_SCHEMA)
 
     # ---------------- prefix query (multi-term rewrite) ---------------
     def search_prefix(self, prefix: str, k: int = TOP_K_SIZE,
@@ -710,11 +699,8 @@ class SearchEngine:
             for pdf in batches:
                 outs = []
                 for r in pdf.itertuples(index=False):
-                    ids = codec.decode_docs(r.docs_blob)
-                    if tomb.size:
-                        pos = np.searchsorted(tomb, ids)
-                        pos_c = np.minimum(pos, tomb.size - 1)
-                        ids = ids[tomb[pos_c] != ids]
+                    ids = _mask_tombstones(
+                        codec.decode_docs(r.docs_blob), tomb)
                     if ids.size:
                         outs.append(ids)
                 yield pd.DataFrame({
@@ -726,12 +712,11 @@ class SearchEngine:
                 .select("doc_id",
                         F.lit(float(boost)).alias("score")))
 
-    # ---------------- exhaustive DataFrame plan -----------------------
     def _flat_postings(self, terms: list[str]) -> DataFrame:
         """Decode the query terms' postings to flat (term, doc_id, tf,
-        dl) rows, tombstones masked — the shared front half of the
-        exhaustive scorer and the explain surface."""
+        dl) rows, tombstones masked — the explain surface's input."""
         segs = self._segments_for(terms)
+        tomb = self.tombstones
 
         def decode(batches):
             for pdf in batches:
@@ -739,57 +724,19 @@ class SearchEngine:
                 for r in pdf.itertuples(index=False):
                     doc_ids, tfs, dls = codec.decode_row(
                         r.docs_blob, r.tfs_blob, r.dls_blob)
+                    if tomb.size:
+                        keep = ~tombstoned(doc_ids, tomb)
+                        doc_ids, tfs, dls = (doc_ids[keep], tfs[keep],
+                                             dls[keep])
                     outs.append(pd.DataFrame(
                         {"term": r.term, "doc_id": doc_ids,
                          "tf": tfs, "dl": dls}))
                 if outs:
                     yield pd.concat(outs, ignore_index=True)
 
-        flat = segs.select("term", "docs_blob", "tfs_blob", "dls_blob")\
-            .mapInPandas(decode,
-                         schema="term string, doc_id long, tf long, dl long")
-        if self._tomb_df is not None:
-            # broadcast left-anti join: scales to any tombstone count
-            # (an isin(...) literal list would bloat the plan)
-            flat = flat.join(F.broadcast(self._tomb_df), "doc_id",
-                             "left_anti")
-        return flat
-
-    def search(self, query: str, k: int = TOP_K_SIZE) -> DataFrame:
-        terms = analyze_query(query, stem=self.stem)
-        if not terms:
-            return self._empty()
-        idf = self._idf_map(terms)
-        if idf is None:
-            return self._empty()
-        avgdl = self.avgdl
-        flat = self._flat_postings(terms)
-        idf_df = F.broadcast(self.spark.createDataFrame(
-            pd.DataFrame({"term": list(idf), "idf": list(idf.values())})))
-        scored = (flat.join(idf_df, "term")
-                  .withColumn(
-                      "contrib",
-                      # idf * (tf / denom) — grouping matches the oracle
-                      # bit-for-bit (oracle.py bm25_tf_norm)
-                      F.col("idf") * (F.col("tf") /
-                      (F.col("tf") + F.lit(K1) *
-                       (F.lit(1.0 - B) +
-                        F.lit(B) * F.col("dl") / F.lit(avgdl))))))
-        # bit-exact rank identity: float addition is not associative, so
-        # sum per-term contributions in QUERY-TERM ORDER (the oracle's
-        # order), not in whatever order the hash aggregate sees rows —
-        # pivot one column per term, then fold left-to-right.
-        per_term = [F.max(F.when(F.col("term") == t, F.col("contrib")))
-                    .alias(f"_c{i}") for i, t in enumerate(terms)]
-        agg = (scored.groupBy("doc_id")
-               .agg(*per_term, F.count("*").alias("nt"))
-               .filter(F.col("nt") == len(terms)))
-        score = F.col("_c0")
-        for i in range(1, len(terms)):
-            score = score + F.col(f"_c{i}")
-        return (agg.select("doc_id", score.alias("score"))
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k))
+        return (segs.select("term", "docs_blob", "tfs_blob", "dls_blob")
+                .mapInPandas(decode, schema="term string, doc_id long, "
+                                            "tf long, dl long"))
 
     # ---------------- explain (ES _explain analog) --------------------
     def explain(self, query: str, k: int = 10) -> DataFrame:
@@ -803,17 +750,15 @@ class SearchEngine:
                   "dl long, df long, idf double, tf_norm double, "
                   "contribution double")
         terms = analyze_query(query, stem=self.stem)
-        if not terms:
-            return _no_hits(self.spark, schema)
-        idf = self._idf_map(terms)
-        if idf is None:
-            return _no_hits(self.spark, schema)
         stats = self.term_stats(terms)
+        if not terms or any(t not in stats for t in terms):
+            return no_rows(self.spark, schema)  # AND: no hits
         top = self.search(query, k)
         factors = F.broadcast(self.spark.createDataFrame(
             pd.DataFrame({"term": terms,
                           "df": [stats[t] for t in terms],
-                          "idf": [idf[t] for t in terms]})))
+                          "idf": [bm25_idf(self.n_docs, stats[t])
+                                  for t in terms]})))
         tf_norm = (F.col("tf") /
                    (F.col("tf") + F.lit(K1) *
                     (F.lit(1.0 - B) +
@@ -900,13 +845,17 @@ class SearchEngine:
                  "tfs_off", "dls_off", "max_tf", "min_dl",
                  "block_last_doc"]
 
-    def search_wand(self, query: str, k: int = TOP_K_SIZE) -> DataFrame:
+    def search(self, query: str, k: int = TOP_K_SIZE) -> DataFrame:
         """Conjunctive AND top-k with posting skipping: intersect
         rarest-first — only the smallest term's partials are fully
         decoded; larger lists decode candidate-containing blocks only
         (:func:`_and_kernel`, run as a batch of one)."""
         terms = analyze_query(query, stem=self.stem)
         return self._and_job({"": terms} if terms else {}, k)
+
+    def search_wand(self, query: str, k: int = TOP_K_SIZE) -> DataFrame:
+        """Alias of :meth:`search`."""
+        return self.search(query, k)
 
     def _and_job(self, qterms: dict, k: int, batched: bool = False
                  ) -> DataFrame:
@@ -1116,19 +1065,13 @@ class SearchEngine:
         from the term-stats scan — no full-corpus recompute.
         Tombstoned docs return nothing, like ES after delete."""
         empty = "doc_id long, term string, tf long, df long"
-        ids = sorted({int(d) for d in doc_ids})
-        if not ids:
-            return _no_hits(self.spark, empty)
-        tomb = self.tombstones
-        if tomb.size:
-            pos = np.searchsorted(tomb, ids)
-            pos_c = np.minimum(pos, tomb.size - 1)
-            ids = [d for d, p in zip(ids, pos_c) if tomb[p] != d]
-            if not ids:
-                return _no_hits(self.spark, empty)
-        segs = (self._seg_df.filter(self._doc_range_pred(ids))
+        want = _mask_tombstones(
+            np.array(sorted({int(d) for d in doc_ids}), dtype=np.int64),
+            self.tombstones)
+        if not want.size:
+            return no_rows(self.spark, empty)
+        segs = (self._seg_df.filter(self._doc_range_pred(want.tolist()))
                 .select("term", "docs_blob", "tfs_blob"))
-        want = np.array(ids, dtype=np.int64)
 
         def decode(batches):
             for pdf in batches:
@@ -1180,7 +1123,7 @@ class SearchEngine:
                   "df long, rank int")
         tokens = analyze_query(text, stem=self.stem)
         if not tokens:
-            return _no_hits(self.spark, schema)
+            return no_rows(self.spark, schema)
         present = self.term_stats(tokens)
         targets = [t for t in tokens
                    if suggest_mode == "always" or t not in present]
@@ -1303,7 +1246,7 @@ class SearchEngine:
         schema = "phrase string, score double"
         tokens = analyze_query(text, stem=self.stem)
         if not tokens:
-            return _no_hits(self.spark, schema)
+            return no_rows(self.spark, schema)
         if len(tokens) > max_tokens:
             raise ValueError(
                 f"phrase suggester caps at {max_tokens} tokens "
@@ -1453,8 +1396,7 @@ class SearchEngine:
         cand = sorted(t for t, c in tf.items() if c >= min_term_freq)
         if not cand:
             return self._empty()
-        stats = {r["term"]: int(r["df"])
-                 for r in self._ts_for(cand).collect()}
+        stats = self.term_stats(cand)
         import math
         scored = []
         for t in cand:
@@ -1493,19 +1435,6 @@ _HITS_SCHEMA = StructType([StructField("query_id", StringType())]
 _NO_DOCS = (np.array([], dtype=np.int64), np.array([], dtype=np.float64))
 
 
-def _no_hits(spark: SparkSession, schema=_TOPK_SCHEMA) -> DataFrame:
-    """An empty frame of ``schema`` (a StructType, or a DDL string of
-    ``name type`` pairs) whose collect runs no Spark job: an
-    always-false filter over one row folds to an empty local relation
-    (an empty ``createDataFrame`` is an RDD scan, one job)."""
-    if isinstance(schema, str):
-        fields = [f.split() for f in schema.split(",")]
-    else:
-        fields = [(f.name, f.dataType.simpleString()) for f in schema]
-    cols = ", ".join(f"CAST(NULL AS {t}) AS {n}" for n, t in fields)
-    return spark.sql(f"SELECT {cols} WHERE false")
-
-
 def _bucket_job(spark: SparkSession, segs: DataFrame | None, kernel,
                 specs: dict, k: int, stat: str | None = None,
                 batched: bool = False, *, partitions: int) -> DataFrame:
@@ -1524,7 +1453,7 @@ def _bucket_job(spark: SparkSession, segs: DataFrame | None, kernel,
     returns (query_id, doc_id, score) — including when empty.
     ``partitions`` sizes the bucket exchange (:func:`_spread_buckets`)."""
     if segs is None:
-        return _no_hits(spark, _HITS_SCHEMA if batched else _TOPK_SCHEMA)
+        return no_rows(spark, _HITS_SCHEMA if batched else _TOPK_SCHEMA)
 
     def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         parts = _group_partials(pdf)
@@ -1702,9 +1631,7 @@ def _score_candidates(terms, idf_b, per_term, cand, avgdl):
 def _mask_tombstones(cand: np.ndarray, tomb: np.ndarray) -> np.ndarray:
     if tomb.size == 0 or cand.size == 0:
         return cand
-    pos = np.searchsorted(tomb, cand)
-    pos_c = np.minimum(pos, tomb.size - 1)
-    return cand[tomb[pos_c] != cand]
+    return cand[~tombstoned(cand, tomb)]
 
 
 def _topk_local(cand, score, k):
@@ -1908,7 +1835,7 @@ def search_many(engine: SearchEngine, queries: dict[str, str],
     partials are shared across queries; output is (query_id, doc_id,
     score) with per-query top-k.
 
-    Same kernel as per-query ``search_wand`` — bit-exact by
+    Same kernel as per-query ``search`` — bit-exact by
     construction.
     """
     return engine._and_job(_analyzed(engine, queries), k, batched=True)
@@ -1945,14 +1872,15 @@ class MultiFieldEngine:
         self.stem = stems.pop() if stems else False
 
     def _empty(self) -> DataFrame:
-        return _no_hits(self.spark)
+        return no_rows(self.spark, _TOPK_SCHEMA)
 
     def search(self, query: str, k: int = TOP_K_SIZE) -> DataFrame:
         """SINGLE-JOB plan: no driver-side stats collects — each
         field's global (term, df) rides in via a broadcast join onto
-        that field's segment scan (the discipline ``search_wand``
-        follows); boost_f * idf_f(t) is folded inside the bucket
-        scorer from per-field constants captured at engine init.
+        that field's segment scan (the discipline
+        ``SearchEngine.search`` follows); boost_f * idf_f(t) is folded
+        inside the bucket scorer from per-field constants captured at
+        engine init.
         The term-missing-everywhere early return is subsumed by the
         per-bucket AND check (a term with no postings in any field
         empties every bucket)."""

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from .. import TOP_K_SIZE
 from .. import pipeline
+from ..session import no_rows
 from ..operators.union_ops import (
     greedy_best_pairs,
     name_similarity_df,
@@ -213,9 +214,10 @@ class MetadataCatalog:
                 for lc, lk in left_cols:
                     if lk == rk:
                         rows.append((cand, lc.lower(), rc.lower()))
-        empty = self.spark.createDataFrame(
-            [], "cand_id string, left_name string, right_name string, "
-                "similarity double, n_pairs long, score double")
+        empty = no_rows(
+            self.spark, "cand_id string, left_name string, right_name "
+                        "string, similarity double, n_pairs long, "
+                        "score double")
         if not rows:
             return empty
         pairs = self.spark.createDataFrame(

@@ -60,7 +60,8 @@ from pyspark.sql import functions as F
 from .. import B, K1, TOP_K_SIZE
 from ..analysis import analyze_query, tokenize
 from ..oracle import bm25_idf
-from ..pipeline import _toks
+from ..pipeline import _no_hits, _toks, _top_k
+from ..session import no_rows
 
 
 # ---------------------------------------------------------------- AST
@@ -422,29 +423,21 @@ class _Compiler:
 
 def _run(docs: DataFrame, ast, k: int, id_col: str, text_col: str,
          round_to: int | None) -> DataFrame:
-    spark = docs.sparkSession
-    empty = spark.createDataFrame([], f"{id_col} long, score double")
     if ast is None:
-        return empty
+        return _no_hits(docs, id_col)
     terms, fields = set(), set()
     _collect_leaves(ast, terms, fields)
     n, avgdl, term_df, field_df = _stats(
         docs, sorted(terms), sorted(fields), text_col)
     if n == 0:
-        return empty
+        return _no_hits(docs, id_col)
     comp = _Compiler(n, avgdl, term_df, field_df)
     carry = sorted({f for f, _ in field_df})
     per_doc = docs.select(F.col(id_col).alias("doc_id"), *carry,
                           _toks(F.col(text_col)).alias("_toks")) \
         .withColumn("_dl", F.size("_toks"))
     cond, score = comp.compile(ast)
-    if round_to is not None:
-        score = F.round(score, round_to)
-    return (per_doc.filter(cond)
-            .select(F.col("doc_id").alias(id_col),
-                    score.alias("score"))
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k))
+    return _top_k(per_doc.filter(cond), score, k, id_col, round_to)
 
 
 def query_string_topk(docs: DataFrame, query: str, k: int = TOP_K_SIZE,
@@ -553,10 +546,8 @@ def percolate(docs: DataFrame, queries: list[tuple[int, str]],
                     default_field=text_col)
         if ast is not None:
             compiled.append((int(qid), _match_cond(ast)))
-    spark = docs.sparkSession
     if not compiled:
-        return spark.createDataFrame(
-            [], f"query_id long, {id_col} long")
+        return no_rows(docs.sparkSession, f"query_id long, {id_col} long")
     carry = [f for f in keyword_fields if f in docs.columns]
     per = docs.select(F.col(id_col).alias("doc_id"), *carry,
                       _toks(F.col(text_col)).alias("_toks"))

@@ -235,8 +235,7 @@ def keyword_filter_boost(docs: DataFrame, query: str, weight: float = 10.0,
     from ..pipeline import tokens
     terms = analyze_query(query)
     if not terms:
-        return docs.sparkSession.createDataFrame(
-            [], f"{id_col} long, score double")
+        return pipeline._no_hits(docs, id_col)
     tok = tokens(docs, id_col, text_col).filter(F.col("term").isin(terms))
     hits = (tok.groupBy("doc_id")
             .agg(F.count_distinct("term").alias("nt"))

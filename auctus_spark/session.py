@@ -9,7 +9,20 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def no_rows(spark: SparkSession, schema) -> DataFrame:
+    """An empty frame of ``schema`` (a StructType or a DDL string)
+    whose collect runs no Spark job: an always-false filter over one
+    row folds to an empty local relation, while an empty
+    ``createDataFrame`` is an RDD scan, one job per collect."""
+    if isinstance(schema, str):
+        from pyspark.sql.types import _parse_datatype_string
+        schema = _parse_datatype_string(schema)
+    cols = ", ".join(f"CAST(NULL AS {f.dataType.simpleString()}) "
+                     f"AS `{f.name}`" for f in schema)
+    return spark.sql(f"SELECT {cols} WHERE false")
 
 
 def _export_package_path() -> None:

@@ -5,6 +5,7 @@ pyarrow read of the global stats."""
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from auctus_spark.corpus import generate_corpus
 from auctus_spark.index.build import (IndexBuilder, compact, delete_docs,
@@ -118,14 +119,69 @@ def test_unindexed_and_term_runs_no_job(spark, built):
 
 
 def test_empty_results_run_no_job(spark, built, tmp_path):
-    """explain, term_vectors, suggest_terms and suggest_phrases answer
-    an input with nothing to look up with an empty frame of their own
-    schema, and collecting that frame runs no Spark job."""
+    """explain, term_vectors, suggest_terms, suggest_phrases and every
+    ranking of the index-free pipeline answer an input with nothing to
+    look up with an empty frame of their own schema, and collecting
+    that frame runs no Spark job."""
+    from auctus_spark import pipeline as P
+    from auctus_spark.query.querystring import query_string_topk
     out, _ = built
     d = str(tmp_path / "idx")
     shutil.copytree(out, d)
     delete_docs(spark, d, [5])
     eng = SearchEngine(spark, d, term_buckets=8)
+    docs = spark.createDataFrame(generate_corpus(
+        20, min_tokens=5, max_tokens=20, vocab_size=50))
+    hits = "doc_id long, score double"
+    facets = "lang string, doc_count long"
+    kw = {"text_col": "content"}
+    pipeline_cases = {
+        "bm25_topk": (lambda: P.bm25_topk(docs, "", **kw), hits),
+        "bm25_or_topk": (lambda: P.bm25_or_topk(docs, "", **kw), hits),
+        "rescore_topk": (lambda: P.rescore_topk(docs, "import", "", **kw),
+                         hits),
+        "dis_max_topk": (lambda: P.dis_max_topk(docs, ["", ""], **kw),
+                         hits),
+        "boosting_topk": (lambda: P.boosting_topk(docs, "", "import",
+                                                  **kw), hits),
+        "function_score_decay": (lambda: P.function_score_decay(
+            docs, "", "doc_id", 0.0, 10.0, **kw), hits),
+        "field_value_factor_topk": (lambda: P.field_value_factor_topk(
+            docs, "", "doc_id", **kw), hits),
+        "collapse_topk": (lambda: P.collapse_topk(docs, "", "lang", **kw),
+                          "doc_id long, lang string, score double"),
+        "search_after_topk": (lambda: P.search_after_topk(
+            docs, "", 1.0, 0, **kw), hits),
+        "highlight": (lambda: P.highlight(docs, "", **kw),
+                      "doc_id long, score double, highlighted string"),
+        "highlight_fragments": (lambda: P.highlight_fragments(
+            docs, "", **kw), "doc_id long, score double, fragment_ix "
+            "long, fragment_score double, fragment string"),
+        "bm25_multifield_topk": (lambda: P.bm25_multifield_topk(
+            docs, "", {"content": 1.0, "path": 3.0}), hits),
+        "bm25_crossfields_topk": (lambda: P.bm25_crossfields_topk(
+            docs, "", {"content": 1.0, "path": 3.0}), hits),
+        "bm25_topk_synonyms": (lambda: P.bm25_topk_synonyms(
+            docs, "", {"import": ["def"]}, **kw), hits),
+        "random_score_topk": (lambda: P.random_score_topk(docs, "", **kw),
+                              hits),
+        "match_bool_prefix_topk": (lambda: P.match_bool_prefix_topk(
+            docs, "", **kw), hits),
+        "sampler_facet": (lambda: P.sampler_facet(docs, "", "lang", **kw),
+                          facets),
+        "diversified_sampler_facet": (
+            lambda: P.diversified_sampler_facet(docs, "", "lang", "repo",
+                                                **kw), facets),
+        "combined_fields_topk": (lambda: P.combined_fields_topk(
+            docs, "", {"content": 1.0}), hits),
+        "terms_set_topk": (lambda: P.terms_set_topk(
+            docs, [], F.lit(1), **kw), hits),
+        "collapse_inner_hits_topk": (lambda: P.collapse_inner_hits_topk(
+            docs, "", "lang", **kw),
+            "lang string, doc_id long, score double, inner_rank int"),
+        "query_string_topk": (lambda: query_string_topk(docs, "", **kw),
+                              hits),
+    }
     explain = ("doc_id long, score double, term string, tf long, "
                "dl long, df long, idf double, tf_norm double, "
                "contribution double")
@@ -143,7 +199,7 @@ def test_empty_results_run_no_job(spark, built, tmp_path):
         "suggest_phrases": (lambda: eng.suggest_phrases(""),
                             "phrase string, score double"),
     }
-    for name, (make, ddl) in cases.items():
+    for name, (make, ddl) in {**cases, **pipeline_cases}.items():
         want = [(f.name, f.dataType)
                 for f in spark.createDataFrame([], ddl).schema]
         df = make()
@@ -151,6 +207,18 @@ def test_empty_results_run_no_job(spark, built, tmp_path):
         before = _jobs(spark)
         assert df.collect() == [], name
         assert _jobs(spark) == before, name
+
+
+def test_more_like_this_plan_runs_no_job(spark, built):
+    """With the driver stats map loaded, more_like_this reads its
+    terms' df from the map: building its plan runs no Spark job."""
+    out, _ = built
+    eng = SearchEngine(spark, out, term_buckets=8)
+    assert eng._stats_map() is not None
+    before = _jobs(spark)
+    df = eng.more_like_this("import def return the uniq_token_11", k=10)
+    assert _jobs(spark) == before
+    assert df.collect()
 
 
 def _spark_stats(spark, index_dir):

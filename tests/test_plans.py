@@ -37,17 +37,6 @@ def test_segment_scan_prunes(engine):
     assert "In(term" in pushed or "term" in pushed
 
 
-def test_exhaustive_plan_shape(engine):
-    """Exhaustive BM25: broadcast join for idf, partial+final hash
-    aggregate (map-side combine), TakeOrdered for global top-k (no
-    full sort)."""
-    plan = _plan(engine.search("import def"))
-    assert "BroadcastHashJoin" in plan
-    assert "partial_" in plan            # map-side combine
-    assert "TakeOrderedAndProject" in plan
-    assert "Sort " not in plan.replace("TakeOrdered", "")  # no global sort
-
-
 def test_wand_plan_shape(engine):
     """WAND: df folded in as a literal-map projection (no join at
     all when the driver stats map fits — round 8), one shuffle

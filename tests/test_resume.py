@@ -393,9 +393,11 @@ def test_tombstone_mask_cap(spark, tmp_path):
 
 
 def test_many_tombstones_no_plan_blowup(spark, tmp_path):
-    """10^5 tombstones: the exhaustive path anti-joins (no per-docID
-    literals in the plan) and the scorer mask stays within its cap."""
+    """10^5 tombstones: the AND scorer masks them with the sorted numpy
+    array in its task closure (no per-docID literals in the plan) and
+    ranks the oracle's hits over the live docs."""
     from auctus_spark.index.build import delete_docs
+    from auctus_spark.oracle import OracleIndex
 
     pdf = generate_corpus(200, min_tokens=10, max_tokens=40, vocab_size=300)
     out = str(tmp_path / "idx")
@@ -407,10 +409,67 @@ def test_many_tombstones_no_plan_blowup(spark, tmp_path):
     eng = SearchEngine(spark, out, term_buckets=4)
     plan = eng.search("import", k=50)._jdf.queryExecution().toString()
     assert "doc_id#" in plan and plan.count("CAST") < 500  # no literal list
-    got = [int(r.doc_id) for r in eng.search("import", k=50).collect()]
-    assert got and all(d % 2 == 1 for d in got)
-    got_w = [int(r.doc_id) for r in eng.search_wand("import", k=50).collect()]
-    assert got_w == got
+    # global stats keep counting deleted docs until a rebuild, so the
+    # oracle over ALL docs scores the live ones exactly
+    oracle = OracleIndex.build(
+        [(int(r.doc_id), r.content) for r in pdf.itertuples(index=False)])
+    want = [(d, s) for d, s in oracle.search("import", k=200)
+            if d % 2 == 1][:50]
+    got = [(int(r.doc_id), float(r.score))
+           for r in eng.search("import", k=50).collect()]
+    assert got and got == want
+
+
+def test_tombstones_mask_explain(spark, tmp_path):
+    """explain, explain_doc and MultiFieldEngine.explain_doc read the
+    postings through the engine's sorted tombstone mask: on delete_docs
+    copies, explain ranks the oracle's top-k with the victims removed
+    and no row names a victim, and a victim's explain tree is None
+    where the index before the deletes explained it."""
+    from auctus_spark.index.build import delete_docs
+    from auctus_spark.oracle import OracleIndex
+    from auctus_spark.query.bm25 import (MultiFieldEngine,
+                                         build_field_indexes)
+
+    pdf = generate_corpus(300, min_tokens=20, max_tokens=100, vocab_size=500)
+    corpus = spark.createDataFrame(pdf)
+    out = str(tmp_path / "idx")
+    IndexBuilder(spark, out, doc_bucket=128, chunk_docs=100,
+                 term_buckets=4).build(corpus)
+    fdirs = build_field_indexes(spark, corpus, str(tmp_path / "fields"),
+                                ["content", "path"], doc_bucket=128,
+                                chunk_docs=100, term_buckets=4)
+    boosts = {"content": 1.0, "path": 3.0}
+    oracle = OracleIndex.build(
+        [(int(r.doc_id), r.content) for r in pdf.itertuples(index=False)])
+    queries, k = ["import def", "the return"], 10
+    victims = set()
+    for q in queries:
+        top = oracle.search(q, k=k)
+        victims |= {top[0][0], top[len(top) // 2][0]}
+    pairs = [(q, v) for q in queries for v in sorted(victims)]
+    before = SearchEngine(spark, out, term_buckets=4)
+    mbefore = MultiFieldEngine(spark, fdirs, boosts, term_buckets=4)
+    assert all(before.explain_doc(q, v) is not None for q, v in pairs
+               if v in {d for d, _ in oracle.search(q, k=k)})
+    assert all(mbefore.explain_doc(q, v) is not None for q, v in pairs
+               if v in {d for d, _ in oracle.search(q, k=k)})
+    for d in [out, *fdirs.values()]:
+        delete_docs(spark, d, sorted(victims))
+    eng = SearchEngine(spark, out, term_buckets=4)
+    meng = MultiFieldEngine(spark, fdirs, boosts, term_buckets=4)
+    for q in queries:
+        want = [(d, s) for d, s in oracle.search(q, k=k + len(victims))
+                if d not in victims][:k]
+        rows = eng.explain(q, k=k).collect()
+        got = list(dict.fromkeys((int(r.doc_id), float(r.score))
+                                 for r in rows))
+        assert got == want, q
+        assert not {int(r.doc_id) for r in rows} & victims, q
+    for q, v in pairs:
+        assert eng.explain_doc(q, v) is None, (q, v)
+        for mode in ("most_fields", "cross_fields"):
+            assert meng.explain_doc(q, v, mode=mode) is None, (q, v, mode)
 
 
 def _assert_same_segments(spark, got_dir, want_dir):
