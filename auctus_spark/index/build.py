@@ -1,6 +1,7 @@
 """Inverted-index build: tokenize → compressed partial segments →
-JVM merge into a term-partitioned index.  Resumable per docID-range
-chunk.
+JVM merge into term-partitioned segment generations.  Resumable per
+docID-range chunk; appends write one new generation instead of
+rewriting the index.
 
 What Elasticsearch did for the reference (index documents into Lucene
 shards, ``lib_core/datamart_core/common.py:451-467``) becomes two Spark
@@ -19,14 +20,30 @@ boundary (the MapReduce local-indexing + merge construction):
    per-row Python anywhere), one on the partials output (token totals
    from segment metadata).  Written per *chunk* (fixed docID range) →
    resumable: chunks with lineage rows are skipped.
-2. **merge** — pure JVM: repartition partials by ``term_bucket``
-   (murmur3(term) % T) and sort by (term, bucket, doc_id_min) within
-   partitions, written ``partitionBy(term_bucket)``.  No Python, no
-   blob surgery: partials of one (term, bucket) are disjoint sorted
-   docID runs, so the query scorers concatenate them after decode.
-   Hot terms (df ~ 30% of corpus) are spread across doc buckets AND
-   across stage-1 tasks — no single task ever owns a hot term
-   (the salted-repartition requirement).
+2. **merge** — pure JVM: the partials of the chunks that no live
+   generation holds yet are repartitioned by ``term_bucket``
+   (murmur3(term) % T) into ONE new generation,
+   ``segments/gen=G/term_bucket=B``; the exchange is sized from the
+   bytes it moves.  No Python, no blob surgery: partials of one
+   (term, bucket) are disjoint sorted docID runs, also across
+   generations (chunks are disjoint docID ranges), so the query
+   scorers concatenate them after decode.  Hot terms (df ~ 30% of
+   corpus) are spread across doc buckets AND across stage-1 tasks —
+   no single task ever owns a hot term (the salted-repartition
+   requirement).
+
+Generations (log-structured, after Lucene's TieredMergePolicy and
+geometric partitioning): ``segments/_MANIFEST.json`` lists the live
+generations and, per generation, its chunks with their lineage
+fingerprints.  Spark's file listing skips ``_``-prefixed names, so
+``spark.read.parquet(segments)`` still reads a healthy index.  The
+manifest is written to a temporary name and renamed over the old one:
+that rename is an append's only commit point.  A generation written
+but never committed is swept by the next append.  When the live
+generations exceed :data:`MAX_LIVE_GENERATIONS`, the smallest ones are
+merged into one (segment rows in, segment rows out, so compaction's
+masking survives).  A fresh build is one generation, gen 0, and
+``compact`` rewrites every live generation into one.
 
 The partial-row layout (blobs, block offsets, avgdl-free block
 metadata, positions) is known to ``codec.py`` alone: the encode step
@@ -42,9 +59,13 @@ order and fails loudly; for arbitrarily-ordered input pass
 shuffle).  The query side additionally asserts run disjointness at
 decode time (``query/bm25.py:_group_partials``).
 
-Global stats discipline: N and avgdl come from the per-chunk lineage
-rows (finalize_stats), df/cf per term from segment metadata
-(finalize_term_stats) — global snapshots, required for rank identity.
+Global stats discipline: N and avgdl come from the manifest's chunk
+records (each chunk's lineage counts, less what compactions removed
+from it), df/cf per term from segment metadata — global snapshots,
+required for rank identity.  An append folds only its new chunks'
+(term, df, cf) aggregate into term_stats.  The stats table carries the
+manifest ``seq`` it describes and is written last; an engine refuses
+an index whose stats lag its manifest (:class:`UnfinishedAppendError`).
 
 Iceberg note: the sandbox has no Iceberg jars; tables are parquet
 directories with the same layout.  Lineage rows live in an ordinary
@@ -73,14 +94,29 @@ DEFAULT_TERM_BUCKETS = 64
 # changes; readers and resumed builds fail loudly on stale indexes
 # instead of misreading them.  v2: binary-packed block metadata,
 # marker-row-free lineage.  v3: optional per-posting position streams
-# (pos_blob/pos_off columns; empty when positions=False).
-FORMAT_VERSION = 3
+# (pos_blob/pos_off columns; empty when positions=False).  v4:
+# segment generations under a manifest; stats carry the manifest seq.
+FORMAT_VERSION = 4
+
+# Live generations past which the smallest ones are merged into one
+# (Lucene TieredMergePolicy's segmentsPerTier default).
+MAX_LIVE_GENERATIONS = 10
+
+MANIFEST = "_MANIFEST.json"
 
 
 class CompactionInProgressError(RuntimeError):
     """A compaction started but never finished: segments and stats may
     be inconsistent (compacted postings + pre-compaction N/df/avgdl
     would silently mis-score).  Raised on every open until resolved."""
+
+
+class UnfinishedAppendError(RuntimeError):
+    """The manifest commits a generation whose term_stats, dictionary
+    and stats are not written yet: scoring its postings with the old
+    N/df would silently mis-rank.  Raised on every engine open until
+    :meth:`IndexBuilder.finalize` (a rerun of the append) writes
+    them."""
 
 
 def check_not_compacting(index_dir: str) -> None:
@@ -153,6 +189,115 @@ def read_doc_buckets(index_dir: str) -> int | None:
             n += hi - lo + 1
             end = hi
     return n or None
+
+
+def read_manifest(index_dir: str) -> dict:
+    """The live-generation manifest: ``{"seq": int, "gens": {gen:
+    {"chunks": {chunk: record}, "bytes": int}}}`` with string keys
+    (JSON).  A chunk record is its lineage fingerprint plus the docs
+    and tokens compactions removed from it.  ``seq`` counts content
+    changes (appends, compactions), not merges.  An index with no
+    committed generation reads as seq 0 with no generations."""
+    p = os.path.join(IndexPaths(index_dir).segments, MANIFEST)
+    if not os.path.exists(p):
+        return {"seq": 0, "gens": {}}
+    with open(p) as f:
+        return json.load(f)
+
+
+def _commit_manifest(seg_dir: str, manifest: dict) -> None:
+    """Write ``manifest`` under a temporary name, then rename it over
+    the live one: the commit point of an append, a merge and (inside
+    its swapped directory) a compaction."""
+    os.makedirs(seg_dir, exist_ok=True)
+    tmp = os.path.join(seg_dir, MANIFEST + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump(manifest, f, sort_keys=True)
+    os.replace(tmp, os.path.join(seg_dir, MANIFEST))
+
+
+def _gen_dir(seg_dir: str, gen) -> str:
+    return os.path.join(seg_dir, f"gen={gen}")
+
+
+def read_segments(spark: SparkSession, index_dir: str,
+                  gens=None) -> DataFrame:
+    """The segment rows of the manifest's live generations (or of
+    ``gens``): uncommitted generation dirs are never read."""
+    seg = IndexPaths(index_dir).segments
+    if gens is None:
+        gens = read_manifest(index_dir)["gens"]
+    return spark.read.option("basePath", seg).parquet(
+        *[_gen_dir(seg, g) for g in sorted(gens, key=int)])
+
+
+def check_stats_current(index_dir: str, stats: dict) -> None:
+    """Raise :class:`UnfinishedAppendError` when ``stats`` (the row
+    :func:`read_stats` returns) describes an older manifest."""
+    seq = read_manifest(index_dir)["seq"]
+    if stats.get("seq") != seq:
+        raise UnfinishedAppendError(
+            f"index {index_dir} commits manifest seq {seq} but its "
+            f"stats describe seq {stats.get('seq')}: an append stopped "
+            "before its term_stats, dictionary and stats were written. "
+            "Re-run the append (or IndexBuilder.finalize()) to finish "
+            "it.")
+
+
+def manifest_stats(manifest: dict) -> tuple[int, int]:
+    """(N, total tokens) of the live generations: each chunk's lineage
+    counts less what compactions removed from it."""
+    n = total = 0
+    for entry in manifest["gens"].values():
+        for rec in entry["chunks"].values():
+            n += rec["n_docs"] - rec.get("removed_docs", 0)
+            total += rec["total_tokens"] - rec.get("removed_tokens", 0)
+    return n, total
+
+
+def _fingerprint(lineage_row: dict) -> dict:
+    """The lineage fields that identify a chunk's content: a chunk
+    whose lineage row differs from its manifest record was rebuilt."""
+    return {"n_docs": int(lineage_row["n_docs"]),
+            "total_tokens": int(lineage_row["total_tokens"] or 0),
+            "doc_id_min": int(lineage_row["doc_id_min"]),
+            "doc_id_max": int(lineage_row["doc_id_max"]),
+            "sha_rollup": str(int(lineage_row["sha_rollup"]))}
+
+
+def _dir_bytes(path: str) -> int:
+    return sum(os.path.getsize(os.path.join(r, f))
+               for r, _, fs in os.walk(path) for f in fs)
+
+
+def _advisory_bytes(spark: SparkSession) -> int:
+    """``spark.sql.adaptive.advisoryPartitionSizeInBytes`` in bytes."""
+    return spark.sparkContext._jvm.org.apache.spark.network.util \
+        .JavaUtils.byteStringAsBytes(spark.conf.get(
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+
+
+def _exchange_partitions(spark: SparkSession, nbytes: int,
+                         term_buckets: int) -> int:
+    """Partitions of a segment-writing exchange: the on-disk bytes it
+    moves over ``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
+    at least 1 and at most ``4 * term_buckets`` (past that, each
+    term_bucket almost surely has a task of its own)."""
+    return int(min(4 * term_buckets,
+                   max(1, -(-nbytes // _advisory_bytes(spark)))))
+
+
+def _write_generation(spark: SparkSession, rows: DataFrame, path: str,
+                      nbytes: int, term_buckets: int) -> None:
+    """Write segment rows carrying ``term_bucket`` as one generation:
+    an exchange on term_bucket sized from ``nbytes``, written
+    partitionBy(term_bucket), so each bucket is one file.  The files
+    are not term-sorted: the planned write sorts each task by
+    term_bucket alone."""
+    (rows.repartition(_exchange_partitions(spark, nbytes, term_buckets),
+                      "term_bucket")
+        .write.mode("overwrite").partitionBy("term_bucket")
+        .parquet(path))
 
 
 # block metadata is packed little-endian binary, not list<long>:
@@ -244,6 +389,11 @@ def _arrow_schema():
             ("pos_off", pa.binary()),
         ])
     return ARROW_PARTIAL_SCHEMA
+
+
+def _segment_cols() -> list[str]:
+    """Columns of a segment row: the partial row plus term_bucket."""
+    return list(_arrow_schema().names) + ["term_bucket"]
 
 
 def _tokenize_arrow(content, stem: bool = False):
@@ -498,6 +648,9 @@ class IndexBuilder:
         self.presort = presort
         self.stem = stem
         self.positions = positions
+        # what the last encode_segments committed, for the term-stats
+        # fold that follows it (finalize_term_stats_from_partials)
+        self._last_append: dict | None = None
 
     # ---------------- stage 1: tokenize+encode, chunked + resumable ---
 
@@ -684,93 +837,196 @@ class IndexBuilder:
         })
         pq.write_table(tbl, os.path.join(ldir, "lineage.parquet"))
 
-    def _read_partials(self) -> DataFrame:
-        return self.spark.read.option("basePath", self.paths.partials)\
-            .parquet(self.paths.partials + "/chunk=*")
+    def _read_partials(self, chunks) -> DataFrame:
+        """The partial rows of ``chunks``, with their ``term_bucket``."""
+        return (self.spark.read.option("basePath", self.paths.partials)
+                .parquet(*[os.path.join(self.paths.partials, f"chunk={c}")
+                           for c in sorted(chunks, key=int)])
+                .drop("chunk")
+                .withColumn("term_bucket", F.pmod(
+                    F.hash("term"), F.lit(self.term_buckets))))
 
-    # ---------------- stage 2: global statistics ----------------------
+    # ---------------- stage 2: merge into a new generation ------------
 
-    def finalize_stats(self) -> dict:
-        """Global (N, avgdl) aggregated from the per-chunk lineage
-        table — pure driver-side pyarrow, zero Spark jobs (the lineage
-        rows were observed during the chunk writes)."""
-        import pyarrow.dataset as pads
-        ds = pads.dataset(self.paths.lineage, format="parquet",
-                          partitioning="hive")
-        t = ds.to_table(columns=["n_docs", "total_tokens"])
-        n_docs = int(sum(t["n_docs"].to_pylist()))
-        total = int(sum(t["total_tokens"].to_pylist()))
-        return {"n_docs": n_docs,
-                "avgdl": _write_stats(self.paths, n_docs, total)}
+    def _plan(self) -> tuple[dict, dict]:
+        """(manifest, chunks to encode): every lineage chunk that no
+        live generation holds with the same lineage fingerprint — new
+        chunks, and chunks rebuilt since (the streaming tail chunk)."""
+        m = read_manifest(self.paths.base)
+        live = {c: rec for e in m["gens"].values()
+                for c, rec in e["chunks"].items()}
+        todo = {}
+        for c, row in self._lineage_rows().items():
+            fp, rec = _fingerprint(row), live.get(str(c), {})
+            if any(rec.get(k) != v for k, v in fp.items()):
+                todo[str(c)] = fp
+        return m, todo
 
-    # ---------------- stage 3: merge (pure JVM) -----------------------
+    def _sweep_uncommitted(self, m: dict) -> None:
+        """Remove generation dirs the manifest does not list: written
+        by an append or merge that stopped before its commit, or
+        merged away by one that stopped after it."""
+        seg = self.paths.segments
+        if not os.path.isdir(seg):
+            return
+        for name in os.listdir(seg):
+            if name.startswith("gen=") and name[4:] not in m["gens"]:
+                shutil.rmtree(os.path.join(seg, name), ignore_errors=True)
 
     def encode_segments(self) -> None:
-        """Merge partial segments into the global term-partitioned
-        index: exchange on term_bucket, written partitionBy(term_bucket).
-        No Python.  The files are not term-sorted: the planned write
-        sorts each task by term_bucket alone."""
-        parts = self._read_partials().drop("chunk")
-        parts = parts.withColumn(
-            "term_bucket", F.pmod(F.hash("term"), F.lit(self.term_buckets)))
-        # 4x the bucket count: hashing exactly `term_buckets` keys into
-        # `term_buckets` partitions collides (balls-into-bins → ~3
-        # buckets in one task, a 3x sort/write straggler — guide §2.5
-        # "synthetic partitioning keys with too few distinct values");
-        # with 4x partitions each bucket almost surely lands alone,
-        # empty partitions cost nothing, and each bucket still writes
-        # exactly one file into its partitionBy dir.
-        n_part = max(self.spark.sparkContext.defaultParallelism,
-                     4 * self.term_buckets)
-        (parts.repartition(n_part, "term_bucket")
-            .write.mode("overwrite").partitionBy("term_bucket")
-            .parquet(self.paths.segments))
+        """Encode the chunks no live generation holds as ONE new
+        generation and commit it to the manifest; no Python.  New
+        chunks are read from their partials, so an append moves only
+        its own rows.  A generation holding a rebuilt chunk is
+        rewritten into the new one without that chunk's old rows (rows
+        never span chunks).  Then merges generations by tier."""
+        check_not_compacting(self.paths.base)
+        m, todo = self._plan()
+        self._sweep_uncommitted(m)
+        self._last_append = None
+        if todo:
+            stale = [g for g, e in m["gens"].items()
+                     if not todo.keys().isdisjoint(e["chunks"])]
+            rows = self._read_partials(todo).select(*_segment_cols())
+            nbytes = sum(_dir_bytes(os.path.join(self.paths.partials,
+                                                 f"chunk={c}"))
+                         for c in todo)
+            chunks = dict(todo)
+            if stale:
+                old = read_segments(self.spark, self.paths.base, stale)
+                old = old.filter(~F.expr(
+                    f"doc_id_min div {self.chunk_docs}").isin(
+                        [int(c) for c in todo]))
+                rows = rows.unionByName(old.select(*_segment_cols()))
+                nbytes += sum(m["gens"][g]["bytes"] for g in stale)
+                for g in stale:
+                    chunks.update({c: rec for c, rec in
+                                   m["gens"][g]["chunks"].items()
+                                   if c not in todo})
+            new = self._replace_generations(m, stale, rows, nbytes, chunks,
+                                            m["seq"] + 1)
+            self._last_append = {"base": m["seq"], "seq": new["seq"],
+                                 "chunks": list(todo),
+                                 "replaced": bool(stale)}
+            m = new
+        self._merge_tiers(m)
+
+    def _replace_generations(self, m: dict, drop: list[str],
+                             rows: DataFrame, nbytes: int, chunks: dict,
+                             seq: int) -> dict:
+        """Write ``rows`` as one new generation holding ``chunks`` in
+        place of the generations ``drop``, commit the manifest with
+        ``seq``, then delete the dropped dirs.  Returns the manifest."""
+        seg = self.paths.segments
+        gen = str(max(map(int, m["gens"]), default=-1) + 1)
+        path = _gen_dir(seg, gen)
+        _write_generation(self.spark, rows, path, nbytes,
+                          self.term_buckets)
+        gens = {g: e for g, e in m["gens"].items() if g not in drop}
+        gens[gen] = {"chunks": chunks, "bytes": _dir_bytes(path)}
+        new = {"seq": seq, "gens": gens}
+        _commit_manifest(seg, new)
+        for g in drop:
+            shutil.rmtree(_gen_dir(seg, g), ignore_errors=True)
+        return new
+
+    def _merge_tiers(self, m: dict) -> None:
+        """While more than :data:`MAX_LIVE_GENERATIONS` generations are
+        live, merge the smallest ``MAX_LIVE_GENERATIONS`` (at least 2)
+        into one.  A merge reads segment rows (compaction's masking
+        survives) and keeps the content, so the manifest seq and the
+        derived tables stay as they are."""
+        while len(m["gens"]) > MAX_LIVE_GENERATIONS:
+            gens = m["gens"]
+            small = sorted(gens, key=lambda g: (gens[g]["bytes"], int(g))
+                           )[:max(2, MAX_LIVE_GENERATIONS)]
+            m = self._replace_generations(
+                m, small, read_segments(self.spark, self.paths.base,
+                                        small).select(*_segment_cols()),
+                sum(gens[g]["bytes"] for g in small),
+                {c: rec for g in small
+                 for c, rec in gens[g]["chunks"].items()}, m["seq"])
+
+    # ---------------- stage 3: global statistics ----------------------
+
+    def _stats_seq(self) -> int | None:
+        try:
+            return read_stats(self.paths.base).get("seq")
+        except (OSError, ValueError, IndexError):
+            return None
+
+    def finalize_stats(self) -> dict:
+        """Global (N, avgdl) of the live generations, from the
+        manifest's chunk records — driver-side, zero Spark jobs —
+        written with the manifest seq.  That seq marks term_stats and
+        the dictionary current, so this runs after they are written."""
+        m = read_manifest(self.paths.base)
+        n_docs, total = manifest_stats(m)
+        return {"n_docs": n_docs,
+                "avgdl": _write_stats(self.paths, n_docs, total, m["seq"])}
 
     def finalize_term_stats(self) -> None:
-        """(term, df, cf) from segment metadata — partials of one term
-        cover disjoint docID ranges, so df = sum(n_docs).  Reads the
-        SEGMENTS table: the variant compaction needs (post-delete
-        segments are the source of truth there)."""
+        """(term, df, cf) from the live segments' metadata — partials
+        of one term cover disjoint docID ranges, so df = sum(n_docs) —
+        then the dictionary and stats.  The segments are the source of
+        truth after a compaction, and this is the recovery path of an
+        append that stopped after its commit."""
         _write_term_stats(self.spark, self.paths,
-                          self.spark.read.parquet(self.paths.segments))
+                          read_segments(self.spark, self.paths.base))
+        self.finalize_stats()
 
     def finalize_term_stats_from_partials(self) -> None:
-        """Same (term, df, cf) table, aggregated from the PARTIALS
-        instead of the merged segments.  ``encode_segments`` is
-        row-preserving (exchange + write, no row merge), so the
-        two inputs hold identical (term, n_docs, tf_sum) rows and the
-        aggregates are equal — but this variant does not depend on the
-        segment write having finished, so the fresh-build path can run
-        it CONCURRENTLY with ``encode_segments`` (guide §2.6: overlap
-        independent jobs; both read the partials, and the stats job's
-        tasks back-fill the merge stage's straggler tail)."""
-        parts = self._read_partials().drop("chunk").withColumn(
-            "term_bucket", F.pmod(F.hash("term"), F.lit(self.term_buckets)))
-        _write_term_stats(self.spark, self.paths, parts)
+        """Bring term_stats, the dictionary and stats up to the
+        manifest from the partials of the generation
+        :meth:`encode_segments` just committed.  After an append, that
+        generation's (term, df, cf) aggregate is folded into the
+        existing term_stats: df and cf are sums over disjoint docID
+        ranges.  A fresh build has no term_stats and aggregates its
+        chunks' partials, which hold the same rows as the segments.
+        Any other lagging state (a rebuilt chunk replaced rows, or an
+        earlier run stopped midway) is recomputed from the live
+        segments; an index whose stats are current is left alone."""
+        plan, self._last_append = self._last_append, None
+        m = read_manifest(self.paths.base)
+        cur = self._stats_seq()
+        if cur == m["seq"]:
+            return
+        if (plan is None or plan["seq"] != m["seq"] or plan["replaced"]
+                or plan["base"] not in (0, cur)):
+            self.finalize_term_stats()
+            return
+        base = None
+        if plan["base"]:
+            base = self.spark.read.parquet(self.paths.term_stats)
+        _write_term_stats(self.spark, self.paths,
+                          self._read_partials(plan["chunks"]), base=base)
+        self.finalize_stats()
 
     # ---------------- public API --------------------------------------
 
+    def finalize(self) -> dict:
+        """Make every tokenized chunk searchable: encode the chunks no
+        live generation holds (:meth:`encode_segments`), then write
+        term_stats, the dictionary and stats
+        (:meth:`finalize_term_stats_from_partials`).  Finishes an
+        append that stopped midway; a no-op on an up-to-date index.
+        Returns the global (N, avgdl)."""
+        self.encode_segments()
+        self.finalize_term_stats_from_partials()
+        row = read_stats(self.paths.base)
+        return {"n_docs": int(row["n_docs"]), "avgdl": float(row["avgdl"])}
+
     def build(self, corpus: DataFrame, resume: bool = True) -> dict:
-        """End-to-end build.  ``resume=True`` skips chunks with lineage;
-        stats + segments are (re)finalized over all chunks present.
-        The segment merge and the term-stats finalize are independent
-        reads of the partials, so they run as two concurrent driver
-        threads — the FIFO scheduler back-fills the merge's tail with
-        stats tasks (guide §2.6).
+        """End-to-end build: tokenize every chunk (``resume=True``
+        skips chunks with lineage), then :meth:`finalize`.  On an
+        existing index this is an append of one new generation.
 
         (Round-8 audit note: a python-worker prewarm job overlapped
         with the chunk-count prep was measured and REJECTED — worker
         fork+imports are <1 s here and the cold-session gap is JVM
         JIT/codegen, which a warm-up job merely moves, not hides.)"""
         self.tokenize_chunks(corpus, resume=resume)
-        stats = self.finalize_stats()
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_seg = pool.submit(self.encode_segments)
-            f_ts = pool.submit(self.finalize_term_stats_from_partials)
-            f_seg.result()
-            f_ts.result()
-        return stats
+        return self.finalize()
 
     def verify_lineage(self, corpus: DataFrame) -> bool:
         """Per-row invariant (BASELINE.json): sha256(content) rollup of
@@ -785,9 +1041,11 @@ class IndexBuilder:
                 and int(expect["n"]) == int(lin["n"]))
 
 
-def _write_stats(paths: IndexPaths, n_docs: int, total: int) -> float:
+def _write_stats(paths: IndexPaths, n_docs: int, total: int,
+                 seq: int) -> float:
     """Write the one-row global stats table (read back by
-    :func:`read_stats`) with pyarrow; returns avgdl."""
+    :func:`read_stats`) with pyarrow, stamped with the manifest ``seq``
+    it describes; returns avgdl."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     avgdl = total / n_docs if n_docs else 0.0
@@ -795,22 +1053,35 @@ def _write_stats(paths: IndexPaths, n_docs: int, total: int) -> float:
     pq.write_table(pa.table({
         "n_docs": pa.array([n_docs], pa.int64()),
         "avgdl": pa.array([avgdl], pa.float64()),
-        "total_tokens": pa.array([total], pa.int64())}),
+        "total_tokens": pa.array([total], pa.int64()),
+        "seq": pa.array([seq], pa.int64())}),
         os.path.join(paths.stats, "stats.parquet"))
     return avgdl
 
 
 def _write_term_stats(spark: SparkSession, paths: IndexPaths,
-                      rows: DataFrame, between=None) -> None:
+                      rows: DataFrame, between=None,
+                      base: DataFrame | None = None) -> None:
     """The (term, df, cf) table from partial rows carrying a
     ``term_bucket`` column — partials of one term cover disjoint docID
     ranges, so df = sum(n_docs) — then the term dictionary derived
-    from it.  ``between`` (compaction's fault injection) runs after
-    the term_stats write and before the dictionary's."""
-    (rows.groupBy("term", "term_bucket")
-        .agg(F.sum("n_docs").alias("df"), F.sum("tf_sum").alias("cf"))
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(paths.term_stats))
+    from it.  With ``base`` (the existing term_stats), the rows' counts
+    are added to it: the new table is written aside and swapped in.
+    ``between`` (compaction's fault injection) runs after the
+    term_stats write and before the dictionary's."""
+    cols = rows.select("term", "term_bucket", F.col("n_docs").alias("df"),
+                       F.col("tf_sum").alias("cf"))
+    out = paths.term_stats
+    if base is not None:
+        cols = cols.unionByName(base.select("term", "term_bucket", "df",
+                                            "cf"))
+        out += "_next"
+    (cols.groupBy("term", "term_bucket")
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+        .write.mode("overwrite").partitionBy("term_bucket").parquet(out))
+    if base is not None:
+        shutil.rmtree(paths.term_stats)
+        os.rename(out, paths.term_stats)
     if between is not None:
         between()
     write_term_dict(spark, paths)
@@ -837,14 +1108,28 @@ def write_term_dict(spark: SparkSession, paths: IndexPaths,
     be newer or older than the dictionary it mirrors; the engine
     falls back to the term_stats scan when the dir is absent or has
     no _SUCCESS (mid-crash), so staleness is impossible and loss is
-    only a de-optimization."""
+    only a de-optimization.
+
+    A dictionary smaller than one advisory shuffle partition
+    (``spark.sql.adaptive.advisoryPartitionSizeInBytes``) is sorted in
+    one task and cut into the same ``n_files`` contiguous files by row
+    count: the same disjoint sorted ranges, without the range
+    exchange's sampling job and shuffle."""
+    import pyarrow.dataset as pads
     ts = spark.read.parquet(paths.term_stats)
     if n_files is None:
         n_files = max(8, min(64, spark.sparkContext.defaultParallelism))
-    (ts.select("term", "term_bucket", "df")
-        .repartitionByRange(n_files, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite").parquet(paths.term_dict))
+    rows = ts.select("term", "term_bucket", "df")
+    if _dir_bytes(paths.term_stats) <= _advisory_bytes(spark):
+        n_rows = pads.dataset(paths.term_stats, format="parquet",
+                              partitioning="hive").count_rows()
+        writer = (rows.coalesce(1).sortWithinPartitions("term").write
+                  .option("maxRecordsPerFile",
+                          max(1, -(-n_rows // n_files))))
+    else:
+        writer = (rows.repartitionByRange(n_files, "term")
+                  .sortWithinPartitions("term").write)
+    writer.mode("overwrite").parquet(paths.term_dict)
 
 
 def export_metrics_tables(spark: SparkSession, index_dir: str,
@@ -893,8 +1178,8 @@ MAX_TOMBSTONE_MASK = 1 << 22
 def delete_docs(spark: SparkSession, index_dir: str,
                 doc_ids: list[int]) -> None:
     """Mark documents deleted.  Like Lucene, postings stay in place and
-    global stats (N, df, avgdl) keep counting deleted docs until a
-    rebuild; scorers mask tombstoned candidates.  An UPDATE is
+    global stats (N, df, avgdl) keep counting deleted docs until
+    :func:`compact`; scorers mask tombstoned candidates.  An UPDATE is
     delete(old_id) + incremental append of the new version under a new
     docID (the reference re-profiles a dataset the same way: delete +
     reindex, common.py:delete_dataset_from_index)."""
@@ -954,9 +1239,10 @@ def compact(spark: SparkSession, index_dir: str,
     """Remove tombstoned documents physically.
 
     Pass 1 collects (deleted doc, dl) pairs from the postings (to fix
-    N/avgdl); pass 2 rewrites every partial with tombstoned postings
-    masked (positions preserved) and swaps the segments dir crash-
-    safely: a ``_COMPACTING`` marker makes every open fail loudly
+    N/avgdl); pass 2 rewrites every live generation's rows, tombstoned
+    postings masked (positions preserved), into ONE generation, gen 0,
+    with its manifest, and swaps the segments dir crash-safely: a
+    ``_COMPACTING`` marker makes every open fail loudly
     until segments, stats and term_stats are all committed, and the
     old segments are renamed aside (recoverable) rather than deleted
     before the new ones land.  Tombstones cleared last.
@@ -966,7 +1252,9 @@ def compact(spark: SparkSession, index_dir: str,
     compaction physically removes is appended there, and later
     compactions consult it so a re-delete of an already-removed docID
     (idempotent-delete retry) is a no-op instead of decrementing
-    N/avgdl a second time."""
+    N/avgdl a second time.  The new manifest records, per chunk, the
+    docs and tokens removed from it: N and avgdl are computed from
+    those records, so a later append keeps the removals."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -987,7 +1275,8 @@ def compact(spark: SparkSession, index_dir: str,
     if tomb.size == 0:
         return {"removed_docs": 0}
     positions = read_analyzer(index_dir).get("positions", False)
-    segs = spark.read.parquet(paths.segments)
+    manifest = read_manifest(index_dir)
+    segs = read_segments(spark, index_dir, manifest["gens"])
 
     lo, hi = int(tomb.min()), int(tomb.max())
 
@@ -1017,26 +1306,23 @@ def compact(spark: SparkSession, index_dir: str,
                     .mapInPandas(dropped_dl, schema="doc_id long, dl long")
                     .groupBy("doc_id").agg(F.first("dl").alias("dl"))
                     .collect())
-    found = np.array(sorted(int(r["doc_id"]) for r in dropped_rows),
-                     dtype=np.int64)
-    tok_removed = int(sum(int(r["dl"]) for r in dropped_rows))
+    dropped_dl = {int(r["doc_id"]): int(r["dl"]) for r in dropped_rows}
+    found = np.array(sorted(dropped_dl), dtype=np.int64)
+    tok_removed = sum(dropped_dl.values())
     # Zero-token docs were counted in N at build but never appear in
-    # postings.  Lineage decides existence: a tombstone inside a DENSE
-    # chunk range (n_docs == max-min+1) certainly existed.  Residual
+    # postings.  The chunk records decide existence: a tombstone inside
+    # a DENSE chunk range (n_docs == max-min+1) certainly existed.  Residual
     # (documented): an empty doc in a SPARSE docID range cannot be
     # distinguished from a never-existing docID without per-doc state,
     # and is not subtracted — sequential-ID ingest (the supported
     # pipeline, ids.sequential_index) always produces dense chunks.
     import pyarrow.dataset as pads
-    lin_t = pads.dataset(paths.lineage, format="parquet",
-                         partitioning="hive").to_table(
-        columns=["n_docs", "doc_id_min", "doc_id_max"])
+    chunk_recs = {c: rec for e in manifest["gens"].values()
+                  for c, rec in e["chunks"].items()}
     in_dense = np.zeros(tomb.size, dtype=bool)
-    for i in range(lin_t.num_rows):
-        cn = lin_t["n_docs"][i].as_py()
-        cmin = lin_t["doc_id_min"][i].as_py()
-        cmax = lin_t["doc_id_max"][i].as_py()
-        if cn == cmax - cmin + 1:
+    for rec in chunk_recs.values():
+        cmin, cmax = rec["doc_id_min"], rec["doc_id_max"]
+        if rec["n_docs"] == cmax - cmin + 1:
             in_dense |= (tomb >= cmin) & (tomb <= cmax)
     # Liveness guard: lineage describes the ORIGINAL ingest, so a
     # docID already removed by a PREVIOUS compaction still sits in a
@@ -1099,14 +1385,23 @@ def compact(spark: SparkSession, index_dir: str,
                 schema=rb.schema)
 
     tmp = paths.segments + "_compacting"
-    out_cols = list(_arrow_schema().names) + ["term_bucket"]
-    (segs.select(*out_cols)
-        .mapInArrow(rewrite, schema=PARTIAL_SCHEMA + ", term_bucket int")
-        .repartition(max(spark.sparkContext.defaultParallelism,
-                         min(term_buckets, 64)), "term_bucket")
-        .write.mode("overwrite").partitionBy("term_bucket").parquet(tmp))
-    # Read the pre-compaction stats BEFORE any swap step.
-    old = read_stats(index_dir)
+    _write_generation(
+        spark, segs.select(*_segment_cols()).mapInArrow(
+            rewrite, schema=PARTIAL_SCHEMA + ", term_bucket int"),
+        _gen_dir(tmp, 0),
+        sum(e["bytes"] for e in manifest["gens"].values()), term_buckets)
+    # removed docs and tokens, recorded per chunk in the new manifest
+    newly = np.union1d(found, tomb[existed_empty])
+    for d in newly.tolist():
+        rec = next(r for r in chunk_recs.values()
+                   if r["doc_id_min"] <= d <= r["doc_id_max"])
+        rec["removed_docs"] = rec.get("removed_docs", 0) + 1
+        rec["removed_tokens"] = (rec.get("removed_tokens", 0)
+                                 + dropped_dl.get(d, 0))
+    compacted = {"seq": manifest["seq"] + 1,
+                 "gens": {"0": {"chunks": chunk_recs,
+                                "bytes": _dir_bytes(_gen_dir(tmp, 0))}}}
+    _commit_manifest(tmp, compacted)
     # Crash-safe swap.  Everything the remaining steps mutate is
     # snapshotted ALONGSIDE the old segments — stats are decremented,
     # tombstones cleared and removed_docs appended below, so restoring
@@ -1142,7 +1437,6 @@ def compact(spark: SparkSession, index_dir: str,
     # rollback_compaction(), which restores segments/stats/tombstones
     # /removed_docs together from the *_old snapshots and re-runs
     # compact() from scratch.
-    newly = np.union1d(found, tomb[existed_empty])
     if newly.size:
         os.makedirs(paths.removed, exist_ok=True)
         seq = len(os.listdir(paths.removed))
@@ -1151,10 +1445,9 @@ def compact(spark: SparkSession, index_dir: str,
     _crash("removed_docs")
 
     # refresh stats: N/avgdl over LIVE docs; term_stats from segments
-    _write_stats(paths, int(old["n_docs"]) - n_removed,
-                 int(old["total_tokens"]) - tok_removed)
+    _write_stats(paths, *manifest_stats(compacted), compacted["seq"])
     _crash("stats")
-    _write_term_stats(spark, paths, spark.read.parquet(paths.segments),
+    _write_term_stats(spark, paths, read_segments(spark, index_dir),
                       between=lambda: _crash("term_stats"))
     _crash("term_dict")
     shutil.rmtree(tomb_dir, ignore_errors=True)
@@ -1224,5 +1517,5 @@ def rollback_compaction(spark: SparkSession, index_dir: str) -> None:
     else:
         # the crashed run created removed_docs; pre-compaction had none
         shutil.rmtree(paths.removed, ignore_errors=True)
-    _write_term_stats(spark, paths, spark.read.parquet(paths.segments))
+    _write_term_stats(spark, paths, read_segments(spark, index_dir))
     os.remove(marker)

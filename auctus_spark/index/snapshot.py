@@ -45,15 +45,17 @@ def _sha256_file(path: str) -> str:
     return h.hexdigest()
 
 
-_SWAP_SUFFIXES = ("_old", "_restoring", "_replaced", "_compacting")
+_SWAP_SUFFIXES = ("_old", "_restoring", "_replaced", "_compacting",
+                  "_next")
 
 
 def _walk_files(root: str) -> list[str]:
     """Relative paths of every regular file under ``root``, sorted
     (deterministic manifest), skipping Spark _SUCCESS/.crc noise and
     crash-recovery leftovers (``*_old`` compaction snapshots,
-    ``*_restoring``/``*_replaced`` restore staging) — those are
-    transient swap state, never part of a consistent index."""
+    ``*_restoring``/``*_replaced`` restore staging, a term-stats
+    fold's ``*_next`` table) — those are transient swap state, never
+    part of a consistent index."""
     out = []
     for dirpath, dirs, files in os.walk(root):
         dirs[:] = [d for d in dirs

@@ -355,17 +355,21 @@ class SearchEngine:
                 f"index at {index_dir} has layout "
                 f"v{v if v is not None else '<unversioned>'}; this "
                 f"engine reads v{FORMAT_VERSION} — rebuild the index")
-        from ..index.build import read_analyzer, read_doc_buckets, read_stats
+        from ..index.build import (check_stats_current, read_analyzer,
+                                   read_doc_buckets, read_segments,
+                                   read_stats)
         self.stem = bool(read_analyzer(index_dir).get("stem", False))
         row = read_stats(index_dir)
+        check_stats_current(index_dir, row)
         self.n_docs = int(row["n_docs"])
         self.avgdl = float(row["avgdl"])
         self.total_tokens = int(row.get("total_tokens", 0))
         self._vocab_size_cache: int | None = None
         # open the index tables ONCE: spark.read.parquet lists files and
         # reads footers eagerly, so per-query re-opens dominate latency;
-        # partition/row-group pruning still applies per query.
-        self._seg_df = spark.read.parquet(self.paths.segments)
+        # partition/row-group pruning still applies per query.  Only
+        # the manifest's live generations are read.
+        self._seg_df = read_segments(spark, index_dir)
         self._ts_df = spark.read.parquet(self.paths.term_stats)
         # ... and name them ONCE: a query's input plan is one spark.sql
         # text over these views (one py4j call instead of one per
@@ -712,31 +716,32 @@ class SearchEngine:
                 .select("doc_id",
                         F.lit(float(boost)).alias("score")))
 
-    def _flat_postings(self, terms: list[str]) -> DataFrame:
-        """Decode the query terms' postings to flat (term, doc_id, tf,
-        dl) rows, tombstones masked — the explain surface's input."""
-        segs = self._segments_for(terms)
-        tomb = self.tombstones
+    def _flat_postings(self, terms: list[str],
+                       docs: np.ndarray) -> DataFrame:
+        """(term, doc_id, tf, dl) of the query terms' postings of the
+        sorted docIDs ``docs``, tombstones masked — the explain
+        surface's input.  Only rows whose docID range meets ``docs``
+        are read, and only their blocks that can hold one are decoded
+        (``codec.postings_for``)."""
+        segs = (self._segments_for(terms, self._SEG_COLS)
+                .filter(self._doc_range_pred(docs.tolist())))
+        want = docs[~tombstoned(docs, self.tombstones)]
 
         def decode(batches):
             for pdf in batches:
                 outs = []
-                for r in pdf.itertuples(index=False):
-                    doc_ids, tfs, dls = codec.decode_row(
-                        r.docs_blob, r.tfs_blob, r.dls_blob)
-                    if tomb.size:
-                        keep = ~tombstoned(doc_ids, tomb)
-                        doc_ids, tfs, dls = (doc_ids[keep], tfs[keep],
-                                             dls[keep])
-                    outs.append(pd.DataFrame(
-                        {"term": r.term, "doc_id": doc_ids,
-                         "tf": tfs, "dl": dls}))
+                for r in pdf.to_dict("records"):
+                    doc_ids, tfs, dls = codec.postings_for(r, want)
+                    keep = np.isin(doc_ids, want)
+                    if keep.any():
+                        outs.append(pd.DataFrame(
+                            {"term": r["term"], "doc_id": doc_ids[keep],
+                             "tf": tfs[keep], "dl": dls[keep]}))
                 if outs:
                     yield pd.concat(outs, ignore_index=True)
 
-        return (segs.select("term", "docs_blob", "tfs_blob", "dls_blob")
-                .mapInPandas(decode, schema="term string, doc_id long, "
-                                            "tf long, dl long"))
+        return segs.mapInPandas(decode, schema="term string, doc_id long, "
+                                               "tf long, dl long")
 
     # ---------------- explain (ES _explain analog) --------------------
     def explain(self, query: str, k: int = 10) -> DataFrame:
@@ -753,7 +758,10 @@ class SearchEngine:
         stats = self.term_stats(terms)
         if not terms or any(t not in stats for t in terms):
             return no_rows(self.spark, schema)  # AND: no hits
-        top = self.search(query, k)
+        # the k hits first: their docIDs bound the posting decode
+        top = self.search(query, k).toPandas()
+        if top.empty:
+            return no_rows(self.spark, schema)
         factors = F.broadcast(self.spark.createDataFrame(
             pd.DataFrame({"term": terms,
                           "df": [stats[t] for t in terms],
@@ -763,8 +771,10 @@ class SearchEngine:
                    (F.col("tf") + F.lit(K1) *
                     (F.lit(1.0 - B) +
                      F.lit(B) * F.col("dl") / F.lit(self.avgdl))))
-        return (self._flat_postings(terms)
-                .join(F.broadcast(top), "doc_id")
+        docs = np.sort(top["doc_id"].to_numpy(dtype=np.int64))
+        return (self._flat_postings(terms, docs)
+                .join(F.broadcast(self.spark.createDataFrame(
+                    top, "doc_id long, score double")), "doc_id")
                 .join(factors, "term")
                 .withColumn("tf_norm", tf_norm)
                 .withColumn("contribution",
@@ -783,9 +793,9 @@ class SearchEngine:
         if not terms:
             return None
         stats = self.term_stats(terms)
-        rows = (self._flat_postings([t for t in terms if t in stats])
-                .filter(F.col("doc_id") == doc_id).collect()
-                if stats else [])
+        rows = (self._flat_postings([t for t in terms if t in stats],
+                                    np.array([doc_id], dtype=np.int64))
+                .collect() if stats else [])
         per_term = {r["term"]: r for r in rows}
         if not per_term:
             return None
@@ -1061,9 +1071,12 @@ class SearchEngine:
         doc bucket in between.  Above ``_MAX_DOC_RANGE_ORS`` runs the
         envelope is the documented fallback (an OR chain that long
         costs more in plan than it prunes).  The OR of range
-        conjuncts pushes to the parquet row-group stats.  df joins
-        from the term-stats scan — no full-corpus recompute.
-        Tombstoned docs return nothing, like ES after delete."""
+        conjuncts pushes to the parquet row-group stats.  The vectors
+        are collected (one response, like ES's) and df is taken for
+        their terms alone: from the driver stats map when it is loaded,
+        else from a term-pruned term_stats scan (:meth:`term_stats`) —
+        never a join with the whole table.  Tombstoned docs return
+        nothing, like ES after delete."""
         empty = "doc_id long, term string, tf long, df long"
         want = _mask_tombstones(
             np.array(sorted({int(d) for d in doc_ids}), dtype=np.int64),
@@ -1091,11 +1104,12 @@ class SearchEngine:
                     yield pd.concat(outs, ignore_index=True)
 
         vecs = segs.mapInPandas(
-            decode, schema="doc_id long, term string, tf long")
-        stats = self._ts_df.select("term", "df")
-        return (vecs.join(stats, "term")
-                .select("doc_id", "term", F.col("tf").cast("long"),
-                        F.col("df").cast("long")))
+            decode, schema="doc_id long, term string, tf long").toPandas()
+        if vecs.empty:
+            return no_rows(self.spark, empty)
+        stats = self.term_stats(vecs["term"].unique().tolist())
+        vecs["df"] = vecs["term"].map(stats).astype(np.int64)
+        return self.spark.createDataFrame(vecs, empty)
 
     def suggest_terms(self, text: str, size: int = 5,
                       max_edits: int = 2, prefix_length: int = 1,
@@ -1966,8 +1980,8 @@ class MultiFieldEngine:
             live = [t for t in terms if t in stats[f]]
             if not live:
                 continue
-            for r in (self.engines[f]._flat_postings(live)
-                      .filter(F.col("doc_id") == doc_id).collect()):
+            for r in self.engines[f]._flat_postings(
+                    live, np.array([doc_id], dtype=np.int64)).collect():
                 rows[(f, r["term"])] = {"tf": int(r["tf"]),
                                         "dl": int(r["dl"])}
         if not rows:

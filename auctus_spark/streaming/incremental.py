@@ -6,9 +6,14 @@ resumable BATCH; this module adds the streaming analogue on top of the
 chunked builder:
 
 - :func:`incremental_update` — batch: tokenize only the chunks whose
-  lineage rows are missing (new doc ranges), then re-finalize stats +
-  segments.  New docs land in new docID ranges → new chunks → old
-  chunks untouched (this is why chunking is by fixed docID range).
+  lineage rows are missing (new doc ranges), then
+  :meth:`IndexBuilder.finalize`: the new chunks' partials become ONE
+  new segment generation, committed by the manifest, and their
+  (term, df, cf) aggregate is folded into term_stats.  Older
+  generations are not read or rewritten (until a tiered merge), so an
+  append costs what it adds, not what the index holds.  New docs land
+  in new docID ranges → new chunks → old chunks untouched (this is
+  why chunking is by fixed docID range).
 - :class:`StreamingIndexer` — Structured Streaming ``foreachBatch``
   wrapper: each micro-batch of new documents is appended through the
   same chunk path, giving exactly-once-per-chunk semantics via the
@@ -18,10 +23,12 @@ chunked builder:
   ``tail_buffer`` parquet dir under the index, and an append that
   lands inside that chunk rebuilds it from (buffer ∪ new rows) —
   delete the chunk's partials+lineage, re-tokenize, lineage committed
-  last.  The buffer is bounded by ``chunk_docs`` raw rows (pick a
-  smaller ``chunk_docs`` for fine-grained streams); appends into any
-  OLDER committed chunk still fail loudly (their raw rows are gone —
-  the exactly-once contract from round 2 stands).
+  last.  The rebuilt chunk's lineage no longer matches its manifest
+  record, so the next finalize rewrites the generation holding it
+  without its old rows.  The buffer is bounded by ``chunk_docs`` raw
+  rows (pick a smaller ``chunk_docs`` for fine-grained streams);
+  appends into any OLDER committed chunk still fail loudly (their raw
+  rows are gone — the exactly-once contract from round 2 stands).
 
 Windowed/watermarked aggregates are demonstrated by
 :func:`streaming_event_counts` over the events table (Auctus itself
@@ -38,31 +45,22 @@ from ..index.build import IndexBuilder
 
 def incremental_update(builder: IndexBuilder, new_docs: DataFrame) -> dict:
     """Append new documents (strictly increasing doc_id ranges) to an
-    existing index: build missing chunks, refresh global stats and
-    segments.  Already-indexed chunks are skipped via lineage."""
+    existing index: tokenize the missing chunks, then write them as
+    one new generation with its term_stats, dictionary and stats
+    (:meth:`IndexBuilder.finalize`).  Already-indexed chunks are
+    skipped via lineage, so a rerun after a crash finishes the append
+    exactly once."""
     builder.tokenize_chunks(new_docs, resume=True)
-    stats = builder.finalize_stats()
-    # same concurrent finalize as IndexBuilder.build (guide §2.6):
-    # segment merge and term-stats aggregate are independent reads of
-    # the partials (the merge is row-preserving, so the from-partials
-    # stats are identical to the post-merge ones; compaction keeps the
-    # invariant because it rewrites partials with the same tombstone
-    # mask it applies to segments)
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_seg = pool.submit(builder.encode_segments)
-        f_ts = pool.submit(builder.finalize_term_stats_from_partials)
-        f_seg.result()
-        f_ts.result()
-    return stats
+    return builder.finalize()
 
 
 class StreamingIndexer:
     """foreachBatch sink: micro-batches of corpus rows → chunked index.
 
     Stats/segments finalize is deferred to :meth:`finalize` (cheap
-    per-batch appends, one consolidation) — the streaming/batch-duality
-    pattern: the stream only ever runs stage 1.
+    per-batch appends, one new generation per finalize) — the
+    streaming/batch-duality pattern: the stream only ever runs
+    stage 1.
 
     ``buffer_tail=True`` (default) enables sub-chunk appends: the open
     tail chunk's raw rows are kept in ``<index>/tail_buffer/chunk=N``
@@ -234,16 +232,10 @@ class StreamingIndexer:
                 .trigger(availableNow=True))
 
     def finalize(self) -> dict:
-        stats = self.builder.finalize_stats()
-        # concurrent finalize, same as incremental_update / build()
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_seg = pool.submit(self.builder.encode_segments)
-            f_ts = pool.submit(
-                self.builder.finalize_term_stats_from_partials)
-            f_seg.result()
-            f_ts.result()
-        return stats
+        """Encode every chunk the stream committed since the last
+        finalize as one generation (rebuilt tail chunks replace their
+        old rows), then term_stats, dictionary and stats."""
+        return self.builder.finalize()
 
 
 def streaming_event_counts(spark: SparkSession, events_path: str,
