@@ -165,6 +165,19 @@ def read_stats(index_dir: str) -> dict:
     return t.head(1).to_pylist()[0]
 
 
+TERM_STATS_SEQ = "_SEQ"
+
+
+def read_term_stats_seq(index_dir: str) -> int | None:
+    """The manifest seq the term_stats table describes (None when the
+    table is absent or was never completely written)."""
+    p = os.path.join(IndexPaths(index_dir).term_stats, TERM_STATS_SEQ)
+    if not os.path.exists(p):
+        return None
+    with open(p) as f:
+        return int(f.read().strip())
+
+
 def read_doc_buckets(index_dir: str) -> int | None:
     """How many doc buckets (``doc_id // doc_bucket`` values) the
     index's chunks span: the ``doc_bucket`` recorded in ``_ANALYZER``
@@ -196,8 +209,11 @@ def read_manifest(index_dir: str) -> dict:
     {"chunks": {chunk: record}, "bytes": int}}}`` with string keys
     (JSON).  A chunk record is its lineage fingerprint plus the docs
     and tokens compactions removed from it.  ``seq`` counts content
-    changes (appends, compactions), not merges.  An index with no
-    committed generation reads as seq 0 with no generations."""
+    changes (appends, compactions), not merges.  A manifest whose
+    last content change added new chunks only also records them,
+    ``"appended": {"seq": seq, "chunks": [chunk, ...]}``, so term_stats
+    can be brought up to it by a fold.  An index with no committed
+    generation reads as seq 0 with no generations."""
     p = os.path.join(IndexPaths(index_dir).segments, MANIFEST)
     if not os.path.exists(p):
         return {"seq": 0, "gens": {}}
@@ -270,21 +286,16 @@ def _dir_bytes(path: str) -> int:
                for r, _, fs in os.walk(path) for f in fs)
 
 
-def _advisory_bytes(spark: SparkSession) -> int:
-    """``spark.sql.adaptive.advisoryPartitionSizeInBytes`` in bytes."""
-    return spark.sparkContext._jvm.org.apache.spark.network.util \
-        .JavaUtils.byteStringAsBytes(spark.conf.get(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-
-
 def _exchange_partitions(spark: SparkSession, nbytes: int,
                          term_buckets: int) -> int:
     """Partitions of a segment-writing exchange: the on-disk bytes it
     moves over ``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
     at least 1 and at most ``4 * term_buckets`` (past that, each
     term_bucket almost surely has a task of its own)."""
-    return int(min(4 * term_buckets,
-                   max(1, -(-nbytes // _advisory_bytes(spark)))))
+    advisory = spark.sparkContext._jvm.org.apache.spark.network.util \
+        .JavaUtils.byteStringAsBytes(spark.conf.get(
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    return int(min(4 * term_buckets, max(1, -(-nbytes // advisory))))
 
 
 def _write_generation(spark: SparkSession, rows: DataFrame, path: str,
@@ -648,9 +659,6 @@ class IndexBuilder:
         self.presort = presort
         self.stem = stem
         self.positions = positions
-        # what the last encode_segments committed, for the term-stats
-        # fold that follows it (finalize_term_stats_from_partials)
-        self._last_append: dict | None = None
 
     # ---------------- stage 1: tokenize+encode, chunked + resumable ---
 
@@ -883,7 +891,6 @@ class IndexBuilder:
         check_not_compacting(self.paths.base)
         m, todo = self._plan()
         self._sweep_uncommitted(m)
-        self._last_append = None
         if todo:
             stale = [g for g, e in m["gens"].items()
                      if not todo.keys().isdisjoint(e["chunks"])]
@@ -903,20 +910,19 @@ class IndexBuilder:
                     chunks.update({c: rec for c, rec in
                                    m["gens"][g]["chunks"].items()
                                    if c not in todo})
-            new = self._replace_generations(m, stale, rows, nbytes, chunks,
-                                            m["seq"] + 1)
-            self._last_append = {"base": m["seq"], "seq": new["seq"],
-                                 "chunks": list(todo),
-                                 "replaced": bool(stale)}
-            m = new
+            seq = m["seq"] + 1
+            m = self._replace_generations(
+                m, stale, rows, nbytes, chunks, seq,
+                None if stale else {"seq": seq, "chunks": sorted(todo)})
         self._merge_tiers(m)
 
     def _replace_generations(self, m: dict, drop: list[str],
                              rows: DataFrame, nbytes: int, chunks: dict,
-                             seq: int) -> dict:
+                             seq: int, appended: dict | None) -> dict:
         """Write ``rows`` as one new generation holding ``chunks`` in
         place of the generations ``drop``, commit the manifest with
-        ``seq``, then delete the dropped dirs.  Returns the manifest."""
+        ``seq`` and ``appended`` (see :func:`read_manifest`), then
+        delete the dropped dirs.  Returns the manifest."""
         seg = self.paths.segments
         gen = str(max(map(int, m["gens"]), default=-1) + 1)
         path = _gen_dir(seg, gen)
@@ -925,6 +931,8 @@ class IndexBuilder:
         gens = {g: e for g, e in m["gens"].items() if g not in drop}
         gens[gen] = {"chunks": chunks, "bytes": _dir_bytes(path)}
         new = {"seq": seq, "gens": gens}
+        if appended is not None:
+            new["appended"] = appended
         _commit_manifest(seg, new)
         for g in drop:
             shutil.rmtree(_gen_dir(seg, g), ignore_errors=True)
@@ -934,8 +942,8 @@ class IndexBuilder:
         """While more than :data:`MAX_LIVE_GENERATIONS` generations are
         live, merge the smallest ``MAX_LIVE_GENERATIONS`` (at least 2)
         into one.  A merge reads segment rows (compaction's masking
-        survives) and keeps the content, so the manifest seq and the
-        derived tables stay as they are."""
+        survives) and keeps the content, so the manifest seq, its
+        ``appended`` record and the derived tables stay as they are."""
         while len(m["gens"]) > MAX_LIVE_GENERATIONS:
             gens = m["gens"]
             small = sorted(gens, key=lambda g: (gens[g]["bytes"], int(g))
@@ -945,7 +953,8 @@ class IndexBuilder:
                                         small).select(*_segment_cols()),
                 sum(gens[g]["bytes"] for g in small),
                 {c: rec for g in small
-                 for c, rec in gens[g]["chunks"].items()}, m["seq"])
+                 for c, rec in gens[g]["chunks"].items()}, m["seq"],
+                m.get("appended"))
 
     # ---------------- stage 3: global statistics ----------------------
 
@@ -972,34 +981,37 @@ class IndexBuilder:
         truth after a compaction, and this is the recovery path of an
         append that stopped after its commit."""
         _write_term_stats(self.spark, self.paths,
-                          read_segments(self.spark, self.paths.base))
+                          read_segments(self.spark, self.paths.base),
+                          read_manifest(self.paths.base)["seq"])
         self.finalize_stats()
 
     def finalize_term_stats_from_partials(self) -> None:
         """Bring term_stats, the dictionary and stats up to the
-        manifest from the partials of the generation
-        :meth:`encode_segments` just committed.  After an append, that
-        generation's (term, df, cf) aggregate is folded into the
-        existing term_stats: df and cf are sums over disjoint docID
-        ranges.  A fresh build has no term_stats and aggregates its
-        chunks' partials, which hold the same rows as the segments.
-        Any other lagging state (a rebuilt chunk replaced rows, or an
-        earlier run stopped midway) is recomputed from the live
-        segments; an index whose stats are current is left alone."""
-        plan, self._last_append = self._last_append, None
+        manifest, deciding from on-disk state alone.  When the
+        manifest's last change appended new chunks
+        (``m["appended"]``) onto the content term_stats describes
+        (:func:`read_term_stats_seq` is one behind), those chunks'
+        (term, df, cf) aggregate over their partials is folded into
+        term_stats: df and cf are sums over disjoint docID ranges.  A
+        fresh build has no term_stats and aggregates all its chunks
+        the same way.  Any other lagging state (a rebuilt chunk
+        replaced rows, a compaction, or an earlier run that stopped
+        midway) is recomputed from the live segments; an index whose
+        stats are current is left alone."""
         m = read_manifest(self.paths.base)
-        cur = self._stats_seq()
-        if cur == m["seq"]:
+        if self._stats_seq() == m["seq"]:
             return
-        if (plan is None or plan["seq"] != m["seq"] or plan["replaced"]
-                or plan["base"] not in (0, cur)):
+        ts_seq = read_term_stats_seq(self.paths.base) or 0
+        appended = m.get("appended", {})
+        if appended.get("seq") != m["seq"] or ts_seq != m["seq"] - 1:
             self.finalize_term_stats()
             return
         base = None
-        if plan["base"]:
+        if ts_seq:
             base = self.spark.read.parquet(self.paths.term_stats)
         _write_term_stats(self.spark, self.paths,
-                          self._read_partials(plan["chunks"]), base=base)
+                          self._read_partials(appended["chunks"]),
+                          m["seq"], base=base)
         self.finalize_stats()
 
     # ---------------- public API --------------------------------------
@@ -1045,7 +1057,9 @@ def _write_stats(paths: IndexPaths, n_docs: int, total: int,
                  seq: int) -> float:
     """Write the one-row global stats table (read back by
     :func:`read_stats`) with pyarrow, stamped with the manifest ``seq``
-    it describes; returns avgdl."""
+    it describes; returns avgdl.  Column statistics and the embedded
+    Arrow schema are left out: for one row of int64/float64 they only
+    repeat the row and the parquet schema (about half the file)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     avgdl = total / n_docs if n_docs else 0.0
@@ -1055,20 +1069,23 @@ def _write_stats(paths: IndexPaths, n_docs: int, total: int,
         "avgdl": pa.array([avgdl], pa.float64()),
         "total_tokens": pa.array([total], pa.int64()),
         "seq": pa.array([seq], pa.int64())}),
-        os.path.join(paths.stats, "stats.parquet"))
+        os.path.join(paths.stats, "stats.parquet"),
+        store_schema=False, write_statistics=False)
     return avgdl
 
 
 def _write_term_stats(spark: SparkSession, paths: IndexPaths,
-                      rows: DataFrame, between=None,
+                      rows: DataFrame, seq: int, between=None,
                       base: DataFrame | None = None) -> None:
     """The (term, df, cf) table from partial rows carrying a
     ``term_bucket`` column — partials of one term cover disjoint docID
-    ranges, so df = sum(n_docs) — then the term dictionary derived
-    from it.  With ``base`` (the existing term_stats), the rows' counts
-    are added to it: the new table is written aside and swapped in.
-    ``between`` (compaction's fault injection) runs after the
-    term_stats write and before the dictionary's."""
+    ranges, so df = sum(n_docs) — stamped with the manifest ``seq`` it
+    describes (:func:`read_term_stats_seq`), then the term dictionary
+    derived from it.  With ``base`` (the existing term_stats), the
+    rows' counts are added to it: the new table is written aside,
+    stamped and swapped in.  ``between`` (compaction's fault
+    injection) runs after the term_stats write and before the
+    dictionary's."""
     cols = rows.select("term", "term_bucket", F.col("n_docs").alias("df"),
                        F.col("tf_sum").alias("cf"))
     out = paths.term_stats
@@ -1079,6 +1096,8 @@ def _write_term_stats(spark: SparkSession, paths: IndexPaths,
     (cols.groupBy("term", "term_bucket")
         .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
         .write.mode("overwrite").partitionBy("term_bucket").parquet(out))
+    with open(os.path.join(out, TERM_STATS_SEQ), "w") as f:
+        f.write(str(seq))
     if base is not None:
         shutil.rmtree(paths.term_stats)
         os.rename(out, paths.term_stats)
@@ -1108,28 +1127,14 @@ def write_term_dict(spark: SparkSession, paths: IndexPaths,
     be newer or older than the dictionary it mirrors; the engine
     falls back to the term_stats scan when the dir is absent or has
     no _SUCCESS (mid-crash), so staleness is impossible and loss is
-    only a de-optimization.
-
-    A dictionary smaller than one advisory shuffle partition
-    (``spark.sql.adaptive.advisoryPartitionSizeInBytes``) is sorted in
-    one task and cut into the same ``n_files`` contiguous files by row
-    count: the same disjoint sorted ranges, without the range
-    exchange's sampling job and shuffle."""
-    import pyarrow.dataset as pads
+    only a de-optimization."""
     ts = spark.read.parquet(paths.term_stats)
     if n_files is None:
         n_files = max(8, min(64, spark.sparkContext.defaultParallelism))
-    rows = ts.select("term", "term_bucket", "df")
-    if _dir_bytes(paths.term_stats) <= _advisory_bytes(spark):
-        n_rows = pads.dataset(paths.term_stats, format="parquet",
-                              partitioning="hive").count_rows()
-        writer = (rows.coalesce(1).sortWithinPartitions("term").write
-                  .option("maxRecordsPerFile",
-                          max(1, -(-n_rows // n_files))))
-    else:
-        writer = (rows.repartitionByRange(n_files, "term")
-                  .sortWithinPartitions("term").write)
-    writer.mode("overwrite").parquet(paths.term_dict)
+    (ts.select("term", "term_bucket", "df")
+        .repartitionByRange(n_files, "term")
+        .sortWithinPartitions("term")
+        .write.mode("overwrite").parquet(paths.term_dict))
 
 
 def export_metrics_tables(spark: SparkSession, index_dir: str,
@@ -1210,6 +1215,18 @@ def load_tombstones(spark: SparkSession, index_dir: str,
             "before they reach it, or rebuild over the live corpus")
     return np.unique(np.array([r["doc_id"] for r in rows],
                               dtype=np.int64))
+
+
+def read_removed(index_dir: str) -> np.ndarray:
+    """The docIDs past compactions physically removed (the
+    ``removed_docs`` liveness record), read driver-side; empty when
+    no compaction removed any."""
+    import pyarrow.dataset as pads
+    path = IndexPaths(index_dir).removed
+    if not os.path.isdir(path):
+        return np.array([], dtype=np.int64)
+    return pads.dataset(path, format="parquet").to_table(
+        columns=["doc_id"])["doc_id"].to_numpy()
 
 
 def tombstoned(ids: np.ndarray, tomb: np.ndarray) -> np.ndarray:
@@ -1306,9 +1323,11 @@ def compact(spark: SparkSession, index_dir: str,
                     .mapInPandas(dropped_dl, schema="doc_id long, dl long")
                     .groupBy("doc_id").agg(F.first("dl").alias("dl"))
                     .collect())
-    dropped_dl = {int(r["doc_id"]): int(r["dl"]) for r in dropped_rows}
-    found = np.array(sorted(dropped_dl), dtype=np.int64)
-    tok_removed = sum(dropped_dl.values())
+    found = np.array([r["doc_id"] for r in dropped_rows], dtype=np.int64)
+    found_dl = np.array([r["dl"] for r in dropped_rows], dtype=np.int64)
+    order = np.argsort(found)
+    found, found_dl = found[order], found_dl[order]
+    tok_removed = int(found_dl.sum())
     # Zero-token docs were counted in N at build but never appear in
     # postings.  The chunk records decide existence: a tombstone inside
     # a DENSE chunk range (n_docs == max-min+1) certainly existed.  Residual
@@ -1316,25 +1335,31 @@ def compact(spark: SparkSession, index_dir: str,
     # distinguished from a never-existing docID without per-doc state,
     # and is not subtracted — sequential-ID ingest (the supported
     # pipeline, ids.sequential_index) always produces dense chunks.
-    import pyarrow.dataset as pads
     chunk_recs = {c: rec for e in manifest["gens"].values()
                   for c, rec in e["chunks"].items()}
-    in_dense = np.zeros(tomb.size, dtype=bool)
-    for rec in chunk_recs.values():
-        cmin, cmax = rec["doc_id_min"], rec["doc_id_max"]
-        if rec["n_docs"] == cmax - cmin + 1:
-            in_dense |= (tomb >= cmin) & (tomb <= cmax)
+    recs = sorted(chunk_recs.values(), key=lambda r: r["doc_id_min"])
+    rec_min = np.array([r["doc_id_min"] for r in recs], dtype=np.int64)
+    rec_max = np.array([r["doc_id_max"] for r in recs], dtype=np.int64)
+    rec_dense = rec_max - rec_min + 1 == np.array(
+        [r["n_docs"] for r in recs], dtype=np.int64)
+
+    def owner(ids: np.ndarray) -> np.ndarray:
+        """Index into ``recs`` of the chunk whose docID range holds
+        each of ``ids``, -1 when none does (chunks are disjoint)."""
+        i = np.searchsorted(rec_min, ids, side="right") - 1
+        hit = i >= 0
+        hit[hit] = ids[hit] <= rec_max[i[hit]]
+        return np.where(hit, i, -1)
+
+    # owner -1 picks the appended False: outside every chunk
+    in_dense = np.append(rec_dense, False)[owner(tomb)]
     # Liveness guard: lineage describes the ORIGINAL ingest, so a
     # docID already removed by a PREVIOUS compaction still sits in a
     # dense range.  Without this mask a re-delete (idempotent-delete
     # retry) would decrement N/avgdl a second time.  The removed_docs
     # record (appended below, before tombstones are cleared) is the
     # per-doc liveness complement of lineage.
-    prior_removed = np.array([], dtype=np.int64)
-    if os.path.isdir(paths.removed):
-        prior_removed = pads.dataset(
-            paths.removed, format="parquet").to_table(
-            columns=["doc_id"])["doc_id"].to_numpy()
+    prior_removed = read_removed(index_dir)
     existed_empty = (in_dense & ~np.isin(tomb, found)
                      & ~np.isin(tomb, prior_removed))
     n_removed = int(found.size) + int(existed_empty.sum())
@@ -1392,12 +1417,18 @@ def compact(spark: SparkSession, index_dir: str,
         sum(e["bytes"] for e in manifest["gens"].values()), term_buckets)
     # removed docs and tokens, recorded per chunk in the new manifest
     newly = np.union1d(found, tomb[existed_empty])
-    for d in newly.tolist():
-        rec = next(r for r in chunk_recs.values()
-                   if r["doc_id_min"] <= d <= r["doc_id_max"])
-        rec["removed_docs"] = rec.get("removed_docs", 0) + 1
+    newly_dl = np.zeros(newly.size, dtype=np.int64)
+    newly_dl[np.searchsorted(newly, found)] = found_dl
+    own = owner(newly)
+    keep = own >= 0
+    docs_per = np.bincount(own[keep], minlength=len(recs))
+    toks_per = np.bincount(own[keep], weights=newly_dl[keep],
+                           minlength=len(recs))
+    for i in np.nonzero(docs_per)[0]:
+        rec = recs[i]
+        rec["removed_docs"] = rec.get("removed_docs", 0) + int(docs_per[i])
         rec["removed_tokens"] = (rec.get("removed_tokens", 0)
-                                 + dropped_dl.get(d, 0))
+                                 + int(toks_per[i]))
     compacted = {"seq": manifest["seq"] + 1,
                  "gens": {"0": {"chunks": chunk_recs,
                                 "bytes": _dir_bytes(_gen_dir(tmp, 0))}}}
@@ -1448,6 +1479,7 @@ def compact(spark: SparkSession, index_dir: str,
     _write_stats(paths, *manifest_stats(compacted), compacted["seq"])
     _crash("stats")
     _write_term_stats(spark, paths, read_segments(spark, index_dir),
+                      compacted["seq"],
                       between=lambda: _crash("term_stats"))
     _crash("term_dict")
     shutil.rmtree(tomb_dir, ignore_errors=True)
@@ -1517,5 +1549,6 @@ def rollback_compaction(spark: SparkSession, index_dir: str) -> None:
     else:
         # the crashed run created removed_docs; pre-compaction had none
         shutil.rmtree(paths.removed, ignore_errors=True)
-    _write_term_stats(spark, paths, read_segments(spark, index_dir))
+    _write_term_stats(spark, paths, read_segments(spark, index_dir),
+                      read_manifest(index_dir)["seq"])
     os.remove(marker)

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..index.build import IndexBuilder
+from ..index.build import IndexBuilder, read_removed
 
 
 def incremental_update(builder: IndexBuilder, new_docs: DataFrame) -> dict:
@@ -77,6 +77,9 @@ class StreamingIndexer:
     Replayed batches (foreachBatch redelivery) are detected by docID
     containment against the buffer and skipped; a batch that OVERLAPS
     the buffer only partially is corrupt input and fails loudly.
+    Docs a compaction removed from a buffered chunk (``removed_docs``)
+    are dropped from its buffer and from incoming batches, so a
+    rebuild never brings them back.
     """
 
     def __init__(self, builder: IndexBuilder, buffer_tail: bool = True):
@@ -135,11 +138,26 @@ class StreamingIndexer:
         between drop and re-tokenize) is rebuilt from its buffer even
         if this batch carries no rows for it."""
         b = self.builder
+        buffers = self._buffer_chunks()
         batch_df = batch_df.select("doc_id", "content")
+        removed = read_removed(b.paths.base)
+
+        def live(rows: DataFrame, chunk: int) -> DataFrame:
+            """``rows`` less the docs compactions removed from
+            ``chunk``."""
+            lo = chunk * b.chunk_docs
+            dead = removed[(removed >= lo) & (removed < lo + b.chunk_docs)]
+            if not dead.size:
+                return rows
+            import pandas as pd
+            return rows.join(F.broadcast(b.spark.createDataFrame(
+                pd.DataFrame({"doc_id": dead}))), "doc_id", "left_anti")
+
+        for c in buffers:
+            batch_df = live(batch_df, c)
         counts = b._chunk_counts(batch_df)
         done = b._lineage_rows()
         tail = max(done) if done else None
-        buffers = self._buffer_chunks()
         overlap = sorted(c for c in counts if c in done)
         bad = [c for c in overlap if c != tail or c not in buffers]
         if bad:
@@ -152,8 +170,8 @@ class StreamingIndexer:
         work = batch_df
         rebuild = False
         for c, buf_dir in sorted(buffers.items()):
-            old = b.spark.read.parquet(buf_dir).select("doc_id",
-                                                       "content")
+            old = live(b.spark.read.parquet(buf_dir).select("doc_id",
+                                                            "content"), c)
             if c in done:
                 # committed tail: replay vs clean-append vs corrupt.
                 # ``stale`` detects a crash that swapped the merged

@@ -105,8 +105,9 @@ def test_crash_before_manifest_commit(spark, tmp_path, monkeypatch):
 def test_crash_after_commit_before_stats(spark, tmp_path, monkeypatch):
     """An append that stops after its manifest commit but before its
     stats are written (term_stats already folded) leaves an index every
-    engine refuses to open; the rerun, on the same builder, recomputes
-    the derived tables once — no double-counted df."""
+    engine refuses to open; the rerun, on a new builder, finds from the
+    index alone that term_stats already holds the new chunk and
+    recomputes the derived tables once — no double-counted df."""
     pdf = generate_corpus(200, **KW)
     d = str(tmp_path / "idx")
     b = _builder(spark, d)
@@ -121,9 +122,10 @@ def test_crash_after_commit_before_stats(spark, tmp_path, monkeypatch):
         with pytest.raises(RuntimeError, match="stats write"):
             incremental_update(b, tail)
     assert read_manifest(d)["seq"] == 2
+    assert build.read_term_stats_seq(d) == 2
     with pytest.raises(UnfinishedAppendError):
         SearchEngine(spark, d, term_buckets=4)
-    incremental_update(b, tail)
+    incremental_update(_builder(spark, d), tail)
     _assert_matches(spark, d, OracleIndex.build(_docs(pdf)))
 
 
@@ -198,6 +200,39 @@ def test_streaming_tail_rebuild_keeps_one_copy(spark, tmp_path):
     assert [c for e in gens.values() for c in e["chunks"]] == ["0"]
     assert len(gens) == 1
     _assert_matches(spark, d, OracleIndex.build(_docs(pdf)))
+
+
+def test_streaming_tail_rebuild_after_compaction(spark, tmp_path):
+    """Stream into a tail chunk, finalize, delete and compact two of
+    its docs, then a sub-chunk append rebuilds the chunk from its
+    buffer: the removed docs stay removed (N, avgdl and rankings equal
+    the oracle over the live docs), a replay of the first batch
+    changes nothing, and a later delete+compact subtracts only its own
+    doc."""
+    pdf = generate_corpus(180, **KW)
+    corpus = spark.createDataFrame(pdf)
+    d = str(tmp_path / "idx")
+    sink = StreamingIndexer(_builder(spark, d, chunk_docs=200))
+    first = corpus.filter("doc_id < 150")
+    sink(first, epoch_id=0)
+    sink.finalize()
+    dead = [doc for doc, _ in OracleIndex.build(
+        _docs(pdf[pdf.doc_id < 150])).search("def return", k=2)]
+    delete_docs(spark, d, dead)
+    compact(spark, d, term_buckets=4)
+    sink(corpus.filter("doc_id >= 150"), epoch_id=1)
+    assert sink.finalize()["n_docs"] == 178
+    live = pdf[~pdf.doc_id.isin(dead)]
+    oracle = OracleIndex.build(_docs(live))
+    _assert_matches(spark, d, oracle)
+    sink(first, epoch_id=2)                  # redelivered batch
+    assert sink.finalize()["n_docs"] == 178
+    _assert_matches(spark, d, oracle)
+    more = [doc for doc, _ in oracle.search("import", k=1)]
+    delete_docs(spark, d, more)
+    assert compact(spark, d, term_buckets=4)["removed_docs"] == 1
+    _assert_matches(spark, d, OracleIndex.build(
+        _docs(live[~live.doc_id.isin(more)])))
 
 
 def test_exchange_partitions_sized_from_bytes(spark):

@@ -351,52 +351,6 @@ def test_term_dict_range_scan(engine):
     assert "StringStartsWith(term" in plan.split("PushedFilters", 1)[1][:300]
 
 
-def _dict_ranges(ddir):
-    import os
-
-    import pyarrow.parquet as pq
-    out = []
-    for name in sorted(os.listdir(ddir)):
-        if name.endswith(".parquet"):
-            t = pq.read_table(os.path.join(ddir, name))
-            terms = t["term"].to_pylist()
-            assert terms == sorted(terms), name
-            out.append((terms[0], terms[-1]))
-    return sorted(out)
-
-
-def test_term_dict_small_and_range_paths_agree(spark, engine, tmp_path):
-    """A dictionary below the advisory partition size is written by one
-    sorting task cut into files by row count; a larger one through the
-    range exchange.  Both write the same rows as the same number of
-    files, each term-sorted, with disjoint ranges."""
-    import shutil
-
-    from auctus_spark.index.build import IndexPaths, write_term_dict
-    d = str(tmp_path / "idx")
-    shutil.copytree(engine.paths.base, d)
-    paths = IndexPaths(d)
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    prev = spark.conf.get(key)
-
-    def rows():
-        return sorted(tuple(r) for r in
-                      spark.read.parquet(paths.term_dict).collect())
-
-    small = (_dict_ranges(paths.term_dict), rows())
-    try:
-        spark.conf.set(key, "1b")          # every table is "large"
-        write_term_dict(spark, paths)
-        large = (_dict_ranges(paths.term_dict), rows())
-    finally:
-        spark.conf.set(key, prev)
-    for ranges, _ in (small, large):
-        assert len(ranges) == 8
-        for (_, amax), (bmin, _) in zip(ranges, ranges[1:]):
-            assert amax < bmin
-    assert small[1] == large[1]
-
-
 def test_term_vectors_df_from_stats_map(engine):
     """With the driver stats map loaded, term_vectors takes df from it:
     its plan scans no term_stats file, and its rows equal those of the
