@@ -7634,8 +7634,8 @@ def _oracle_sql_static() -> dict[str, str]:
             k AS (
               SELECT doc_id, text,
                 list_filter(lines,
-                  x -> regexp_matches(x, '[.!?"]\s*$')
-                   AND len(list_filter(regexp_split_to_array(x, '\s+'),
+                  x -> regexp_matches(x, '[.!?"]\\s*$')
+                   AND len(list_filter(regexp_split_to_array(x, '\\s+'),
                                        w -> w <> '')) >= 5) AS kept
               FROM l),
             m AS (

@@ -42,8 +42,12 @@ that rename is an append's only commit point.  A generation written
 but never committed is swept by the next append.  When the live
 generations exceed :data:`MAX_LIVE_GENERATIONS`, the smallest ones are
 merged into one (segment rows in, segment rows out, so compaction's
-masking survives).  A fresh build is one generation, gen 0, and
-``compact`` rewrites every live generation into one.
+masking survives).  A fresh build is one generation, gen 0.
+``compact`` is one more writer of the manifest: it rewrites only the
+generations that hold deleted docs into one new generation, and its
+manifest rename (which also lists the ``removed_docs`` file it wrote)
+is its only commit point; the derived tables then follow as for an
+append.
 
 The partial-row layout (blobs, block offsets, avgdl-free block
 metadata, positions) is known to ``codec.py`` alone: the encode step
@@ -96,7 +100,10 @@ DEFAULT_TERM_BUCKETS = 64
 # marker-row-free lineage.  v3: optional per-posting position streams
 # (pos_blob/pos_off columns; empty when positions=False).  v4:
 # segment generations under a manifest; stats carry the manifest seq.
-FORMAT_VERSION = 4
+# v5: compaction commits through the manifest, which lists the
+# removed_docs files (a v4 index may hold a compaction marker or
+# removed_docs files no manifest lists).
+FORMAT_VERSION = 5
 
 # Live generations past which the smallest ones are merged into one
 # (Lucene TieredMergePolicy's segmentsPerTier default).
@@ -105,37 +112,18 @@ MAX_LIVE_GENERATIONS = 10
 MANIFEST = "_MANIFEST.json"
 
 
-class CompactionInProgressError(RuntimeError):
-    """A compaction started but never finished: segments and stats may
-    be inconsistent (compacted postings + pre-compaction N/df/avgdl
-    would silently mis-score).  Raised on every open until resolved."""
-
-
 class UnfinishedAppendError(RuntimeError):
-    """The manifest commits a generation whose term_stats, dictionary
-    and stats are not written yet: scoring its postings with the old
-    N/df would silently mis-rank.  Raised on every engine open until
-    :meth:`IndexBuilder.finalize` (a rerun of the append) writes
+    """The manifest commits a generation (an append's or a
+    compaction's) whose term_stats, dictionary and stats are not
+    written yet: scoring its postings with the old N/df would silently
+    mis-rank.  Raised on every engine open until a rerun of the
+    operation (:meth:`IndexBuilder.finalize` or :func:`compact`) writes
     them."""
-
-
-def check_not_compacting(index_dir: str) -> None:
-    marker = os.path.join(index_dir, "_COMPACTING")
-    if os.path.exists(marker):
-        raise CompactionInProgressError(
-            f"index {index_dir} has an unfinished compaction "
-            "(_COMPACTING marker present). Run "
-            "rollback_compaction(spark, index_dir) to restore the "
-            "pre-compaction segments, stats, tombstones and "
-            "removed_docs as one unit, then re-run compact(). If the "
-            "'*_old' snapshot dirs are gone, rebuild from the corpus.")
 
 
 def read_format(index_dir: str) -> int | None:
     """Layout version of an existing index dir (None if no marker —
-    either empty dir or a pre-versioning build).  Also the common
-    open-path guard: fails loudly on a half-completed compaction."""
-    check_not_compacting(index_dir)
+    either empty dir or a pre-versioning build)."""
     p = os.path.join(index_dir, "_FORMAT")
     if not os.path.exists(p):
         return None
@@ -180,23 +168,19 @@ def read_term_stats_seq(index_dir: str) -> int | None:
 
 def read_doc_buckets(index_dir: str) -> int | None:
     """How many doc buckets (``doc_id // doc_bucket`` values) the
-    index's chunks span: the ``doc_bucket`` recorded in ``_ANALYZER``
-    over the lineage's per-chunk docID ranges, read driver-side with no
-    Spark job.  An upper bound when a chunk has docID gaps.  None when
-    the index predates the record or has no lineage."""
+    index's live chunks span: the ``doc_bucket`` recorded in
+    ``_ANALYZER`` over the manifest's per-chunk docID ranges, read
+    driver-side with no Spark job (chunks tokenized but never
+    committed are not counted).  An upper bound when a chunk has docID
+    gaps.  None when the index predates the record or commits no
+    chunk."""
     width = read_analyzer(index_dir).get("doc_bucket")
     if not width:
         return None
-    import pyarrow.dataset as pads
-    try:
-        t = pads.dataset(IndexPaths(index_dir).lineage, format="parquet",
-                         partitioning="hive").to_table(
-                             columns=["doc_id_min", "doc_id_max"])
-    except (OSError, ValueError):
-        return None
     n, end = 0, -1
-    for lo, hi in sorted(zip(t["doc_id_min"].to_pylist(),
-                             t["doc_id_max"].to_pylist())):
+    for lo, hi in sorted((rec["doc_id_min"], rec["doc_id_max"])
+                         for e in read_manifest(index_dir)["gens"].values()
+                         for rec in e["chunks"].values()):
         lo, hi = max(lo // width, end + 1), hi // width
         if hi >= lo:
             n += hi - lo + 1
@@ -212,8 +196,10 @@ def read_manifest(index_dir: str) -> dict:
     changes (appends, compactions), not merges.  A manifest whose
     last content change added new chunks only also records them,
     ``"appended": {"seq": seq, "chunks": [chunk, ...]}``, so term_stats
-    can be brought up to it by a fold.  An index with no committed
-    generation reads as seq 0 with no generations."""
+    can be brought up to it by a fold.  Once a compaction has removed
+    docs, ``"removed": [file, ...]`` lists the ``removed_docs`` files
+    of the committed compactions (:func:`read_removed`).  An index with
+    no committed generation reads as seq 0 with no generations."""
     p = os.path.join(IndexPaths(index_dir).segments, MANIFEST)
     if not os.path.exists(p):
         return {"seq": 0, "gens": {}}
@@ -223,8 +209,8 @@ def read_manifest(index_dir: str) -> dict:
 
 def _commit_manifest(seg_dir: str, manifest: dict) -> None:
     """Write ``manifest`` under a temporary name, then rename it over
-    the live one: the commit point of an append, a merge and (inside
-    its swapped directory) a compaction."""
+    the live one: the commit point of an append, a merge and a
+    compaction."""
     os.makedirs(seg_dir, exist_ok=True)
     tmp = os.path.join(seg_dir, MANIFEST + ".tmp")
     with open(tmp, "w") as f:
@@ -254,10 +240,10 @@ def check_stats_current(index_dir: str, stats: dict) -> None:
     if stats.get("seq") != seq:
         raise UnfinishedAppendError(
             f"index {index_dir} commits manifest seq {seq} but its "
-            f"stats describe seq {stats.get('seq')}: an append stopped "
-            "before its term_stats, dictionary and stats were written. "
-            "Re-run the append (or IndexBuilder.finalize()) to finish "
-            "it.")
+            f"stats describe seq {stats.get('seq')}: an append or a "
+            "compaction stopped before its term_stats, dictionary and "
+            "stats were written. Re-run it (or IndexBuilder.finalize()) "
+            "to finish it.")
 
 
 def manifest_stats(manifest: dict) -> tuple[int, int]:
@@ -871,15 +857,17 @@ class IndexBuilder:
         return m, todo
 
     def _sweep_uncommitted(self, m: dict) -> None:
-        """Remove generation dirs the manifest does not list: written
-        by an append or merge that stopped before its commit, or
-        merged away by one that stopped after it."""
-        seg = self.paths.segments
-        if not os.path.isdir(seg):
-            return
-        for name in os.listdir(seg):
+        """Remove generation dirs and ``removed_docs`` files the
+        manifest does not list: written by an append, merge or
+        compaction that stopped before its commit, or replaced by one
+        that stopped after it."""
+        seg, rem = self.paths.segments, self.paths.removed
+        for name in os.listdir(seg) if os.path.isdir(seg) else ():
             if name.startswith("gen=") and name[4:] not in m["gens"]:
                 shutil.rmtree(os.path.join(seg, name), ignore_errors=True)
+        for name in os.listdir(rem) if os.path.isdir(rem) else ():
+            if name not in m.get("removed", ()):
+                os.remove(os.path.join(rem, name))
 
     def encode_segments(self) -> None:
         """Encode the chunks no live generation holds as ONE new
@@ -888,7 +876,6 @@ class IndexBuilder:
         its own rows.  A generation holding a rebuilt chunk is
         rewritten into the new one without that chunk's old rows (rows
         never span chunks).  Then merges generations by tier."""
-        check_not_compacting(self.paths.base)
         m, todo = self._plan()
         self._sweep_uncommitted(m)
         if todo:
@@ -921,8 +908,9 @@ class IndexBuilder:
                              seq: int, appended: dict | None) -> dict:
         """Write ``rows`` as one new generation holding ``chunks`` in
         place of the generations ``drop``, commit the manifest with
-        ``seq`` and ``appended`` (see :func:`read_manifest`), then
-        delete the dropped dirs.  Returns the manifest."""
+        ``seq``, ``appended`` and ``m``'s removed-docs list (see
+        :func:`read_manifest`), then delete the dropped dirs.  Returns
+        the manifest."""
         seg = self.paths.segments
         gen = str(max(map(int, m["gens"]), default=-1) + 1)
         path = _gen_dir(seg, gen)
@@ -933,6 +921,8 @@ class IndexBuilder:
         new = {"seq": seq, "gens": gens}
         if appended is not None:
             new["appended"] = appended
+        if m.get("removed"):
+            new["removed"] = m["removed"]
         _commit_manifest(seg, new)
         for g in drop:
             shutil.rmtree(_gen_dir(seg, g), ignore_errors=True)
@@ -979,7 +969,7 @@ class IndexBuilder:
         of one term cover disjoint docID ranges, so df = sum(n_docs) —
         then the dictionary and stats.  The segments are the source of
         truth after a compaction, and this is the recovery path of an
-        append that stopped after its commit."""
+        append or a compaction that stopped after its commit."""
         _write_term_stats(self.spark, self.paths,
                           read_segments(self.spark, self.paths.base),
                           read_manifest(self.paths.base)["seq"])
@@ -1075,7 +1065,7 @@ def _write_stats(paths: IndexPaths, n_docs: int, total: int,
 
 
 def _write_term_stats(spark: SparkSession, paths: IndexPaths,
-                      rows: DataFrame, seq: int, between=None,
+                      rows: DataFrame, seq: int,
                       base: DataFrame | None = None) -> None:
     """The (term, df, cf) table from partial rows carrying a
     ``term_bucket`` column — partials of one term cover disjoint docID
@@ -1083,9 +1073,7 @@ def _write_term_stats(spark: SparkSession, paths: IndexPaths,
     describes (:func:`read_term_stats_seq`), then the term dictionary
     derived from it.  With ``base`` (the existing term_stats), the
     rows' counts are added to it: the new table is written aside,
-    stamped and swapped in.  ``between`` (compaction's fault
-    injection) runs after the term_stats write and before the
-    dictionary's."""
+    stamped and swapped in."""
     cols = rows.select("term", "term_bucket", F.col("n_docs").alias("df"),
                        F.col("tf_sum").alias("cf"))
     out = paths.term_stats
@@ -1101,13 +1089,10 @@ def _write_term_stats(spark: SparkSession, paths: IndexPaths,
     if base is not None:
         shutil.rmtree(paths.term_stats)
         os.rename(out, paths.term_stats)
-    if between is not None:
-        between()
     write_term_dict(spark, paths)
 
 
-def write_term_dict(spark: SparkSession, paths: IndexPaths,
-                    n_files: int | None = None) -> None:
+def write_term_dict(spark: SparkSession, paths: IndexPaths) -> None:
     """Sorted secondary term dictionary: (term, term_bucket, df)
     RANGE-partitioned and sorted by ``term``.
 
@@ -1129,10 +1114,9 @@ def write_term_dict(spark: SparkSession, paths: IndexPaths,
     no _SUCCESS (mid-crash), so staleness is impossible and loss is
     only a de-optimization."""
     ts = spark.read.parquet(paths.term_stats)
-    if n_files is None:
-        n_files = max(8, min(64, spark.sparkContext.defaultParallelism))
     (ts.select("term", "term_bucket", "df")
-        .repartitionByRange(n_files, "term")
+        .repartitionByRange(
+            max(8, min(64, spark.sparkContext.defaultParallelism)), "term")
         .sortWithinPartitions("term")
         .write.mode("overwrite").parquet(paths.term_dict))
 
@@ -1218,14 +1202,18 @@ def load_tombstones(spark: SparkSession, index_dir: str,
 
 
 def read_removed(index_dir: str) -> np.ndarray:
-    """The docIDs past compactions physically removed (the
-    ``removed_docs`` liveness record), read driver-side; empty when
-    no compaction removed any."""
+    """The docIDs committed compactions physically removed (the
+    ``removed_docs`` liveness record), read driver-side from the files
+    the manifest lists only — a file a compaction wrote before a crash
+    that stopped its commit is never read; empty when no compaction
+    removed any."""
     import pyarrow.dataset as pads
-    path = IndexPaths(index_dir).removed
-    if not os.path.isdir(path):
+    files = read_manifest(index_dir).get("removed")
+    if not files:
         return np.array([], dtype=np.int64)
-    return pads.dataset(path, format="parquet").to_table(
+    path = IndexPaths(index_dir).removed
+    return pads.dataset([os.path.join(path, f) for f in files],
+                        format="parquet").to_table(
         columns=["doc_id"])["doc_id"].to_numpy()
 
 
@@ -1239,62 +1227,96 @@ def tombstoned(ids: np.ndarray, tomb: np.ndarray) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------
-# compaction (Lucene forceMerge analog): physically remove tombstoned
-# postings, recompute global stats, clear tombstones.  After
-# compaction the index answers queries bit-identically to a fresh
-# build over the live corpus (same postings, same N/df/avgdl).
+# compaction (Lucene's per-segment deletes, TieredMergePolicy's
+# forceMergeDeletes): physically remove tombstoned postings from the
+# generations that hold them, recompute global stats, clear
+# tombstones.  After compaction the index answers queries
+# bit-identically to a fresh build over the live corpus (same
+# postings, same N/df/avgdl).
 # ---------------------------------------------------------------------
 
-class SimulatedCompactionCrash(RuntimeError):
-    """Raised by compact(_crash_after=...) — test-only fault
-    injection for the crash-recovery windows."""
-
-
 def compact(spark: SparkSession, index_dir: str,
-            term_buckets: int = DEFAULT_TERM_BUCKETS,
-            _crash_after: str | None = None) -> dict:
+            term_buckets: int = DEFAULT_TERM_BUCKETS) -> dict:
     """Remove tombstoned documents physically.
 
-    Pass 1 collects (deleted doc, dl) pairs from the postings (to fix
-    N/avgdl); pass 2 rewrites every live generation's rows, tombstoned
-    postings masked (positions preserved), into ONE generation, gen 0,
-    with its manifest, and swaps the segments dir crash-safely: a
-    ``_COMPACTING`` marker makes every open fail loudly
-    until segments, stats and term_stats are all committed, and the
-    old segments are renamed aside (recoverable) rather than deleted
-    before the new ones land.  Tombstones cleared last.
-    The lineage table still describes the ORIGINAL ingest (sha rollup
-    of what was indexed) — verify_lineage checks ingest integrity,
-    not liveness.  Liveness lives in ``removed_docs/``: every docID a
-    compaction physically removes is appended there, and later
-    compactions consult it so a re-delete of an already-removed docID
-    (idempotent-delete retry) is a no-op instead of decrementing
-    N/avgdl a second time.  The new manifest records, per chunk, the
-    docs and tokens removed from it: N and avgdl are computed from
-    those records, so a later append keeps the removals."""
+    The deletes are the tombstones the manifest's removed-docs record
+    (:func:`read_removed`) does not already hold, so a re-delete of a
+    removed docID (idempotent-delete retry) and a rerun after the
+    commit both remove nothing.  Pass 1 collects (deleted doc, dl)
+    pairs from the live generations holding a chunk whose docID range
+    contains a delete (to fix N/avgdl); pass 2 rewrites only the
+    generations that hold a removed doc, tombstoned postings masked
+    (positions preserved), into one new generation at manifest
+    ``seq + 1``.  The removed docIDs are written to a new
+    ``removed_docs`` file first; the manifest then lists it and
+    records, per chunk, the docs and tokens removed from it (N and
+    avgdl are computed from those records, so a later append keeps
+    the removals).  That manifest rename is the only commit point: a
+    crash before it leaves the index answering as before, and the
+    generation and file it wrote are swept by the next writer.
+
+    After the commit, the derived tail an append runs: term_stats and
+    the dictionary, then stats, then the tombstone dir is cleared.  A
+    crash in that tail leaves an index engines refuse
+    (:class:`UnfinishedAppendError`) until a rerun of ``compact`` or
+    :meth:`IndexBuilder.finalize` finishes it.  The lineage table still
+    describes the ORIGINAL ingest (sha rollup of what was indexed) —
+    verify_lineage checks ingest integrity, not liveness."""
+    v = read_format(index_dir)
+    if v != FORMAT_VERSION:
+        raise ValueError(
+            f"index at {index_dir} has layout "
+            f"v{v if v is not None else '<unversioned>'}; compact() "
+            f"rewrites v{FORMAT_VERSION} — rebuild the index")
+    b = IndexBuilder(spark, index_dir, term_buckets=term_buckets)
+    manifest = read_manifest(index_dir)
+    b._sweep_uncommitted(manifest)
+    tomb = np.setdiff1d(load_tombstones(spark, index_dir),
+                        read_removed(index_dir))
+    out = _remove_docs(b, manifest, tomb)
+    b.finalize_term_stats_from_partials()
+    shutil.rmtree(os.path.join(b.paths.base, "tombstones"),
+                  ignore_errors=True)
+    return out
+
+
+def _remove_docs(b: IndexBuilder, manifest: dict, tomb: np.ndarray
+                 ) -> dict:
+    """The part of :func:`compact` up to its commit: find which of
+    ``tomb`` the live generations hold, write them to a new
+    ``removed_docs`` file, rewrite the generations holding one without
+    them, and commit the manifest listing both."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    paths = IndexPaths(index_dir)
-    check_not_compacting(index_dir)
+    # chunk records sorted by docID range (chunks are disjoint), with
+    # the generation holding each
+    held = sorted(((rec["doc_id_min"], g, rec)
+                   for g, e in manifest["gens"].items()
+                   for rec in e["chunks"].values()), key=lambda t: t[0])
+    rec_gen = [g for _, g, _ in held]
+    recs = [rec for _, _, rec in held]
+    rec_min = np.array([r["doc_id_min"] for r in recs], dtype=np.int64)
+    rec_max = np.array([r["doc_id_max"] for r in recs], dtype=np.int64)
 
-    def _crash(step: str) -> None:
-        if _crash_after == step:
-            raise SimulatedCompactionCrash(step)
+    def owner(ids: np.ndarray) -> np.ndarray:
+        """Index into ``recs`` of the chunk whose docID range holds
+        each of ``ids``, -1 when none does."""
+        i = np.searchsorted(rec_min, ids, side="right") - 1
+        hit = i >= 0
+        hit[hit] = ids[hit] <= rec_max[i[hit]]
+        return np.where(hit, i, -1)
 
-    # A crash BEFORE the marker leaves only snapshot/tmp leftovers
-    # (never mutated state) — clean them so a retry starts fresh.
-    for stale in (paths.segments + "_old", paths.stats + "_old",
-                  os.path.join(paths.base, "tombstones_old"),
-                  paths.removed + "_old", paths.segments + "_compacting"):
-        shutil.rmtree(stale, ignore_errors=True)
-    tomb = load_tombstones(spark, index_dir)
-    if tomb.size == 0:
-        return {"removed_docs": 0}
-    positions = read_analyzer(index_dir).get("positions", False)
-    manifest = read_manifest(index_dir)
-    segs = read_segments(spark, index_dir, manifest["gens"])
+    def gens_of(ids: np.ndarray) -> list[str]:
+        own = owner(ids)
+        return sorted({rec_gen[i] for i in own[own >= 0]}, key=int)
 
+    nothing = {"removed_docs": 0, "removed_tokens": 0}
+    candidates = gens_of(tomb)
+    if not candidates:
+        return nothing
+    spark, paths = b.spark, b.paths
+    positions = read_analyzer(paths.base).get("positions", False)
     lo, hi = int(tomb.min()), int(tomb.max())
 
     def dropped_dl(batches):
@@ -1315,8 +1337,8 @@ def compact(spark: SparkSession, index_dir: str,
         yield pd.DataFrame({"doc_id": np.concatenate(out_d),
                             "dl": np.concatenate(out_l)})
 
-    hit_segs = segs.filter((F.col("doc_id_max") >= lo)
-                           & (F.col("doc_id_min") <= hi))
+    hit_segs = read_segments(spark, paths.base, candidates).filter(
+        (F.col("doc_id_max") >= lo) & (F.col("doc_id_min") <= hi))
     # Collect the (doc, dl) pairs actually present in postings —
     # bounded by the tombstone cap, so driver-safe.
     dropped_rows = (hit_segs.select("docs_blob", "dls_blob")
@@ -1327,7 +1349,6 @@ def compact(spark: SparkSession, index_dir: str,
     found_dl = np.array([r["dl"] for r in dropped_rows], dtype=np.int64)
     order = np.argsort(found)
     found, found_dl = found[order], found_dl[order]
-    tok_removed = int(found_dl.sum())
     # Zero-token docs were counted in N at build but never appear in
     # postings.  The chunk records decide existence: a tombstone inside
     # a DENSE chunk range (n_docs == max-min+1) certainly existed.  Residual
@@ -1335,34 +1356,13 @@ def compact(spark: SparkSession, index_dir: str,
     # distinguished from a never-existing docID without per-doc state,
     # and is not subtracted — sequential-ID ingest (the supported
     # pipeline, ids.sequential_index) always produces dense chunks.
-    chunk_recs = {c: rec for e in manifest["gens"].values()
-                  for c, rec in e["chunks"].items()}
-    recs = sorted(chunk_recs.values(), key=lambda r: r["doc_id_min"])
-    rec_min = np.array([r["doc_id_min"] for r in recs], dtype=np.int64)
-    rec_max = np.array([r["doc_id_max"] for r in recs], dtype=np.int64)
-    rec_dense = rec_max - rec_min + 1 == np.array(
-        [r["n_docs"] for r in recs], dtype=np.int64)
-
-    def owner(ids: np.ndarray) -> np.ndarray:
-        """Index into ``recs`` of the chunk whose docID range holds
-        each of ``ids``, -1 when none does (chunks are disjoint)."""
-        i = np.searchsorted(rec_min, ids, side="right") - 1
-        hit = i >= 0
-        hit[hit] = ids[hit] <= rec_max[i[hit]]
-        return np.where(hit, i, -1)
-
+    rec_dense = np.array([r["doc_id_max"] - r["doc_id_min"] + 1
+                          == r["n_docs"] for r in recs] + [False])
     # owner -1 picks the appended False: outside every chunk
-    in_dense = np.append(rec_dense, False)[owner(tomb)]
-    # Liveness guard: lineage describes the ORIGINAL ingest, so a
-    # docID already removed by a PREVIOUS compaction still sits in a
-    # dense range.  Without this mask a re-delete (idempotent-delete
-    # retry) would decrement N/avgdl a second time.  The removed_docs
-    # record (appended below, before tombstones are cleared) is the
-    # per-doc liveness complement of lineage.
-    prior_removed = read_removed(index_dir)
-    existed_empty = (in_dense & ~np.isin(tomb, found)
-                     & ~np.isin(tomb, prior_removed))
-    n_removed = int(found.size) + int(existed_empty.sum())
+    existed_empty = rec_dense[owner(tomb)] & ~np.isin(tomb, found)
+    newly = np.union1d(found, tomb[existed_empty])
+    if not newly.size:
+        return nothing
 
     def rewrite(batches):
         # rows holding a tombstoned posting are decoded one by one,
@@ -1409,146 +1409,32 @@ def compact(spark: SparkSession, index_dir: str,
                  *cols.values(), col["term_bucket"].take(take)],
                 schema=rb.schema)
 
-    tmp = paths.segments + "_compacting"
-    _write_generation(
-        spark, segs.select(*_segment_cols()).mapInArrow(
-            rewrite, schema=PARTIAL_SCHEMA + ", term_bucket int"),
-        _gen_dir(tmp, 0),
-        sum(e["bytes"] for e in manifest["gens"].values()), term_buckets)
     # removed docs and tokens, recorded per chunk in the new manifest
-    newly = np.union1d(found, tomb[existed_empty])
     newly_dl = np.zeros(newly.size, dtype=np.int64)
     newly_dl[np.searchsorted(newly, found)] = found_dl
     own = owner(newly)
-    keep = own >= 0
-    docs_per = np.bincount(own[keep], minlength=len(recs))
-    toks_per = np.bincount(own[keep], weights=newly_dl[keep],
-                           minlength=len(recs))
+    docs_per = np.bincount(own, minlength=len(recs))
+    toks_per = np.bincount(own, weights=newly_dl, minlength=len(recs))
     for i in np.nonzero(docs_per)[0]:
         rec = recs[i]
         rec["removed_docs"] = rec.get("removed_docs", 0) + int(docs_per[i])
         rec["removed_tokens"] = (rec.get("removed_tokens", 0)
                                  + int(toks_per[i]))
-    compacted = {"seq": manifest["seq"] + 1,
-                 "gens": {"0": {"chunks": chunk_recs,
-                                "bytes": _dir_bytes(_gen_dir(tmp, 0))}}}
-    _commit_manifest(tmp, compacted)
-    # Crash-safe swap.  Everything the remaining steps mutate is
-    # snapshotted ALONGSIDE the old segments — stats are decremented,
-    # tombstones cleared and removed_docs appended below, so restoring
-    # segments alone would resurrect postings against already-
-    # decremented stats (double-decrement on the re-run) or drop the
-    # tombstones that still mask them.  rollback_compaction() restores
-    # segments/stats/tombstones/removed_docs as ONE unit.  Order:
-    # snapshots first (non-destructive), then the marker (every open
-    # fails loudly from here), then the renames.
-    old_dir = paths.segments + "_old"
-    stats_old = paths.stats + "_old"
-    tomb_dir = os.path.join(paths.base, "tombstones")
-    tomb_old = os.path.join(paths.base, "tombstones_old")
-    removed_old = paths.removed + "_old"
-    shutil.copytree(paths.stats, stats_old)
-    shutil.copytree(tomb_dir, tomb_old)
-    had_removed = os.path.isdir(paths.removed)
-    if had_removed:
-        shutil.copytree(paths.removed, removed_old)
-    marker = os.path.join(paths.base, "_COMPACTING")
-    with open(marker, "w") as f:
-        json.dump({"note": "compaction in progress; see "
-                           "check_not_compacting / rollback_compaction",
-                   "had_removed_docs": had_removed}, f)
-    os.rename(paths.segments, old_dir)
-    os.rename(tmp, paths.segments)
-    _crash("swap")
-
-    # Record the docIDs removed THIS compaction before tombstones are
-    # cleared (liveness record for idempotent re-deletes).  Crash
-    # recovery does NOT rely on this file: any crash between the
-    # marker and the final cleanup is recovered by
-    # rollback_compaction(), which restores segments/stats/tombstones
-    # /removed_docs together from the *_old snapshots and re-runs
-    # compact() from scratch.
-    if newly.size:
-        os.makedirs(paths.removed, exist_ok=True)
-        seq = len(os.listdir(paths.removed))
-        pq.write_table(pa.table({"doc_id": pa.array(newly, pa.int64())}),
-                       os.path.join(paths.removed, f"r{seq:05d}.parquet"))
-    _crash("removed_docs")
-
-    # refresh stats: N/avgdl over LIVE docs; term_stats from segments
-    _write_stats(paths, *manifest_stats(compacted), compacted["seq"])
-    _crash("stats")
-    _write_term_stats(spark, paths, read_segments(spark, index_dir),
-                      compacted["seq"],
-                      between=lambda: _crash("term_stats"))
-    _crash("term_dict")
-    shutil.rmtree(tomb_dir, ignore_errors=True)
-    _crash("tombstones_cleared")
-    # Commit point.  Everything the compaction mutates is in its
-    # final state, so the marker comes off FIRST: a crash anywhere
-    # in the snapshot cleanup below leaves a fully-committed index
-    # plus stale ``*_old`` dirs that the pre-marker sweep at the top
-    # of the next compact() removes.  (Deleting snapshots while the
-    # marker is still up would let rollback_compaction() pair the
-    # surviving snapshot pieces with committed state — e.g. restore
-    # pre-compaction stats against already-compacted segments.)
-    os.remove(marker)
-    _crash("marker_removed")
-    shutil.rmtree(old_dir)
-    _crash("segments_old_gone")
-    shutil.rmtree(stats_old)
-    _crash("stats_old_gone")
-    shutil.rmtree(tomb_old)
-    if had_removed:
-        shutil.rmtree(removed_old)
-    return {"removed_docs": n_removed, "removed_tokens": tok_removed}
-
-
-def rollback_compaction(spark: SparkSession, index_dir: str) -> None:
-    """Restore the pre-compaction state after a crash mid-compact().
-
-    Rolls back segments, stats, tombstones and removed_docs as ONE
-    unit from the ``*_old`` snapshots the compaction took before its
-    first destructive step, so no recovery path can pair restored
-    postings with already-decremented stats (double-decrement) or
-    resurrect deleted docs without the tombstones that mask them.
-    term_stats is derived data — recomputed from the restored
-    segments (the crashed run may have overwritten it) before the
-    marker is cleared, so a crash inside rollback itself stays
-    loudly recoverable.  After rollback, re-running compact() from
-    the still-present tombstones completes the original operation.
-    """
-    paths = IndexPaths(index_dir)
-    marker = os.path.join(paths.base, "_COMPACTING")
-    if not os.path.exists(marker):
-        raise ValueError(
-            f"no _COMPACTING marker in {index_dir}; nothing to "
-            "roll back")
-    try:
-        with open(marker) as f:
-            meta = json.load(f)
-    except (json.JSONDecodeError, OSError):
-        meta = {}
-    old_dir = paths.segments + "_old"
-    stats_old = paths.stats + "_old"
-    tomb_dir = os.path.join(paths.base, "tombstones")
-    tomb_old = os.path.join(paths.base, "tombstones_old")
-    removed_old = paths.removed + "_old"
-    had_removed = meta.get("had_removed_docs",
-                           os.path.isdir(removed_old))
-    for snap, live in ((old_dir, paths.segments),
-                       (stats_old, paths.stats),
-                       (tomb_old, tomb_dir)):
-        if os.path.isdir(snap):
-            shutil.rmtree(live, ignore_errors=True)
-            os.rename(snap, live)
-    if had_removed:
-        if os.path.isdir(removed_old):
-            shutil.rmtree(paths.removed, ignore_errors=True)
-            os.rename(removed_old, paths.removed)
-    else:
-        # the crashed run created removed_docs; pre-compaction had none
-        shutil.rmtree(paths.removed, ignore_errors=True)
-    _write_term_stats(spark, paths, read_segments(spark, index_dir),
-                      read_manifest(index_dir)["seq"])
-    os.remove(marker)
+    seq = manifest["seq"] + 1
+    name = f"r{seq:05d}.parquet"
+    os.makedirs(paths.removed, exist_ok=True)
+    pq.write_table(pa.table({"doc_id": pa.array(newly, pa.int64())}),
+                   os.path.join(paths.removed, name))
+    touched = gens_of(newly)
+    gens = manifest["gens"]
+    b._replace_generations(
+        {**manifest, "removed": manifest.get("removed", []) + [name]},
+        touched,
+        read_segments(spark, paths.base, touched)
+        .select(*_segment_cols())
+        .mapInArrow(rewrite, schema=PARTIAL_SCHEMA + ", term_bucket int"),
+        sum(gens[g]["bytes"] for g in touched),
+        {c: rec for g in touched for c, rec in gens[g]["chunks"].items()},
+        seq, None)
+    return {"removed_docs": int(newly.size),
+            "removed_tokens": int(found_dl.sum())}

@@ -24,7 +24,7 @@ import json
 import os
 import shutil
 
-from .build import check_not_compacting
+from .build import check_stats_current, read_stats
 
 MANIFEST = "MANIFEST.json"
 _CHUNK = 1 << 20
@@ -45,17 +45,15 @@ def _sha256_file(path: str) -> str:
     return h.hexdigest()
 
 
-_SWAP_SUFFIXES = ("_old", "_restoring", "_replaced", "_compacting",
-                  "_next")
+_SWAP_SUFFIXES = ("_restoring", "_replaced", "_next")
 
 
 def _walk_files(root: str) -> list[str]:
     """Relative paths of every regular file under ``root``, sorted
     (deterministic manifest), skipping Spark _SUCCESS/.crc noise and
-    crash-recovery leftovers (``*_old`` compaction snapshots,
-    ``*_restoring``/``*_replaced`` restore staging, a term-stats
-    fold's ``*_next`` table) — those are transient swap state, never
-    part of a consistent index."""
+    crash-recovery leftovers (``*_restoring``/``*_replaced`` restore
+    staging, a term-stats fold's ``*_next`` table) — those are
+    transient swap state, never part of a consistent index."""
     out = []
     for dirpath, dirs, files in os.walk(root):
         dirs[:] = [d for d in dirs
@@ -70,10 +68,11 @@ def _walk_files(root: str) -> list[str]:
 
 def snapshot_index(index_dir: str, snap_dir: str) -> dict:
     """Copy an index directory into ``snap_dir`` and write a sha256
-    MANIFEST over every file.  Refuses mid-compaction state (the
-    snapshot must capture a consistent index).  Returns the manifest
-    dict ``{relpath: sha256}``."""
-    check_not_compacting(index_dir)
+    MANIFEST over every file.  Refuses an index whose stats lag its
+    segment manifest — an append or compaction that stopped after its
+    commit (the snapshot must capture a consistent index).  Returns
+    the manifest dict ``{relpath: sha256}``."""
+    check_stats_current(index_dir, read_stats(index_dir))
     if os.path.exists(snap_dir) and os.listdir(snap_dir):
         raise ValueError(f"snapshot target {snap_dir} is not empty")
     os.makedirs(snap_dir, exist_ok=True)
@@ -125,11 +124,10 @@ def restore_index(snap_dir: str, index_dir: str,
     ``overwrite=True`` (then replaces it atomically-enough: builds a
     sibling tmp tree first, swaps last).
 
-    Swap discipline (mirrors the compaction swap: never a window
-    with no live index): the verified tmp tree is built first, the
-    existing index is renamed ASIDE (``*_replaced``) — not deleted —
-    then tmp is renamed into place, and the aside copy is removed
-    LAST.  A crash between the two renames leaves the old index
+    Swap discipline (never a window with no live index): the
+    verified tmp tree is built first, the existing index is renamed
+    ASIDE (``*_replaced``) — not deleted — then tmp is renamed into
+    place, and the aside copy is removed LAST.  A crash between the two renames leaves the old index
     recoverable at ``*_replaced``; a crash before the aside-rename
     leaves the old index untouched.  Stale ``*_restoring`` /
     ``*_replaced`` leftovers from a crashed earlier restore are

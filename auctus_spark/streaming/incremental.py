@@ -22,11 +22,13 @@ chunked builder:
   boundaries: the raw rows of the open TAIL chunk are retained in a
   ``tail_buffer`` parquet dir under the index, and an append that
   lands inside that chunk rebuilds it from (buffer ∪ new rows), less
-  the docs compactions removed from it (``removed_docs``) — delete the
-  chunk's partials+lineage, re-tokenize, lineage committed last.  The rebuilt chunk's lineage no longer matches its manifest
-  record, so the next finalize rewrites the generation holding it
-  without its old rows.  The buffer is bounded by ``chunk_docs`` raw
-  rows (pick a smaller ``chunk_docs`` for fine-grained streams);
+  the docs committed compactions removed from it (``read_removed``:
+  the ``removed_docs`` files the manifest lists) — delete the chunk's
+  partials+lineage, re-tokenize, lineage committed last.  The rebuilt
+  chunk's lineage no longer matches its manifest record, so the next
+  finalize rewrites the generation holding it without its old rows.
+  The buffer is bounded by ``chunk_docs`` raw rows (pick a smaller
+  ``chunk_docs`` for fine-grained streams);
   appends into any OLDER committed chunk still fail loudly (their raw
   rows are gone — the exactly-once contract from round 2 stands).
 

@@ -66,23 +66,21 @@ def _build_once(cores: int, out_dir: str, n_docs: int) -> dict:
             "spark": spark, "idx_dir": idx_dir}
 
 
-def _disable_thp():
-    """Best-effort THP=never — the standard Spark/Hadoop node setting.
-    On THP=madvise VMs, 32 concurrent workers fault-storming hugepage
-    compaction degraded this benchmark 2.7x (measured round 3:
-    stage-level 97s -> 36s for the identical build); the numpy-side
-    madvise is already disabled via NUMPY_MADVISE_HUGEPAGE, this
-    covers the remaining JVM/jemalloc allocations.  No-op without
-    root or on already-never systems."""
-    p = "/sys/kernel/mm/transparent_hugepage/enabled"
+def _thp_mode() -> str | None:
+    """The host's transparent-hugepage mode (the bracketed word of
+    ``/sys/kernel/mm/transparent_hugepage/enabled``), recorded with
+    each result; None where the file is absent.  Read only: a benchmark
+    must not change the host it measures.  On THP=madvise VMs, 32
+    concurrent workers fault-storming hugepage compaction degraded
+    this benchmark 2.7x (stage-level 97s under madvise against 36s
+    under never, for the identical build), so results taken under
+    different modes are not comparable."""
     try:
-        with open(p) as f:
-            if "[never]" in f.read():
-                return
-        with open(p, "w") as f:
-            f.write("never")
+        with open("/sys/kernel/mm/transparent_hugepage/enabled") as f:
+            text = f.read()
     except OSError:
-        pass
+        return None
+    return text[text.find("[") + 1:text.find("]")] if "[" in text else None
 
 
 def _best_prior_suite() -> float | None:
@@ -218,7 +216,6 @@ def main():
     if every attempt stays above the bar, the line is still printed
     but flagged ``interference_suspected`` so a slow-but-real
     regression is recorded honestly rather than hidden."""
-    _disable_thp()
     prior = _best_prior_suite()
     out = _run_suite()
     attempts = 1
@@ -229,6 +226,7 @@ def main():
             out = retry
         attempts += 1
     out["suite_runs"] = attempts
+    out["thp_mode"] = _thp_mode()
     if prior is not None:
         out["prior_best_sec"] = prior
         if out["value"] > 1.2 * prior:
@@ -274,7 +272,8 @@ def scaling():
                       "value": round(eff, 3), "unit": "ratio",
                       "n": n, "corpus_docs": N_DOCS,
                       "runs": {k: {kk: round(vv, 2) for kk, vv in v.items()}
-                               for k, v in out.items()}}))
+                               for k, v in out.items()},
+                      "thp_mode": _thp_mode()}))
 
 
 def sf1():
@@ -290,7 +289,6 @@ def sf1():
     across the whole query set in ONE job, which is why both numbers
     are recorded side by side.
     """
-    _disable_thp()
     n_docs = int(os.environ.get("BENCH_SF1_DOCS", "2000000"))
     work = os.environ.get("BENCH_WORK_DIR", "/tmp/auctus_bench")
     os.makedirs(work, exist_ok=True)
@@ -335,7 +333,7 @@ def sf1():
             "q_batched_per_query": round(batched_wall / len(qmap), 3),
         },
         "n_queries_batched": len(qmap),
-        "sf": 1}))
+        "sf": 1, "thp_mode": _thp_mode()}))
 
 
 if __name__ == "__main__":

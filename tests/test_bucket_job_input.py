@@ -256,13 +256,22 @@ def test_stats_read_matches_spark(spark, built, tmp_path):
     assert _engine_stats(spark, d) == compacted
 
 
-def test_doc_bucket_count_from_lineage(built, tmp_path):
-    """Doc buckets 0-2 of 600 docs at 256 per bucket, from the lineage
-    of three 200-doc chunks whose ranges share buckets."""
+def test_doc_bucket_count_from_lineage(spark, built, tmp_path):
+    """Doc buckets 0-2 of 600 docs at 256 per bucket, from the manifest
+    records of three 200-doc chunks whose ranges share buckets; a chunk
+    tokenized (its lineage row written) but never committed to the
+    manifest is not counted."""
     out, _ = built
     assert read_doc_buckets(out) == 3
     d = str(tmp_path / "old")
     shutil.copytree(out, d)
+    extra = generate_corpus(200, seed=5, min_tokens=20, max_tokens=60,
+                            vocab_size=500)
+    extra["doc_id"] += 1000
+    assert IndexBuilder(spark, d, doc_bucket=256, chunk_docs=200,
+                        term_buckets=8).tokenize_chunks(
+                            spark.createDataFrame(extra)) == [5]
+    assert read_doc_buckets(d) == 3
     with open(f"{d}/_ANALYZER", "w") as f:
         f.write('{"stem": false, "positions": false}')
     assert read_doc_buckets(d) is None

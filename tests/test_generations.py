@@ -184,6 +184,35 @@ def test_append_cost_does_not_grow_with_base(spark, tmp_path):
     assert written[0] == written[1]
 
 
+def test_compaction_rewrites_only_generations_with_deletes(spark,
+                                                         tmp_path):
+    """Deletes that fall in 1 of 3 live generations: compaction
+    rewrites that generation alone into a new one, the other
+    generations' files stay untouched (same inode and size), and the
+    index equals the oracle over the live corpus."""
+    pdf = generate_corpus(300, **KW)
+    d = str(tmp_path / "idx")
+    b = _builder(spark, d)
+    for lo in (0, 100, 200):
+        incremental_update(b, spark.createDataFrame(
+            pdf[(pdf.doc_id >= lo) & (pdf.doc_id < lo + 100)]))
+    assert sorted(read_manifest(d)["gens"]) == ["0", "1", "2"]
+    dead = [120, 150, 199]
+    delete_docs(spark, d, dead)
+    old = _gen_files(d)
+    assert compact(spark, d, term_buckets=4)["removed_docs"] == 3
+    m = read_manifest(d)
+    assert sorted(m["gens"]) == ["0", "2", "3"]
+    assert list(m["gens"]["3"]["chunks"]) == ["1"]
+    assert m["gens"]["3"]["chunks"]["1"]["removed_docs"] == 3
+    kept = {p: v for p, v in old.items()
+            if os.sep + "gen=1" + os.sep not in p}
+    assert {p: v for p, v in _gen_files(d).items() if p in old} == kept
+    assert not os.path.exists(os.path.join(d, "segments", "gen=1"))
+    _assert_matches(spark, d, OracleIndex.build(
+        _docs(pdf[~pdf.doc_id.isin(dead)])))
+
+
 def test_streaming_tail_rebuild_keeps_one_copy(spark, tmp_path):
     """finalize, a sub-chunk append into the tail chunk, finalize
     again: the manifest holds the rebuilt chunk once, and the index

@@ -3,6 +3,9 @@ resumed produces byte-identical search results to a fresh full build,
 and already-built chunks are skipped on resume."""
 
 import math
+import os
+
+import pytest
 
 from auctus_spark.corpus import generate_corpus
 from auctus_spark.index.build import IndexBuilder
@@ -473,12 +476,15 @@ def test_tombstones_mask_explain(spark, tmp_path):
 
 
 def _assert_same_segments(spark, got_dir, want_dir):
-    """Every column of the two segments tables is equal once rows are
-    sorted by (term, bucket, doc_id_min)."""
+    """Every posting column of the two segments tables is equal once
+    rows are sorted by (term, bucket, doc_id_min).  The ``gen``
+    directory key is left out: a compaction writes its generation at
+    the next free number, a fresh build at 0."""
     from auctus_spark.index.build import IndexPaths
 
     def rows(d):
         pdf = spark.read.parquet(IndexPaths(d).segments).toPandas()
+        pdf = pdf.drop(columns="gen")
         pdf = pdf.sort_values(["term", "bucket", "doc_id_min"])
         return pdf[sorted(pdf.columns)].reset_index(drop=True)
 
@@ -639,36 +645,6 @@ def test_compaction_redelete_idempotent(spark, tmp_path):
     assert eng2.n_docs == 296 and abs(eng2.avgdl - oracle.avgdl) < 1e-9
 
 
-def test_compaction_marker_blocks_open(spark, tmp_path):
-    """A half-completed compaction (_COMPACTING marker on disk) fails
-    loudly on every open — engines, builds and new compactions —
-    instead of serving compacted postings with stale stats."""
-    import pytest
-
-    from auctus_spark.index.build import (CompactionInProgressError,
-                                          compact, delete_docs)
-    from auctus_spark.query.bm25 import SearchEngine
-
-    pdf = generate_corpus(100, min_tokens=10, max_tokens=30,
-                          vocab_size=200)
-    d = str(tmp_path / "midx")
-    IndexBuilder(spark, d, doc_bucket=64, chunk_docs=100,
-                 term_buckets=2).build(spark.createDataFrame(pdf))
-    marker = tmp_path / "midx" / "_COMPACTING"
-    marker.write_text("crash simulation\n")
-    with pytest.raises(CompactionInProgressError):
-        SearchEngine(spark, d, term_buckets=2)
-    with pytest.raises(CompactionInProgressError):
-        IndexBuilder(spark, d, doc_bucket=64, chunk_docs=100,
-                     term_buckets=2).build(spark.createDataFrame(pdf))
-    delete_docs(spark, d, [1])
-    with pytest.raises(CompactionInProgressError):
-        compact(spark, d, term_buckets=2)
-    marker.unlink()
-    eng = SearchEngine(spark, d, term_buckets=2)  # recovers after fix
-    assert eng.n_docs == 100
-
-
 def test_export_metrics_tables(spark, tmp_path):
     """Lineage + stats publish as catalog tables (the Iceberg-bound
     checkpoint-metrics path; default session catalog here) and stay
@@ -695,123 +671,144 @@ def test_export_metrics_tables(spark, tmp_path):
         spark.sql(f"DROP TABLE {t}")
 
 
-def test_compaction_crash_rollback_all_windows(spark, tmp_path):
-    """Fault-inject a crash after EVERY mutating compaction step;
-    rollback_compaction() must restore the exact pre-compaction state
-    (stats not double-decremented, tombstones still masking, search
-    identical), and a re-run compact() must then match a fresh build
-    of the live corpus — the ADVICE double-decrement scenario."""
-    import pytest
+class _Crash(Exception):
+    """A simulated process crash at one file-system mutation."""
 
-    from auctus_spark.index.build import (SimulatedCompactionCrash,
-                                          compact, delete_docs,
-                                          rollback_compaction)
+
+@pytest.fixture
+def fs_mutations(monkeypatch):
+    """Counts the file-system mutations made under ``.root`` —
+    ``os.rename``, ``os.replace``, ``os.remove``, ``shutil.rmtree``,
+    ``open`` for writing, ``pq.write_table`` and
+    ``DataFrameWriter.parquet`` — and raises :class:`_Crash` instead of
+    making the one numbered ``.crash_at`` (0-based)."""
+    import builtins
+    import shutil
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    class Mutations:
+        root = None
+        crash_at = None
+        count = 0
+
+        def hit(self, path):
+            if self.root is None or not (os.path.abspath(
+                    os.fspath(path)) + os.sep).startswith(
+                        self.root + os.sep):
+                return
+            if self.count == self.crash_at:
+                raise _Crash(path)
+            self.count += 1
+
+    mut = Mutations()
+
+    def wrap(owner, name, path_arg, writes=None):
+        real = getattr(owner, name)
+
+        def fake(*a, **kw):
+            if writes is None or writes(*a, **kw):
+                mut.hit(a[path_arg])
+            return real(*a, **kw)
+        monkeypatch.setattr(owner, name, fake)
+
+    for name in ("rename", "replace", "remove"):
+        wrap(os, name, 0)
+    wrap(shutil, "rmtree", 0)
+    wrap(pq, "write_table", 1)
+    wrap(DataFrameWriter, "parquet", 1)
+    wrap(builtins, "open", 0, lambda f, mode="r", *a, **kw: (
+        isinstance(f, (str, os.PathLike)) and any(c in mode for c in "wax+")))
+    return mut
+
+
+def test_compaction_crash_sweep(spark, tmp_path, fs_mutations):
+    """A crash at EVERY file-system mutation of compact(), on a copy of
+    one three-generation index whose deletes fall in two generations:
+    before the manifest commit the index answers as before (deletes
+    masked, pre-compaction N/avgdl, no removed docs recorded); between
+    the commit and the stats write every engine refuses it
+    (UnfinishedAppendError); after the stats write it answers the live
+    corpus.  In every window a rerun of compact() then matches the
+    live-corpus oracle, subtracting the removed docs exactly once, and
+    a later delete + compaction subtracts only its own doc."""
+    import shutil
+
+    from auctus_spark.index.build import (UnfinishedAppendError, compact,
+                                          delete_docs, read_manifest,
+                                          read_removed)
     from auctus_spark.oracle import OracleIndex
     from auctus_spark.query.bm25 import SearchEngine
+    from auctus_spark.streaming.incremental import incremental_update
 
-    pdf = generate_corpus(300, min_tokens=10, max_tokens=50,
-                          vocab_size=400)
-    dead = [2, 5, 50, 51, 299]
-    live_pdf = pdf[~pdf.doc_id.isin(dead)]
-    full_oracle = OracleIndex.build(
-        [(int(r.doc_id), r.content)
-         for r in pdf.itertuples(index=False)])
-    live_oracle = OracleIndex.build(
-        [(int(r.doc_id), r.content)
-         for r in live_pdf.itertuples(index=False)])
+    pdf = generate_corpus(240, min_tokens=10, max_tokens=40,
+                          vocab_size=300)
+    base = str(tmp_path / "base")
+    b = IndexBuilder(spark, base, doc_bucket=64, chunk_docs=80,
+                     term_buckets=2)
+    for lo in (0, 80, 160):
+        incremental_update(b, spark.createDataFrame(
+            pdf[(pdf.doc_id >= lo) & (pdf.doc_id < lo + 80)]))
+    assert len(read_manifest(base)["gens"]) == 3
+    dead, later = [2, 5, 50, 90, 91], [200]
+    delete_docs(spark, base, dead)
 
-    for step in ["swap", "removed_docs", "stats", "term_stats",
-                 "term_dict", "tombstones_cleared"]:
-        d = str(tmp_path / f"crash_{step}")
-        IndexBuilder(spark, d, doc_bucket=64, chunk_docs=150,
-                     term_buckets=2).build(spark.createDataFrame(pdf))
-        delete_docs(spark, d, dead)
-        with pytest.raises(SimulatedCompactionCrash):
-            compact(spark, d, term_buckets=2, _crash_after=step)
-        # marker blocks every open
-        with pytest.raises(Exception):
+    def oracle(drop):
+        return OracleIndex.build(
+            [(int(r.doc_id), r.content)
+             for r in pdf[~pdf.doc_id.isin(drop)].itertuples(index=False)])
+    full, live, live2 = oracle([]), oracle(dead), oracle(dead + later)
+    queries = ["import", "def return"]
+
+    def assert_answers(d, want, masked=()):
+        eng = SearchEngine(spark, d, term_buckets=2)
+        assert (eng.n_docs, eng.avgdl) == (want.n_docs, want.avgdl)
+        for q in queries:
+            got = [(int(r.doc_id), float(r.score))
+                   for r in eng.search(q, k=20).collect()]
+            assert got == [(i, s) for i, s in want.search(q, k=40)
+                           if i not in masked][:20], q
+
+    def n_mutations():
+        d = str(tmp_path / "count")
+        shutil.copytree(base, d)
+        fs_mutations.root, fs_mutations.count = d, 0
+        compact(spark, d, term_buckets=2)
+        fs_mutations.root = None
+        return fs_mutations.count
+
+    states = []
+    for i in range(n_mutations()):
+        d = str(tmp_path / f"crash{i}")
+        shutil.copytree(base, d)
+        fs_mutations.root, fs_mutations.count = d, 0
+        fs_mutations.crash_at = i
+        with pytest.raises(_Crash):
+            compact(spark, d, term_buckets=2)
+        fs_mutations.root = None
+        try:
             SearchEngine(spark, d, term_buckets=2)
-        rollback_compaction(spark, d)
-        # restored: tombstones still mask the deletes, stats are the
-        # ORIGINAL ones (deleted docs still count until compaction)
-        eng = SearchEngine(spark, d, term_buckets=2)
-        assert eng.n_docs == full_oracle.n_docs, step
-        assert abs(eng.avgdl - full_oracle.avgdl) < 1e-9, step
-        got = [(int(r.doc_id), float(r.score))
-               for r in eng.search("import", k=50).collect()]
-        want = [(i, s) for i, s in full_oracle.search("import", k=200)
-                if i not in dead][:50]
-        assert [i for i, _ in got] == [i for i, _ in want], step
-        # re-run completes the original compaction, exactly once
+        except UnfinishedAppendError:
+            states.append("refused")
+        else:
+            if read_removed(d).size:
+                assert sorted(read_removed(d)) == dead, i
+                assert_answers(d, live)
+                states.append("after")
+            else:
+                assert_answers(d, full, masked=dead)
+                states.append("before")
         res = compact(spark, d, term_buckets=2)
-        assert res["removed_docs"] == len(dead), step
-        eng2 = SearchEngine(spark, d, term_buckets=2)
-        assert eng2.n_docs == live_oracle.n_docs, step
-        assert abs(eng2.avgdl - live_oracle.avgdl) < 1e-9, step
-        for q in ["import", "def return", "the"]:
-            got = [(int(r.doc_id), float(r.score))
-                   for r in eng2.search_wand(q, k=50).collect()]
-            assert got == live_oracle.search(q, k=50), (step, q)
-
-
-def test_compaction_crash_in_cleanup_is_committed(spark, tmp_path):
-    """Crash windows INSIDE the post-commit cleanup (ADVICE r5): the
-    marker comes off before any snapshot deletion, so a crash while
-    deleting the *_old snapshots leaves a fully-committed index —
-    rollback refuses (no marker), queries answer the LIVE corpus with
-    correct stats, and the next compact()'s entry sweep removes the
-    stale snapshot dirs."""
-    import pytest
-
-    from auctus_spark.index.build import (SimulatedCompactionCrash,
-                                          compact, delete_docs,
-                                          rollback_compaction)
-    from auctus_spark.oracle import OracleIndex
-    from auctus_spark.query.bm25 import SearchEngine
-
-    pdf = generate_corpus(300, min_tokens=10, max_tokens=50,
-                          vocab_size=400)
-    dead = [2, 5, 50, 51, 299]
-    live_pdf = pdf[~pdf.doc_id.isin(dead)]
-    live_oracle = OracleIndex.build(
-        [(int(r.doc_id), r.content)
-         for r in live_pdf.itertuples(index=False)])
-
-    for step in ["marker_removed", "segments_old_gone",
-                 "stats_old_gone"]:
-        d = str(tmp_path / f"cleanup_{step}")
-        IndexBuilder(spark, d, doc_bucket=64, chunk_docs=150,
-                     term_buckets=2).build(spark.createDataFrame(pdf))
-        delete_docs(spark, d, dead)
-        with pytest.raises(SimulatedCompactionCrash):
-            compact(spark, d, term_buckets=2, _crash_after=step)
-        # committed: no marker, so rollback refuses…
-        with pytest.raises(ValueError):
-            rollback_compaction(spark, d)
-        # …and the index already answers for the LIVE corpus with
-        # correct (single-decrement) stats despite leftover snapshots
-        eng = SearchEngine(spark, d, term_buckets=2)
-        assert eng.n_docs == live_oracle.n_docs, step
-        assert abs(eng.avgdl - live_oracle.avgdl) < 1e-9, step
-        for q in ["import", "def return"]:
-            got = [(int(r.doc_id), float(r.score))
-                   for r in eng.search_wand(q, k=50).collect()]
-            assert got == live_oracle.search(q, k=50), (step, q)
-        # a later compact() sweeps the stale *_old leftovers (no-op
-        # compaction: no tombstones left)
-        assert compact(spark, d, term_buckets=2) == {"removed_docs": 0}
-        import os
-        leftovers = [p for p in os.listdir(d) if p.endswith("_old")]
-        assert leftovers == [], (step, leftovers)
-
-
-def test_rollback_without_marker_refuses(spark, tmp_path):
-    from auctus_spark.index.build import rollback_compaction
-    import pytest
-    pdf = generate_corpus(50, min_tokens=10, max_tokens=20,
-                          vocab_size=100)
-    d = str(tmp_path / "nm")
-    IndexBuilder(spark, d, doc_bucket=64, chunk_docs=50,
-                 term_buckets=2).build(spark.createDataFrame(pdf))
-    with pytest.raises(ValueError):
-        rollback_compaction(spark, d)
+        assert res["removed_docs"] == (len(dead) if states[-1] == "before"
+                                       else 0), (i, states[-1])
+        assert_answers(d, live)
+        assert not os.path.exists(os.path.join(d, "tombstones")), i
+        delete_docs(spark, d, dead + later)
+        assert compact(spark, d, term_buckets=2)["removed_docs"] == 1, i
+        assert_answers(d, live2)
+        shutil.rmtree(d)
+    # the three states come in protocol order, each at least once
+    assert states == sorted(states, key=["before", "refused",
+                                         "after"].index), states
+    assert set(states) == {"before", "refused", "after"}, states

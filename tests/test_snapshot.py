@@ -56,8 +56,8 @@ def test_snapshot_restore_bit_identical(spark, tmp_path):
 
 
 def test_snapshot_skips_swap_leftovers(spark, tmp_path):
-    """A crash in compaction's post-commit cleanup can leave *_old
-    snapshot dirs with no marker; snapshot_index must not capture
+    """A crash in a term-stats fold between its write and its swap
+    leaves a ``term_stats_next`` table; snapshot_index must not capture
     that transient swap state."""
     import os
 
@@ -66,16 +66,16 @@ def test_snapshot_skips_swap_leftovers(spark, tmp_path):
     d = str(tmp_path / "idx4")
     IndexBuilder(spark, d, doc_bucket=64, chunk_docs=60,
                  term_buckets=2).build(spark.createDataFrame(pdf))
-    os.makedirs(os.path.join(d, "segments_old"))
-    with open(os.path.join(d, "segments_old", "junk.parquet"),
+    os.makedirs(os.path.join(d, "term_stats_next"))
+    with open(os.path.join(d, "term_stats_next", "junk.parquet"),
               "wb") as f:
         f.write(b"stale")
     snap = str(tmp_path / "snap4")
     manifest = snapshot_index(d, snap)
-    assert not any("segments_old" in rel for rel in manifest)
+    assert not any("term_stats_next" in rel for rel in manifest)
     r = str(tmp_path / "r4")
     restore_index(snap, r)
-    assert not os.path.exists(os.path.join(r, "segments_old"))
+    assert not os.path.exists(os.path.join(r, "term_stats_next"))
     q = ["import", "the"]
     assert _topk(spark, r, q) == _topk(spark, d, q)
 
@@ -99,12 +99,25 @@ def test_snapshot_detects_corruption(spark, tmp_path):
         restore_index(snap, str(tmp_path / "r2"))
 
 
-def test_snapshot_refuses_midcompaction(spark, tmp_path):
+def test_snapshot_refuses_midcompaction(spark, tmp_path, monkeypatch):
+    """A compaction that stopped after its manifest commit, before its
+    stats were written, leaves an index whose stats lag its manifest:
+    snapshot_index refuses it."""
+    from auctus_spark.index import build
+
     pdf = generate_corpus(50, min_tokens=10, max_tokens=20,
                           vocab_size=100)
     d = str(tmp_path / "idx3")
     IndexBuilder(spark, d, doc_bucket=64, chunk_docs=50,
                  term_buckets=2).build(spark.createDataFrame(pdf))
-    (tmp_path / "idx3" / "_COMPACTING").write_text("{}")
-    with pytest.raises(Exception):
+    delete_docs(spark, d, [1, 2])
+
+    def crash(*a, **kw):
+        raise RuntimeError("crash before the stats write")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(build, "_write_stats", crash)
+        with pytest.raises(RuntimeError, match="stats write"):
+            compact(spark, d, term_buckets=2)
+    with pytest.raises(build.UnfinishedAppendError):
         snapshot_index(d, str(tmp_path / "snap3"))
