@@ -229,8 +229,8 @@ def read_segments(spark: SparkSession, index_dir: str,
     seg = IndexPaths(index_dir).segments
     if gens is None:
         gens = read_manifest(index_dir)["gens"]
-    return spark.read.option("basePath", seg).parquet(
-        *[_gen_dir(seg, g) for g in sorted(gens, key=int)])
+    return (spark.read.schema(SEGMENTS_SCHEMA).option("basePath", seg)
+            .parquet(*[_gen_dir(seg, g) for g in sorted(gens, key=int)]))
 
 
 def check_stats_current(index_dir: str, stats: dict) -> None:
@@ -310,6 +310,19 @@ PARTIAL_SCHEMA = (
     "block_last_doc binary, max_tf long, min_dl long, "
     "pos_blob binary, pos_off binary"
 )
+
+# Schemas of the library's own parquet reads, partition columns typed
+# as Spark infers them from the directory names: a read without a
+# schema runs a one-task schema-inference job.
+SEGMENTS_SCHEMA = PARTIAL_SCHEMA + ", gen int, term_bucket int"
+TERM_STATS_SCHEMA = "term string, df long, cf long, term_bucket int"
+
+
+def read_term_stats(spark: SparkSession, index_dir: str) -> DataFrame:
+    """The (term, df, cf) table, partitioned by ``term_bucket``."""
+    return spark.read.schema(TERM_STATS_SCHEMA).parquet(
+        IndexPaths(index_dir).term_stats)
+
 
 def _sha_rollup_expr():
     """JVM-side sha256 lineage rollup: first 15 hex chars (60 bits) as
@@ -833,7 +846,8 @@ class IndexBuilder:
 
     def _read_partials(self, chunks) -> DataFrame:
         """The partial rows of ``chunks``, with their ``term_bucket``."""
-        return (self.spark.read.option("basePath", self.paths.partials)
+        return (self.spark.read.schema(PARTIAL_SCHEMA + ", chunk int")
+                .option("basePath", self.paths.partials)
                 .parquet(*[os.path.join(self.paths.partials, f"chunk={c}")
                            for c in sorted(chunks, key=int)])
                 .drop("chunk")
@@ -998,7 +1012,7 @@ class IndexBuilder:
             return
         base = None
         if ts_seq:
-            base = self.spark.read.parquet(self.paths.term_stats)
+            base = read_term_stats(self.spark, self.paths.base)
         _write_term_stats(self.spark, self.paths,
                           self._read_partials(appended["chunks"]),
                           m["seq"], base=base)
@@ -1113,7 +1127,7 @@ def write_term_dict(spark: SparkSession, paths: IndexPaths) -> None:
     falls back to the term_stats scan when the dir is absent or has
     no _SUCCESS (mid-crash), so staleness is impossible and loss is
     only a de-optimization."""
-    ts = spark.read.parquet(paths.term_stats)
+    ts = read_term_stats(spark, paths.base)
     (ts.select("term", "term_bucket", "df")
         .repartitionByRange(
             max(8, min(64, spark.sparkContext.defaultParallelism)), "term")

@@ -10,13 +10,15 @@ co-partitioned by docID-range bucket (all terms' postings for one doc
 range share a bucket id), so AND-intersection and scoring run per
 bucket inside ``applyInPandas`` with numpy set-intersection, decoding
 only the blocks that can hold a candidate.  Per-bucket top-k, then one
-global ``ORDER BY ... LIMIT k`` merge.  No shuffle of posting rows at
-all — only (bucket → k rows) survive.  The segment scan is pruned by
-``term_bucket`` partition; the files are not term-sorted, so row-group
-pruning does not apply.  :meth:`SearchEngine.search` (and its alias
-``search_wand``), :func:`search_many`, :meth:`SearchEngine.explain` and
-:func:`search_multi_index` all run the one AND kernel; the
-pure-Python scorer of ``oracle.py`` is the reference they match.
+global ``ORDER BY ... LIMIT k`` merge: only (bucket → k rows) survive
+the scorer.  A small query shuffles no posting rows at all; a large
+one moves its pruned scan once, by bucket.  The segment scan is
+pruned by ``term_bucket`` partition; the files are not term-sorted,
+so row-group pruning does not apply.  :meth:`SearchEngine.search`
+(and its alias ``search_wand``), :func:`search_many`,
+:meth:`SearchEngine.explain` and :func:`search_multi_index` all run
+the one AND kernel; the pure-Python scorer of ``oracle.py`` is the
+reference they match.
 
 Every BM25-scored family of the bucket-parallel path — AND, OR (with
 ``min_should_match``), synonym slots, phrase (exact, sloppy and
@@ -49,16 +51,23 @@ overhead than for scoring, so the bucket job keeps it down.
   same input cost one py4j round trip per column, literal and list
   element.  Only terms of the analyzer alphabet ``[a-z0-9_]+`` are
   quoted into the text, since no other string can be an index term.
-- The bucket exchange has one partition per doc bucket, capped at 4x
-  the default parallelism.  The engine reads the bucket count at open
-  from the recorded ``doc_bucket`` and the lineage's chunk docID
-  ranges.  Every empty task costs a Python worker round trip.
+- The number of scoring tasks comes from the postings the job will
+  decode (:func:`_bucket_partitions`): the summed df of its distinct
+  terms over :data:`_TASK_POSTINGS`, capped at one task per core and
+  at the index's doc-bucket count, which the engine reads at open
+  from the recorded ``doc_bucket`` and the manifest's chunk docID
+  ranges.  Each Python task costs about 45 ms of CPU however small
+  its groups are, so a small query scores in ONE task: the pruned
+  scan is coalesced into the grouped map with no exchange, and the
+  whole query is one task of one job.  A large query fans out over a
+  hash exchange on ``bucket`` (:func:`_spread_buckets`).
 - With the driver stats map, an AND query with an unindexed term
-  never becomes a job.
+  never becomes a job, and sizing the job runs none either.
 
 At ``perfbench`` shape (2048 files, 4 doc buckets, local[4]), a warm
 hot-term ``search_wand`` made 94 py4j calls instead of 317 while its
-plan was built, and ran 7 tasks instead of 19.
+plan was built, and runs 1 task of 1 job, where it once ran 19 tasks
+of 2 jobs.
 
 Global statistics discipline: N, avgdl, df are read from the stats
 tables written at build finalize (pre-merge snapshot), never derived
@@ -93,46 +102,74 @@ _GRAM_N = 2
 _INDEX_TERM = re.compile(JVM_TOKEN_PATTERN)
 
 
-def _bucket_partitions(spark: SparkSession, doc_buckets: int | None
-                       ) -> int:
-    """Shuffle partitions of the bucket exchange: one per doc bucket,
-    capped at 4x the default parallelism; 4x the default parallelism
-    when the index does not record its doc-bucket count."""
-    p = 4 * spark.sparkContext.defaultParallelism
+# Postings one scoring task takes before the bucket job adds another.
+# Each Python task costs about 45 ms of CPU however few postings it
+# scores, so a query of a few thousand postings runs in one.  On a
+# 131k-doc index (local[4], warm 2-term AND queries over 40k-130k
+# postings) one task cost the least CPU but 1.5-1.8x the wall time of
+# four; 1 << 16 (1-2 tasks) also cost more wall time, and 1 << 12
+# (always 4 tasks, where this value runs 3-4) cost the same within
+# run-to-run noise (AB_bucket_sizing.json).
+_TASK_POSTINGS = 1 << 14
+
+
+def _bucket_cap(spark: SparkSession, doc_buckets: int | None) -> int:
+    """Most scoring tasks a bucket job of this index runs: one per
+    core, and no more than the index has doc buckets (when it records
+    how many)."""
+    p = spark.sparkContext.defaultParallelism
     return min(p, doc_buckets) if doc_buckets else p
+
+
+def _bucket_partitions(cap: int, postings: int | None) -> int:
+    """Scoring tasks of one bucket job: ``ceil(postings /``
+    :data:`_TASK_POSTINGS` ``)`` within ``[1, cap]``
+    (:func:`_bucket_cap`), where ``postings`` is the summed df of the
+    job's distinct terms.  It comes from the driver stats map, so
+    sizing runs no Spark job; when the map is capped out (``None``) df
+    is known only inside Spark and the job takes the cap.
+
+    More tasks than cores only queue: on a 131k-doc index at local[4]
+    a warm hot+hot AND query cost 3.6 cpu-s and 1.18 s wall in 16
+    tasks (4x the cores), 2.7 cpu-s and 0.93 s in 4.  A small query
+    is cheapest in one task (:func:`_spread_buckets`)."""
+    if postings is None:
+        return cap
+    return max(1, min(cap, -(-postings // _TASK_POSTINGS)))
 
 
 def _spread_buckets(df: DataFrame, partitions: int | None = None
                     ) -> DataFrame:
-    """Numbered hash-repartition by doc ``bucket`` ahead of every
-    ``groupBy("bucket").applyInPandas`` scorer, into ``partitions``
-    (default 4x the default parallelism; the engines pass
-    :func:`_bucket_partitions`).
+    """Place the doc buckets of ``df`` for the
+    ``groupBy("bucket").applyInPandas`` scorer, in ``partitions``
+    tasks (:func:`_bucket_partitions`; default one per core).
 
-    Without it the scorer's ENSURE_REQUIREMENTS exchange is subject to
-    AQE partition coalescing: a query's pruned segment scan is a few
-    MB, far below the advisory partition size, so AQE folds the
-    post-shuffle partitions down to 1-3 and the python scoring — the
-    expensive part of the job, whose cost is proportional to decoded
-    postings, not shuffled bytes — runs on 1-3 cores (measured: hot
-    3-term WAND query 1.09 s -> 0.63 s at 200k docs, identical rows).
-    A repartition WITH an explicit partition count is not coalesced
-    (user-specified).  The scorer's ClusteredDistribution requirement
-    is satisfied by ANY hash partitioning on bucket, so no second
-    exchange appears.
+    One task: the pruned scan is coalesced to one partition, with no
+    shuffle.  ``SinglePartition`` satisfies the grouped map, the
+    ``TakeOrdered`` merge and a batch's per-``query_id`` window, so
+    Spark adds no exchange and the whole query is one task of one job.
 
-    Partitions beyond the bucket count only add empty tasks, and every
-    task of the scoring stage costs a Python worker round trip whether
-    or not it owns a group.  Over-partitioning does not keep buckets
-    apart either: murmur3 picks the slots, and at 16 partitions buckets
-    0 and 1 of a 4-bucket index share partition 13 (at 4 partitions
-    they share partition 1).  So the engines use one partition per doc
-    bucket, capped at 4x parallelism for large indexes, where each task
-    owns several groups.  ``repartitionById`` would place each bucket
-    alone, but its partitioning does not satisfy the scorer's
+    More: a numbered hash-repartition by ``bucket``.  Without it the
+    scorer's ENSURE_REQUIREMENTS exchange is subject to AQE partition
+    coalescing: a query's pruned segment scan is a few MB, far below
+    the advisory partition size, so AQE folds the post-shuffle
+    partitions down to 1-3 and the python scoring — whose cost is
+    proportional to decoded postings, not shuffled bytes — runs on 1-3
+    cores (measured: hot 3-term WAND query 1.09 s -> 0.63 s at 200k
+    docs, identical rows).  A repartition WITH an explicit partition
+    count is not coalesced (user-specified), and the scorer's
+    ClusteredDistribution requirement is satisfied by ANY hash
+    partitioning on bucket, so no second exchange appears.
+
+    murmur3 picks the slots, so buckets can share a partition while
+    another stays empty (at 4 partitions buckets 0 and 1 of a 4-bucket
+    index share partition 1).  ``repartitionById`` would place each
+    bucket alone, but its partitioning does not satisfy the scorer's
     distribution, so a second exchange follows it."""
     if partitions is None:
-        partitions = _bucket_partitions(df.sparkSession, None)
+        partitions = _bucket_cap(df.sparkSession, None)
+    if partitions == 1:
+        return df.coalesce(1)
     return df.repartition(partitions, "bucket")
 
 
@@ -357,7 +394,7 @@ class SearchEngine:
                 f"engine reads v{FORMAT_VERSION} — rebuild the index")
         from ..index.build import (check_stats_current, read_analyzer,
                                    read_doc_buckets, read_segments,
-                                   read_stats)
+                                   read_stats, read_term_stats)
         self.stem = bool(read_analyzer(index_dir).get("stem", False))
         row = read_stats(index_dir)
         check_stats_current(index_dir, row)
@@ -370,7 +407,7 @@ class SearchEngine:
         # partition/row-group pruning still applies per query.  Only
         # the manifest's live generations are read.
         self._seg_df = read_segments(spark, index_dir)
-        self._ts_df = spark.read.parquet(self.paths.term_stats)
+        self._ts_df = read_term_stats(spark, index_dir)
         # ... and name them ONCE: a query's input plan is one spark.sql
         # text over these views (one py4j call instead of one per
         # column, literal and list element).  Names are unique per
@@ -381,8 +418,7 @@ class SearchEngine:
         self._ts_view = f"auctus_term_stats_{tag}"
         self._seg_df.createOrReplaceTempView(self._seg_view)
         self._ts_df.createOrReplaceTempView(self._ts_view)
-        self._bucket_parts = _bucket_partitions(
-            spark, read_doc_buckets(index_dir))
+        self._bucket_cap = _bucket_cap(spark, read_doc_buckets(index_dir))
         # Lucene-style deletes: tombstoned docIDs are masked at query
         # time; global stats keep counting them until a rebuild.  The
         # sorted numpy mask is size-capped (build.MAX_TOMBSTONE_MASK)
@@ -494,6 +530,20 @@ class SearchEngine:
             return {t: m[t] for t in terms if t in m}
         return {r["term"]: int(r["df"])
                 for r in self._ts_for(terms).collect()}
+
+    def _postings(self, terms) -> int | None:
+        """Summed df of the distinct ``terms`` from the driver stats
+        map (0 for an unindexed term), or None when the map is capped
+        out."""
+        m = self._stats_map()
+        if m is None:
+            return None
+        return sum(m.get(t, 0) for t in set(terms))
+
+    def _partitions_for(self, terms) -> int:
+        """Scoring tasks of a bucket job over ``terms``' postings
+        (:func:`_bucket_partitions`)."""
+        return _bucket_partitions(self._bucket_cap, self._postings(terms))
 
     @staticmethod
     def _index_terms(terms) -> list[str]:
@@ -887,7 +937,7 @@ class SearchEngine:
                          avgdl=self.avgdl, tomb=self.tombstones)
         return _bucket_job(self.spark, self._df_segments(terms), kernel,
                            qterms, k, "df", batched,
-                           partitions=self._bucket_parts)
+                           partitions=self._partitions_for(terms))
 
     def _df_segments(self, terms: list[str]) -> DataFrame | None:
         """The query terms' partials with their global df attached —
@@ -1310,7 +1360,7 @@ class SearchEngine:
         specs = {qid: [(slot_key[tuple(alts)], list(alts))
                        for alts in slots]
                  for qid, slots in qslots.items()}
-        segs = None
+        segs, members = None, []
         if slot_key:
             members = sorted({t for alts in slot_key for t in alts})
             mem_df = self.spark.createDataFrame(
@@ -1331,7 +1381,7 @@ class SearchEngine:
                          avgdl=self.avgdl, tomb=self.tombstones)
         return _bucket_job(self.spark, segs, kernel, specs, k,
                            "slot_dfs", batched,
-                           partitions=self._bucket_parts)
+                           partitions=self._partitions_for(members))
 
     def search_or(self, query: str, k: int = TOP_K_SIZE,
                   min_should_match: int = 1) -> DataFrame:
@@ -1369,7 +1419,7 @@ class SearchEngine:
                          avgdl=self.avgdl, tomb=self.tombstones)
         return _bucket_job(self.spark, self._df_segments(terms), kernel,
                            qspecs, k, "df", batched,
-                           partitions=self._bucket_parts)
+                           partitions=self._partitions_for(terms))
 
     def more_like_this(self, like_text: str, k: int = TOP_K_SIZE,
                        max_query_terms: int = 25,
@@ -1465,7 +1515,8 @@ def _bucket_job(spark: SparkSession, segs: DataFrame | None, kernel,
     (``batched=False``) merges with ``TakeOrdered`` and returns
     (doc_id, score); a batch merges with a per-``query_id`` window and
     returns (query_id, doc_id, score) — including when empty.
-    ``partitions`` sizes the bucket exchange (:func:`_spread_buckets`)."""
+    ``partitions`` is the number of scoring tasks
+    (:func:`_bucket_partitions`, placed by :func:`_spread_buckets`)."""
     if segs is None:
         return no_rows(spark, _HITS_SCHEMA if batched else _TOPK_SCHEMA)
 
@@ -1949,10 +2000,14 @@ class MultiFieldEngine:
             n_docs={f: self.engines[f].n_docs for f in fields},
             avgdl={f: self.engines[f].avgdl for f in fields},
             tomb=tomb, cross=cross)
+        postings = [e._postings(terms) for e in self.engines.values()]
         return _bucket_job(self.spark, segs, kernel,
                            {"": terms} if terms else {}, k, "df",
-                           partitions=max(e._bucket_parts
-                                          for e in self.engines.values()))
+                           partitions=_bucket_partitions(
+                               max(e._bucket_cap
+                                   for e in self.engines.values()),
+                               None if None in postings
+                               else sum(postings)))
 
     # -------- explain (ES _explain analog, multifield paths) --------
     def explain_doc(self, query: str, doc_id: int,
@@ -2421,7 +2476,8 @@ class PhraseEngine(SearchEngine):
                          tomb=self.tombstones, shift=self.POS_SHIFT,
                          slop=slop)
         return _bucket_job(self.spark, segs, kernel, specs, k,
-                           batched=batched, partitions=self._bucket_parts)
+                           batched=batched,
+                           partitions=self._partitions_for(terms))
 
     def _one_term(self, text: str, what: str) -> str:
         """The one analyzed term of a span/intervals clause; anything
@@ -2441,7 +2497,8 @@ class PhraseEngine(SearchEngine):
         segs = self._segments_for(terms, self._POS_COLS)
         return _bucket_job(self.spark, segs,
                            partial(kernel, tomb=self.tombstones),
-                           {"": spec}, k, partitions=self._bucket_parts)
+                           {"": spec}, k,
+                           partitions=self._partitions_for(terms))
 
     def _near_job(self, clauses: list[list[str]], slop: int,
                   in_order: bool, k: int, boost: float) -> DataFrame:

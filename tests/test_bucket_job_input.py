@@ -54,7 +54,10 @@ def _per_query(df):
 
 
 def _jobs(spark):
-    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+    """The last job id: it moves with every new job, where the count
+    of jobs the tracker retains stops at its retention limit."""
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None),
+               default=-1)
 
 
 def test_scan_fallback_matches_oracle(spark, built):
@@ -219,6 +222,18 @@ def test_more_like_this_plan_runs_no_job(spark, built):
     df = eng.more_like_this("import def return the uniq_token_11", k=10)
     assert _jobs(spark) == before
     assert df.collect()
+
+
+def test_engine_open_runs_no_job(spark, built):
+    """Opening an engine on an index without tombstones runs no Spark
+    job: its segments and term_stats reads carry their schemas, so
+    neither infers one."""
+    import os
+    out, _ = built
+    assert not os.path.exists(f"{out}/tombstones")
+    before = _jobs(spark)
+    SearchEngine(spark, out, term_buckets=8)
+    assert _jobs(spark) == before
 
 
 def _spark_stats(spark, index_dir):

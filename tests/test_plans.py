@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from auctus_spark.corpus import generate_corpus
 from auctus_spark.index.build import IndexBuilder
+from auctus_spark.query import bm25
 from auctus_spark.query.bm25 import PhraseEngine, SearchEngine
 
 
@@ -39,14 +40,16 @@ def test_segment_scan_prunes(engine):
 
 def test_wand_plan_shape(engine):
     """WAND: df folded in as a literal-map projection (no join at
-    all when the driver stats map fits — round 8), one shuffle
-    (bucket groups), TakeOrdered merge."""
+    all when the driver stats map fits), and a small query is one
+    task: the scan is coalesced into the scorer, with no exchange
+    before the TakeOrdered merge."""
     plan = _plan(engine.search_wand("import def"))
     assert "Join" not in plan          # df is a literal projection now
     assert "keys: [import, def]" in plan or "map_from" in plan \
         or "keys:" in plan             # the literal df map
     assert "TakeOrderedAndProject" in plan
-    assert plan.count("Exchange hashpartitioning") == 1  # bucket shuffle only
+    assert "Coalesce 1" in plan
+    assert "Exchange" not in plan
 
 
 def test_wand_plan_shape_scan_fallback(engine):
@@ -69,22 +72,53 @@ def _bucket_exchange(plan: str) -> set[int]:
             re.findall(r"hashpartitioning\(bucket#\d+L?, (\d+)\)", plan)}
 
 
-def test_bucket_exchange_one_partition_per_doc_bucket(engine):
-    """400 docs at 128 per doc bucket are 4 buckets: the bucket
-    exchange has 4 partitions, not 4x the parallelism, on every
-    bucket-job family."""
-    assert _bucket_exchange(_plan(engine.search_wand("import def"))) \
-        == {4}
-    assert _bucket_exchange(_plan(engine.search_or("import def"))) == {4}
-    assert _bucket_exchange(_plan(engine.search_synonyms(
-        "import def", {"import": ["the"]}))) == {4}
+def _postings(eng, query: str) -> int:
+    m = eng._stats_map()
+    return sum(m[t] for t in set(query.split()))
 
 
-def test_bucket_exchange_capped_at_4x_parallelism(spark, tmp_path):
-    """An index with more doc buckets than 4x the default parallelism
-    keeps 4x the default parallelism."""
+def test_small_query_has_no_bucket_exchange(engine):
+    """The fixture's queries are far below one task's postings, so
+    the AND, OR, synonym and batch jobs each score in one task: no
+    bucket exchange."""
+    assert _postings(engine, "import def the") < bm25._TASK_POSTINGS
+    for df in [engine.search_wand("import def"),
+               engine.search_or("import def"),
+               engine.search_synonyms("import def", {"import": ["the"]}),
+               bm25.search_many(engine, {"a": "import def",
+                                         "b": "def the"})]:
+        plan = _plan(df)
+        assert _bucket_exchange(plan) == set(), plan
+        assert "Coalesce 1" in plan, plan
+
+
+def test_bucket_exchange_sized_from_postings(engine, monkeypatch):
+    """A query over ``postings`` postings scores in
+    min(defaultParallelism, doc buckets, ceil(postings / P)) tasks:
+    400 docs at 128 per doc bucket are 4 buckets."""
+    cap = min(engine.spark.sparkContext.defaultParallelism, 4)
+    assert engine._bucket_cap == cap
+    n = _postings(engine, "import def")
+    wants = set()
+    for p in [n, -(-n // 2), -(-n // 3), 1]:
+        monkeypatch.setattr(bm25, "_TASK_POSTINGS", p)
+        want = min(cap, -(-n // p))
+        wants.add(want)
+        got = _bucket_exchange(_plan(engine.search_wand("import def")))
+        assert got == (set() if want == 1 else {want}), (p, got)
+        got = _bucket_exchange(_plan(engine.search_or("import def")))
+        assert got == (set() if want == 1 else {want}), (p, got)
+    assert wants == set(range(1, cap + 1))
+
+
+def test_bucket_exchange_capped_at_parallelism(spark, tmp_path,
+                                               monkeypatch):
+    """An index with more doc buckets than the default parallelism
+    runs at most one scoring task per core: for a query over many
+    postings, and for any query once the stats map is capped out (df
+    is then known only inside Spark)."""
     from auctus_spark.index.build import read_doc_buckets
-    cap = 4 * spark.sparkContext.defaultParallelism
+    cap = spark.sparkContext.defaultParallelism
     out = str(tmp_path / "many")
     pdf = generate_corpus(400, min_tokens=5, max_tokens=20,
                           vocab_size=200)
@@ -94,13 +128,20 @@ def test_bucket_exchange_capped_at_4x_parallelism(spark, tmp_path):
     assert read_doc_buckets(out) > cap
     eng = SearchEngine(spark, out, term_buckets=4)
     assert _bucket_exchange(_plan(eng.search_wand("import def"))) \
+        == set()
+    eng._stats_map_cache = False
+    assert _bucket_exchange(_plan(eng.search_wand("import def"))) \
+        == {cap}
+    eng._stats_map_cache = None
+    monkeypatch.setattr(bm25, "_TASK_POSTINGS", 1)
+    assert _bucket_exchange(_plan(eng.search_wand("import def"))) \
         == {cap}
 
 
 def test_bucket_exchange_without_doc_bucket_record(spark, engine,
-                                                   tmp_path):
-    """An index that does not record its doc bucket keeps the old
-    count, 4x the default parallelism."""
+                                                   tmp_path, monkeypatch):
+    """An index that does not record its doc bucket is capped at the
+    default parallelism alone."""
     import json
     import shutil
     d = str(tmp_path / "old")
@@ -111,8 +152,11 @@ def test_bucket_exchange_without_doc_bucket_record(spark, engine,
     with open(f"{d}/_ANALYZER", "w") as f:
         json.dump(az, f)
     eng = SearchEngine(spark, d, term_buckets=8)
+    cap = spark.sparkContext.defaultParallelism
+    assert eng._bucket_cap == cap
+    monkeypatch.setattr(bm25, "_TASK_POSTINGS", 1)
     assert _bucket_exchange(_plan(eng.search_wand("import def"))) \
-        == {4 * spark.sparkContext.defaultParallelism}
+        == {cap}
 
 
 def test_wand_plan_py4j_calls(engine):
@@ -143,19 +187,16 @@ def test_wand_plan_py4j_calls(engine):
 def test_synonyms_idx_plan_shape(engine):
     """Segment-path synonyms: the global slot-df aggregate rides the
     BROADCAST side of the one scoring job — broadcast join present,
-    exactly one posting-side shuffle (bucket groups), TakeOrdered
-    merge, and the segment scan still partition-prunes."""
+    no posting-side shuffle (a small query scores in one task),
+    TakeOrdered merge, and the segment scan still partition-prunes."""
     plan = _plan(engine.search_synonyms("import def", {"import": ["the"]}))
     assert "BroadcastHashJoin" in plan
     assert "TakeOrderedAndProject" in plan
     assert "PartitionFilters" in plan
-    # posting rows shuffle once (applyInPandas bucket groups); the
-    # broadcast side may add exchanges on its own tiny tables, but
+    # the broadcast side may add exchanges on its own tiny tables, but
     # none of them move posting rows
-    bucket_exchanges = [
-        seg for seg in plan.split("Exchange hashpartitioning")[1:]
-        if seg[:40].find("bucket") >= 0]
-    assert len(bucket_exchanges) == 1, plan
+    assert _bucket_exchange(plan) == set(), plan
+    assert "Coalesce 1" in plan, plan
 
 
 def test_crossfields_fused_plan(spark, sf_dir):
@@ -474,13 +515,13 @@ def phrase_engine(spark, tmp_path_factory):
 
 def test_span_family_plan_shape(phrase_engine):
     """A span query is one bucket-parallel job over the positional
-    segments: exactly one shuffle (the bucket groups) and a
-    TakeOrdered merge — no sort, no second exchange."""
+    segments and a TakeOrdered merge: at the fixture's size one task,
+    with no exchange at all."""
     eng = phrase_engine
     for df in [eng.search_span_near(["import", "def"], slop=3),
                eng.search_intervals([["import", "the"], "def"],
                                     max_gaps=2),
                eng.search_span_not("import", "def", post=2)]:
         plan = _plan(df)
-        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert "Exchange" not in plan, plan
         assert "TakeOrderedAndProject" in plan, plan

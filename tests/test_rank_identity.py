@@ -368,11 +368,10 @@ def test_analyzer_mismatch_fails_loudly(spark, built_stemmed, tmp_path):
         b.tokenize_chunks(corpus, resume=True)
 
 
-def test_multifield_index_matches_oracle(spark, built, tmp_path_factory):
-    """Multi-field BM25 on the SEGMENT INDEX path (per-field indexes,
-    boosted per-bucket scoring) — bit-exact vs oracle.search_multifield
-    and vs the DataFrame path."""
-    from auctus_spark.oracle import OracleIndex, search_multifield
+@pytest.fixture(scope="module")
+def built_fields(spark, built, tmp_path_factory):
+    """Per-field (content, path^3) indexes of the ``built`` corpus: a
+    MultiFieldEngine, the fields oracle and the boosts."""
     from auctus_spark.query.bm25 import MultiFieldEngine, build_field_indexes
     _, _, _, corpus, _ = built
     base = str(tmp_path_factory.mktemp("mfidx"))
@@ -385,8 +384,20 @@ def test_multifield_index_matches_oracle(spark, built, tmp_path_factory):
     fi = OracleIndex.build_fields(
         [(int(r.doc_id), {"content": r.content, "path": r.path})
          for r in pdf.itertuples(index=False)])
-    for q in ["import", "src file_11 import", "file_7 py",
-              "zz_missing import", "no_such_token_anywhere"]:
+    return eng, fi, boosts
+
+
+MULTIFIELD_QUERIES = ["import", "src file_11 import", "file_7 py",
+                      "zz_missing import", "no_such_token_anywhere"]
+
+
+def test_multifield_index_matches_oracle(spark, built_fields):
+    """Multi-field BM25 on the SEGMENT INDEX path (per-field indexes,
+    boosted per-bucket scoring) — bit-exact vs oracle.search_multifield
+    and vs the DataFrame path."""
+    from auctus_spark.oracle import search_multifield
+    eng, fi, boosts = built_fields
+    for q in MULTIFIELD_QUERIES:
         want = search_multifield(fi, q, boosts, k=50)
         got = [(int(r.doc_id), float(r.score))
                for r in eng.search(q, k=50).collect()]
@@ -2282,3 +2293,109 @@ def test_tombstones_mask_span_family(spark, tombstoned_spans, family):
         got = [(int(r.doc_id), float(r.score))
                for r in engine(c, a, k).collect()]
         _assert_rank_identical(got, want)
+
+
+# ---- both shapes of the bucket job: one task with no shuffle (the
+# default at this size), and a bucket exchange of 2+ partitions once
+# one task's postings are set to 1 ----
+
+AND_SYNONYMS = {"import": ["def"], "uniq_token_11": ["uniq_token_22"]}
+# queries that may keep one task at one posting per task: their terms
+# have 1 posting (a tail term) or none
+FEW_POSTINGS = {"uniq_token_11", "no_such_token_anywhere"}
+
+
+def _bucket_tasks(df) -> int:
+    """Scoring tasks in ``df``'s plan: the bucket exchange's partition
+    count, 1 for a scan coalesced into the scorer, 0 with no bucket
+    job."""
+    import re
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "FlatMapGroupsInPandas" not in plan:
+        return 0
+    n = re.findall(r"hashpartitioning\(bucket#\d+L?, (\d+)\)", plan)
+    if n:
+        return int(n[0])
+    assert "Coalesce 1" in plan, plan
+    return 1
+
+
+def _per_query_rows(df) -> dict:
+    got: dict = {}
+    for r in df.collect():
+        got.setdefault(r.query_id, []).append(
+            (int(r.doc_id), float(r.score)))
+    return {q: sorted(v, key=lambda t: (-t[1], t[0]))
+            for q, v in got.items()}
+
+
+def _path_cases(family, spark, built, built_positional, built_fields):
+    """``[(label, DataFrame, oracle rows)]`` of one family: each
+    DataFrame is a single query's (doc_id, score) top-50, or a batch
+    whose oracle rows are ``{query_id: rows}``."""
+    from auctus_spark.oracle import search_cross_fields, search_multifield
+    from auctus_spark.query.bm25 import PhraseEngine, search_many
+    out, oracle, _, _, _ = built
+    eng = SearchEngine(spark, out, term_buckets=8)
+    if family == "and":
+        return [(q, eng.search(q, k=50), oracle.search(q, k=50))
+                for q in QUERY_SET]
+    if family == "or":
+        return [(q, eng.search_or(q, k=50), oracle.search_or(q, k=50))
+                for q in OR_QUERIES]
+    if family == "batch":
+        qs = {f"q{i}": q for i, q in enumerate(QUERY_SET)}
+        return [("batch", search_many(eng, qs, k=50),
+                 {qid: oracle.search(q, k=50) for qid, q in qs.items()})]
+    if family == "synonyms":
+        return [(q, eng.search_synonyms(q, AND_SYNONYMS, k=50),
+                 oracle.search_synonyms(q, AND_SYNONYMS, k=50))
+                for q in ["import", "import return", "uniq_token_11",
+                          "zz_missing import"]]
+    if family == "phrase":
+        pout, poracle, _ = built_positional
+        peng = PhraseEngine(spark, pout, term_buckets=8)
+        return [(q, peng.search_phrase(q, k=50),
+                 poracle.search_phrase(q, k=50)) for q in PHRASE_QUERIES]
+    feng, fi, boosts = built_fields
+    return ([(q, feng.search(q, k=50),
+              search_multifield(fi, q, boosts, k=50))
+             for q in MULTIFIELD_QUERIES]
+            + [("cross " + q, feng.search_cross_fields(q, k=50),
+                search_cross_fields(fi, q, boosts, k=50))
+               for q in MULTIFIELD_QUERIES])
+
+
+@pytest.mark.parametrize("path", ["one_task", "fan_out"])
+@pytest.mark.parametrize("family", ["and", "or", "batch", "synonyms",
+                                    "phrase", "multifield"])
+def test_bucket_job_paths_match_oracle(spark, built, built_positional,
+                                       built_fields, monkeypatch,
+                                       family, path):
+    """Every family is rank-identical to the oracle in one scoring task
+    and fanned out over the doc buckets.  At the default postings per
+    task every query here scores in one task; at one posting per task
+    each query whose terms have 2+ postings takes 2+ partitions (the
+    index has 3 doc buckets)."""
+    from auctus_spark.query import bm25
+    if path == "fan_out":
+        monkeypatch.setattr(bm25, "_TASK_POSTINGS", 1)
+    tasks = []
+    for label, df, want in _path_cases(family, spark, built,
+                                       built_positional, built_fields):
+        n = _bucket_tasks(df)
+        tasks.append(n)
+        if isinstance(want, dict):
+            got = _per_query_rows(df)
+            for qid, rows in want.items():
+                assert got.get(qid, []) == rows, (label, qid)
+        else:
+            _assert_rank_identical(
+                [(int(r.doc_id), float(r.score)) for r in df.collect()],
+                want)
+        if path == "one_task":
+            assert n <= 1, (label, n)
+        else:
+            few = label.removeprefix("cross ") in FEW_POSTINGS
+            assert n != 1 or few, (label, n)
+    assert (max(tasks) >= 2) == (path == "fan_out"), tasks
