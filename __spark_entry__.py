@@ -4029,8 +4029,8 @@ ORDER BY count DESC, bucket_start ASC LIMIT 7
 
 def _q_completion_suggest(spark, sf_dir):
     """ES completion suggester: dictionary terms with prefix 's',
-    weight = df, ranked weight desc / term asc — a RANGE scan on the
-    sorted term dictionary."""
+    weight = df, ranked weight desc / term asc — a ``startswith`` cut
+    pushed to the scan of the term-sorted term_stats table."""
     from auctus_spark.query.bm25 import SearchEngine
     _q_bm25_index_path(spark, sf_dir)    # ensure the index exists
     import hashlib as _h
@@ -4056,8 +4056,8 @@ def _q_completion_fuzzy(spark, sf_dir):
     """ES fuzzy completion: dictionary terms whose prefix of the
     query's length is within 1 Damerau edit of 'sca' (first char
     exact), ranked (dist asc, weight desc, term asc) — the
-    FST-automaton walk rendered as an anchored dictionary range scan
-    + Arrow-batched distance predicate."""
+    FST-automaton walk rendered as an anchored, row-group-pruned
+    dictionary scan + Arrow-batched distance predicate."""
     from auctus_spark.query.bm25 import SearchEngine
     _q_bm25_index_path(spark, sf_dir)
     import hashlib as _h

@@ -24,7 +24,8 @@ boundary (the MapReduce local-indexing + merge construction):
    generation holds yet are repartitioned by ``term_bucket``
    (murmur3(term) % T) into ONE new generation,
    ``segments/gen=G/term_bucket=B``; the exchange is sized from the
-   bytes it moves.  No Python, no blob surgery: partials of one
+   bytes it moves, and input that fits one partition is written by
+   one task with no exchange.  No Python, no blob surgery: partials of one
    (term, bucket) are disjoint sorted docID runs, also across
    generations (chunks are disjoint docID ranges), so the query
    scorers concatenate them after decode.  Hot terms (df ~ 30% of
@@ -67,7 +68,11 @@ Global stats discipline: N and avgdl come from the manifest's chunk
 records (each chunk's lineage counts, less what compactions removed
 from it), df/cf per term from segment metadata — global snapshots,
 required for rank identity.  An append folds only its new chunks'
-(term, df, cf) aggregate into term_stats.  The stats table carries the
+(term, df, cf) aggregate into term_stats.  term_stats is also the
+index's one term dictionary: its files are written term-sorted per
+``term_bucket``, so exact lookups prune by bucket and prefix cuts by
+row-group term ranges (no separate dictionary table is written).  The
+stats table carries the
 manifest ``seq`` it describes and is written last; an engine refuses
 an index whose stats lag its manifest (:class:`UnfinishedAppendError`).
 
@@ -114,9 +119,9 @@ MANIFEST = "_MANIFEST.json"
 
 class UnfinishedAppendError(RuntimeError):
     """The manifest commits a generation (an append's or a
-    compaction's) whose term_stats, dictionary and stats are not
-    written yet: scoring its postings with the old N/df would silently
-    mis-rank.  Raised on every engine open until a rerun of the
+    compaction's) whose term_stats and stats are not written yet:
+    scoring its postings with the old N/df would silently mis-rank.
+    Raised on every engine open until a rerun of the
     operation (:meth:`IndexBuilder.finalize` or :func:`compact`) writes
     them."""
 
@@ -241,8 +246,8 @@ def check_stats_current(index_dir: str, stats: dict) -> None:
         raise UnfinishedAppendError(
             f"index {index_dir} commits manifest seq {seq} but its "
             f"stats describe seq {stats.get('seq')}: an append or a "
-            "compaction stopped before its term_stats, dictionary and "
-            "stats were written. Re-run it (or IndexBuilder.finalize()) "
+            "compaction stopped before its term_stats and stats were "
+            "written. Re-run it (or IndexBuilder.finalize()) "
             "to finish it.")
 
 
@@ -285,16 +290,24 @@ def _exchange_partitions(spark: SparkSession, nbytes: int,
 
 
 def _write_generation(spark: SparkSession, rows: DataFrame, path: str,
-                      nbytes: int, term_buckets: int) -> None:
-    """Write segment rows carrying ``term_bucket`` as one generation:
-    an exchange on term_bucket sized from ``nbytes``, written
-    partitionBy(term_bucket), so each bucket is one file.  The files
+                      nbytes: int, term_buckets: int, *,
+                      exchange: bool = False) -> None:
+    """Write segment rows carrying ``term_bucket`` as one generation,
+    partitionBy(term_bucket), through an exchange on term_bucket sized
+    from ``nbytes`` (:func:`_exchange_partitions`).  At one partition
+    the rows are coalesced into the one writing task instead, with no
+    exchange, unless ``exchange`` is set: rows computed by a costly
+    stage (compaction's Python rewrite) keep the exchange, so that
+    stage runs in the scan's tasks rather than in the writing task.
+    Either way each bucket is one file at one partition.  The files
     are not term-sorted: the planned write sorts each task by
     term_bucket alone."""
-    (rows.repartition(_exchange_partitions(spark, nbytes, term_buckets),
-                      "term_bucket")
-        .write.mode("overwrite").partitionBy("term_bucket")
-        .parquet(path))
+    n = _exchange_partitions(spark, nbytes, term_buckets)
+    if n == 1 and not exchange:
+        rows = rows.coalesce(1)
+    else:
+        rows = rows.repartition(n, "term_bucket")
+    rows.write.mode("overwrite").partitionBy("term_bucket").parquet(path)
 
 
 # block metadata is packed little-endian binary, not list<long>:
@@ -357,11 +370,6 @@ class IndexPaths:
     @property
     def segments(self):
         return os.path.join(self.base, "segments")
-
-    @property
-    def term_dict(self):
-        # sorted secondary term dictionary (see write_term_dict)
-        return os.path.join(self.base, "term_dict")
 
     @property
     def removed(self):
@@ -919,17 +927,19 @@ class IndexBuilder:
 
     def _replace_generations(self, m: dict, drop: list[str],
                              rows: DataFrame, nbytes: int, chunks: dict,
-                             seq: int, appended: dict | None) -> dict:
+                             seq: int, appended: dict | None, *,
+                             exchange: bool = False) -> dict:
         """Write ``rows`` as one new generation holding ``chunks`` in
-        place of the generations ``drop``, commit the manifest with
-        ``seq``, ``appended`` and ``m``'s removed-docs list (see
+        place of the generations ``drop`` (:func:`_write_generation`,
+        with ``exchange``), commit the manifest with ``seq``,
+        ``appended`` and ``m``'s removed-docs list (see
         :func:`read_manifest`), then delete the dropped dirs.  Returns
         the manifest."""
         seg = self.paths.segments
         gen = str(max(map(int, m["gens"]), default=-1) + 1)
         path = _gen_dir(seg, gen)
         _write_generation(self.spark, rows, path, nbytes,
-                          self.term_buckets)
+                          self.term_buckets, exchange=exchange)
         gens = {g: e for g, e in m["gens"].items() if g not in drop}
         gens[gen] = {"chunks": chunks, "bytes": _dir_bytes(path)}
         new = {"seq": seq, "gens": gens}
@@ -971,8 +981,8 @@ class IndexBuilder:
     def finalize_stats(self) -> dict:
         """Global (N, avgdl) of the live generations, from the
         manifest's chunk records — driver-side, zero Spark jobs —
-        written with the manifest seq.  That seq marks term_stats and
-        the dictionary current, so this runs after they are written."""
+        written with the manifest seq.  That seq marks term_stats
+        current, so this runs after it is written."""
         m = read_manifest(self.paths.base)
         n_docs, total = manifest_stats(m)
         return {"n_docs": n_docs,
@@ -981,7 +991,7 @@ class IndexBuilder:
     def finalize_term_stats(self) -> None:
         """(term, df, cf) from the live segments' metadata — partials
         of one term cover disjoint docID ranges, so df = sum(n_docs) —
-        then the dictionary and stats.  The segments are the source of
+        then stats.  The segments are the source of
         truth after a compaction, and this is the recovery path of an
         append or a compaction that stopped after its commit."""
         _write_term_stats(self.spark, self.paths,
@@ -990,9 +1000,9 @@ class IndexBuilder:
         self.finalize_stats()
 
     def finalize_term_stats_from_partials(self) -> None:
-        """Bring term_stats, the dictionary and stats up to the
-        manifest, deciding from on-disk state alone.  When the
-        manifest's last change appended new chunks
+        """Bring term_stats and stats up to the manifest, deciding
+        from on-disk state alone.  When the manifest's last change
+        appended new chunks
         (``m["appended"]``) onto the content term_stats describes
         (:func:`read_term_stats_seq` is one behind), those chunks'
         (term, df, cf) aggregate over their partials is folded into
@@ -1023,7 +1033,7 @@ class IndexBuilder:
     def finalize(self) -> dict:
         """Make every tokenized chunk searchable: encode the chunks no
         live generation holds (:meth:`encode_segments`), then write
-        term_stats, the dictionary and stats
+        term_stats and stats
         (:meth:`finalize_term_stats_from_partials`).  Finishes an
         append that stopped midway; a no-op on an up-to-date index.
         Returns the global (N, avgdl)."""
@@ -1084,10 +1094,18 @@ def _write_term_stats(spark: SparkSession, paths: IndexPaths,
     """The (term, df, cf) table from partial rows carrying a
     ``term_bucket`` column — partials of one term cover disjoint docID
     ranges, so df = sum(n_docs) — stamped with the manifest ``seq`` it
-    describes (:func:`read_term_stats_seq`), then the term dictionary
-    derived from it.  With ``base`` (the existing term_stats), the
-    rows' counts are added to it: the new table is written aside,
-    stamped and swapped in."""
+    describes (:func:`read_term_stats_seq`).  With ``base`` (the
+    existing term_stats), the rows' counts are added to it: the new
+    table is written aside, stamped and swapped in.
+
+    The table is also the sorted term dictionary: each task's rows are
+    sorted by (term_bucket, term), an order the planned
+    partitionBy(term_bucket) write keeps, so every file is term-sorted
+    and its row groups' [min, max] term statistics let a prefix cut
+    (``term LIKE 'pre%'``) skip the row groups outside the prefix (the
+    sorted-term-index analog of Lucene's FST).  Exact lookups prune on
+    ``term_bucket``; a prefix reads one sorted run per file, and a
+    bucket has one file per task of the aggregate."""
     cols = rows.select("term", "term_bucket", F.col("n_docs").alias("df"),
                        F.col("tf_sum").alias("cf"))
     out = paths.term_stats
@@ -1097,42 +1115,13 @@ def _write_term_stats(spark: SparkSession, paths: IndexPaths,
         out += "_next"
     (cols.groupBy("term", "term_bucket")
         .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+        .sortWithinPartitions("term_bucket", "term")
         .write.mode("overwrite").partitionBy("term_bucket").parquet(out))
     with open(os.path.join(out, TERM_STATS_SEQ), "w") as f:
         f.write(str(seq))
     if base is not None:
         shutil.rmtree(paths.term_stats)
         os.rename(out, paths.term_stats)
-    write_term_dict(spark, paths)
-
-
-def write_term_dict(spark: SparkSession, paths: IndexPaths) -> None:
-    """Sorted secondary term dictionary: (term, term_bucket, df)
-    RANGE-partitioned and sorted by ``term``.
-
-    The posting segments hash-partition on ``term_bucket``, which
-    prunes exact-term lookups but cannot prune a prefix predicate
-    (``query/bm25.py`` documents the trade).  This tiny side table —
-    one row per distinct term, ~1e-5 of index bytes — restores range
-    pruning: globally range-partitioned files with sorted row groups
-    mean a ``term LIKE 'pre%'`` / ``startswith`` cut touches only the
-    row groups whose [min,max] term range intersects the prefix (the
-    sorted-term-dictionary analog of Lucene's FST term index), so
-    prefix/wildcard/regexp candidate resolution is a range scan
-    instead of a full dictionary or gram-index pass.
-
-    Derived data (like term_stats): rewritten by every writer of
-    term_stats inside the same crash-recovery domain, so it can never
-    be newer or older than the dictionary it mirrors; the engine
-    falls back to the term_stats scan when the dir is absent or has
-    no _SUCCESS (mid-crash), so staleness is impossible and loss is
-    only a de-optimization."""
-    ts = read_term_stats(spark, paths.base)
-    (ts.select("term", "term_bucket", "df")
-        .repartitionByRange(
-            max(8, min(64, spark.sparkContext.defaultParallelism)), "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite").parquet(paths.term_dict))
 
 
 def export_metrics_tables(spark: SparkSession, index_dir: str,
@@ -1269,8 +1258,8 @@ def compact(spark: SparkSession, index_dir: str,
     crash before it leaves the index answering as before, and the
     generation and file it wrote are swept by the next writer.
 
-    After the commit, the derived tail an append runs: term_stats and
-    the dictionary, then stats, then the tombstone dir is cleared.  A
+    After the commit, the derived tail an append runs: term_stats,
+    then stats, then the tombstone dir is cleared.  A
     crash in that tail leaves an index engines refuse
     (:class:`UnfinishedAppendError`) until a rerun of ``compact`` or
     :meth:`IndexBuilder.finalize` finishes it.  The lineage table still
@@ -1449,6 +1438,6 @@ def _remove_docs(b: IndexBuilder, manifest: dict, tomb: np.ndarray
         .mapInArrow(rewrite, schema=PARTIAL_SCHEMA + ", term_bucket int"),
         sum(gens[g]["bytes"] for g in touched),
         {c: rec for g in touched for c, rec in gens[g]["chunks"].items()},
-        seq, None)
+        seq, None, exchange=True)
     return {"removed_docs": int(newly.size),
             "removed_tokens": int(found_dl.sum())}

@@ -425,7 +425,6 @@ class SearchEngine:
         # and rides into each task's closure, never into the plan.
         self.tombstones = load_tombstones(spark, index_dir)
         self._gram_df_cache: DataFrame | None = None
-        self._dict_df_cache: DataFrame | None = None
         # driver-side (term -> df) map, loaded lazily from the
         # term_stats table when it is small enough (size-capped): turns
         # the per-query stats lookup from a Spark scan job into a dict
@@ -492,24 +491,15 @@ class SearchEngine:
 
     @property
     def term_dict(self) -> DataFrame:
-        """Sorted secondary term dictionary (build.write_term_dict):
-        (term, term_bucket, df) range-partitioned + sorted by term,
-        so a prefix/leading-literal predicate is a RANGE scan — only
-        the row groups whose [min,max] term range intersects the
-        prefix are read (Lucene FST term-index analog; the hash
-        ``term_bucket`` layout of the segments cannot prune these).
-        Falls back to the term_stats scan when the dir is missing or
-        lacks _SUCCESS (older index / mid-crash) — same rows, no
-        range pruning."""
-        if self._dict_df_cache is None:
-            import os
-            p = self.paths.term_dict
-            if os.path.exists(os.path.join(p, "_SUCCESS")):
-                self._dict_df_cache = self.spark.read.parquet(p)
-            else:
-                self._dict_df_cache = self._ts_df.select(
-                    "term", "term_bucket", "df")
-        return self._dict_df_cache
+        """The sorted term dictionary: (term, term_bucket, df) of the
+        engine's term_stats snapshot, whose files are term-sorted
+        (build._write_term_stats), so a prefix/leading-literal
+        ``startswith`` cut is pushed to the parquet scan and reads only
+        the row groups whose [min, max] term range meets the prefix,
+        one sorted run per term_bucket file (Lucene FST term-index
+        analog; the hash ``term_bucket`` layout alone cannot prune a
+        prefix)."""
+        return self._ts_df.select("term", "term_bucket", "df")
 
     # ------------------------------------------------------------------
     def _term_buckets_for(self, terms: list[str]) -> dict[str, int]:
@@ -597,9 +587,9 @@ class SearchEngine:
 
         Matching runs against INDEX terms (post-analysis: lowercased,
         stemmed if the index stems); the prefix itself is lowercased.
-        Plan note: candidate terms resolve on the SORTED term
-        dictionary (:attr:`term_dict`) where ``startswith`` is a
-        range scan over only the matching row groups; the segment
+        Plan note: candidate terms resolve on the term-sorted
+        dictionary (:attr:`term_dict`), where ``startswith`` is pushed
+        to the scan and reads only the matching row groups; the segment
         scan is then term_bucket-pruned + ``isin`` on the resolved
         terms.  Above ``_MAX_TERM_ISIN`` expansions it falls back to
         the full-scan ``StartsWith`` predicate path (semantically
@@ -628,8 +618,8 @@ class SearchEngine:
         regex metacharacters in the pattern are escaped.
 
         Dictionary cut: a LEADING literal resolves candidates on the
-        sorted term dictionary (:attr:`term_dict`) — ``startswith``
-        is a range scan over only the matching row groups (the FST
+        term-sorted dictionary (:attr:`term_dict`) — ``startswith``
+        reads only the matching row groups of each file (the FST
         term-index analog).  With no leading literal, every literal
         run of >= 2 chars must appear as a substring of a matching
         term, so all its bigrams must be in the term's gram set —
@@ -683,7 +673,7 @@ class SearchEngine:
 
         Dictionary cut (same shape as :meth:`search_wildcard`): a
         plain-literal pattern prefix resolves candidates on the
-        sorted term dictionary (:attr:`term_dict`) as a range scan;
+        term-sorted dictionary (:attr:`term_dict`), pushed to the scan;
         otherwise required literal runs extracted with
         :func:`_regex_literal_runs` contribute mandatory bigrams
         resolved against :attr:`gram_index` (the FST-intersection
@@ -1219,9 +1209,10 @@ class SearchEngine:
         completion fields carry an explicit weight; df is this
         engine's natural popularity signal, documented contract).
 
-        Runs as a RANGE scan on the sorted term dictionary
-        (:attr:`term_dict` — the Lucene FST/completion-index analog):
-        only row groups whose [min,max] term range intersects the
+        Runs as a ``startswith`` cut pushed to the scan of the
+        term-sorted dictionary (:attr:`term_dict` — the Lucene
+        FST/completion-index analog): in each term_bucket file only
+        the row groups whose [min,max] term range intersects the
         prefix are read, then a size-capped TakeOrdered.  Returns
         (term, weight, rank).
 
@@ -1229,7 +1220,7 @@ class SearchEngine:
         when the Damerau-Levenshtein distance between ITS prefix of
         the query's length and the query is ≤ ``fuzziness``, with the
         first ``prefix_length`` chars required exact (ES's default 1
-        — the knob that keeps the dictionary cut a range scan on the
+        — the knob that keeps the dictionary cut a pruned scan on the
         anchor).  Ranking (dist asc, weight desc, term asc) — closer
         completions first, ES's share-the-longest-prefix-scores-
         higher contract.  The distance predicate evaluates in an
@@ -1350,9 +1341,12 @@ class SearchEngine:
         semantics in :meth:`search_synonyms`) over
         ``{query_id: slots}``.  One slot-df table across ALL queries:
         a slot's key is its member tuple (identical slots share one
-        aggregate row), and each segment row carries the ``slot_dfs``
-        map of every slot its term is a member of, so slot resolution
-        happens inside the kernel."""
+        df), and each segment row carries the ``slot_dfs`` map of
+        every slot its term is a member of, so slot resolution happens
+        inside the kernel.  With the driver stats map the slot dfs are
+        computed on the driver and ride in as a literal map
+        (:meth:`_slot_df_segments`); without it they are an aggregate
+        on the broadcast side of the job."""
         slot_key: dict[tuple, int] = {}
         for slots in qslots.values():
             for alts in slots:
@@ -1361,7 +1355,12 @@ class SearchEngine:
                        for alts in slots]
                  for qid, slots in qslots.items()}
         segs, members = None, []
-        if slot_key:
+        m = self._stats_map()
+        if slot_key and m is not None:
+            members = self._index_terms(sorted(
+                {t for alts in slot_key for t in alts if t in m}))
+            segs = self._slot_df_segments(slot_key, members, m)
+        elif slot_key:
             members = sorted({t for alts in slot_key for t in alts})
             mem_df = self.spark.createDataFrame(
                 [(t, sid) for alts, sid in slot_key.items()
@@ -1382,6 +1381,28 @@ class SearchEngine:
         return _bucket_job(self.spark, segs, kernel, specs, k,
                            "slot_dfs", batched,
                            partitions=self._partitions_for(members))
+
+    def _slot_df_segments(self, slot_key: dict, members: list[str],
+                          m: dict) -> DataFrame | None:
+        """The slot members' partials, each with its ``slot_dfs`` map
+        (slot id → slot df, the max of the slot's indexed members' df
+        from the stats map ``m``) as a literal map lookup, as
+        :meth:`_df_segments` does for AND and OR; None when no member
+        is indexed."""
+        if not members:
+            return None
+        slot_dfs: dict[str, dict[int, int]] = {t: {} for t in members}
+        for alts, sid in slot_key.items():
+            have = [t for t in alts if t in slot_dfs]
+            for t in have:
+                slot_dfs[t][sid] = max(m[h] for h in have)
+        lit = ", ".join(
+            f"'{t}', map({', '.join(f'{i}, {df}L' for i, df in d.items())})"
+            for t, d in slot_dfs.items())
+        return self.spark.sql(
+            f"SELECT {', '.join(self._SEG_COLS)}, map({lit})[term] "
+            f"AS slot_dfs FROM {self._seg_view} "
+            f"WHERE {self._term_filter(members)}")
 
     def search_or(self, query: str, k: int = TOP_K_SIZE,
                   min_should_match: int = 1) -> DataFrame:
@@ -2705,7 +2726,8 @@ class PhraseEngine(SearchEngine):
         positions when in_order).  Constant_score rewrite, doc_id
         order, score == boost.
 
-        Prefixes expand on the sorted term dictionary (range scan);
+        Prefixes expand on the term-sorted dictionary (a pruned
+        ``startswith`` scan);
         candidates are the intersection ACROSS clauses of the union
         WITHIN each clause of the terms' postings (tombstone-masked,
         :func:`_near_kernel`), so positions decode only for docs

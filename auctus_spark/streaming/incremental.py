@@ -48,7 +48,7 @@ from ..index.build import IndexBuilder, read_removed
 def incremental_update(builder: IndexBuilder, new_docs: DataFrame) -> dict:
     """Append new documents (strictly increasing doc_id ranges) to an
     existing index: tokenize the missing chunks, then write them as
-    one new generation with its term_stats, dictionary and stats
+    one new generation with its term_stats and stats
     (:meth:`IndexBuilder.finalize`).  Already-indexed chunks are
     skipped via lineage, so a rerun after a crash finishes the append
     exactly once."""
@@ -254,7 +254,7 @@ class StreamingIndexer:
     def finalize(self) -> dict:
         """Encode every chunk the stream committed since the last
         finalize as one generation (rebuilt tail chunks replace their
-        old rows), then term_stats, dictionary and stats."""
+        old rows), then term_stats and stats."""
         return self.builder.finalize()
 
 

@@ -121,6 +121,32 @@ def test_unindexed_and_term_runs_no_job(spark, built):
     assert _jobs(spark) == before
 
 
+def test_synonym_slot_dfs_from_stats_map(spark, built):
+    """With the driver stats map loaded, a synonym query's slot dfs
+    (max of the members' df) ride in as a literal map: the query runs
+    one Spark job, and its ranking equals the oracle's and that of
+    the scan path, whose slot dfs are an aggregate on the broadcast
+    side."""
+    out, oracle = built
+    eng = SearchEngine(spark, out, term_buckets=8)
+    assert eng._stats_map() is not None
+    syn = {"import": ["the", "zz_missing"], "def": ["return"]}
+    cases = ["import def", "uniq_token_11 import", "zz_missing def",
+             "qq_missing"]
+    for q in cases:
+        before = _jobs(spark)
+        got = _ranked(eng.search_synonyms(q, syn, k=50))
+        assert _jobs(spark) - before <= 1, q
+        _assert_rank_identical(got, oracle.search_synonyms(q, syn, k=50))
+    before = _jobs(spark)
+    assert _ranked(eng.search_synonyms("import def", syn, k=50))
+    assert _jobs(spark) - before == 1
+    eng._stats_map_cache = False
+    for q in cases:
+        _assert_rank_identical(_ranked(eng.search_synonyms(q, syn, k=50)),
+                               oracle.search_synonyms(q, syn, k=50))
+
+
 def test_empty_results_run_no_job(spark, built, tmp_path):
     """explain, term_vectors, suggest_terms, suggest_phrases and every
     ranking of the index-free pipeline answer an input with nothing to

@@ -277,3 +277,109 @@ def test_exchange_partitions_sized_from_bytes(spark):
         assert build._exchange_partitions(spark, 1 << 40, 16) == 64
     finally:
         spark.conf.set(key, prev)
+
+
+def _parquet_digests(d):
+    """{directory of the index: sorted sha256 of its parquet files} —
+    file names carry a per-write UUID, so a directory is compared as
+    the bag of its files' bytes."""
+    import hashlib
+
+    def digest(path):
+        with open(path, "rb") as f:
+            return hashlib.sha256(f.read()).hexdigest()
+    out = {}
+    for root, _, files in os.walk(d):
+        digests = sorted(digest(os.path.join(root, f))
+                         for f in files if f.endswith(".parquet"))
+        if digests:
+            out[os.path.relpath(root, d)] = digests
+    return out
+
+
+def test_index_bytes_are_a_function_of_the_corpus(spark, tmp_path):
+    """The same corpus built and appended twice in one session, with
+    unrelated Spark jobs in between, writes byte-identical parquet
+    files (term_stats, segments and every other table), directory by
+    directory: the layout depends neither on task arrival order nor on
+    earlier jobs of the session (a range exchange samples with a seed
+    taken from the RDD id, which those jobs move)."""
+    # a vocabulary wide enough that a sample of the term table cannot
+    # hold all of its rows
+    pdf = generate_corpus(400, min_tokens=50, max_tokens=400,
+                          vocab_size=20000)
+    base, extra = pdf[pdf.doc_id < 300], pdf[pdf.doc_id >= 300]
+    runs = []
+    for i in range(2):
+        d = str(tmp_path / f"run{i}")
+        b = _builder(spark, d)
+        b.build(spark.createDataFrame(base))
+        incremental_update(b, spark.createDataFrame(extra))
+        runs.append(_parquet_digests(d))
+        (spark.range(0, 50000, numPartitions=7)
+         .repartition(5).selectExpr("id % 13 AS k")
+         .groupBy("k").count().collect())
+    assert any(k.startswith("segments") for k in runs[0])
+    assert any(k.startswith("term_stats") for k in runs[0])
+    diff = sorted(k for k in runs[0].keys() | runs[1].keys()
+                  if runs[0].get(k) != runs[1].get(k))
+    assert not diff, diff
+
+
+def test_append_crash_sweep(spark, tmp_path, fs_mutations):
+    """A crash at EVERY file-system mutation of incremental_update, on
+    a copy of one two-generation index: tokenize (partials, lineage),
+    the generation write and the manifest commit, the term_stats fold
+    with its ``term_stats_next`` write, ``_SEQ`` stamp and rmtree +
+    rename swap, then the stats write.  Before the manifest commit the
+    index answers as before (N, avgdl and rankings of the old corpus);
+    after it every engine refuses it (UnfinishedAppendError).  In
+    every window a rerun of the append then matches the oracle of the
+    whole corpus."""
+    import shutil
+
+    pdf = generate_corpus(240, **KW)
+    base = str(tmp_path / "base")
+    for lo in (0, 80):
+        incremental_update(_builder(spark, base, chunk_docs=80),
+                           spark.createDataFrame(
+                               pdf[(pdf.doc_id >= lo)
+                                   & (pdf.doc_id < lo + 80)]))
+    assert len(read_manifest(base)["gens"]) == 2
+    new = spark.createDataFrame(pdf[pdf.doc_id >= 160])
+    old = OracleIndex.build(_docs(pdf[pdf.doc_id < 160]))
+    full = OracleIndex.build(_docs(pdf))
+
+    def append(d):
+        incremental_update(_builder(spark, d, chunk_docs=80), new)
+
+    d = str(tmp_path / "count")
+    shutil.copytree(base, d)
+    fs_mutations.root, fs_mutations.count = d, 0
+    append(d)
+    fs_mutations.root = None
+    n = fs_mutations.count
+    _assert_matches(spark, d, full)
+    states = []
+    for i in range(n):
+        d = str(tmp_path / f"crash{i}")
+        shutil.copytree(base, d)
+        fs_mutations.root, fs_mutations.count = d, 0
+        fs_mutations.crash_at = i
+        with pytest.raises(fs_mutations.Crash):
+            append(d)
+        fs_mutations.root = None
+        try:
+            SearchEngine(spark, d, term_buckets=4)
+        except UnfinishedAppendError:
+            states.append("refused")
+        else:
+            _assert_matches(spark, d, old)
+            states.append("before")
+        append(d)
+        _assert_matches(spark, d, full)
+        shutil.rmtree(d)
+    # the two states come in protocol order, each at least once
+    assert states == sorted(states, key=["before", "refused"].index), \
+        states
+    assert set(states) == {"before", "refused"}, states

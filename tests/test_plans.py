@@ -185,18 +185,26 @@ def test_wand_plan_py4j_calls(engine):
 
 
 def test_synonyms_idx_plan_shape(engine):
-    """Segment-path synonyms: the global slot-df aggregate rides the
-    BROADCAST side of the one scoring job — broadcast join present,
-    no posting-side shuffle (a small query scores in one task),
-    TakeOrdered merge, and the segment scan still partition-prunes."""
-    plan = _plan(engine.search_synonyms("import def", {"import": ["the"]}))
+    """Segment-path synonyms: with the driver stats map the slot dfs
+    are a literal map projection — no join and no exchange at all (a
+    small query scores in one task), TakeOrdered merge, and the
+    segment scan still partition-prunes.  With the map capped out the
+    global slot-df aggregate rides the BROADCAST side of the one
+    scoring job."""
+    query = ("import def", {"import": ["the"]})
+    plan = _plan(engine.search_synonyms(*query))
+    assert "Join" not in plan and "Exchange" not in plan, plan
+    assert "TakeOrderedAndProject" in plan
+    assert "PartitionFilters" in plan
+    assert "Coalesce 1" in plan, plan
+    engine._stats_map_cache = False
+    try:
+        plan = _plan(engine.search_synonyms(*query))
+    finally:
+        engine._stats_map_cache = None
     assert "BroadcastHashJoin" in plan
     assert "TakeOrderedAndProject" in plan
     assert "PartitionFilters" in plan
-    # the broadcast side may add exchanges on its own tiny tables, but
-    # none of them move posting rows
-    assert _bucket_exchange(plan) == set(), plan
-    assert "Coalesce 1" in plan, plan
 
 
 def test_crossfields_fused_plan(spark, sf_dir):
@@ -353,43 +361,82 @@ def test_significant_terms_single_scan(spark):
     assert plan.count("LocalTableScan") <= 2  # df + (maybe) totals reuse
 
 
-def test_term_dict_range_scan(engine):
-    """Sorted term dictionary (round-7 #3): the dictionary is written
-    range-partitioned + sorted on ``term``, so a prefix cut reads only
-    the matching row groups.  Asserted at both levels: (a) the files'
-    parquet min/max term ranges are disjoint and sorted — the property
-    row-group pruning needs; (b) the prefix predicate is pushed into
-    the dictionary scan (StartsWith in PushedFilters)."""
+def _term_files(index_dir):
+    """{term_bucket file: [(row-group min term, max term)]} and the
+    files' term columns, of an index's term_stats table."""
+    import glob
     import os
 
     import pyarrow.parquet as pq
 
-    ddir = engine.paths.term_dict
-    assert os.path.exists(os.path.join(ddir, "_SUCCESS"))
-    ranges = []
-    for name in sorted(os.listdir(ddir)):
-        if not name.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(ddir, name)).metadata
+    ranges, terms = {}, {}
+    for f in sorted(glob.glob(os.path.join(
+            index_dir, "term_stats", "term_bucket=*", "*.parquet"))):
+        pf = pq.ParquetFile(f)
+        md = pf.metadata
         col = {md.schema.column(i).name: i
                for i in range(md.num_columns)}["term"]
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(col).statistics
-            ranges.append((st.min, st.max))
-    assert len(ranges) >= 2, "dict must span multiple row groups"
-    ranges.sort()
-    for (_, amax), (bmin, _) in zip(ranges, ranges[1:]):
-        assert amax <= bmin, "row-group term ranges must be disjoint"
-    # only a strict subset of row groups can match a prefix cut
-    pref = "uniq_token_1"
-    hit = [r for r in ranges if r[0][:len(pref)] <= pref <= r[1]]
-    assert 0 < len(hit) < len(ranges)
+        ranges[f] = [(md.row_group(g).column(col).statistics.min,
+                      md.row_group(g).column(col).statistics.max)
+                     for g in range(md.num_row_groups)]
+        terms[f] = pf.read(columns=["term"]).column("term").to_pylist()
+    return ranges, terms
 
-    # the dictionary scan itself pushes the StartsWith predicate
+
+def test_term_stats_is_the_sorted_dictionary(spark, engine,
+                                             tmp_path_factory):
+    """term_stats is the term dictionary: (a) every file of the fixture
+    index is sorted by term, so (b) the ``startswith`` cut pushed into
+    ``term_dict``'s scan (StringStartsWith in PushedFilters) can skip
+    row groups by their [min, max] term statistics, and (c) on an
+    index whose files hold several row groups (Hadoop
+    ``parquet.block.size`` lowered for this build only) a prefix cut
+    meets a strict, non-empty subset of each term_bucket file's row
+    groups."""
+    import os
+
+    _, terms = _term_files(engine.paths.base)
+    assert terms and all(t == sorted(t) for t in terms.values())
+    assert not os.path.exists(os.path.join(engine.paths.base,
+                                           "term_dict"))
+
+    pref = "uniq_token_1"
     plan = _plan(engine.term_dict.filter(
         F.col("term").startswith(pref)).select("term"))
     assert "PushedFilters" in plan
     assert "StringStartsWith(term" in plan.split("PushedFilters", 1)[1][:300]
+
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    keys = ("parquet.block.size", "parquet.block.size.row.check.min",
+            "parquet.block.size.row.check.max")
+    old = {k: conf.get(k) for k in keys}
+    out = str(tmp_path_factory.mktemp("rgidx"))
+    try:
+        for k, v in zip(keys, ("1024", "16", "16")):
+            conf.set(k, v)
+        pdf = generate_corpus(600, min_tokens=20, max_tokens=60,
+                              vocab_size=800)
+        IndexBuilder(spark, out, doc_bucket=256, chunk_docs=1 << 20,
+                     term_buckets=2).build(spark.createDataFrame(pdf))
+    finally:
+        for k, v in old.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
+    ranges, terms = _term_files(out)
+    assert len(ranges) == 2
+    for f, rgs in ranges.items():
+        assert terms[f] == sorted(terms[f]), f
+        assert len(rgs) > 1, (f, len(rgs))
+        hit = [r for r in rgs if r[0][:len(pref)] <= pref <= r[1]]
+        assert 0 < len(hit) < len(rgs), (f, hit, rgs)
+    eng = SearchEngine(spark, out, term_buckets=2)
+    want = sorted(t for ts in terms.values() for t in ts
+                  if t.startswith(pref))
+    got = sorted(r["term"] for r in eng.term_dict.filter(
+        F.col("term").startswith(pref)).collect())
+    assert got == want and want
 
 
 def test_term_vectors_df_from_stats_map(engine):
@@ -478,9 +525,10 @@ def test_histogram_agg_partial_agg_plan(spark, sf_dir):
 
 
 def test_completion_suggest_range_scan(engine):
-    """Completion suggester reads the sorted term dictionary with the
-    prefix pushed to the parquet scan (StringStartsWith) — the
-    range-pruning path, not a full-dictionary pass."""
+    """Completion suggester reads the term-sorted term_stats table
+    (``term_dict``) with the prefix pushed to the parquet scan
+    (StringStartsWith), so row groups outside the prefix are skipped —
+    not a full-dictionary pass."""
     df = engine.suggest_completions("im", size=5)
     plan = _plan(df)
     assert "StartsWith" in plan or "term" in plan.split(

@@ -671,58 +671,6 @@ def test_export_metrics_tables(spark, tmp_path):
         spark.sql(f"DROP TABLE {t}")
 
 
-class _Crash(Exception):
-    """A simulated process crash at one file-system mutation."""
-
-
-@pytest.fixture
-def fs_mutations(monkeypatch):
-    """Counts the file-system mutations made under ``.root`` —
-    ``os.rename``, ``os.replace``, ``os.remove``, ``shutil.rmtree``,
-    ``open`` for writing, ``pq.write_table`` and
-    ``DataFrameWriter.parquet`` — and raises :class:`_Crash` instead of
-    making the one numbered ``.crash_at`` (0-based)."""
-    import builtins
-    import shutil
-
-    import pyarrow.parquet as pq
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    class Mutations:
-        root = None
-        crash_at = None
-        count = 0
-
-        def hit(self, path):
-            if self.root is None or not (os.path.abspath(
-                    os.fspath(path)) + os.sep).startswith(
-                        self.root + os.sep):
-                return
-            if self.count == self.crash_at:
-                raise _Crash(path)
-            self.count += 1
-
-    mut = Mutations()
-
-    def wrap(owner, name, path_arg, writes=None):
-        real = getattr(owner, name)
-
-        def fake(*a, **kw):
-            if writes is None or writes(*a, **kw):
-                mut.hit(a[path_arg])
-            return real(*a, **kw)
-        monkeypatch.setattr(owner, name, fake)
-
-    for name in ("rename", "replace", "remove"):
-        wrap(os, name, 0)
-    wrap(shutil, "rmtree", 0)
-    wrap(pq, "write_table", 1)
-    wrap(DataFrameWriter, "parquet", 1)
-    wrap(builtins, "open", 0, lambda f, mode="r", *a, **kw: (
-        isinstance(f, (str, os.PathLike)) and any(c in mode for c in "wax+")))
-    return mut
-
-
 def test_compaction_crash_sweep(spark, tmp_path, fs_mutations):
     """A crash at EVERY file-system mutation of compact(), on a copy of
     one three-generation index whose deletes fall in two generations:
@@ -784,7 +732,7 @@ def test_compaction_crash_sweep(spark, tmp_path, fs_mutations):
         shutil.copytree(base, d)
         fs_mutations.root, fs_mutations.count = d, 0
         fs_mutations.crash_at = i
-        with pytest.raises(_Crash):
+        with pytest.raises(fs_mutations.Crash):
             compact(spark, d, term_buckets=2)
         fs_mutations.root = None
         try:
