@@ -19,7 +19,9 @@ boundary (the MapReduce local-indexing + merge construction):
    one on the input scan (count/min/max/sha — pure JVM expressions, no
    per-row Python anywhere), one on the partials output (token totals
    from segment metadata).  Written per *chunk* (fixed docID range) →
-   resumable: chunks with lineage rows are skipped.
+   resumable: chunks with lineage rows are skipped.  The partials are
+   a staging table: a chunk's are deleted once term_stats describes
+   the generation that holds it, so each posting is stored once.
 2. **merge** — pure JVM: the partials of the chunks that no live
    generation holds yet are repartitioned by ``term_bucket``
    (murmur3(term) % T) into ONE new generation,
@@ -152,10 +154,15 @@ def read_stats(index_dir: str) -> dict:
     """The one-row global stats table as a dict (``n_docs``, ``avgdl``
     and, on indexes that record it, ``total_tokens``): a driver-side
     pyarrow read, no Spark job.  Both writers (``finalize_stats`` and
-    ``compact``) write it with pyarrow."""
+    ``compact``) write it with pyarrow.  Raises FileNotFoundError when
+    no stats row is written yet (a build that has not finished)."""
     import pyarrow.dataset as pads
-    t = pads.dataset(IndexPaths(index_dir).stats, format="parquet")
-    return t.head(1).to_pylist()[0]
+    path = IndexPaths(index_dir).stats
+    rows = pads.dataset(path, format="parquet").head(1).to_pylist()
+    if not rows:
+        raise FileNotFoundError(f"{path} holds no stats row: the build "
+                                "of this index has not finished")
+    return rows[0]
 
 
 TERM_STATS_SEQ = "_SEQ"
@@ -164,7 +171,11 @@ TERM_STATS_SEQ = "_SEQ"
 def read_term_stats_seq(index_dir: str) -> int | None:
     """The manifest seq the term_stats table describes (None when the
     table is absent or was never completely written)."""
-    p = os.path.join(IndexPaths(index_dir).term_stats, TERM_STATS_SEQ)
+    return _table_seq(IndexPaths(index_dir).term_stats)
+
+
+def _table_seq(table_dir: str) -> int | None:
+    p = os.path.join(table_dir, TERM_STATS_SEQ)
     if not os.path.exists(p):
         return None
     with open(p) as f:
@@ -353,6 +364,8 @@ class IndexPaths:
 
     @property
     def partials(self):
+        # staging: a chunk's tokenize checkpoint, deleted once
+        # term_stats describes the generation that holds the chunk
         return os.path.join(self.base, "partials")
 
     @property
@@ -677,15 +690,16 @@ class IndexBuilder:
                     f"index at {self.paths.base} predates layout "
                     f"versioning — wipe() and rebuild (current format "
                     f"v{FORMAT_VERSION})")
+            # _ANALYZER first: _FORMAT marks a stamped index, so a
+            # crash between the two writes leaves neither recorded
             os.makedirs(self.paths.base, exist_ok=True)
-            with open(os.path.join(self.paths.base, "_FORMAT"), "w") as f:
-                f.write(str(FORMAT_VERSION))
-            import json
             with open(os.path.join(self.paths.base, "_ANALYZER"),
                       "w") as f:
                 json.dump({"stem": self.stem,
                            "positions": self.positions,
                            "doc_bucket": self.doc_bucket}, f)
+            with open(os.path.join(self.paths.base, "_FORMAT"), "w") as f:
+                f.write(str(FORMAT_VERSION))
         elif v != FORMAT_VERSION:
             raise ValueError(
                 f"index at {self.paths.base} has layout v{v}, this build "
@@ -882,7 +896,9 @@ class IndexBuilder:
         """Remove generation dirs and ``removed_docs`` files the
         manifest does not list: written by an append, merge or
         compaction that stopped before its commit, or replaced by one
-        that stopped after it."""
+        that stopped after it.  A ``term_stats_next`` table is swapped
+        in or removed (:func:`_settle_term_stats_next`)."""
+        _settle_term_stats_next(self.paths, m["seq"])
         seg, rem = self.paths.segments, self.paths.removed
         for name in os.listdir(seg) if os.path.isdir(seg) else ():
             if name.startswith("gen=") and name[4:] not in m["gens"]:
@@ -975,7 +991,7 @@ class IndexBuilder:
     def _stats_seq(self) -> int | None:
         try:
             return read_stats(self.paths.base).get("seq")
-        except (OSError, ValueError, IndexError):
+        except (OSError, ValueError):
             return None
 
     def finalize_stats(self) -> dict:
@@ -991,42 +1007,73 @@ class IndexBuilder:
     def finalize_term_stats(self) -> None:
         """(term, df, cf) from the live segments' metadata — partials
         of one term cover disjoint docID ranges, so df = sum(n_docs) —
-        then stats.  The segments are the source of
-        truth after a compaction, and this is the recovery path of an
-        append or a compaction that stopped after its commit."""
+        then the committed chunks' partials are deleted
+        (:meth:`_drop_committed_partials`) and stats written.  The
+        segments are the source of truth after a compaction, and this
+        is the recovery path of an append or a compaction that stopped
+        after its commit."""
         _write_term_stats(self.spark, self.paths,
                           read_segments(self.spark, self.paths.base),
                           read_manifest(self.paths.base)["seq"])
+        self._drop_committed_partials()
         self.finalize_stats()
 
     def finalize_term_stats_from_partials(self) -> None:
         """Bring term_stats and stats up to the manifest, deciding
-        from on-disk state alone.  When the manifest's last change
-        appended new chunks
+        from on-disk state alone.  A term_stats already at the
+        manifest seq is kept and only the stats are written: a fold
+        stopped after its swap, or before it (the writers' sweep,
+        :meth:`_sweep_uncommitted`, swaps in a ``term_stats_next``
+        stamped with the manifest seq).
+        When the manifest's last change appended new chunks
         (``m["appended"]``) onto the content term_stats describes
         (:func:`read_term_stats_seq` is one behind), those chunks'
         (term, df, cf) aggregate over their partials is folded into
         term_stats: df and cf are sums over disjoint docID ranges.  A
         fresh build has no term_stats and aggregates all its chunks
         the same way.  Any other lagging state (a rebuilt chunk
-        replaced rows, a compaction, or an earlier run that stopped
-        midway) is recomputed from the live segments; an index whose
-        stats are current is left alone."""
+        replaced rows, or a compaction) is recomputed from the live
+        segments.  Once term_stats is current, the committed chunks'
+        partials are deleted (:meth:`_drop_committed_partials`), then
+        stats are written last; on an index whose stats are current
+        only the partials are dropped."""
         m = read_manifest(self.paths.base)
         if self._stats_seq() == m["seq"]:
+            self._drop_committed_partials()
             return
         ts_seq = read_term_stats_seq(self.paths.base) or 0
-        appended = m.get("appended", {})
-        if appended.get("seq") != m["seq"] or ts_seq != m["seq"] - 1:
-            self.finalize_term_stats()
-            return
-        base = None
-        if ts_seq:
-            base = read_term_stats(self.spark, self.paths.base)
-        _write_term_stats(self.spark, self.paths,
-                          self._read_partials(appended["chunks"]),
-                          m["seq"], base=base)
+        if ts_seq != m["seq"]:
+            appended = m.get("appended", {})
+            if appended.get("seq") != m["seq"] or ts_seq != m["seq"] - 1:
+                self.finalize_term_stats()
+                return
+            base = None
+            if ts_seq:
+                base = read_term_stats(self.spark, self.paths.base)
+            _write_term_stats(self.spark, self.paths,
+                              self._read_partials(appended["chunks"]),
+                              m["seq"], base=base)
+        self._drop_committed_partials()
         self.finalize_stats()
+
+    def _drop_committed_partials(self) -> None:
+        """Delete the partials of every chunk that is not to be
+        encoded (:meth:`_plan`): a live generation holds it with its
+        current lineage fingerprint, or it has no lineage row (a
+        tokenize that stopped before its lineage commit, which a rerun
+        redoes).  Only :meth:`encode_segments` (the chunks to encode)
+        and the term_stats fold (before term_stats is current) read
+        partials, so this runs once term_stats describes the
+        manifest."""
+        part = self.paths.partials
+        names = sorted(n for n in (os.listdir(part) if os.path.isdir(part)
+                                   else ()) if n.startswith("chunk="))
+        if not names:
+            return
+        _, todo = self._plan()
+        for name in names:
+            if name[6:] not in todo:
+                shutil.rmtree(os.path.join(part, name))
 
     # ---------------- public API --------------------------------------
 
@@ -1120,8 +1167,24 @@ def _write_term_stats(spark: SparkSession, paths: IndexPaths,
     with open(os.path.join(out, TERM_STATS_SEQ), "w") as f:
         f.write(str(seq))
     if base is not None:
+        _settle_term_stats_next(paths, seq)
+
+
+def _settle_term_stats_next(paths: IndexPaths, seq: int) -> None:
+    """Finish or sweep a fold's ``term_stats_next`` table: stamped with
+    the manifest ``seq``, it is the finished fold and replaces
+    term_stats (``rmtree``, then ``rename``); any other is a fold that
+    stopped before its stamp, or one the manifest has moved past, and
+    is removed."""
+    nxt = paths.term_stats + "_next"
+    if not os.path.isdir(nxt):
+        return
+    if _table_seq(nxt) != seq:
+        shutil.rmtree(nxt)
+        return
+    if os.path.isdir(paths.term_stats):
         shutil.rmtree(paths.term_stats)
-        os.rename(out, paths.term_stats)
+    os.rename(nxt, paths.term_stats)
 
 
 def export_metrics_tables(spark: SparkSession, index_dir: str,
@@ -1259,7 +1322,8 @@ def compact(spark: SparkSession, index_dir: str,
     generation and file it wrote are swept by the next writer.
 
     After the commit, the derived tail an append runs: term_stats,
-    then stats, then the tombstone dir is cleared.  A
+    the committed chunks' partials dropped, then stats, then the
+    tombstone dir is cleared.  A
     crash in that tail leaves an index engines refuse
     (:class:`UnfinishedAppendError`) until a rerun of ``compact`` or
     :meth:`IndexBuilder.finalize` finishes it.  The lineage table still

@@ -9,8 +9,8 @@ chunked builder:
   lineage rows are missing (new doc ranges), then
   :meth:`IndexBuilder.finalize`: the new chunks' partials become ONE
   new segment generation, committed by the manifest, and their
-  (term, df, cf) aggregate is folded into term_stats.  Older
-  generations are not read or rewritten (until a tiered merge), so an
+  (term, df, cf) aggregate is folded into term_stats; then their
+  partials are deleted.  Older generations are not read or rewritten (until a tiered merge), so an
   append costs what it adds, not what the index holds.  New docs land
   in new docID ranges → new chunks → old chunks untouched (this is
   why chunking is by fixed docID range).

@@ -10,7 +10,9 @@ import pytest
 from auctus_spark.corpus import generate_corpus
 from auctus_spark.index import build
 from auctus_spark.index.build import (IndexBuilder, UnfinishedAppendError,
-                                      compact, delete_docs, read_manifest)
+                                      compact, delete_docs, read_analyzer,
+                                      read_manifest)
+from auctus_spark.index.snapshot import snapshot_index
 from auctus_spark.oracle import OracleIndex
 from auctus_spark.query.bm25 import SearchEngine
 from auctus_spark.streaming.incremental import (StreamingIndexer,
@@ -53,6 +55,24 @@ def _gen_files(d):
                 st = os.stat(os.path.join(root, f))
                 out[os.path.join(root, f)] = (st.st_ino, st.st_size)
     return out
+
+
+def _staged(d):
+    """Chunk ids with a ``partials/chunk=C`` dir."""
+    part = os.path.join(d, "partials")
+    return {n.split("=", 1)[1] for n in (os.listdir(part) if
+            os.path.isdir(part) else ()) if n.startswith("chunk=")}
+
+
+def _live_chunks(d):
+    return {c for e in read_manifest(d)["gens"].values()
+            for c in e["chunks"]}
+
+
+def _assert_stored_once(d):
+    """No chunk a live generation holds keeps its partials."""
+    assert _live_chunks(d)
+    assert not _staged(d) & _live_chunks(d), sorted(_staged(d))
 
 
 def test_compacted_deletes_stay_deleted_after_append(spark, tmp_path):
@@ -106,8 +126,8 @@ def test_crash_after_commit_before_stats(spark, tmp_path, monkeypatch):
     """An append that stops after its manifest commit but before its
     stats are written (term_stats already folded) leaves an index every
     engine refuses to open; the rerun, on a new builder, finds from the
-    index alone that term_stats already holds the new chunk and
-    recomputes the derived tables once — no double-counted df."""
+    index alone that term_stats already holds the new chunk and writes
+    only the stats — no double-counted df."""
     pdf = generate_corpus(200, **KW)
     d = str(tmp_path / "idx")
     b = _builder(spark, d)
@@ -331,7 +351,8 @@ def test_append_crash_sweep(spark, tmp_path, fs_mutations):
     a copy of one two-generation index: tokenize (partials, lineage),
     the generation write and the manifest commit, the term_stats fold
     with its ``term_stats_next`` write, ``_SEQ`` stamp and rmtree +
-    rename swap, then the stats write.  Before the manifest commit the
+    rename swap, the deletion of the new chunk's partials, then the
+    stats write.  Before the manifest commit the
     index answers as before (N, avgdl and rankings of the old corpus);
     after it every engine refuses it (UnfinishedAppendError).  In
     every window a rerun of the append then matches the oracle of the
@@ -383,3 +404,197 @@ def test_append_crash_sweep(spark, tmp_path, fs_mutations):
     assert states == sorted(states, key=["before", "refused"].index), \
         states
     assert set(states) == {"before", "refused"}, states
+
+
+def test_each_posting_stored_once(spark, tmp_path):
+    """Once term_stats describes a generation, the partials of the
+    chunks it holds are gone: after a one-chunk and a three-chunk
+    build, an append, a streaming finalize that rebuilt its tail chunk
+    and a compaction, ``partials/`` holds no chunk a live generation
+    holds, and a snapshot holds no ``partials/`` file.  A chunk
+    tokenized but not finalized keeps its partials through a finalize
+    of the term tables and a compaction, and a later finalize encodes
+    it."""
+    pdf = generate_corpus(500, **KW)
+    base = pdf[pdf.doc_id < 300]
+    d1 = str(tmp_path / "one")
+    _builder(spark, d1, chunk_docs=400).build(spark.createDataFrame(base))
+    assert _live_chunks(d1) == {"0"}
+    _assert_stored_once(d1)
+
+    d = str(tmp_path / "three")
+    b = _builder(spark, d)
+    b.build(spark.createDataFrame(base))
+    assert _live_chunks(d) == {"0", "1", "2"}
+    _assert_stored_once(d)
+    incremental_update(b, spark.createDataFrame(
+        pdf[(pdf.doc_id >= 300) & (pdf.doc_id < 400)]))
+    _assert_stored_once(d)
+    dead = [5, 120, 350]
+    delete_docs(spark, d, dead)
+    assert compact(spark, d, term_buckets=4)["removed_docs"] == 3
+    _assert_stored_once(d)
+    manifest = snapshot_index(d, str(tmp_path / "snap"))
+    assert not [f for f in manifest if f.startswith("partials")]
+
+    b.tokenize_chunks(spark.createDataFrame(pdf[pdf.doc_id >= 400]))
+    b.finalize_term_stats_from_partials()
+    delete_docs(spark, d, [7])
+    compact(spark, d, term_buckets=4)
+    assert _staged(d) == {"4"} and "4" not in _live_chunks(d)
+    b.finalize()
+    assert _live_chunks(d) == {"0", "1", "2", "3", "4"}
+    assert _staged(d) == set()
+    _assert_matches(spark, d, OracleIndex.build(
+        _docs(pdf[~pdf.doc_id.isin(dead + [7])])))
+
+    pdf = generate_corpus(180, **KW)
+    corpus = spark.createDataFrame(pdf)
+    ds = str(tmp_path / "stream")
+    sink = StreamingIndexer(_builder(spark, ds, chunk_docs=200))
+    sink(corpus.filter("doc_id < 150"), epoch_id=0)
+    sink.finalize()
+    _assert_stored_once(ds)
+    sink(corpus.filter("doc_id >= 150"), epoch_id=1)
+    assert _staged(ds) == {"0"}              # the rebuilt tail chunk
+    assert sink.finalize()["n_docs"] == 180
+    _assert_stored_once(ds)
+    _assert_matches(spark, ds, OracleIndex.build(_docs(pdf)))
+
+
+@pytest.mark.parametrize("window", ["unstamped", "swap", "stats"])
+def test_term_stats_fold_rerun(spark, tmp_path, monkeypatch, window):
+    """An append whose term_stats fold stops in each window after the
+    manifest commit: before ``term_stats_next`` is stamped, between the
+    old table's removal and the rename that swaps ``term_stats_next``
+    in, and after the swap, before the stats write.  The rerun never
+    recomputes term_stats from the segments (``finalize_term_stats``
+    raises here): it folds again, finishes the swap, or writes only
+    the stats.  It matches the oracle and leaves no
+    ``term_stats_next``."""
+    import builtins
+
+    pdf = generate_corpus(200, **KW)
+    d = str(tmp_path / "idx")
+    b = _builder(spark, d)
+    b.build(spark.createDataFrame(pdf[pdf.doc_id < 100]))
+    ts = os.path.join(d, "term_stats")
+
+    class Crash(Exception):
+        pass
+
+    real_open, real_rename = builtins.open, os.rename
+
+    def fake_open(f, mode="r", *a, **kw):
+        if "w" in mode and str(f) == os.path.join(ts + "_next", "_SEQ"):
+            raise Crash(f)
+        return real_open(f, mode, *a, **kw)
+
+    def fake_rename(src, dst, *a, **kw):
+        if dst == ts:
+            raise Crash(dst)
+        return real_rename(src, dst, *a, **kw)
+
+    def fake_stats(*a, **kw):
+        raise Crash("stats")
+
+    tail = spark.createDataFrame(pdf[pdf.doc_id >= 100])
+    with monkeypatch.context() as mp:
+        if window == "unstamped":
+            mp.setattr(builtins, "open", fake_open)
+        elif window == "swap":
+            mp.setattr(os, "rename", fake_rename)
+        else:
+            mp.setattr(build, "_write_stats", fake_stats)
+        with pytest.raises(Crash):
+            incremental_update(b, tail)
+    assert os.path.isdir(ts + "_next") == (window != "stats")
+    assert os.path.isdir(ts) == (window != "swap")
+    with pytest.raises(UnfinishedAppendError):
+        SearchEngine(spark, d, term_buckets=4)
+
+    def recompute(self):
+        raise AssertionError("term_stats recomputed from the segments")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(IndexBuilder, "finalize_term_stats", recompute)
+        incremental_update(_builder(spark, d), tail)
+    assert not os.path.exists(ts + "_next")
+    assert build.read_term_stats_seq(d) == read_manifest(d)["seq"]
+    _assert_stored_once(d)
+    _assert_matches(spark, d, OracleIndex.build(_docs(pdf)))
+
+
+def test_stale_term_stats_next_is_swept(spark, tmp_path):
+    """A ``term_stats_next`` the manifest has moved past (its ``_SEQ``
+    is not the manifest seq) is removed by the next writer's sweep, a
+    compaction that recomputes term_stats and never folds, and is
+    never swapped in."""
+    pdf = generate_corpus(200, **KW)
+    d = str(tmp_path / "idx")
+    _builder(spark, d).build(spark.createDataFrame(pdf))
+    nxt = os.path.join(d, "term_stats_next")
+    os.makedirs(nxt)
+    with open(os.path.join(nxt, "_SEQ"), "w") as f:
+        f.write("0")
+    delete_docs(spark, d, [3])
+    assert compact(spark, d, term_buckets=4)["removed_docs"] == 1
+    assert not os.path.exists(nxt)
+    _assert_matches(spark, d, OracleIndex.build(
+        _docs(pdf[pdf.doc_id != 3])))
+
+
+def test_build_crash_sweep(spark, tmp_path, fs_mutations):
+    """A crash at EVERY file-system mutation of a fresh two-chunk
+    build: the ``_ANALYZER`` and ``_FORMAT`` stamps, each chunk's
+    partials and lineage row, the generation write and the manifest
+    commit, the term_stats write and its ``_SEQ`` stamp, the deletion
+    of each chunk's partials, then the stats write.  In every window
+    the index either refuses to open (no ``_FORMAT``, no stats, or
+    stats that lag the manifest) or answers the whole corpus; a
+    ``build(resume=True)`` rerun then matches the oracle, keeps the
+    analyzer record and leaves no partials of a committed chunk."""
+    pdf = generate_corpus(120, **KW)
+    corpus = spark.createDataFrame(pdf)
+    full = OracleIndex.build(_docs(pdf))
+
+    def run(d):
+        _builder(spark, d, chunk_docs=60).build(corpus, resume=True)
+
+    def check(d):
+        eng = SearchEngine(spark, d, term_buckets=4)
+        assert (eng.n_docs, eng.avgdl) == (full.n_docs, full.avgdl)
+        for q in QUERIES[:2]:
+            assert [(int(r.doc_id), float(r.score))
+                    for r in eng.search(q, k=50).collect()] \
+                == full.search(q, k=50), q
+
+    d = str(tmp_path / "count")
+    fs_mutations.root, fs_mutations.count = d, 0
+    run(d)
+    fs_mutations.root = None
+    n = fs_mutations.count
+    assert _live_chunks(d) == {"0", "1"}
+    _assert_stored_once(d)
+    check(d)
+    states = []
+    for i in range(n):
+        d = str(tmp_path / f"crash{i}")
+        fs_mutations.root, fs_mutations.count = d, 0
+        fs_mutations.crash_at = i
+        with pytest.raises(fs_mutations.Crash):
+            run(d)
+        fs_mutations.root = None
+        try:
+            check(d)
+        except (ValueError, OSError, UnfinishedAppendError):
+            states.append("refused")
+        else:
+            states.append("answers")
+        run(d)
+        check(d)
+        _assert_stored_once(d)
+        assert read_analyzer(d) == {"stem": False, "positions": False,
+                                    "doc_bucket": 64}, i
+    assert states == sorted(states, key=["refused", "answers"].index), \
+        states
